@@ -15,6 +15,14 @@ import graft.operators.Similarity
   * convention): "runMain graft.AnnProbe 160 4 learned 40960".
   */
 object AnnProbe {
+  /** `f`'s result and its wall time in seconds. */
+  private def time[T](f: => T): (T, Double) = {
+    val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
+  }
+
+  /** Best-of-2 wall time of `f` (the first pass carries plan/codegen). */
+  private def min2(f: => Any): Double = (1 to 2).map(_ => time(f)._2).min
+
   def main(args: Array[String]): Unit = {
     if (args.nonEmpty && args(0) == "pq") { pqRecall(args.drop(1)); return }
     if (args.nonEmpty && args(0) == "index") { indexArtifact(args.drop(1)); return }
@@ -114,9 +122,6 @@ object AnnProbe {
     // corpus vectors — min-of-2 (first pass carries plan/codegen)
     val idx = spark.read.parquet(out)
     val q = emb.filter(col("vec_id") < 8)
-    def time(f: => Long): (Double, Long) = {
-      val t = System.nanoTime(); val n = f; ((System.nanoTime() - t) / 1e9, n)
-    }
     val probeRuns = (1 to 2).map(_ =>
       time(Similarity.annIvfPqProbe(idx, q, k = 5, dim = 64,
         centroids = cents, codebooks = cbs).count()))
@@ -131,8 +136,8 @@ object AnnProbe {
     }
     println(s"""{"dir":"$dir","learned":$learned,"build_sec":$buildSec,""" +
       s""""artifact_mb":${artifactBytes / 1048576.0},"corpus_mb":${corpusBytes / 1048576.0},""" +
-      s""""probe_sec":${probeRuns.map(_._1).min},"rebuild_sec":${rebuildRuns.map(_._1).min},""" +
-      s""""rows":${probeRuns.head._2}}""")
+      s""""probe_sec":${probeRuns.map(_._2).min},"rebuild_sec":${rebuildRuns.map(_._2).min},""" +
+      s""""rows":${probeRuns.head._1}}""")
     spark.stop()
   }
 
@@ -192,10 +197,6 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val base = java.nio.file.Files.createTempDirectory("ann_sq_vs_pq").toString
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
-    def min2[T](f: => T): Double = (1 to 2).map(_ => time(f)._2).min
     def dirBytes(p: String): Long = {
       val d = new java.io.File(p)
       Option(d.listFiles).map(_.map(f => if (f.isFile) f.length else 0L).sum).getOrElse(0L)
@@ -274,9 +275,6 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_filtered").toString + "/idx"
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     val (_, buildSec) = time(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
     val q = emb0.filter(col("vec_id") < 8)
     val (nAll, allSec) = (1 to 2).map(_ =>
@@ -317,9 +315,6 @@ object AnnProbe {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_lifecycle").toString + "/idx"
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     val (_, writeSec) = time(
       Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
     val appendSecs = (6 to 9).map { s =>
@@ -403,10 +398,6 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_tombstones").toString + "/idx"
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
-    def min2(f: => Long): Double = (1 to 2).map(_ => time(f)._2).min
     val (_, writeSec) = time(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
     val q = emb0.filter(col("vec_id") < 8).localCheckpoint()
     def probe(): Long = Similarity.annIvfPqProbeAt(spark, out, q, k = 5).count()
@@ -463,9 +454,6 @@ object AnnProbe {
       .select("vec_id", "embedding").localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_sq_lifecycle").toString + "/idx"
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     val (_, writeSec) = time(
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
     val appendSecs = (6 to 8).map { s =>
@@ -565,9 +553,6 @@ object AnnProbe {
     val probes = spark.range(32).select((col("id") + 5000000L).as("vec_id"),
       mkGen(dirsB, 2.0)(col("id") + 5000000L).as("embedding")).localCheckpoint()
     val out = java.nio.file.Files.createTempDirectory("pca_lifecycle").toString + "/idx"
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     val (_, writeSec) = time(Similarity.pcaIvfPqIndexWrite(genA, out,
       dim = 64, outDim = 16, trainSample = 65536, trainQuantizers = true))
     val ((s0, f0), audit0Sec) = time(
@@ -658,10 +643,6 @@ object AnnProbe {
     val lr = spark.range(nIso).select(col("id").as("vec_id"),
       mkLowRank(col("id")).as("embedding")).localCheckpoint()
     val base = java.nio.file.Files.createTempDirectory("ann_pca_probe").toString
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
-    def min2(f: => Long): Double = (1 to 2).map(_ => time(f)._2).min
     def dirBytes(p: String): Long = {
       val d = new java.io.File(p)
       Option(d.listFiles).map(_.map(f => if (f.isFile) f.length else 0L).sum).getOrElse(0L)
@@ -753,10 +734,6 @@ object AnnProbe {
     val spec = iso.select(col("vec_id"),
       spectrumUdf(col("embedding")).as("embedding")).localCheckpoint()
     val base = java.nio.file.Files.createTempDirectory("ann_opq").toString
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
-    def min2(f: => Long): Double = (1 to 2).map(_ => time(f)._2).min
     def run(tag: String, corpus: org.apache.spark.sql.DataFrame,
             queries: org.apache.spark.sql.DataFrame): String = {
       val pq = s"$base/$tag-pq"; val opq = s"$base/$tag-opq"
@@ -875,9 +852,6 @@ object AnnProbe {
           "(CAST(hash(id, d) AS DOUBLE) / 2147483647.0) * pow(2.0, -CAST(d AS DOUBLE) / 256.0)" +
           " AS FLOAT))").as("embedding"))
     val train = synth(trainRows).localCheckpoint()
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     val (cov, covSec) = time(Similarity.covarianceMatrix(train, dim))
     val ((_, eigRows), eigSec) = time(Similarity.jacobiEigen(cov))
     val proj = synth(projRows).localCheckpoint()

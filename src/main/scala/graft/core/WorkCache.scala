@@ -405,12 +405,6 @@ object WorkCache {
     */
   val DefaultMemoCap: Int = 4096
 
-  /** The OP-9 independence classification (workcache.rs:271-330),
-    * shared by the sequential path and any batch tester: revert and
-    * equal-but-non-idempotent are dependent; otherwise conc is
-    * independent iff applying the new event first changes state AND
-    * conc still applies on top to reach the same result.
-    */
   /** The pure suffix fold a [[BaseTask]] denotes — shared by the
     * driver fallback and every parallel base builder, so the two paths
     * are equal by construction.
@@ -438,6 +432,12 @@ object WorkCache {
       IndepCase(concEvid, r.order(p)._1, r.order(p)._2, st))
   }
 
+  /** The OP-9 independence classification (workcache.rs:271-330),
+    * shared by the sequential path and any batch tester: revert and
+    * equal-but-non-idempotent are dependent; otherwise conc is
+    * independent iff applying the new event first changes state AND
+    * conc still applies on top to reach the same result.
+    */
   def isIndependent[A, D](engine: Engine[A, D], cmd: Int, arg: A, curSt: D,
                           c: IndepCase[A, D]): Boolean =
     if (curSt == c.concBase) false

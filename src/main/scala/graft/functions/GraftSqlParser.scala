@@ -420,12 +420,9 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       val emb = graft.sources.TableArmor.embeddings(
         session.read.parquet(s"$dir/embeddings.parquet"))
       val qs = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24)
-      val probed =
-        if (graft.sources.ArtifactHeader.read(session, path, "pcarot").isDefined)
-          graft.operators.Similarity.annPcaIvfPqProbeAt(session, path, qs, k = 5)
-        else if (graft.sources.ArtifactHeader.read(session, path, "ivfsq").isDefined)
-          graft.operators.Similarity.annIvfSqProbeAt(session, path, qs, k = 5)
-        else graft.operators.Similarity.annIvfPqProbeAt(session, path, qs, k = 5)
+      val probed = graft.operators.AnnLifecycle.kindOf(session, path)
+        .getOrElse(graft.operators.AnnLifecycle.IvfPq)
+        .probe(session, path, qs, k = 5)
       probed.queryExecution.logical
     }
     case ProbeAnnIndexFiltered(path, dir, pred) => wrapGraft(sqlText) {
@@ -443,7 +440,8 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       // rotation (raw queries against projected rows score a different
       // space silently)
       val probed =
-        if (graft.sources.ArtifactHeader.read(session, path, "pcarot").isDefined)
+        if (graft.operators.AnnLifecycle.kindOf(session, path)
+            .contains(graft.operators.AnnLifecycle.PcaIvfPq))
           graft.operators.Similarity.annPcaIvfPqProbeFilteredAt(session, path,
             qs, allowed, k = 5)
         else graft.operators.Similarity.annIvfPqProbeFilteredAt(session, path,
@@ -457,27 +455,28 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       // (encoding is an artifact property, and the SQ audit adds the
       // bounds-saturation signal PQ doesn't have)
       import session.implicits._
+      import graft.operators.AnnLifecycle
       val sim = graft.operators.Similarity
-      val rep =
-        if (graft.sources.ArtifactHeader.read(session, path, "ivfsq").isDefined)
-          sim.ivfSqRebuildIfNeeded(annCorpus(dir), path)
-        else graft.sources.ArtifactHeader.read(session, path, "pcarot") match {
-          // a PCA artifact audits BASIS-first (capture drift — a basis
-          // rebuild retrains rotation AND quantizers); a healthy basis
-          // falls through to the quantizer-balance audit IN projection
-          // space under the stored rotation (that swap carries the
-          // pcarot sidecar). Legacy pcarot without a capture baseline
-          // skips the basis audit (pcaCaptureRestamp is the repair).
-          case Some(kv) =>
-            val raw = annCorpus(dir)
-            val basis =
-              if (sim.pcaHasCaptureBaseline(session, path))
-                sim.pcaIvfPqRebuildIfNeeded(raw, path)
-              else None
-            basis.orElse(sim.ivfPqRebuildIfNeeded(
-              sim.pcaProject(raw, sim.pcaRotationAt(session, path)), path))
-          case None => sim.ivfPqRebuildIfNeeded(annCorpus(dir), path)
-        }
+      // a writer verb: repair a crashed swap before reading the kind
+      val rep = AnnLifecycle.writerEntry(session, path)(
+          AnnLifecycle.kindOf(session, path)) match {
+        case Some(AnnLifecycle.IvfSq) => sim.ivfSqRebuildIfNeeded(annCorpus(dir), path)
+        // a PCA artifact audits BASIS-first (capture drift — a basis
+        // rebuild retrains rotation AND quantizers); a healthy basis
+        // falls through to the quantizer-balance audit IN projection
+        // space under the stored rotation (that swap carries the
+        // pcarot sidecar). Legacy pcarot without a capture baseline
+        // skips the basis audit (pcaCaptureRestamp is the repair).
+        case Some(AnnLifecycle.PcaIvfPq) =>
+          val raw = annCorpus(dir)
+          val basis =
+            if (sim.pcaHasCaptureBaseline(session, path))
+              sim.pcaIvfPqRebuildIfNeeded(raw, path)
+            else None
+          basis.orElse(sim.ivfPqRebuildIfNeeded(
+            sim.pcaProject(raw, sim.pcaRotationAt(session, path)), path))
+        case _ => sim.ivfPqRebuildIfNeeded(annCorpus(dir), path)
+      }
       Seq((rep.isDefined, rep.map(_.rowsBefore).getOrElse(-1L),
         rep.map(_.rowsAfter).getOrElse(-1L)))
         .toDF("rebuilt", "rows_before", "rows_after").queryExecution.logical

@@ -152,12 +152,7 @@ object Forget {
       return Report(0, Map.empty, None, None, None, Map.empty, None, Nil)
 
     // -- phase 1: validate everything before mutating anything
-    t.annIndexPaths.foreach { p =>
-      require(
-        graft.sources.ArtifactHeader.read(spark, p, "ivfpq").isDefined ||
-          graft.sources.ArtifactHeader.read(spark, p, "ivfsq").isDefined,
-        s"forgetDocuments: no ivfpq/ivfsq header at $p — not a stamped ANN artifact")
-    }
+    t.annIndexPaths.foreach(AnnLifecycle.requireKind(spark, _, "forgetDocuments"))
     t.bandIndexPath.foreach(p =>
       graft.sources.ArtifactHeader.required(spark, p, "bands"))
     // the gram artifact dispatches on its own header kind: "grams"
@@ -369,11 +364,7 @@ object Forget {
     }
 
     val annRows = targets.annIndexPaths.zipWithIndex.map { case (p, i) =>
-      val isSq = graft.sources.ArtifactHeader.read(spark, p, "ivfsq").isDefined
-      require(isSq ||
-        graft.sources.ArtifactHeader.read(spark, p, "ivfpq").isDefined,
-        s"auditDocuments: no ivfpq/ivfsq header at $p")
-      val idCol = if (isSq) "neighbor_id" else "vec_id"
+      val idCol = AnnLifecycle.requireKind(spark, p, "auditDocuments").idCol
       val (ph, tb, rc) = counts(spark.read.parquet(p), idCol, vecIds,
         graft.sources.Tombstones.read(spark, p))
       (if (targets.annIndexPaths.length == 1) "ann" else s"ann:$i", ph, tb, rc)

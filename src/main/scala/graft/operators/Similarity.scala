@@ -1283,26 +1283,12 @@ object Similarity {
       case None => ivfPqWriteHeader(spark, indexPath, dim, lists, m, codes, cents, cbs,
         residual)
     }
-    val existing =
-      if (exists) spark.read.parquet(indexPath).select(col("vec_id"))
-      // schema-correct empty frame from newVectors' OWN id column: a
-      // hardcoded Long would degrade the anti-join via implicit casts
-      // for string/int ids
-      else newVectors.select(col(idCol).as("vec_id")).limit(0)
-    // materialize before writing: the anti-join reads indexPath, and
-    // appending to a path mid-read is undefined
-    val fresh = ivfPqIndex(
-        newVectors.join(existing.withColumnRenamed("vec_id", idCol),
-          Seq(idCol), "left_anti"),
-        dim, lists, m, codes, idCol, vecCol, Some(cents), Some(cbs), residual)
-      .localCheckpoint()
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode("append").option("compression", "zstd").parquet(indexPath)
-    if (!exists) ivfPqWriteHeader(spark, indexPath, dim, lists, m, codes, cents, cbs,
-      residual)
-    graft.plans.CheckpointHygiene.free(fresh)
-    n
+    AnnLifecycle.admit(newVectors, indexPath, idCol, "vec_id", exists)(
+      ivfPqIndex(_, dim, lists, m, codes, idCol, vecCol, Some(cents), Some(cbs), residual)) {
+      (_, _) =>
+        if (!exists) ivfPqWriteHeader(spark, indexPath, dim, lists, m, codes, cents, cbs,
+          residual)
+    }
   }
 
   /** Residuals of every corpus vector w.r.t. its assigned coarse
@@ -1330,13 +1316,15 @@ object Similarity {
   /** The shared headerless-artifact refusal — one seam for the four
     * trusted entries (probe, audit, rebuild, header-driven append),
     * so the refusal contract and its guidance live in ONE place (the
-    * [[ivfPqResolve]] convention applied to the trust checks).
+    * [[ivfPqResolve]] convention applied to the trust checks): an
+    * entry that cannot verify the quantizers would guess.
     */
   private def ivfPqRequireHeader(spark: org.apache.spark.sql.SparkSession,
-                                 indexPath: String, hint: String): IvfPqHeader =
+                                 indexPath: String, what: String): IvfPqHeader =
     ivfPqReadHeader(spark, indexPath).getOrElse(throw new IllegalArgumentException(
-      s"no IVF-PQ header at $indexPath: cannot verify which quantizers built this " +
-        s"artifact. $hint"))
+      s"$what: no IVF-PQ header at $indexPath: cannot verify which quantizers built " +
+        "this artifact. Write it with ivfPqIndexWrite / pcaIvfPqIndexWrite (which " +
+        "stamp one), or stamp it explicitly with ivfPqWriteHeader."))
 
   /** [[ivfPqIndexAppend]] with every parameter taken FROM the
     * artifact's own header — the appender a maintained index needs
@@ -1362,25 +1350,19 @@ object Similarity {
     */
   def ivfPqIndexAppendAt(newVectors: DataFrame, indexPath: String,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Long = {
-    val spark = newVectors.sparkSession
-    val hdr = ivfPqRequireHeader(spark, indexPath,
-      "Write it with ivfPqIndexWrite (which stamps one), or stamp it explicitly " +
-        "with ivfPqWriteHeader, before appending through the header path.")
-    requireCorpusDim(newVectors, hdr.dim, indexPath, vecCol, "ivfPqIndexAppendAt")
-    requireNoTombstoneHit(newVectors, spark, indexPath, idCol, "ivfPqIndexAppendAt")
-    val n = ivfPqIndexAppend(newVectors, indexPath, hdr.dim, hdr.lists, hdr.m, hdr.codes,
-      idCol, vecCol, Some(hdr.centroids), Some(hdr.codebooks), hdr.residual)
-    val after = ivfPqRequireHeader(spark, indexPath,
-      "The header VANISHED mid-append — a concurrent maintenance job violated " +
-        "the single-writer contract.")
-    if (after.paramsHash != hdr.paramsHash)
-      sys.error(s"ivfPqIndexAppendAt: the artifact at $indexPath was re-stamped " +
-        s"MID-APPEND (header ${hdr.paramsHash} -> ${after.paramsHash}): a concurrent " +
-        "rebuild swapped quantizer generations underneath this append, so the " +
-        "artifact now holds mixed codes — serialize appends and rebuilds in one " +
-        "maintenance loop, and re-run ivfPqRebuild to re-encode and heal it")
-    n
+                         vecCol: String = "embedding"): Long =
+    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "ivfPqIndexAppendAt")(
+      ivfPqCodec(newVectors.sparkSession, indexPath, "ivfPqIndexAppendAt"))
+
+  /** The IVF-PQ append codec of the header generation at `indexPath`:
+    * every parameter from the artifact's own header.
+    */
+  private def ivfPqCodec(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                         what: String): AnnLifecycle.Codec = {
+    val hdr = ivfPqRequireHeader(spark, indexPath, what)
+    AnnLifecycle.Codec(AnnLifecycle.IvfPq, hdr.paramsHash, hdr.dim,
+      ivfPqIndex(_, hdr.dim, hdr.lists, hdr.m, hdr.codes, _, _,
+        Some(hdr.centroids), Some(hdr.codebooks), hdr.residual))
   }
 
   /** Shared default-resolution + shape validation of the IVF-PQ build
@@ -1602,27 +1584,10 @@ object Similarity {
     // dim) — the pcarot presence check can, so every public non-PCA
     // entry refuses here and the PCA wrappers go through the trusted
     // internal after projecting
-    requireNotPca(spark, indexPath, "annIvfPqProbeAt", "annPcaIvfPqProbeAt")
+    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqProbeAt", "annPcaIvfPqProbeAt")
     ivfPqProbeAtTrusted(spark, indexPath, queries, k, nprobe, idCol, vecCol,
       centroids, codebooks, allowedIds)
   }
-
-  /** Refuse a plain probe/gate entry on a PCA-composed artifact — its
-    * rows are PROJECTED vectors, and a full-rank rotation (outDim ==
-    * dim) sails through every dim guard while scoring raw queries in
-    * the rotated basis (silent wrong neighbors). The pcarot sidecar's
-    * PRESENCE is the dispatch signal; `instead` names the entry that
-    * projects.
-    */
-  private def requireNotPca(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, what: String,
-                            instead: String): Unit =
-    require(
-      graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot").isEmpty,
-      s"$what: the artifact at $indexPath carries a pcarot rotation — it holds " +
-        "PROJECTED vectors, and this entry would score the queries without " +
-        s"projecting them (wrong neighbors silently, even at full rank); use " +
-        s"$instead, which projects raw queries through the stored basis")
 
   /** The probe body behind [[annIvfPqProbeAt]], reachable only from
     * callers that already resolved the projection question (the PCA
@@ -1636,9 +1601,7 @@ object Similarity {
                                   centroids: Option[Array[Array[Double]]],
                                   codebooks: Option[Array[Array[Array[Double]]]],
                                   allowedIds: Option[DataFrame]): DataFrame = {
-    val hdr = ivfPqRequireHeader(spark, indexPath,
-      "Write it with ivfPqIndexWrite/ivfPqIndexAppend (which stamp one), " +
-        "or stamp it explicitly with ivfPqWriteHeader.")
+    val hdr = ivfPqRequireHeader(spark, indexPath, "annIvfPqProbeAt")
     (centroids, codebooks) match {
       case (None, None) => () // everything from the header — nothing to mismatch
       case _ =>
@@ -1687,7 +1650,7 @@ object Similarity {
                               allowedIds: DataFrame, k: Int, nprobe: Int = 4,
                               idCol: String = "vec_id",
                               vecCol: String = "embedding"): DataFrame = {
-    requireNotPca(spark, indexPath, "annIvfPqProbeFilteredAt",
+    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqProbeFilteredAt",
       "annPcaIvfPqProbeFilteredAt")
     annIvfPqProbeAt(spark, indexPath, queries, k, nprobe, idCol, vecCol,
       allowedIds = Some(allowedIds))
@@ -1704,7 +1667,7 @@ object Similarity {
                                k: Int, nprobe: Int = 4, rerank: Int = 32,
                                idCol: String = "vec_id",
                                vecCol: String = "embedding"): DataFrame = {
-    requireNotPca(spark, indexPath, "annIvfPqRefineFilteredAt",
+    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqRefineFilteredAt",
       "annPcaIvfPqRefineFilteredAt")
     refineExact(corpus,
       annIvfPqProbeAt(spark, indexPath, queries, k = rerank, nprobe, idCol,
@@ -1712,20 +1675,6 @@ object Similarity {
       queries, k, idCol, vecCol)
   }
 
-  /** List-balance audit of a (possibly append-grown) IVF-PQ artifact,
-    * computed from the artifact ALONE — no corpus vectors touched.
-    * [[ivfPqIndexAppend]] grows forever against frozen centroids;
-    * distribution drift re-creates exactly the winner-take-all
-    * imbalance the learned coarse quantizer exists to prevent, and a
-    * skewed list silently erodes the `nprobe/lists` scan bound (one
-    * hot list can approach a full corpus scan). One row per list —
-    * empty lists included, they are half the skew signal —
-    * with `load_pm` = this list's share of vectors in thousandths of
-    * the balanced share (1000 = perfectly uniform) and a `rebuild`
-    * flag at `rebuildPm`. All-BIGINT algebra, so the audit itself is
-    * oracle-exact; the max over `rebuild` is the retrain trigger a
-    * [[graft.streaming.StreamingIvf]]-style maintainer polls.
-    */
   /** The retrain trigger a periodic index maintainer polls: true when
     * any list of the PERSISTED artifact at `indexPath` exceeds
     * `rebuildPm` thousandths of the uniform share. `lists` comes from
@@ -1736,11 +1685,16 @@ object Similarity {
     */
   def ivfPqNeedsRebuild(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                         rebuildPm: Long = 3000L): Boolean = {
-    val hdr = ivfPqRequireHeader(spark, indexPath,
-      "Stamp the artifact (ivfPqIndexWrite / ivfPqWriteHeader) before auditing it.")
-    ivfPqListBalance(spark.read.parquet(indexPath), hdr.lists, rebuildPm)
-      .agg(max(col("rebuild")).as("r")).collect()(0).getLong(0) == 1L
+    val hdr = ivfPqRequireHeader(spark, indexPath, "ivfPqNeedsRebuild")
+    listsSkewed(spark.read.parquet(indexPath), hdr.lists, rebuildPm)
   }
+
+  /** The list-balance retrain signal of a persisted IVF artifact —
+    * the balance half of every quantizer audit (PQ and SQ8).
+    */
+  private def listsSkewed(index: DataFrame, lists: Int, rebuildPm: Long): Boolean =
+    ivfPqListBalance(index, lists, rebuildPm)
+      .agg(max(col("rebuild")).as("r")).collect()(0).getLong(0) == 1L
 
   /** What [[ivfPqRebuild]] measured and did — the maintenance-log row
     * a production maintainer records next to the retrain trigger.
@@ -1795,149 +1749,59 @@ object Similarity {
                    vecCol: String = "embedding",
                    allowShrink: Boolean = false,
                    minRecallAbs: Double = 0.0,
-                   maxRecallQueryRows: Long = DefaultMaxBenchRows): RebuildReport = {
-    val spark = corpus.sparkSession
-    graft.sources.SwapRecovery.repair(spark, indexPath) // crashed prior swap
-    val hdr = ivfPqRequireHeader(spark, indexPath,
-      "A rebuild of an artifact whose build parameters are unverifiable would " +
-        "guess — stamp it first (ivfPqIndexWrite / ivfPqWriteHeader).")
-    requireNoTombstones(spark, indexPath, "ivfPqRebuild")
-    // argument refusals BEFORE the expensive retrain: an
-    // accidentally-empty query frame would make the recall gate a
-    // trivial 0-vs-0 pass (or a null-avg crash) after hours of
-    // training — a caller asking for a gate means to GET one. The
-    // opposite extreme refuses too: the gate's ground truth (topKDot)
-    // is a broadcast nested-loop over corpus x queries, so an
-    // oversized query frame goes quadratic exactly like
-    // [[semanticContamination]]'s brute baseline — same bound, same
-    // guidance (gate on a SAMPLE of queries, not the whole eval set).
-    recallQueries.foreach { q =>
+                   maxRecallQueryRows: Long = DefaultMaxBenchRows): RebuildReport =
+    AnnLifecycle.rebuild(corpus, indexPath, AnnLifecycle.IvfPq, recallQueries, k,
+        nprobe, minRecallRatio, minRecallAbs, maxRecallQueryRows, allowShrink,
+        idCol, vecCol) {
+      val spark = corpus.sparkSession
+      val hdr = ivfPqRequireHeader(spark, indexPath, "ivfPqRebuild")
       // the gate probes via the plain entry, which refuses pcarot
-      // artifacts — refuse HERE, before the expensive retrain, with
-      // the composed verb named (its gate probes through each
-      // generation's own rotation)
-      require(
-        graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot").isEmpty,
-        s"ivfPqRebuild: the artifact at $indexPath is PCA-composed; gate its " +
-          "rebuild through pcaIvfPqRebuild (raw recall queries, projected per " +
-          "generation) — this quantizer-only path cannot probe it")
-      val qRows =
-        q.limit(math.min(maxRecallQueryRows, Int.MaxValue - 1L).toInt + 1).count()
-      require(qRows > 0,
-        "ivfPqRebuild: recallQueries is empty — the recall gate would verify " +
-          "nothing; pass None to skip it deliberately")
-      require(qRows <= maxRecallQueryRows,
-        s"ivfPqRebuild: recallQueries has >$maxRecallQueryRows rows; the gate's " +
-          "exact ground truth is a broadcast nested-loop over corpus x queries " +
-          "(quadratic) — gate on a bounded query sample instead")
-    }
-    requireCorpusDim(corpus, hdr.dim, indexPath, vecCol, "ivfPqRebuild")
-    val rowsBefore = spark.read.parquet(indexPath).count()
-
-    // retrain on the NEW corpus — the whole point of the rebuild.
-    // seedFromData defaults ON here (unlike the bulk trainers): a
-    // rebuild runs precisely because the data outgrew the old
-    // quantizers, and constant seeds cannot subdivide a drifted dense
-    // region Lloyd's never plants a second seed in (see
-    // [[dataSeedVectors]] — measured making balance AND recall worse)
-    val cents = kmeansCentroids(corpus, k = hdr.lists, iters = kmIters, dim = hdr.dim,
-      idCol = idCol, vecCol = vecCol, trainFraction = trainFraction,
-      seedFromData = seedFromData)
-    // a residual artifact retrains its codebooks ON residuals (the
-    // Faiss IVFPQ training order: coarse first, PQ on what the coarse
-    // quantizer leaves) — training sees float-cast residuals (it is
-    // statistical), while ENCODING always computes the exact double
-    // residual (pqEncodeResUdf)
-    val cbTrainFrame =
-      if (hdr.residual) residualFloatFrame(corpus, cents, idCol, vecCol)
-      else corpus
-    val cbs = pqLearnedCodebooks(cbTrainFrame, dim = hdr.dim, m = hdr.m, codes = hdr.codes,
-      iters = pqIters, vecCol = vecCol, idCol = idCol, trainFraction = trainFraction,
-      seedFromData = seedFromData)
-
-    val (fs, p) = hadoopFs(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".rebuild.tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".rebuild.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    val rowsAfter = ivfPqIndexWrite(corpus, tmp.toString, hdr.dim, hdr.lists,
-      hdr.m, hdr.codes, idCol, vecCol, Some(cents), Some(cbs),
-      residual = hdr.residual)
-
-    // verify BEFORE the swap; a bad rebuild must leave the artifact live
-    val corpusRows = corpus.count()
-    if (rowsAfter != corpusRows) {
-      fs.delete(tmp, true)
-      sys.error(s"ivfPqRebuild: re-encoded artifact has $rowsAfter rows, corpus has " +
-        s"$corpusRows; artifact at $indexPath left untouched")
-    }
-    // mis-scoped-corpus guard: a caller passing a stale/partial corpus
-    // (e.g. a snapshot that predates appends) would rewrite a bigger
-    // live artifact down to the small corpus with every other check
-    // green — the artifact knows its own row count, so refuse a
-    // shrinking rebuild unless the caller says it shrank on purpose
-    // (a deletion-compaction rebuild passes allowShrink = true)
-    if (rowsAfter < rowsBefore && !allowShrink) {
-      fs.delete(tmp, true)
-      sys.error(s"ivfPqRebuild: corpus has $rowsAfter rows but the live artifact at " +
-        s"$indexPath has $rowsBefore — a rebuild from a partial corpus would DROP " +
-        "vectors. Pass the full corpus (did appends land since this snapshot?), " +
-        "or allowShrink = true if the shrink is deliberate; artifact left untouched")
-    }
-    val (recallBefore, recallAfter) = recallQueries match {
-      case None => (Double.NaN, Double.NaN)
-      case Some(q) =>
-        // exact-DOT ground truth, computed ONCE and reused for both
-        // sides (it is the gate's dominant cost — an O(|corpus| x |q|)
-        // scan): ADC approximates the inner product (see [[topKDot]]);
-        // cosine truth would grade the probe on a ranking the index
-        // never promised
-        val exact = topKDot(corpus, q, k, idCol, vecCol).localCheckpoint()
-        def meanRecall(path: String): Double =
-          annRecall(exact,
-              annIvfPqProbeAt(spark, path, q, k, nprobe, idCol, vecCol), k)
-            .agg(avg(col("recall"))).collect()(0).getDouble(0)
-        val before = meanRecall(indexPath)
-        val after = meanRecall(tmp.toString)
-        graft.plans.CheckpointHygiene.free(exact)
-        if (after < minRecallRatio * before) {
-          fs.delete(tmp, true)
-          sys.error(f"ivfPqRebuild: retrained recall@$k $after%.4f fell below " +
-            f"$minRecallRatio x stale recall $before%.4f; artifact at $indexPath " +
-            "left untouched — inspect the training sample or iterations")
-        }
-        // the relative gate is vacuous exactly in the scenario rebuilds
-        // target: a fully-drifted stale index has recall ~0, and
-        // ratio * ~0 passes ANY retrain including one that also
-        // produces ~0 — so the absolute bar applies UNCONDITIONALLY
-        // (not only at exactly 0.0: a one-lucky-query stale recall of
-        // 0.02 would otherwise bypass a caller's explicit floor), and
-        // at exactly-zero stale recall it is strict, so the default
-        // floor of 0.0 still refuses a 0 -> 0 retrain
-        if (after < minRecallAbs || (before == 0.0 && after <= minRecallAbs)) {
-          fs.delete(tmp, true)
-          sys.error(f"ivfPqRebuild: retrained recall@$k $after%.4f did not clear " +
-            f"the absolute floor $minRecallAbs%.4f (stale recall $before%.4f" +
-            (if (before == 0.0) " — the relative gate proves nothing" else "") +
-            f"); artifact at $indexPath left untouched — the retrain did not " +
-            "recover the drifted region")
-        }
-        (before, after)
+      // artifacts — refuse HERE, before the expensive retrain, with the
+      // composed verb named (its gate probes through each generation's
+      // own rotation)
+      if (recallQueries.isDefined)
+        AnnLifecycle.requireNotPca(spark, indexPath, "ivfPqRebuild", "pcaIvfPqRebuild")
+      AnnLifecycle.Retrain(hdr.dim, { tmp =>
+        // retrain on the NEW corpus — the whole point of the rebuild.
+        // seedFromData defaults ON here (unlike the bulk trainers): a
+        // rebuild runs precisely because the data outgrew the old
+        // quantizers, and constant seeds cannot subdivide a drifted
+        // dense region Lloyd's never plants a second seed in (see
+        // [[dataSeedVectors]] — measured making balance AND recall worse)
+        val (cents, cbs) = trainIvfPq(corpus, hdr.dim, hdr.lists, hdr.m, hdr.codes,
+          hdr.residual, kmIters, pqIters, idCol, vecCol, 0, trainFraction,
+          seedFromData)
+        ivfPqIndexWrite(corpus, tmp, hdr.dim, hdr.lists, hdr.m, hdr.codes, idCol,
+          vecCol, Some(cents), Some(cbs), residual = hdr.residual)
+      })
     }
 
-    // foreign sidecars (a pcarot rotation, a stats file another
-    // layer owns) survive the swap; the rebuild's own fresh headers win
-    carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    artifactSwap(fs, p, tmp, old, "ivfPqRebuild")
-    RebuildReport(rowsBefore, rowsAfter, recallBefore, recallAfter)
+  /** Train both IVF-PQ quantizers on `train`: coarse centroids, then
+    * PQ codebooks — on the residuals the coarse quantizer leaves when
+    * `residual` (the Faiss IVFPQ training order; training sees
+    * float-cast residuals, it is statistical, while ENCODING always
+    * computes the exact double residual in pqEncodeResUdf).
+    * `codebooks` skips the codebook training for a caller that already
+    * holds codebooks trained in this space (iterative OPQ).
+    */
+  private def trainIvfPq(train: DataFrame, dim: Int, lists: Int, m: Int, codes: Int,
+                         residual: Boolean, kmIters: Int, pqIters: Int,
+                         idCol: String, vecCol: String, trainSample: Int,
+                         trainFraction: Double, seedFromData: Boolean,
+                         codebooks: Option[Array[Array[Array[Double]]]] = None)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val cents = kmeansCentroids(train, k = lists, iters = kmIters, dim = dim,
+      idCol = idCol, vecCol = vecCol, trainSample = trainSample,
+      trainFraction = trainFraction, seedFromData = seedFromData)
+    val cbs = codebooks.getOrElse {
+      val cbFrame = if (residual) residualFloatFrame(train, cents, idCol, vecCol) else train
+      pqLearnedCodebooks(cbFrame, dim = dim, m = m, codes = codes, iters = pqIters,
+        vecCol = vecCol, idCol = idCol, trainSample = trainSample,
+        trainFraction = trainFraction, seedFromData = seedFromData)
+    }
+    (cents, cbs)
   }
 
-  /** The two-rename atomic swap with rollback shared by the rebuild
-    * paths ([[ivfPqRebuild]], [[ivfSqRebuild]]): move the live
-    * artifact aside, move the verified rewrite in, delete the old
-    * copy. On swap-in failure the original is restored and the tmp
-    * deleted (corpus-sized residue); after a DOUBLE failure everything
-    * is preserved for manual recovery.
-    */
   /** Refuse a rebuild whose corpus vectors disagree with the
     * artifact's encoded dimensionality — the sliced-vector hazard: the
     * subspace trainers take `v.slice(...)`, so a 64-dim raw corpus
@@ -1954,7 +1818,7 @@ object Similarity {
     * cannot dodge — they refuse with a named message instead of
     * slicing.
     */
-  private def requireCorpusDim(corpus: DataFrame, dim: Int, indexPath: String,
+  private[operators] def requireCorpusDim(corpus: DataFrame, dim: Int, indexPath: String,
                                vecCol: String, tag: String): Unit =
     corpus.select(size(col(vecCol)).as("d")).limit(1).collect().foreach { r =>
       require(r.getInt(0) == dim,
@@ -1985,6 +1849,13 @@ object Similarity {
         new org.apache.hadoop.fs.Path(to, s.getPath.getName), false, conf)
     }
 
+  /** The two-rename atomic swap with rollback shared by the rebuild
+    * paths ([[ivfPqRebuild]], [[ivfSqRebuild]]): move the live
+    * artifact aside, move the verified rewrite in, delete the old
+    * copy. On swap-in failure the original is restored and the tmp
+    * deleted (corpus-sized residue); after a DOUBLE failure everything
+    * is preserved for manual recovery.
+    */
   private[graft] def artifactSwap(fs: org.apache.hadoop.fs.FileSystem,
                            p: org.apache.hadoop.fs.Path,
                            tmp: org.apache.hadoop.fs.Path,
@@ -2004,6 +1875,20 @@ object Similarity {
     fs.delete(old, true)
   }
 
+  /** List-balance audit of a (possibly append-grown) IVF-PQ artifact,
+    * computed from the artifact ALONE — no corpus vectors touched.
+    * [[ivfPqIndexAppend]] grows forever against frozen centroids;
+    * distribution drift re-creates exactly the winner-take-all
+    * imbalance the learned coarse quantizer exists to prevent, and a
+    * skewed list silently erodes the `nprobe/lists` scan bound (one
+    * hot list can approach a full corpus scan). One row per list —
+    * empty lists included, they are half the skew signal —
+    * with `load_pm` = this list's share of vectors in thousandths of
+    * the balanced share (1000 = perfectly uniform) and a `rebuild`
+    * flag at `rebuildPm`. All-BIGINT algebra, so the audit itself is
+    * oracle-exact; the max over `rebuild` is the retrain trigger a
+    * [[graft.streaming.StreamingIvf]]-style maintainer polls.
+    */
   def ivfPqListBalance(index: DataFrame, lists: Int, rebuildPm: Long = 3000L): DataFrame =
     listBalanceFromCounts(
       index.groupBy(col("list_id").cast("long").as("list_id"))
@@ -2153,7 +2038,7 @@ object Similarity {
                        corpus: DataFrame, queries: DataFrame, k: Int,
                        nprobe: Int = 4, rerank: Int = 32,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    requireNotPca(spark, indexPath, "annIvfPqRefineAt", "annPcaIvfPqRefineAt")
+    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqRefineAt", "annPcaIvfPqRefineAt")
     refineExact(corpus,
       annIvfPqProbeAt(spark, indexPath, queries, k = rerank, nprobe, idCol, vecCol),
       queries, k, idCol, vecCol)
@@ -2342,11 +2227,11 @@ object Similarity {
                            vecCol: String = "embedding",
                            allowShrink: Boolean = false,
                            minRecallAbs: Double = 0.0): Option[RebuildReport] =
-    if (!ivfPqNeedsRebuild(corpus.sparkSession, indexPath, rebuildPm)) None
-    else Some(ivfPqRebuild(corpus, indexPath, kmIters, pqIters, trainFraction,
-      recallQueries, k, nprobe, minRecallRatio,
-      seedFromData = true, idCol = idCol, vecCol = vecCol,
-      allowShrink = allowShrink, minRecallAbs = minRecallAbs))
+    Option.when(ivfPqNeedsRebuild(corpus.sparkSession, indexPath, rebuildPm))(
+      ivfPqRebuild(corpus, indexPath, kmIters, pqIters, trainFraction,
+        recallQueries, k, nprobe, minRecallRatio,
+        seedFromData = true, idCol = idCol, vecCol = vecCol,
+        allowShrink = allowShrink, minRecallAbs = minRecallAbs))
 
   // ------------------------------------------------------------------
   // IVF-SQ8: trained per-dimension scalar quantizer under the IVF
@@ -2647,49 +2532,20 @@ object Similarity {
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): Long = {
     val spark = newVectors.sparkSession
-    val hdr = sqRequireHeader(spark, indexPath, "ivfSqIndexAppendAt")
-    requireCorpusDim(newVectors, hdr.dim, indexPath, vecCol, "ivfSqIndexAppendAt")
-    requireNoTombstoneHit(newVectors, spark, indexPath, idCol, "ivfSqIndexAppendAt")
-    val existing = spark.read.parquet(indexPath)
-      .select(col("neighbor_id").as(idCol))
-    // materialize before writing: the anti-join reads indexPath, and
-    // appending to a path mid-read is undefined
-    val fresh = ivfSqIndex(
-        newVectors.join(existing, Seq(idCol), "left_anti"),
-        hdr.dim, hdr.lists, idCol, vecCol,
-        Some(hdr.cents), Some((hdr.vmin, hdr.vmax)))
-      .localCheckpoint()
-    val n = fresh.count()
-    try {
-      if (n > 0)
-        fresh.write.mode("append").option("compression", "zstd").parquet(indexPath)
-      // generation backstop BEFORE the stats sidecar is mutated: when
-      // a concurrent rebuild swapped generations mid-append, the NEW
-      // generation's freshly-rebuilt ivfsq_stats must not be
-      // overwritten with counts from this doomed batch (the error
-      // path's advised ivfSqRebuild re-derives stats anyway)
-      val after = sqRequireHeader(spark, indexPath,
-        "ivfSqIndexAppendAt (post-write backstop)")
-      if (after.paramsHash != hdr.paramsHash)
-        sys.error(s"ivfSqIndexAppendAt: the artifact at $indexPath was re-stamped " +
-          s"MID-APPEND (header ${hdr.paramsHash} -> ${after.paramsHash}): a concurrent " +
-          "rebuild swapped bounds generations underneath this append, so the artifact " +
-          "now holds mixed codes — serialize appends and rebuilds in one maintenance " +
-          "loop, and re-run ivfSqRebuild to re-encode and heal it")
-      if (n > 0) {
+    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "ivfSqIndexAppendAt") {
+      val hdr = sqRequireHeader(spark, indexPath, "ivfSqIndexAppendAt")
+      AnnLifecycle.Codec(AnnLifecycle.IvfSq, hdr.paramsHash, hdr.dim,
+        ivfSqIndex(_, hdr.dim, hdr.lists, _, _, Some(hdr.cents), Some((hdr.vmin, hdr.vmax))),
         // accumulate the admitted rows' rail counts into the stats
         // sidecar (the fresh frame is already checkpointed — one cheap
         // aggregate instead of the audit's full-artifact scan later);
         // a legacy stats-less artifact stays stats-less (scan fallback)
-        sqStatsRead(spark, indexPath).foreach { prior =>
-          val inc = sqStatsArray(fresh, hdr.dim)
-          sqStatsWrite(spark, indexPath, prior.zip(inc).map {
+        fresh => sqStatsRead(spark, indexPath).foreach { prior =>
+          sqStatsWrite(spark, indexPath, prior.zip(sqStatsArray(fresh, hdr.dim)).map {
             case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z)
           })
-        }
-      }
-    } finally graft.plans.CheckpointHygiene.free(fresh)
-    n
+        })
+    }
   }
 
   /** Bounds-saturation audit of a persisted SQ8 artifact — the
@@ -2824,12 +2680,7 @@ object Similarity {
   def ivfSqNeedsRebuild(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                         rebuildPm: Long = 3000L, satPm: Long = 100L): Boolean = {
     val hdr = sqRequireHeader(spark, indexPath, "ivfSqNeedsRebuild")
-    val skewed = listBalanceFromCounts(
-        spark.read.parquet(indexPath)
-          .groupBy(col("list_id").cast("long").as("list_id"))
-          .agg(count(lit(1)).as("n_vectors")),
-        hdr.lists, rebuildPm)
-      .agg(max(col("rebuild")).as("r")).collect()(0).getLong(0) == 1L
+    val skewed = listsSkewed(spark.read.parquet(indexPath), hdr.lists, rebuildPm)
     // the accumulated stats sidecar answers in O(dim) when present
     // (every write/append since the stats landed maintains it);
     // legacy artifacts fall back to the exact codes scan
@@ -2861,86 +2712,21 @@ object Similarity {
                    seedFromData: Boolean = true,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    allowShrink: Boolean = false, minRecallAbs: Double = 0.0,
-                   maxRecallQueryRows: Long = DefaultMaxBenchRows): RebuildReport = {
-    val spark = corpus.sparkSession
-    graft.sources.SwapRecovery.repair(spark, indexPath) // crashed prior swap
-    val hdr = sqRequireHeader(spark, indexPath, "ivfSqRebuild")
-    requireNoTombstones(spark, indexPath, "ivfSqRebuild")
-    recallQueries.foreach { q =>
-      val qRows =
-        q.limit(math.min(maxRecallQueryRows, Int.MaxValue - 1L).toInt + 1).count()
-      require(qRows > 0,
-        "ivfSqRebuild: recallQueries is empty — the recall gate would verify " +
-          "nothing; pass None to skip it deliberately")
-      require(qRows <= maxRecallQueryRows,
-        s"ivfSqRebuild: recallQueries has >$maxRecallQueryRows rows; the gate's " +
-          "exact ground truth is a broadcast nested-loop over corpus x queries " +
-          "(quadratic) — gate on a bounded query sample instead")
+                   maxRecallQueryRows: Long = DefaultMaxBenchRows): RebuildReport =
+    AnnLifecycle.rebuild(corpus, indexPath, AnnLifecycle.IvfSq, recallQueries, k,
+        nprobe, minRecallRatio, minRecallAbs, maxRecallQueryRows, allowShrink,
+        idCol, vecCol) {
+      val hdr = sqRequireHeader(corpus.sparkSession, indexPath, "ivfSqRebuild")
+      AnnLifecycle.Retrain(hdr.dim, { tmp =>
+        val cents = kmeansCentroids(corpus, k = hdr.lists, iters = kmIters, dim = hdr.dim,
+          idCol = idCol, vecCol = vecCol, trainFraction = trainFraction,
+          seedFromData = seedFromData)
+        val (vmin, vmax) = sqTrainBounds(corpus, hdr.dim, idCol, vecCol,
+          trainFraction = trainFraction)
+        ivfSqIndexWrite(corpus, tmp, hdr.dim, hdr.lists, idCol, vecCol, Some(cents),
+          Some((vmin, vmax)))
+      })
     }
-    requireCorpusDim(corpus, hdr.dim, indexPath, vecCol, "ivfSqRebuild")
-    val rowsBefore = spark.read.parquet(indexPath).count()
-    val cents = kmeansCentroids(corpus, k = hdr.lists, iters = kmIters, dim = hdr.dim,
-      idCol = idCol, vecCol = vecCol, trainFraction = trainFraction,
-      seedFromData = seedFromData)
-    val (vmin, vmax) = sqTrainBounds(corpus, hdr.dim, idCol, vecCol,
-      trainFraction = trainFraction)
-    val (fs, p) = hadoopFs(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".rebuild.tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".rebuild.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    val rowsAfter = ivfSqIndexWrite(corpus, tmp.toString, hdr.dim, hdr.lists,
-      idCol, vecCol, Some(cents), Some((vmin, vmax)))
-    val corpusRows = corpus.count()
-    if (rowsAfter != corpusRows) {
-      fs.delete(tmp, true)
-      sys.error(s"ivfSqRebuild: re-encoded artifact has $rowsAfter rows, corpus has " +
-        s"$corpusRows; artifact at $indexPath left untouched")
-    }
-    if (rowsAfter < rowsBefore && !allowShrink) {
-      fs.delete(tmp, true)
-      sys.error(s"ivfSqRebuild: corpus has $rowsAfter rows but the live artifact at " +
-        s"$indexPath has $rowsBefore — a rebuild from a partial corpus would DROP " +
-        "vectors. Pass the full corpus (did appends land since this snapshot?), " +
-        "or allowShrink = true if the shrink is deliberate; artifact left untouched")
-    }
-    val (recallBefore, recallAfter) = recallQueries match {
-      case None => (Double.NaN, Double.NaN)
-      case Some(q) =>
-        // exact-COSINE ground truth computed ONCE for both sides —
-        // the ranking SQ8 decode-dot actually approximates
-        val exact = topKCosine(corpus, q, k, idCol, vecCol).localCheckpoint()
-        def meanRecall(path: String): Double =
-          annRecall(exact,
-              annIvfSqProbeAt(spark, path, q, k, nprobe, idCol, vecCol), k)
-            .agg(avg(col("recall"))).collect()(0).getDouble(0)
-        val before = meanRecall(indexPath)
-        val after = meanRecall(tmp.toString)
-        graft.plans.CheckpointHygiene.free(exact)
-        if (after < minRecallRatio * before) {
-          fs.delete(tmp, true)
-          sys.error(f"ivfSqRebuild: retrained recall@$k $after%.4f fell below " +
-            f"$minRecallRatio x stale recall $before%.4f; artifact at $indexPath " +
-            "left untouched — inspect the training sample or iterations")
-        }
-        // the relative gate is vacuous at ~0 stale recall and a
-        // caller's floor must bind regardless — the ivfPqRebuild
-        // contract verbatim
-        if (after < minRecallAbs || (before == 0.0 && after <= minRecallAbs)) {
-          fs.delete(tmp, true)
-          sys.error(f"ivfSqRebuild: retrained recall@$k $after%.4f did not clear " +
-            f"the absolute floor $minRecallAbs%.4f (stale recall $before%.4f" +
-            (if (before == 0.0) " — the relative gate proves nothing" else "") +
-            f"); artifact at $indexPath left untouched — the retrain did not " +
-            "recover the drifted region")
-        }
-        (before, after)
-    }
-    // foreign sidecars (a pcarot rotation, a stats file another
-    // layer owns) survive the swap; the rebuild's own fresh headers win
-    carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    artifactSwap(fs, p, tmp, old, "ivfSqRebuild")
-    RebuildReport(rowsBefore, rowsAfter, recallBefore, recallAfter)
-  }
 
   /** One-call maintenance step for the SQ8 artifact — poll
     * [[ivfSqNeedsRebuild]] and EXECUTE [[ivfSqRebuild]] when either
@@ -2956,11 +2742,11 @@ object Similarity {
                            idCol: String = "vec_id", vecCol: String = "embedding",
                            allowShrink: Boolean = false,
                            minRecallAbs: Double = 0.0): Option[RebuildReport] =
-    if (!ivfSqNeedsRebuild(corpus.sparkSession, indexPath, rebuildPm, satPm)) None
-    else Some(ivfSqRebuild(corpus, indexPath, kmIters, trainFraction,
-      recallQueries, k, nprobe, minRecallRatio,
-      seedFromData = true, idCol = idCol, vecCol = vecCol,
-      allowShrink = allowShrink, minRecallAbs = minRecallAbs))
+    Option.when(ivfSqNeedsRebuild(corpus.sparkSession, indexPath, rebuildPm, satPm))(
+      ivfSqRebuild(corpus, indexPath, kmIters, trainFraction,
+        recallQueries, k, nprobe, minRecallRatio,
+        seedFromData = true, idCol = idCol, vecCol = vecCol,
+        allowShrink = allowShrink, minRecallAbs = minRecallAbs))
 
   // ------------------------------------------------------------------
   // Deletion: the DELETE verb of the index lifecycle (Faiss
@@ -3058,7 +2844,7 @@ object Similarity {
     * deleted rows (or, corpus-excluded, leave a sidecar shadowing ids
     * that no longer exist). One verb per job: fold, then rebuild.
     */
-  private def requireNoTombstones(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def requireNoTombstones(spark: org.apache.spark.sql.SparkSession,
                                   indexPath: String, what: String): Unit = {
     val n = graft.sources.Tombstones.count(spark, indexPath)
     require(n == 0L,
@@ -3080,11 +2866,8 @@ object Similarity {
     */
   def annIndexDeleteAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                        ids: Seq[Long]): Long = {
-    require(
-      graft.sources.ArtifactHeader.read(spark, indexPath, "ivfpq").isDefined ||
-        graft.sources.ArtifactHeader.read(spark, indexPath, "ivfsq").isDefined,
-      s"annIndexDeleteAt: no ivfpq/ivfsq header at $indexPath — not a stamped ANN " +
-        "artifact (deleting ids from an arbitrary path is a scoping mistake)")
+    AnnLifecycle.writerEntry(spark, indexPath)(
+      AnnLifecycle.requireKind(spark, indexPath, "annIndexDeleteAt"))
     if (ids.isEmpty) graft.sources.Tombstones.count(spark, indexPath)
     else graft.sources.Tombstones.add(spark, indexPath, ids)
   }
@@ -3114,23 +2897,21 @@ object Similarity {
     */
   def annTombstoneFold(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String): (Long, Long) = {
-    val isSq = graft.sources.ArtifactHeader.read(spark, indexPath, "ivfsq").isDefined
-    if (!isSq) ivfPqRequireHeader(spark, indexPath,
-      "annTombstoneFold only rewrites stamped ANN artifacts.")
+    val kind = AnnLifecycle.writerEntry(spark, indexPath)(
+      AnnLifecycle.requireKind(spark, indexPath, "annTombstoneFold"))
     val ids = tombstonesOf(spark, indexPath)
     if (ids.isEmpty) return (0L, 0L)
     // SQ8: the stats sidecar accumulated the deleted rows' rail
     // counts — re-seed from the surviving rows ON TMP, so the swap
     // installs artifact + stats as one consistent generation
     val onTmp: String => Unit =
-      if (!isSq) _ => ()
+      if (kind != AnnLifecycle.IvfSq) _ => ()
       else { tmpPath =>
         val hdr = sqRequireHeader(spark, indexPath, "annTombstoneFold")
         sqStatsWrite(spark, tmpPath,
           sqStatsArray(spark.read.parquet(tmpPath), hdr.dim))
       }
-    tombstoneFoldRows(spark, indexPath, ids,
-      if (isSq) "neighbor_id" else "vec_id",
+    tombstoneFoldRows(spark, indexPath, ids, kind.idCol,
       "annTombstoneFold", clearTombstones = true, onTmp)
   }
 
@@ -3470,38 +3251,61 @@ object Similarity {
     // expensive solve is already paid
     requireNoTombstones(spark, indexPath,
       "pcaIvfPqIndexWrite (build over an existing artifact)")
-    val cov = covarianceMatrix(embeddings, dim, idCol, vecCol,
-      trainSample, trainFraction)
-    val rot = jacobiEigen(cov)._2.take(outDim)
-    // training-time variance capture of the stored rotation — the
-    // baseline the staleness audit ([[pcaCaptureAudit]]) compares a
-    // fresh sample's capture against; stamped WITH the rotation so the
-    // basis carries its own quality reference
-    val trainCapture = capturePm(rot, cov)
-    val proj = pcaProject(embeddings, rot, idCol, vecCol)
     // trainQuantizers = the production posture (what ivfPqRebuild
     // would install): data-seeded learned centroids + codebooks
     // trained IN PROJECTION space on the same bounded sample; off by
     // default to keep the salted oracle-shared quantizer chain
-    val (cOpt, cbOpt) =
-      if (!trainQuantizers) (None, None)
-      else {
-        val c = kmeansCentroids(proj, k = lists, iters = 2, dim = outDim,
-          idCol = idCol, vecCol = vecCol, trainSample = trainSample,
-          trainFraction = trainFraction, seedFromData = true)
-        val cbFrame = if (residual) residualFloatFrame(proj, c, idCol, vecCol)
-                      else proj
-        val cb = pqLearnedCodebooks(cbFrame, dim = outDim, m = m, codes = codes,
-          iters = 2, vecCol = vecCol, idCol = idCol, trainSample = trainSample,
-          trainFraction = trainFraction, seedFromData = true)
-        (Some(c), Some(cb))
-      }
-    val n = ivfPqIndexWrite(proj, indexPath,
-      outDim, lists, m, codes, idCol, vecCol, cOpt, cbOpt, residual = residual)
-    graft.sources.ArtifactHeader.write(spark, indexPath, "pcarot", Seq(
-      "dim" -> dim.toString, "out_dim" -> outDim.toString,
+    rotatedIvfPqWrite(embeddings, indexPath, dim, outDim, None, 0, lists, m, codes,
+      residual, Option.when(trainQuantizers)((2, 2)), idCol, vecCol, trainSample,
+      trainFraction, finalCodebooks = false)
+  }
+
+  /** Train a rotation on `embeddings`, write an IVF-PQ artifact over
+    * the rotated vectors, then stamp the rotation as the content-hashed
+    * pcarot sidecar — the shared body of the PCA/OPQ builders and the
+    * PCA rebuild. The rotation trainer follows the pcarot `method`:
+    * the truncated PCA eigenbasis (None), the OPQ_P eigenvalue
+    * allocation ("opq_p", full rank), or the OPQ_I alternating loop at
+    * `opqIters` ("opq_i"; with `finalCodebooks` it also returns
+    * codebooks trained in its final space, which the write then uses).
+    * Every trainer reads ONE covariance aggregate, which also yields
+    * the training-time variance capture stamped WITH the rotation —
+    * the baseline [[pcaCaptureAudit]] compares a fresh sample against.
+    * `iters` = (kmeans, codebook) iterations of data-seeded quantizer
+    * training in rotated space; None keeps the salted quantizers.
+    */
+  private def rotatedIvfPqWrite(embeddings: DataFrame, path: String, dim: Int,
+                                outDim: Int, method: Option[String], opqIters: Int,
+                                lists: Int, m: Int, codes: Int, residual: Boolean,
+                                iters: Option[(Int, Int)], idCol: String, vecCol: String,
+                                trainSample: Int, trainFraction: Double,
+                                finalCodebooks: Boolean): Long = {
+    val cov = covarianceMatrix(embeddings, dim, idCol, vecCol, trainSample, trainFraction)
+    val (rot, rotCbs) = method match {
+      case Some("opq_p") =>
+        val (eigs, eigRows) = jacobiEigen(cov)
+        (opqEigenAllocate(eigs, m).map(eigRows), None)
+      // the Ge et al. alternating loop, warm-started from the same
+      // eigen allocation and fed THIS covariance (recomputing it would
+      // repeat the aggregate and the eigensolve)
+      case Some("opq_i") =>
+        opqIterRotationFrom(embeddings, cov, dim, m, codes, opqIters, idCol, vecCol,
+          trainSample, trainFraction, finalCodebooks)
+      case _ => (jacobiEigen(cov)._2.take(outDim), None)
+    }
+    val proj = pcaProject(embeddings, rot, idCol, vecCol)
+    val trained = iters.map { case (kmIters, pqIters) =>
+      trainIvfPq(proj, rot.length, lists, m, codes, residual, kmIters, pqIters, idCol,
+        vecCol, trainSample, trainFraction, seedFromData = true, rotCbs)
+    }
+    val n = ivfPqIndexWrite(proj, path, rot.length, lists, m, codes, idCol, vecCol,
+      trained.map(_._1), trained.map(_._2), residual = residual)
+    graft.sources.ArtifactHeader.write(embeddings.sparkSession, path, "pcarot", Seq(
+      "dim" -> dim.toString, "out_dim" -> rot.length.toString,
       "rotation" -> encodeMatrix(rot),
-      "capture_pm" -> trainCapture.toString))
+      "capture_pm" -> capturePm(rot, cov).toString) ++
+      method.map("method" -> _) ++
+      (if (method.contains("opq_i")) Seq("opq_iters" -> opqIters.toString) else Nil))
     n
   }
 
@@ -3513,12 +3317,20 @@ object Similarity {
   def annPcaIvfPqProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                          queries: DataFrame, k: Int, nprobe: Int = 4,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val rot = pcaRotationAt(spark, indexPath, "annPcaIvfPqProbeAt")
+                         vecCol: String = "embedding"): DataFrame =
+    pcaProbeAt(spark, indexPath, queries, k, nprobe, idCol, vecCol, None,
+      "annPcaIvfPqProbeAt")
+
+  /** The projecting probe behind every PCA entry: raw queries through
+    * the stored rotation, then the header-trusted IVF-PQ probe.
+    */
+  private def pcaProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                         queries: DataFrame, k: Int, nprobe: Int, idCol: String,
+                         vecCol: String, allowedIds: Option[DataFrame],
+                         what: String): DataFrame =
     ivfPqProbeAtTrusted(spark, indexPath,
-      pcaProject(queries, rot, idCol, vecCol),
-      k, nprobe, idCol, vecCol, None, None, None)
-  }
+      pcaProject(queries, pcaRotationAt(spark, indexPath, what), idCol, vecCol),
+      k, nprobe, idCol, vecCol, None, None, allowedIds)
 
   /** Filtered search against the composed PCA artifact — the
     * [[annIvfPqProbeFilteredAt]] semantics (top-k WITHIN the allowed
@@ -3531,12 +3343,9 @@ object Similarity {
                                  indexPath: String, queries: DataFrame,
                                  allowedIds: DataFrame, k: Int, nprobe: Int = 4,
                                  idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): DataFrame = {
-    val rot = pcaRotationAt(spark, indexPath, "annPcaIvfPqProbeFilteredAt")
-    ivfPqProbeAtTrusted(spark, indexPath,
-      pcaProject(queries, rot, idCol, vecCol),
-      k, nprobe, idCol, vecCol, None, None, Some(allowedIds))
-  }
+                                 vecCol: String = "embedding"): DataFrame =
+    pcaProbeAt(spark, indexPath, queries, k, nprobe, idCol, vecCol, Some(allowedIds),
+      "annPcaIvfPqProbeFilteredAt")
 
   /** [[annPcaIvfPqRefineAt]] under a metadata filter: filtered ADC in
     * PCA space keeps `rerank` allowed survivors, exact cosine in the
@@ -3563,18 +3372,16 @@ object Similarity {
                           corpus: DataFrame, queries: DataFrame, k: Int,
                           nprobe: Int = 4, rerank: Int = 32,
                           idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame = {
-    val rot = pcaRotationAt(spark, indexPath, "annPcaIvfPqRefineAt")
+                          vecCol: String = "embedding"): DataFrame =
     refineExact(corpus,
-      ivfPqProbeAtTrusted(spark, indexPath,
-        pcaProject(queries, rot, idCol, vecCol),
-        k = rerank, nprobe, idCol, vecCol, None, None, None),
+      pcaProbeAt(spark, indexPath, queries, rerank, nprobe, idCol, vecCol, None,
+        "annPcaIvfPqRefineAt"),
       queries, k, idCol, vecCol)
-  }
 
   /** Header-driven append for the composed PCA artifact: RAW vectors
-    * project through the STORED rotation, then ride
-    * [[ivfPqIndexAppendAt]] (idempotent admission, generation
+    * project through the STORED rotation, then encode under the
+    * artifact's IVF-PQ header through the shared header-driven append
+    * ([[AnnLifecycle.appendAt]]: idempotent admission, generation
     * backstop). The rotation is deliberately NOT retrained per batch —
     * an index has one projection basis; drift in the basis itself is
     * a rebuild decision (fresh [[pcaIvfPqIndexWrite]]), not an append
@@ -3585,11 +3392,12 @@ object Similarity {
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): Long = {
     val spark = newVectors.sparkSession
-    val rot = pcaRotationAt(spark, indexPath, "pcaIvfPqIndexAppendAt")
-    requireCorpusDim(newVectors, rot.head.length, indexPath, vecCol,
-      "pcaIvfPqIndexAppendAt")
-    ivfPqIndexAppendAt(pcaProject(newVectors, rot, idCol, vecCol), indexPath,
-      idCol, vecCol)
+    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "pcaIvfPqIndexAppendAt") {
+      val rot = pcaRotationAt(spark, indexPath, "pcaIvfPqIndexAppendAt")
+      val pq = ivfPqCodec(spark, indexPath, "pcaIvfPqIndexAppendAt")
+      pq.copy(kind = AnnLifecycle.PcaIvfPq, inputDim = rot.head.length,
+        encode = (v, i, c) => pq.encode(pcaProject(v, rot, i, c), i, c))
+    }
   }
 
   /** The stored rotation of a composed PCA artifact — the read-path
@@ -3598,7 +3406,14 @@ object Similarity {
     */
   def pcaRotationAt(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String,
-                    what: String = "pcaRotationAt"): Array[Array[Double]] = {
+                    what: String = "pcaRotationAt"): Array[Array[Double]] =
+    pcaRotHeader(spark, indexPath, what)._2
+
+  /** The pcarot sidecar's params and its validated rotation; refuses a
+    * path without one.
+    */
+  private def pcaRotHeader(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                           what: String): (Map[String, String], Array[Array[Double]]) = {
     val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot").getOrElse(
       sys.error(s"$what: no pcarot header at $indexPath — the index holds PROJECTED " +
         "vectors, and probing it with unprojected queries scores a different space " +
@@ -3607,7 +3422,7 @@ object Similarity {
     require(rot.length == kv("out_dim").toInt &&
       rot.forall(_.length == kv("dim").toInt),
       s"$what: pcarot header at $indexPath disagrees with its own dims")
-    rot
+    (kv, rot)
   }
 
   // ------------------------------------------------------------------
@@ -3643,11 +3458,7 @@ object Similarity {
                       trainSample: Int = 0, trainFraction: Double = 0.0,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): (Long, Long) = {
-    val spark = corpus.sparkSession
-    val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot")
-      .getOrElse(sys.error(s"pcaCaptureAudit: no pcarot header at $indexPath — " +
-        "only a PCA-composed artifact has a basis to audit"))
-    val rot = pcaRotationAt(spark, indexPath, "pcaCaptureAudit")
+    val (kv, rot) = pcaRotHeader(corpus.sparkSession, indexPath, "pcaCaptureAudit")
     val stored = kv.get("capture_pm").map(_.toLong).getOrElse(
       sys.error(s"pcaCaptureAudit: pcarot header at $indexPath predates the " +
         "capture baseline — restamp it with pcaCaptureRestamp (the new baseline " +
@@ -3667,14 +3478,11 @@ object Similarity {
                         trainSample: Int = 0, trainFraction: Double = 0.0,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): Long = {
-    val spark = corpus.sparkSession
-    val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot")
-      .getOrElse(sys.error(s"pcaCaptureRestamp: no pcarot header at $indexPath"))
-    val rot = pcaRotationAt(spark, indexPath, "pcaCaptureRestamp")
+    val (kv, rot) = pcaRotHeader(corpus.sparkSession, indexPath, "pcaCaptureRestamp")
     val cov = covarianceMatrix(corpus, rot.head.length, idCol, vecCol,
       trainSample, trainFraction)
     val c = capturePm(rot, cov)
-    graft.sources.ArtifactHeader.write(spark, indexPath, "pcarot",
+    graft.sources.ArtifactHeader.write(corpus.sparkSession, indexPath, "pcarot",
       ((kv - "capture_pm").toSeq :+ ("capture_pm" -> c.toString)))
     c
   }
@@ -3739,139 +3547,29 @@ object Similarity {
                       allowShrink: Boolean = false,
                       minRecallAbs: Double = 0.0,
                       maxRecallQueryRows: Long = DefaultMaxBenchRows)
-      : RebuildReport = {
-    val spark = corpus.sparkSession
-    graft.sources.SwapRecovery.repair(spark, indexPath) // crashed prior swap
-    val hdr = ivfPqRequireHeader(spark, indexPath,
-      "A rebuild of an artifact whose build parameters are unverifiable would " +
-        "guess — stamp it first (pcaIvfPqIndexWrite stamps both headers).")
-    val oldKv = graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot")
-      .getOrElse(sys.error(s"pcaIvfPqRebuild: no pcarot header at $indexPath — " +
-        "a plain IVF-PQ artifact rebuilds via ivfPqRebuild (there is no basis " +
-        "to retrain)"))
-    val (dim, outDim) = (oldKv("dim").toInt, oldKv("out_dim").toInt)
-    requireNoTombstones(spark, indexPath, "pcaIvfPqRebuild")
-    recallQueries.foreach { q =>
-      val qRows =
-        q.limit(math.min(maxRecallQueryRows, Int.MaxValue - 1L).toInt + 1).count()
-      require(qRows > 0,
-        "pcaIvfPqRebuild: recallQueries is empty — the recall gate would verify " +
-          "nothing; pass None to skip it deliberately")
-      require(qRows <= maxRecallQueryRows,
-        s"pcaIvfPqRebuild: recallQueries has >$maxRecallQueryRows rows; the " +
-          "gate's exact ground truth is a broadcast nested-loop over corpus x " +
-          "queries (quadratic) — gate on a bounded query sample instead")
+      : RebuildReport =
+    AnnLifecycle.rebuild(corpus, indexPath, AnnLifecycle.PcaIvfPq, recallQueries, k,
+        nprobe, minRecallRatio, minRecallAbs, maxRecallQueryRows, allowShrink,
+        idCol, vecCol) {
+      val spark = corpus.sparkSession
+      val hdr = ivfPqRequireHeader(spark, indexPath, "pcaIvfPqRebuild")
+      val (oldKv, oldRot) = pcaRotHeader(spark, indexPath, "pcaIvfPqRebuild")
+      val (dim, outDim) = (oldRot.head.length, oldRot.length)
+      AnnLifecycle.Retrain(dim, { tmp =>
+        // fresh basis from the current corpus — the whole point —
+        // trained by the stored method: an OPQ_P artifact re-learns the
+        // eigenvalue ALLOCATION too, an OPQ_I one re-runs the full
+        // alternating loop at its stamped iteration count (skipping the
+        // loop's final codebook pass: the rebuild retrains codebooks
+        // with ITS pqIters/residual). The NEW rotation rides the
+        // rewrite from birth — the recall probe and every post-swap
+        // consumer read it from the artifact
+        rotatedIvfPqWrite(corpus, tmp, dim, outDim, oldKv.get("method"),
+          oldKv.get("opq_iters").map(_.toInt).getOrElse(2), hdr.lists, hdr.m,
+          hdr.codes, hdr.residual, Some((kmIters, pqIters)), idCol, vecCol,
+          trainSample, trainFraction, finalCodebooks = false)
+      })
     }
-    requireCorpusDim(corpus, dim, indexPath, vecCol, "pcaIvfPqRebuild")
-    val rowsBefore = spark.read.parquet(indexPath).count()
-
-    // fresh basis from the current corpus — the whole point; capture
-    // baseline computed against the SAME training covariance. The
-    // rebuild is method-aware: an OPQ_P artifact re-learns the
-    // eigenvalue ALLOCATION too (its rotation is the permuted
-    // full-rank eigenbasis, not the truncated one)
-    val cov = covarianceMatrix(corpus, dim, idCol, vecCol,
-      trainSample, trainFraction)
-    val method = oldKv.get("method")
-    val rot = method match {
-      case Some("opq_p") =>
-        val (eigs, eigRows) = jacobiEigen(cov)
-        opqEigenAllocate(eigs, hdr.m).map(eigRows)
-      case Some("opq_i") =>
-        // re-run the full alternating loop at the stamped iteration
-        // count — a rebuild of an iterative-OPQ artifact re-learns
-        // rotation AND the codebook interplay, not just the
-        // allocation. The rebuild's own covariance feeds the warm
-        // start, and the loop skips its final codebook pass (the
-        // rebuild retrains codebooks below with ITS pqIters/residual)
-        opqIterRotationFrom(corpus, cov, dim, hdr.m, hdr.codes,
-          oldKv.get("opq_iters").map(_.toInt).getOrElse(2),
-          idCol, vecCol, trainSample, trainFraction,
-          finalCodebooks = false)._1
-      case _ => jacobiEigen(cov)._2.take(outDim)
-    }
-    val freshCapture = capturePm(rot, cov)
-    val proj = pcaProject(corpus, rot, idCol, vecCol)
-    val cents = kmeansCentroids(proj, k = hdr.lists, iters = kmIters,
-      dim = outDim, idCol = idCol, vecCol = vecCol, trainSample = trainSample,
-      trainFraction = trainFraction, seedFromData = true)
-    val cbTrainFrame =
-      if (hdr.residual) residualFloatFrame(proj, cents, idCol, vecCol)
-      else proj
-    val cbs = pqLearnedCodebooks(cbTrainFrame, dim = outDim, m = hdr.m,
-      codes = hdr.codes, iters = pqIters, vecCol = vecCol, idCol = idCol,
-      trainSample = trainSample, trainFraction = trainFraction,
-      seedFromData = true)
-
-    val (fs, p) = hadoopFs(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".rebuild.tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".rebuild.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    val rowsAfter = ivfPqIndexWrite(proj, tmp.toString, outDim, hdr.lists,
-      hdr.m, hdr.codes, idCol, vecCol, Some(cents), Some(cbs),
-      residual = hdr.residual)
-    // the NEW rotation rides the rewrite from birth — the recall probe
-    // below and every post-swap consumer read it from the artifact
-    graft.sources.ArtifactHeader.write(spark, tmp.toString, "pcarot", Seq(
-      "dim" -> dim.toString, "out_dim" -> outDim.toString,
-      "rotation" -> encodeMatrix(rot),
-      "capture_pm" -> freshCapture.toString) ++
-      method.map("method" -> _) ++
-      oldKv.get("opq_iters").map("opq_iters" -> _))
-
-    val corpusRows = corpus.count()
-    if (rowsAfter != corpusRows) {
-      fs.delete(tmp, true)
-      sys.error(s"pcaIvfPqRebuild: re-encoded artifact has $rowsAfter rows, " +
-        s"corpus has $corpusRows; artifact at $indexPath left untouched")
-    }
-    if (rowsAfter < rowsBefore && !allowShrink) {
-      fs.delete(tmp, true)
-      sys.error(s"pcaIvfPqRebuild: corpus has $rowsAfter rows but the live " +
-        s"artifact at $indexPath has $rowsBefore — a rebuild from a partial " +
-        "corpus would DROP vectors. Pass the full corpus (did appends land " +
-        "since this snapshot?), or allowShrink = true if the shrink is " +
-        "deliberate; artifact left untouched")
-    }
-    val (recallBefore, recallAfter) = recallQueries match {
-      case None => (Double.NaN, Double.NaN)
-      case Some(q) =>
-        // exact ground truth over the RAW space, once for both sides —
-        // each generation probes through its OWN rotation, so the gate
-        // measures the served end-to-end ranking (projection loss
-        // included), not just the quantizer half
-        val exact = topKDot(corpus, q, k, idCol, vecCol).localCheckpoint()
-        def meanRecall(path: String): Double =
-          annRecall(exact,
-              annPcaIvfPqProbeAt(spark, path, q, k, nprobe, idCol, vecCol), k)
-            .agg(avg(col("recall"))).collect()(0).getDouble(0)
-        val before = meanRecall(indexPath)
-        val after = meanRecall(tmp.toString)
-        graft.plans.CheckpointHygiene.free(exact)
-        if (after < minRecallRatio * before) {
-          fs.delete(tmp, true)
-          sys.error(f"pcaIvfPqRebuild: retrained recall@$k $after%.4f fell " +
-            f"below $minRecallRatio x stale recall $before%.4f; artifact at " +
-            s"$indexPath left untouched — inspect the training sample or " +
-            "iterations")
-        }
-        if (after < minRecallAbs || (before == 0.0 && after <= minRecallAbs)) {
-          fs.delete(tmp, true)
-          sys.error(f"pcaIvfPqRebuild: retrained recall@$k $after%.4f did not " +
-            f"clear the absolute floor $minRecallAbs%.4f (stale recall " +
-            f"$before%.4f" +
-            (if (before == 0.0) " — the relative gate proves nothing" else "") +
-            s"); artifact at $indexPath left untouched — the retrain did not " +
-            "recover the drifted region")
-        }
-        (before, after)
-    }
-    // fresh pcarot/ivfpq headers already in tmp win over the carried
-    // stale ones (carrySidecars copies only names tmp lacks)
-    carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    artifactSwap(fs, p, tmp, old, "pcaIvfPqRebuild")
-    RebuildReport(rowsBefore, rowsAfter, recallBefore, recallAfter)
-  }
 
   /** One-call maintenance step for the composed artifact's BASIS: poll
     * [[pcaNeedsRebuild]] and EXECUTE [[pcaIvfPqRebuild]] when the
@@ -3892,11 +3590,11 @@ object Similarity {
                               vecCol: String = "embedding",
                               allowShrink: Boolean = false,
                               minRecallAbs: Double = 0.0): Option[RebuildReport] =
-    if (!pcaNeedsRebuild(corpus, indexPath, driftRatioPm, trainSample,
-        trainFraction, idCol, vecCol)) None
-    else Some(pcaIvfPqRebuild(corpus, indexPath, kmIters, pqIters,
-      trainSample, trainFraction, recallQueries, k, nprobe, minRecallRatio,
-      idCol, vecCol, allowShrink, minRecallAbs))
+    Option.when(pcaNeedsRebuild(corpus, indexPath, driftRatioPm, trainSample,
+        trainFraction, idCol, vecCol))(
+      pcaIvfPqRebuild(corpus, indexPath, kmIters, pqIters,
+        trainSample, trainFraction, recallQueries, k, nprobe, minRecallRatio,
+        idCol, vecCol, allowShrink, minRecallAbs))
 
   // ------------------------------------------------------------------
   // OPQ (Ge et al., "Optimized Product Quantization", CVPR 2013 — the
@@ -4009,44 +3707,12 @@ object Similarity {
     // expensive solve is paid)
     requireNoTombstones(spark, indexPath,
       "opqIvfPqIndexWrite (build over an existing artifact)")
-    val cov = covarianceMatrix(embeddings, dim, idCol, vecCol,
-      trainSample, trainFraction)
-    val (eigs, eigRows) = jacobiEigen(cov)
-    // refineIters > 0: the Ge et al. alternating loop (warm-started
-    // from this same eigen allocation inside opqIterRotation, which
-    // also hands back codebooks already trained in the final space)
-    val (rot, iterCbs) =
-      if (refineIters > 0)
-        // reuse THIS call's covariance — the loop's warm start would
-        // otherwise recompute the aggregate and the eigensolve
-        opqIterRotationFrom(embeddings, cov, dim, m, codes, refineIters,
-          idCol, vecCol, trainSample, trainFraction, finalCodebooks = true)
-      else (opqEigenAllocate(eigs, m).map(eigRows), None)
-    val proj = pcaProject(embeddings, rot, idCol, vecCol)
-    val (cOpt, cbOpt) =
-      if (!trainQuantizers) (None, None)
-      else {
-        val c = kmeansCentroids(proj, k = lists, iters = 2, dim = dim,
-          idCol = idCol, vecCol = vecCol, trainSample = trainSample,
-          trainFraction = trainFraction, seedFromData = true)
-        val cb = iterCbs.getOrElse {
-          val cbFrame = if (residual) residualFloatFrame(proj, c, idCol, vecCol)
-                        else proj
-          pqLearnedCodebooks(cbFrame, dim = dim, m = m, codes = codes,
-            iters = 2, vecCol = vecCol, idCol = idCol, trainSample = trainSample,
-            trainFraction = trainFraction, seedFromData = true)
-        }
-        (Some(c), Some(cb))
-      }
-    val n = ivfPqIndexWrite(proj, indexPath,
-      dim, lists, m, codes, idCol, vecCol, cOpt, cbOpt, residual = residual)
-    graft.sources.ArtifactHeader.write(spark, indexPath, "pcarot", Seq(
-      "dim" -> dim.toString, "out_dim" -> dim.toString,
-      "rotation" -> encodeMatrix(rot),
-      "capture_pm" -> capturePm(rot, cov).toString,
-      "method" -> (if (refineIters > 0) "opq_i" else "opq_p")) ++
-      (if (refineIters > 0) Seq("opq_iters" -> refineIters.toString) else Nil))
-    n
+    // refineIters > 0: the Ge et al. alternating loop, which also
+    // hands back codebooks already trained in the final space
+    rotatedIvfPqWrite(embeddings, indexPath, dim, dim,
+      Some(if (refineIters > 0) "opq_i" else "opq_p"), refineIters, lists, m, codes,
+      residual, Option.when(trainQuantizers)((2, 2)), idCol, vecCol, trainSample,
+      trainFraction, finalCodebooks = true)
   }
 
   /** NON-PARAMETRIC OPQ (Ge et al. 2013 §4, the production Faiss

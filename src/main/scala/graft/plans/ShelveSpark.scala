@@ -18,27 +18,23 @@ import scala.reflect.ClassTag
   * property-tested in ShelveSparkSpec).
   */
 object ShelveSpark {
+  /** Upper bound on the slices one fan-out job is split into. */
+  private val MaxSlices = 64
+
   def tester[A: ClassTag, D: ClassTag](spark: SparkSession, engine: Engine[A, D],
-                                       minBatch: Int = 2, maxSlices: Int = 64)
+                                       minBatch: Int = 2)
   : (Int, A, D, Seq[IndepCase[A, D]]) => Map[String, Boolean] = {
     (cmd: Int, arg: A, curSt: D, cases: Seq[IndepCase[A, D]]) =>
       if (cases.length < minBatch) {
         cases.iterator.map(c => c.concEvid -> WorkCache.isIndependent(engine, cmd, arg, curSt, c)).toMap
       } else {
-        val slices = math.min(cases.length, maxSlices)
+        val slices = math.min(cases.length, MaxSlices)
         spark.sparkContext.parallelize(cases.toIndexedSeq, slices)
           .map(c => c.concEvid -> WorkCache.isIndependent(engine, cmd, arg, curSt, c))
           .collect().toMap
       }
   }
 
-  /** Spark fan-out for the commutation-test BASE replays — the other
-    * parallel half of a shelve round (round-11): each [[BaseTask]] is
-    * a pure suffix fold off a shared prefix state, so a frontier of N
-    * events becomes N independent folds over executors. Delegates to
-    * [[WorkCache.replayTask]], the same kernel the sequential fallback
-    * runs — equal by construction.
-    */
   /** FUSED fan-out: per conc event, fold the base state AND run the
     * commutation test inside one task — one Spark job per round, the
     * folded states never ship back to the driver, and the round's
@@ -49,7 +45,7 @@ object ShelveSpark {
     * construction.
     */
   def fusedTester[A: ClassTag, D: ClassTag](spark: SparkSession, engine: Engine[A, D],
-                                            minBatch: Int = 2, maxSlices: Int = 64)
+                                            minBatch: Int = 2)
   : graft.core.ShelveRound[A, D] => Map[String, Boolean] = {
     (round: graft.core.ShelveRound[A, D]) =>
       if (round.entries.length < minBatch) {
@@ -57,7 +53,7 @@ object ShelveSpark {
           evid -> WorkCache.roundVerdict(engine, round, evid, p)
         }.toMap
       } else {
-        val slices = math.min(round.entries.length, maxSlices)
+        val slices = math.min(round.entries.length, MaxSlices)
         // broadcast the shared round context once; entries are
         // (evid, position) pairs, bytes each
         val shared = spark.sparkContext.broadcast(round.copy(entries = Vector.empty))
@@ -71,14 +67,21 @@ object ShelveSpark {
       }
   }
 
+  /** Spark fan-out for the commutation-test BASE replays — the other
+    * parallel half of a shelve round (round-11): each [[BaseTask]] is
+    * a pure suffix fold off a shared prefix state, so a frontier of N
+    * events becomes N independent folds over executors. Delegates to
+    * [[WorkCache.replayTask]], the same kernel the sequential fallback
+    * runs — equal by construction.
+    */
   def baseBuilder[A: ClassTag, D: ClassTag](spark: SparkSession, engine: Engine[A, D],
-                                            minBatch: Int = 2, maxSlices: Int = 64)
+                                            minBatch: Int = 2)
   : Seq[BaseTask[A, D]] => Map[String, D] = {
     (tasks: Seq[BaseTask[A, D]]) =>
       if (tasks.length < minBatch) {
         tasks.iterator.map(t => t.concEvid -> WorkCache.replayTask(engine, t)).toMap
       } else {
-        val slices = math.min(tasks.length, maxSlices)
+        val slices = math.min(tasks.length, MaxSlices)
         spark.sparkContext.parallelize(tasks.toIndexedSeq, slices)
           .map(t => t.concEvid -> WorkCache.replayTask(engine, t))
           .collect().toMap

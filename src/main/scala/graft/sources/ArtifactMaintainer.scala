@@ -439,46 +439,53 @@ object ArtifactMaintainer {
                      k: Int = 5, nprobe: Int = 4,
                      minRecallRatio: Double = 0.9,
                      minRecallAbs: Double = 0.0): Task =
-    Task(s"ann_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}") { () =>
-      // the rebuild verb refuses a live tombstone set (a retrain would
-      // resurrect deleted rows) — inside the exclusive window the fold
-      // is safe and cheap relative to the retrain, so fold first AND
-      // exclude the folded ids from this retrain's corpus (the thunk
-      // may predate the delete), instead of failing a window the due
-      // check opened for balance
-      val (pre, c) = foldReconciled(indexPath, corpus())
-      pre +
-      (graft.operators.Similarity.ivfPqRebuildIfNeeded(c, indexPath,
+    annRebuildBody("ann_rebuild", indexPath, corpus, "balanced — no rebuild",
+        "rebuilt") {
+      graft.operators.Similarity.ivfPqRebuildIfNeeded(_, indexPath,
         rebuildPm, trainFraction = trainFraction, recallQueries = recallQueries,
         k = k, nprobe = nprobe, minRecallRatio = minRecallRatio,
-        minRecallAbs = minRecallAbs) match {
-        case None => "balanced — no rebuild"
+        minRecallAbs = minRecallAbs)
+    }
+
+  /** The task body shared by the ANN rebuild tasks. The rebuild verbs
+    * refuse a live tombstone set (a retrain would resurrect deleted
+    * rows) — inside the exclusive window the fold is safe and cheap
+    * relative to the retrain, so fold first AND exclude the folded ids
+    * from this retrain's corpus (the thunk may predate the delete; the
+    * fold clears the sidecar, so a deleted doc left in the corpus
+    * would be re-encoded with no tombstone left to shadow it), instead
+    * of failing a window the due check opened. Then the verb's own
+    * audited `…IfNeeded`, which re-audits in-window.
+    */
+  private def annRebuildBody(tag: String, indexPath: String, corpus: () => DataFrame,
+                             healthy: String, rebuilt: String)
+                            (ifNeeded: DataFrame => Option[
+                              graft.operators.Similarity.RebuildReport]): Task =
+    Task(s"$tag:${new org.apache.hadoop.fs.Path(indexPath).getName}") { () =>
+      val c0 = corpus()
+      val spark = c0.sparkSession
+      val ids = Tombstones.read(spark, indexPath)
+      val (pre, c) =
+        if (ids.isEmpty) ("", c0)
+        else {
+          val (b, a) = graft.operators.Similarity.annTombstoneFold(spark, indexPath)
+          (s"folded ${b - a} tombstoned rows; ",
+            graft.operators.Similarity.tombstoneExclude(c0, ids, "vec_id"))
+        }
+      pre + (ifNeeded(c) match {
+        case None => healthy
         case Some(r) =>
-          f"rebuilt rows ${r.rowsBefore} -> ${r.rowsAfter}, " +
+          f"$rebuilt rows ${r.rowsBefore} -> ${r.rowsAfter}, " +
             f"recall ${r.recallBefore}%.4f -> ${r.recallAfter}%.4f"
       })
     }
 
-  /** Fold a live tombstone set ahead of a rebuild task and EXCLUDE the
-    * folded ids from the retrain corpus — the fold clears the sidecar,
-    * so a corpus thunk that still contains the deleted docs would
-    * otherwise re-encode them with no tombstone left to shadow them
-    * (silent resurrection, the exact failure the rebuild verbs refuse
-    * on). Returns the report prefix ("" when nothing was folded) and
-    * the reconciled corpus.
+  /** A rebuild due check whose task first runs `heal` (a legacy
+    * sidecar restamp the poll scheduled; "" when none is needed).
     */
-  private def foldReconciled(indexPath: String,
-                             corpus: org.apache.spark.sql.DataFrame)
-      : (String, org.apache.spark.sql.DataFrame) = {
-    val spark = corpus.sparkSession
-    val ids = Tombstones.read(spark, indexPath)
-    if (ids.isEmpty) ("", corpus)
-    else {
-      val (b, a) = graft.operators.Similarity.annTombstoneFold(spark, indexPath)
-      (s"folded ${b - a} tombstoned rows; ",
-        graft.operators.Similarity.tombstoneExclude(corpus, ids, "vec_id"))
-    }
-  }
+  private def healingDue(signal: () => Option[String], inner: Task)
+                        (heal: () => String): DueCheck =
+    new DueCheck(inner.name, signal, Task(inner.name)(() => heal() + inner.run()))
 
   /** ANN rebuild trigger on the persisted artifact's list-balance
     * audit ([[graft.operators.Similarity.ivfPqNeedsRebuild]]): one
@@ -493,15 +500,14 @@ object ArtifactMaintainer {
                     recallQueries: Option[DataFrame] = None,
                     k: Int = 5, nprobe: Int = 4,
                     minRecallRatio: Double = 0.9,
-                    minRecallAbs: Double = 0.0): DueCheck =
-    new DueCheck(s"ann_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}",
-      () => {
-        if (graft.operators.Similarity.ivfPqNeedsRebuild(spark, indexPath, rebuildPm))
-          Some(s"list balance past ${rebuildPm}pm of uniform share")
-        else None
-      },
-      annRebuildTask(indexPath, corpus, rebuildPm, trainFraction,
-        recallQueries, k, nprobe, minRecallRatio, minRecallAbs))
+                    minRecallAbs: Double = 0.0): DueCheck = {
+    val task = annRebuildTask(indexPath, corpus, rebuildPm, trainFraction,
+      recallQueries, k, nprobe, minRecallRatio, minRecallAbs)
+    new DueCheck(task.name,
+      () => Option.when(graft.operators.Similarity.ivfPqNeedsRebuild(spark, indexPath,
+        rebuildPm))(s"list balance past ${rebuildPm}pm of uniform share"),
+      task)
+  }
 
   /** The SQ8 twins — [[graft.operators.Similarity.ivfSqRebuildIfNeeded]]
     * under the same window contract. The due probe names WHICH
@@ -515,18 +521,12 @@ object ArtifactMaintainer {
                     k: Int = 5, nprobe: Int = 4,
                     minRecallRatio: Double = 0.9,
                     minRecallAbs: Double = 0.0): Task =
-    Task(s"sq_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}") { () =>
-      val (pre, c) = foldReconciled(indexPath, corpus())
-      pre +
-      (graft.operators.Similarity.ivfSqRebuildIfNeeded(c, indexPath,
+    annRebuildBody("sq_rebuild", indexPath, corpus, "healthy — no rebuild",
+        "rebuilt") {
+      graft.operators.Similarity.ivfSqRebuildIfNeeded(_, indexPath,
         rebuildPm, satPm, trainFraction = trainFraction,
         recallQueries = recallQueries, k = k, nprobe = nprobe,
-        minRecallRatio = minRecallRatio, minRecallAbs = minRecallAbs) match {
-        case None => "healthy — no rebuild"
-        case Some(r) =>
-          f"rebuilt rows ${r.rowsBefore} -> ${r.rowsAfter}, " +
-            f"recall ${r.recallBefore}%.4f -> ${r.recallAfter}%.4f"
-      })
+        minRecallRatio = minRecallRatio, minRecallAbs = minRecallAbs)
     }
 
   def sqRebuildDue(spark: SparkSession, indexPath: String,
@@ -536,11 +536,11 @@ object ArtifactMaintainer {
                    recallQueries: Option[DataFrame] = None,
                    k: Int = 5, nprobe: Int = 4,
                    minRecallRatio: Double = 0.9,
-                   minRecallAbs: Double = 0.0): DueCheck =
-    new DueCheck(s"sq_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}",
+                   minRecallAbs: Double = 0.0): DueCheck = {
+    val sim = graft.operators.Similarity
+    healingDue(
       () => {
         import org.apache.spark.sql.functions.{col, max}
-        val sim = graft.operators.Similarity
         val stats = sim.ivfSqSaturationFromStats(spark, indexPath)
         val sat = stats.getOrElse(sim.ivfSqSaturation(spark, indexPath))
           .agg(max(col("sat_pm"))).collect()(0).getLong(0)
@@ -560,17 +560,12 @@ object ArtifactMaintainer {
             "restamping ivfsq_stats so subsequent polls are O(dim)")
         else None
       },
-      {
-        val inner = sqRebuildTask(indexPath, corpus, rebuildPm, satPm,
-          trainFraction, recallQueries, k, nprobe, minRecallRatio, minRecallAbs)
-        Task(inner.name) { () =>
-          val sim = graft.operators.Similarity
-          val healed =
-            if (sim.ivfSqHasStats(spark, indexPath)) ""
-            else { sim.ivfSqStatsRestamp(spark, indexPath); "stats restamped; " }
-          healed + inner.run()
-        }
-      })
+      sqRebuildTask(indexPath, corpus, rebuildPm, satPm,
+        trainFraction, recallQueries, k, nprobe, minRecallRatio, minRecallAbs)) { () =>
+      if (sim.ivfSqHasStats(spark, indexPath)) ""
+      else { sim.ivfSqStatsRestamp(spark, indexPath); "stats restamped; " }
+    }
+  }
 
   /** Basis-staleness-audited rebuild of a PCA-composed artifact —
     * [[graft.operators.Similarity.pcaIvfPqRebuildIfNeeded]] under the
@@ -586,18 +581,12 @@ object ArtifactMaintainer {
                      k: Int = 5, nprobe: Int = 4,
                      minRecallRatio: Double = 0.9,
                      minRecallAbs: Double = 0.0): Task =
-    Task(s"pca_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}") { () =>
-      val (pre, c) = foldReconciled(indexPath, corpus())
-      pre +
-      (graft.operators.Similarity.pcaIvfPqRebuildIfNeeded(c, indexPath,
+    annRebuildBody("pca_rebuild", indexPath, corpus, "basis healthy — no rebuild",
+        "rotation + quantizers rebuilt,") {
+      graft.operators.Similarity.pcaIvfPqRebuildIfNeeded(_, indexPath,
         driftRatioPm, trainSample = trainSample, trainFraction = trainFraction,
         recallQueries = recallQueries, k = k, nprobe = nprobe,
-        minRecallRatio = minRecallRatio, minRecallAbs = minRecallAbs) match {
-        case None => "basis healthy — no rebuild"
-        case Some(r) =>
-          f"rotation + quantizers rebuilt, rows ${r.rowsBefore} -> " +
-            f"${r.rowsAfter}, recall ${r.recallBefore}%.4f -> ${r.recallAfter}%.4f"
-      })
+        minRecallRatio = minRecallRatio, minRecallAbs = minRecallAbs)
     }
 
   /** The basis drift trigger: due when the stored rotation's variance
@@ -626,7 +615,7 @@ object ArtifactMaintainer {
         "pass trainSample or trainFraction (an unbounded audit re-scans the " +
         "full corpus every poll)")
     val sim = graft.operators.Similarity
-    new DueCheck(s"pca_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}",
+    healingDue(
       () => {
         if (!sim.pcaHasCaptureBaseline(spark, indexPath))
           Some("legacy pcarot without a capture baseline — restamping from " +
@@ -640,20 +629,13 @@ object ArtifactMaintainer {
           else None
         }
       },
-      {
-        val inner = pcaRebuildTask(indexPath, corpus, driftRatioPm,
-          trainSample, trainFraction, recallQueries, k, nprobe,
-          minRecallRatio, minRecallAbs)
-        Task(inner.name) { () =>
-          val healed =
-            if (sim.pcaHasCaptureBaseline(spark, indexPath)) ""
-            else {
-              val c = sim.pcaCaptureRestamp(corpus(), indexPath,
-                trainSample, trainFraction)
-              s"capture baseline restamped at ${c}pm; "
-            }
-          healed + inner.run()
-        }
-      })
+      pcaRebuildTask(indexPath, corpus, driftRatioPm, trainSample, trainFraction,
+        recallQueries, k, nprobe, minRecallRatio, minRecallAbs)) { () =>
+      if (sim.pcaHasCaptureBaseline(spark, indexPath)) ""
+      else {
+        val c = sim.pcaCaptureRestamp(corpus(), indexPath, trainSample, trainFraction)
+        s"capture baseline restamped at ${c}pm; "
+      }
+    }
   }
 }

@@ -381,6 +381,4 @@ object DeltaLogCompaction {
   def compactLogHist(spark: SparkSession, path: String): (Long, Long) =
     compact(spark, path, Seq("source", "bucket", "lo"), Map("c" -> (sum(_))))
 
-  def compactHllRegisters(spark: SparkSession, path: String): (Long, Long) =
-    compact(spark, path, Seq("source", "j"), Map("r" -> (max(_))))
 }

@@ -61,10 +61,6 @@ object GraphStore {
     g
   }
 
-  /** The events table as an analytics DataFrame (edges view etc.). */
-  def eventsDF(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/events")
-
   /** Merge a foreign persisted graph into `(graph, cache)`, mirroring
     * the exvc `m<` flow (main.rs:54-111): linearize the foreign state
     * (OP-4), dedup-insert every event (OP-3, collision aborts),

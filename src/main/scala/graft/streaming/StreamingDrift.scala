@@ -51,15 +51,6 @@ object StreamingDrift {
     (spark.read.parquet(refPath), hdr("n_bins").toInt)
   }
 
-  /** The monitor log with foreachBatch retry duplicates removed
-    * (one row per (batch_id, source) —
-    * [[graft.sources.DeltaLogCompaction.dedupeRetries]]): the frame
-    * alert consumers should read.
-    */
-  def readMonitor(spark: SparkSession, monitorPath: String): DataFrame =
-    graft.sources.DeltaLogCompaction.dedupeRetries(
-      spark.read.parquet(monitorPath), Seq("source"))
-
   /** Start the monitor: per micro-batch, one PSI row per stratum
     * appended to `monitorPath` as (batch_id, source, psi_fp, n_a,
     * n_b) — n_a is the reference total, n_b the batch total.

@@ -182,30 +182,62 @@ class Round18SwapSpec extends AnyFunSuite with SharedSpark {
     "bootstraps") {
     import spark.implicits._
     import graft.operators.Similarity
-    val dir = new java.io.File(
-      java.nio.file.Files.createTempDirectory("r18_annswap").toFile, "idx").getPath
     val rnd = new scala.util.Random(1811)
     def vecs(from: Int, n: Int) = (from until from + n).map(i =>
       (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
-    Similarity.ivfPqIndexWrite(
-      vecs(0, 64).toDF("vec_id", "embedding"), dir, dim = 8, lists = 4, m = 8)
-    val (fs, p) = hadoopFs(dir)
-    // fabricate the mid-swap crash of a rebuild: the complete rewrite
-    // (headers and all) at .rebuild.tmp, the pre-rebuild original at
-    // .rebuild.old, live path missing
-    val old = new Path(p.getParent, p.getName + ".rebuild.old")
-    val tmp = new Path(p.getParent, p.getName + ".rebuild.tmp")
-    copyDir(p, old)
-    assert(fs.rename(p, tmp))
-    assert(!fs.exists(p))
-    // the raw append verb must repair (install the rewrite) and then
-    // APPEND — pre-fix it would have re-stamped a fresh quantizer
-    // header over an empty index and admitted only the new batch
-    assert(Similarity.ivfPqIndexAppend(
-      vecs(1000, 32).toDF("vec_id", "embedding"), dir, dim = 8, lists = 4,
-      m = 8) === 32L)
-    assert(!fs.exists(tmp) && !fs.exists(old))
-    val held = spark.read.parquet(dir).select("vec_id").distinct().count()
-    assert(held === 96L, s"corpus lost through the crashed swap: $held")
+      .toDF("vec_id", "embedding")
+    val pq: String => Unit = dir =>
+      Similarity.ivfPqIndexWrite(vecs(0, 64), dir, dim = 8, lists = 4, m = 8)
+    // every ANN writer entry, as (name, build, pre-crash step, verb,
+    // distinct ids the artifact must hold afterwards): each must repair
+    // the swap FIRST (install the rewrite) and then do its work. An
+    // entry that checks the header before repairing refuses with
+    // "write it with ivfPqIndexWrite" — advice that recreates the index
+    // from one batch and lets the next repair delete the original at
+    // .old
+    val entries: Seq[(String, String => Unit, String => Unit, String => Unit, Long)] = Seq(
+      ("ivfPqIndexAppend", pq, _ => (), dir =>
+        assert(Similarity.ivfPqIndexAppend(vecs(1000, 32), dir, dim = 8, lists = 4,
+          m = 8) === 32L), 96L),
+      ("ivfPqIndexAppendAt", pq, _ => (), dir =>
+        assert(Similarity.ivfPqIndexAppendAt(vecs(1000, 32), dir) === 32L), 96L),
+      ("ivfSqIndexAppendAt",
+        dir => Similarity.ivfSqIndexWrite(vecs(0, 64), dir, dim = 8, lists = 4),
+        _ => (), dir =>
+        assert(Similarity.ivfSqIndexAppendAt(vecs(1000, 32), dir) === 32L), 96L),
+      ("pcaIvfPqIndexAppendAt",
+        dir => Similarity.pcaIvfPqIndexWrite(vecs(0, 64), dir, dim = 8, outDim = 4,
+          lists = 4, m = 4),
+        _ => (), dir =>
+        assert(Similarity.pcaIvfPqIndexAppendAt(vecs(1000, 32), dir) === 32L), 96L),
+      ("annIndexDeleteAt", pq, _ => (), dir =>
+        assert(Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)) === 2L), 64L),
+      ("annTombstoneFold", pq,
+        dir => Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)), dir =>
+        assert(Similarity.annTombstoneFold(spark, dir) === ((64L, 62L))), 62L))
+    // every entry runs; the failure lists each one that did not heal
+    val failed = entries.flatMap { case (name, build, before, verb, held) =>
+      scala.util.Try {
+        val dir = new java.io.File(
+          java.nio.file.Files.createTempDirectory("r18_annswap").toFile, "idx").getPath
+        build(dir)
+        before(dir)
+        val (fs, p) = hadoopFs(dir)
+        // fabricate the mid-swap crash of a rebuild: the complete rewrite
+        // (headers and all) at .rebuild.tmp, the pre-rebuild original at
+        // .rebuild.old, live path missing
+        val old = new Path(p.getParent, p.getName + ".rebuild.old")
+        val tmp = new Path(p.getParent, p.getName + ".rebuild.tmp")
+        copyDir(p, old)
+        assert(fs.rename(p, tmp))
+        assert(!fs.exists(p))
+        verb(dir)
+        assert(!fs.exists(tmp) && !fs.exists(old))
+        val idCol = if (name.startsWith("ivfSq")) "neighbor_id" else "vec_id"
+        val n = spark.read.parquet(dir).select(idCol).distinct().count()
+        assert(n === held, s"corpus lost through the crashed swap: $n")
+      }.failed.toOption.map(e => s"$name: ${e.getMessage}")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 }
