@@ -1,7 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Distributed flavors of the reference's graph algebra
   * (/root/reference/crates/esvc-core/src/graph.rs) as DataFrame
@@ -13,8 +16,14 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB path):
   *  - fixpoint loops carry only the *frontier* forward (BFS), never
   *    re-join the whole closure;
-  *  - every round is `localCheckpoint()`ed to cut lineage growth — the
-  *    #1 driver-killer in iterative Spark jobs;
+  *  - a small traversal pays one job per level: while [[closure]]'s
+  *    visited set is below `BroadcastRows` ids, it and the frontier are
+  *    driver-side id sets (ids only, never payloads; at most
+  *    `BroadcastRows` ids plus one level's distinct deps per edge-table
+  *    partition), and each level is one `collect()` of the frontier's
+  *    deps;
+  *  - past that bound every round is `localCheckpoint()`ed to cut
+  *    lineage growth — the #1 driver-killer in iterative Spark jobs;
   *  - the frontier side of each join is broadcast when small (it almost
   *    always is), so rounds are map-side joins with no shuffle of the
   *    big edge table beyond the first.
@@ -24,20 +33,87 @@ object GraphOps {
 
   /** Transitive closure (reachable set) of `seeds` over `edges(id, dep)`
     * following id -> dep, i.e. the reference's `fold_state(expand=true)`
-    * (graph.rs:59-83). Returns one column `id`.
+    * (graph.rs:59-83). Returns one column `id` of the edge table's id
+    * type.
+    *
+    * Two regimes, one result. While the visited set stays below
+    * `BroadcastRows` — the size at which the frontier and the visited
+    * set would be broadcast through the driver anyway — both live on the
+    * driver as id sets and each level is ONE job: a `collect()` of the
+    * frontier's deps, filtered on the executors by a broadcast of the
+    * frontier and deduplicated per partition; the global dedup and the
+    * set difference happen on the driver. Once the visited set plus the
+    * level just collected reaches `BroadcastRows`, those sets seed the
+    * distributed loop and no later level is collected; distinct seeds of
+    * that size start there. The driver never holds payloads, and never
+    * more than `BroadcastRows` ids plus one level's distinct deps per
+    * edge-table partition. Termination: every level adds at least one
+    * new id to a finite visited set.
     */
-  def closure(seeds: DataFrame, edges: DataFrame, maxIter: Int = 10000): DataFrame = {
+  def closure(seeds: DataFrame, edges: DataFrame): DataFrame = {
     val e = edges.select(col("id"), col("dep"))
-    var acc = seeds.select("id").distinct().localCheckpoint()
-    var accCount = acc.count()
-    var frontier = acc
-    var frontierCount = accCount
+    val t = e.schema("id").dataType
+    val s0 = seeds.select(col("id").cast(t).as("id"))
+    // byte-array ids have no value equality on the driver
+    val driverSeeds =
+      if (t == BinaryType) None
+      else Some(s0.limit(BroadcastRows.toInt).collect()).filter(_.length < BroadcastRows)
+    driverSeeds match {
+      case None =>
+        val acc = s0.distinct().localCheckpoint()
+        val n = acc.count()
+        distributedClosure(e, acc, n, acc, n)
+      case Some(rows) =>
+        val visited = mutable.HashSet.from(rows.iterator.map(_.get(0)))
+        var frontier: collection.Set[Any] = visited.toSet
+        while (frontier.nonEmpty) {
+          val fresh = mutable.HashSet.from(depsOf(frontier, e, t)) --= visited
+          if (visited.size + fresh.size >= BroadcastRows) {
+            visited ++= fresh
+            // the frontier is a driver-built relation: no lineage to cut
+            val acc = idFrame(visited, e).localCheckpoint()
+            return distributedClosure(e, acc, visited.size, idFrame(fresh, e), fresh.size)
+          }
+          visited ++= fresh
+          frontier = fresh
+        }
+        idFrame(visited, e)
+    }
+  }
+
+  /** Deps of the driver-held `ids` in one job: the edge table filtered
+    * by a broadcast of the id set (a null id joins nothing, as in SQL),
+    * each partition deduplicated before the collect, so a fan-in level
+    * ships each shared dep once per partition, not once per edge.
+    */
+  private[graft] def depsOf(ids: collection.Set[Any], e: DataFrame, t: DataType): Array[Any] = {
+    val b = e.sparkSession.sparkContext.broadcast(ids.toSet)
+    try e.filter((r: Row) => !r.isNullAt(0) && b.value.contains(r.get(0)))
+      .select(col("dep").cast(t)).rdd
+      .mapPartitions(_.map(_.get(0)).toSet.iterator).collect()
+    finally b.destroy()
+  }
+
+  private def idFrame(ids: collection.Set[Any], e: DataFrame): DataFrame =
+    e.sparkSession.createDataFrame(ids.iterator.map(Row(_)).toSeq.asJava,
+      StructType(Seq(e.schema("id").copy(nullable = true))))
+
+  /** The distributed BFS from a checkpointed visited set `acc0` and a
+    * lineage-free frontier `frontier0`: carries only the frontier
+    * forward and folds the visited set every four levels.
+    */
+  private def distributedClosure(e: DataFrame, acc0: DataFrame, acc0Count: Long,
+      frontier0: DataFrame, frontier0Count: Long): DataFrame = {
+    var acc = acc0
+    var accCount = acc0Count
+    var frontier = frontier0
+    var frontierCount = frontier0Count
     var iter = 0
     // frontiers superseded since the last fold: still union leaves of
     // the unfolded acc, so they are only freeable once acc re-folds
     var lastFold = acc
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (frontierCount > 0 && iter < maxIter) {
+    val pending = mutable.ArrayBuffer.empty[DataFrame]
+    while (frontierCount > 0) {
       val f = if (frontierCount < BroadcastRows) broadcast(frontier) else frontier
       val accSide = if (accCount < BroadcastRows) broadcast(acc) else acc
       val next = e.join(f, "id").select(col("dep").as("id")).distinct()

@@ -21,21 +21,26 @@ import scala.collection.mutable
   * This session keeps the graph WHERE IT LIVES (the `events` parquet
   * table, keyed by content hash) and the driver holds ONLY the named
   * frontiers (`nstates` — names x antichain hashes, small by the
-  * reference's own data model). Every operator is the corresponding
+  * reference's own data model) between operators. A dependency closure
+  * (inside `compress`, `mergeFrom` and [[editingGraph]]) holds its BFS
+  * state on the driver while it is small: ids only, never payloads, at
+  * most 500k ids (GraphOps' `BroadcastRows`) plus one level's distinct
+  * deps per edge-table partition; a larger closure runs distributed.
+  * Every operator is the corresponding
   * [[graft.plans.GraphOps]] bulk plan:
   *
   *  - `validate` — content-hash recompute on the executors (same JVM
   *    kernel as the driver path, [[Hashes.eventHash]]); returns a
   *    mismatch count, never rows.
   *  - `compress` — `fold_state(expand=false)` (graph.rs:59-83) as
-  *    distributed closure + anti-join; the driver sees only the
-  *    resulting antichain.
+  *    closure + anti-join; the driver receives the resulting
+  *    antichain (and the closure's BFS state within the bound above).
   *  - `linearize` — deterministic topological rounds, returned as a
   *    DataFrame (the bulk `calculate_dependencies` analog).
   *  - `mergeFrom` — the exvc `m<` flow (main.rs:54-111) at graph
   *    level: distributed foreign validation, closure-bounded import
-  *    with collision audit (OP-3), parquet append, distributed
-  *    frontier compression of the union.
+  *    with dangling-dependency and collision audits (OP-3), parquet
+  *    append, frontier compression of the union.
   *
   * Engine-level shelve / tryMerge (dependency re-inference,
   * workcache.rs:121-479) are inherently sequential per event — each
@@ -78,23 +83,24 @@ final class GraphSession[A] private (
   def validate(): Long = GraphSession.invalidCount(events)
 
   /** Transitive dependency closure of `state` as a one-column (`id`)
-    * DataFrame — `fold_state(expand=true)`.
+    * DataFrame — `fold_state(expand=true)`. An id in it need not have a
+    * row in [[events]]: the edge view cannot tell a root from a missing
+    * event, so callers that fetch rows check for [[DependencyNotFound]].
     */
   def closureDF(state: Iterable[String]): DataFrame =
     GraphOps.closure(seedsDF(state), edges)
 
   /** Frontier compression — `fold_state(expand=false)`: members of
     * `union` that are transitive dependencies of other members fold
-    * away. Distributed closure; the driver receives only the antichain.
+    * away. The driver receives the antichain; the closure keeps its
+    * BFS state on the driver only within [[GraphOps.closure]]'s bound.
     */
   def compress(union: Iterable[String]): SortedSet[String] = {
     import spark.implicits._
-    val u = seedsDF(union).localCheckpoint()
+    val u = seedsDF(union)
     val direct = edges.join(u, Seq("id"), "left_semi").select(col("dep").as("id"))
     val reach = GraphOps.closure(direct, edges)
-    val out = u.join(reach, Seq("id"), "left_anti").as[String].collect()
-    graft.plans.CheckpointHygiene.free(u)
-    SortedSet.from(out)
+    SortedSet.from(u.join(reach, Seq("id"), "left_anti").as[String].collect())
   }
 
   /** Deterministic topological linearization of `state`'s closure:
@@ -112,7 +118,8 @@ final class GraphSession[A] private (
     *  1. foreign store validated distributively (hash recompute);
     *  2. import set = closure of the foreign state over foreign edges
     *     (never the whole foreign store — dead foreign branches do not
-    *     travel);
+    *     travel); a closure id with no foreign row throws
+    *     [[DependencyNotFound]] before anything is written;
     *  3. collision audit (OP-3): same hash, different payload aborts;
     *  4. new events (anti-join on hash) appended to the events table;
     *  5. frontier union compressed distributively; `nstates` updated
@@ -138,6 +145,7 @@ final class GraphSession[A] private (
     val needed = GraphOps.closure(seedsDF(fst), GraphSession.edgesOf(foreign))
       .withColumnRenamed("id", "hash")
     val imports = foreign.join(needed, Seq("hash"), "left_semi").localCheckpoint()
+    GraphSession.requireFound(needed, imports)
 
     // collision audit (graph.rs:52-53): deps compare as sorted entry
     // arrays (map equality is not a comparable SQL operation)
@@ -174,13 +182,14 @@ final class GraphSession[A] private (
     * refuses closures beyond driver scale — editing a branch whose
     * history genuinely exceeds it means replaying that many payloads
     * sequentially, which no session shape makes cheap (the reference
-    * accepts the same bound by loading everything, README.md:8-11).
+    * accepts the same bound by loading everything, README.md:8-11). A
+    * closure hash with no stored event throws [[DependencyNotFound]].
     */
   def editingGraph(stateName: String = "", cap: Long = 1000000L): EventGraph[A] = {
     val st = states.getOrElse(stateName, SortedSet.empty[String])
     val g = new EventGraph[A](engine)
     if (st.isEmpty) return g
-    val need = closureDF(st).withColumnRenamed("id", "hash").localCheckpoint()
+    val need = closureDF(st).withColumnRenamed("id", "hash")
     val n = need.count()
     if (n > cap)
       throw new EngineException(s"state '$stateName' closure has $n events, beyond driver cap $cap")
@@ -195,7 +204,7 @@ final class GraphSession[A] private (
       if (h != stored)
         throw new EngineException(s"stored hash $stored does not match recomputed $h")
     }
-    graft.plans.CheckpointHygiene.free(need)
+    if (g.events.size < n) GraphSession.requireFound(need, events)
     g.nstates.update(stateName, st)
     g
   }
@@ -212,6 +221,14 @@ object GraphSession {
     }
     s
   }
+
+  /** Refuse a dependency closure `need` (column `hash`) with a hash
+    * that `found` has no event for — the edge view counts such a hash
+    * in the closure but no row backs it.
+    */
+  private def requireFound(need: DataFrame, found: DataFrame): Unit =
+    need.join(found.select("hash"), Seq("hash"), "left_anti").limit(1).collect()
+      .headOption.foreach(r => throw new DependencyNotFound(r.getString(0)))
 
   private def edgesOf(ev: DataFrame): DataFrame =
     ev.select(col("hash").as("id"), explode(map_keys(col("deps"))).as("dep"))

@@ -48,7 +48,12 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     val heads = ev.select(col("hash"))
       .join(ev.select(explode(map_keys(col("deps"))).as("hash")), Seq("hash"), "left_anti")
       .as[String].collect()
-    val rows = Seq(org.apache.spark.sql.Row("", heads.toSeq))
+    writeHeads(dir, heads.toSeq)
+  }
+
+  /** Persist `heads` as the store's frontier "". */
+  private def writeHeads(dir: String, heads: Seq[String]): Unit = {
+    val rows = Seq(org.apache.spark.sql.Row("", heads))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), GraphStore.nstatesSchema)
       .write.option("compression", "zstd").parquet(s"$dir/nstates")
   }
@@ -86,9 +91,50 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     val again = s.mergeFrom(s"$dir/foreign")
     assert(again === merged && s.eventCount === 2 * colsPerSide * depth)
 
+    // the merged heads' closure crosses GraphOps' driver bound at about
+    // level 3 and hands off to the distributed loop, whose fold window
+    // frees superseded levels: the folded visited set and the last
+    // frontier stay, not one block per level
+    graft.plans.CheckpointHygiene.releaseAll(spark)
+    assert(s.closureDF(merged).count() === 2 * colsPerSide * depth)
+    val live = spark.sparkContext.getPersistentRDDs.size
+    assert(live <= 2, s"leaked $live persistent RDD blocks")
+
     // the editing bridge refuses to materialize beyond its cap —
     // the driver-scale guard the collect() path lacks
     intercept[EngineException](s.editingGraph("", cap = 1000L))
+    graft.plans.CheckpointHygiene.releaseAll(spark)
+  }
+
+  test("a dangling dependency is refused: mergeFrom before its append, editingGraph too") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftsessdangling").toString
+    genStore(s"$dir/local", 0L, 4L, 3)
+    def ev(arg: String, deps: String*) = {
+      val d = SortedMap.from(deps.map(_ -> true))
+      val a = arg.getBytes("UTF-8")
+      (Hashes.eventHash(0, a, d), 0, a, d.toMap)
+    }
+    // the foreign head depends on an event its store never holds
+    val root = ev("root")
+    val absent = ev("absent", root._1)
+    val head = ev("head", root._1, absent._1)
+    Seq(root, head).toDF("hash", "cmd", "arg", "deps")
+      .write.option("compression", "zstd").parquet(s"$dir/foreign/events")
+    writeHeads(s"$dir/foreign", Seq(head._1))
+
+    val s = GraphSession.open(spark, ByteEngine, s"$dir/local")
+    val before = s.eventCount
+    val states = s.states("")
+    val m = intercept[DependencyNotFound](s.mergeFrom(s"$dir/foreign"))
+    assert(m.h === absent._1)
+    assert(s.eventCount === before)
+    assert(s.states("") === states)
+
+    val f = GraphSession.open(spark, ByteEngine, s"$dir/foreign")
+    assert(f.validate() === 0L)
+    val g = intercept[DependencyNotFound](f.editingGraph(""))
+    assert(g.h === absent._1)
     graft.plans.CheckpointHygiene.releaseAll(spark)
   }
 

@@ -49,6 +49,41 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
     assert(got2 == Set(3L, 1L, 0L))
   }
 
+  test("closure past the 500k-id driver bound: distributed from many seeds, hand-off mid-traversal") {
+    // layered graph: id -> id + w, so the closure of [0, w) over ids
+    // below `top` is exactly [0, top)
+    def layered(w: Long, top: Long): (DataFrame, DataFrame) = {
+      val r = spark.range(0, top - w)
+      (spark.range(0, w).toDF("id"), r.select(col("id"), (col("id") + w).as("dep")))
+    }
+    def span(res: DataFrame): Seq[Long] = {
+      val r = res.agg(count(lit(1)), countDistinct(col("id")), min(col("id")), max(col("id"))).head()
+      (0 until 4).map(r.getAs[Number](_).longValue)
+    }
+    // 600k distinct seeds: the distributed loop from the start
+    val (many, e1) = layered(600000L, 1200000L)
+    assert(span(GraphOps.closure(many, e1)) == Seq(1200000L, 1200000L, 0L, 1199999L))
+    // 200k seeds: levels of 200k on the driver until 600k >= the bound
+    val (few, e2) = layered(200000L, 1200000L)
+    assert(span(GraphOps.closure(few, e2)) == Seq(1200000L, 1200000L, 0L, 1199999L))
+    graft.plans.CheckpointHygiene.releaseAll(spark)
+  }
+
+  test("closure over a fan-in level: a shared dep reaches the driver once per partition, not per edge") {
+    // 100k ids each depend on all of 8 shared deps n..n+7, which all
+    // depend on one root 2n: 800k edges into 9 distinct ids
+    val n = 100000L
+    val wide = spark.range(0, n, 1, 4)
+      .select(col("id"), explode(array((0L until 8L).map(j => lit(n + j)): _*)).as("dep"))
+    val e = wide.union(spark.range(n, n + 8).select(col("id"), lit(2 * n).as("dep")))
+    val level = GraphOps.depsOf((0L until n).toSet[Any], e, org.apache.spark.sql.types.LongType)
+    assert(level.toSet == (n until n + 8).toSet[Any])
+    assert(level.length <= 8 * e.rdd.getNumPartitions, s"${level.length} deps collected for 8 distinct")
+    val res = GraphOps.closure(spark.range(0, n).toDF("id"), e).collect().map(_.getLong(0))
+    assert(res.length == n + 9)
+    assert(res.toSet == ((0L until n + 8) :+ 2 * n).toSet)
+  }
+
   test("frontier keeps only non-dependencies (graph.rs:78-81)") {
     val state = ids(Seq(0L, 1L, 2L, 3L, 4L))
     val got = GraphOps.frontier(state, edges).collect().map(_.getLong(0)).toSet
@@ -1542,8 +1577,10 @@ class CheckpointHygieneSpec extends AnyFunSuite with SharedSpark {
     val res = GraphOps.closure(ids.filter(col("id") === 63), edges)
     assert(res.count() == 64)
     val live = spark.sparkContext.getPersistentRDDs.size
-    // 64 BFS rounds; without fold-point freeing this would be >60
-    assert(live <= 8, s"leaked $live persistent RDD blocks")
+    // 64 BFS rounds, all in the driver regime (64 ids << BroadcastRows):
+    // no round checkpoints anything. The distributed loop's fold window
+    // is covered past the hand-off by GraphSessionSpec's 1M-event store.
+    assert(live == 0, s"leaked $live persistent RDD blocks")
     assert(res.count() == 64)
     CheckpointHygiene.releaseAll(spark)
   }
