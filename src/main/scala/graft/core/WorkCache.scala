@@ -36,6 +36,14 @@ final case class BaseTask[A, D](concEvid: String, start: D, suffix: Vector[(Int,
   * entry (the 480-branch soak measured that per-entry shipping as the
   * dominant remaining round cost).
   *
+  * The prefix states are the datums of the round's ONE memoized walk
+  * of `order` (the walk that also yields the round's base state), memo
+  * hit or engine call alike; the driver never refolds the order. A
+  * memo hit may hold a datum folded in another linearization of the
+  * same event set, which is equal because events with no dependency
+  * path between them commute — the invariant every memoized replay
+  * (and so `materialize`) already rests on.
+  *
   * Prefix states are carried as every `anchorStride`-th state
   * (`anchors(j)` = state before `order(j * anchorStride)`), NOT all
   * n+1 of them: a full vector is O(n * |D|) broadcast bytes per round
@@ -141,9 +149,25 @@ final class WorkCache[A, D](
     * Every prefix state is cached. Mirrors `run_deps`
     * (workcache.rs:68-108).
     */
-  def runDeps(graph: EventGraph[A], tt0: SortedSet[String], deps: Seq[String]): (D, SortedSet[String]) = {
+  def runDeps(graph: EventGraph[A], tt0: SortedSet[String], deps: Seq[String]): (D, SortedSet[String]) =
+    walk(graph, tt0, deps)(_ => ())
+
+  /** [[runDeps]] that also hands back every prefix datum it passes:
+    * `states(i)` is the state before `deps(i)` and `states(deps.length)`
+    * the result, whether each came from the memo or the engine.
+    */
+  private[graft] def walkPrefixes(graph: EventGraph[A], tt0: SortedSet[String],
+                                 deps: Seq[String]): (Vector[D], SortedSet[String]) = {
+    val states = Vector.newBuilder[D]
+    val (_, tt) = walk(graph, tt0, deps)(states += _)
+    (states.result(), tt)
+  }
+
+  private def walk(graph: EventGraph[A], tt0: SortedSet[String], deps: Seq[String])
+                  (visit: D => Unit): (D, SortedSet[String]) = {
     var tt = tt0
     var data = stGet(tt).getOrElse(throw new DatasetNotFound)
+    visit(data)
     deps.foreach { evid =>
       val evwd = graph.events.getOrElse(evid, throw new DependencyNotFound(evid))
       val key = tt + evid
@@ -153,6 +177,7 @@ final class WorkCache[A, D](
           data = engine.runEvent(evwd.cmd, evwd.arg, data)
           stPut(key, data)
       }
+      visit(data)
       tt = key
     }
     (data, tt)
@@ -197,9 +222,14 @@ final class WorkCache[A, D](
       seedDeps = seedDeps.filter(h => !curDeps.contains(h))
 
       val useDeps = curDeps.iterator.collect { case (h, Use) => h }.toVector
-      val (baseSt, _) = runForeachRecursively(
-        graph,
-        includeAll(seedDeps.filter(h => !curDeps.get(h).contains(Deny)) ++ useDeps))
+      // ONE memoized walk of the round's full linearization: its last
+      // datum is the base state, and every datum it passes (memo hit or
+      // engine call) is a prefix state the fast-path concs below start
+      // from (seedDeps holds no curDeps key here, so no Deny filter)
+      val fullOrder = graph.calculateDependencies(SortedSet.empty,
+        includeAll(seedDeps.iterator.concat(useDeps.iterator).to(Iterable)))
+      val (prefixStates, _) = walkPrefixes(graph, SortedSet.empty, fullOrder)
+      val baseSt = prefixStates.last
       val curSt = engine.runEvent(cmd, arg, baseSt)
       if (curDeps.isEmpty && baseSt == curSt) return None // no-op event
 
@@ -210,40 +240,19 @@ final class WorkCache[A, D](
       // The replayed datum is carried alongside the event-set — it must
       // not be re-read from the memo, which may have evicted it by now.
       //
-      // PREFIX-SHARED construction (round-11): a non-deferred conc is,
-      // by the deferral test itself, a dependency of nothing in the
-      // list, so removing it changes no other event's Kahn depth — the
-      // "except conc" linearization is the FULL linearization with conc
-      // deleted in place. Its replay therefore equals (full prefix
-      // before conc's position) + a pure fold of the suffix: ONE
-      // n-event prefix pass replaces ~n memoized replays of ~n events
-      // each, which the 480-branch soak measured as the dominant
-      // driver cost of a merge (the memo's set-keyed lookups included),
-      // and the suffix folds are shippable [[BaseTask]]s that
+      // PREFIX-SHARED construction: a non-deferred conc is, by the
+      // deferral test itself, a dependency of nothing in the list, so
+      // removing it changes no other event's Kahn depth — the "except
+      // conc" linearization is the FULL linearization with conc deleted
+      // in place. Its replay therefore equals the walk's prefix state
+      // before conc's position + a pure fold of the suffix: the one
+      // walk above replaces ~n memoized replays of ~n events each, and
+      // the suffix folds are shippable [[BaseTask]]s that
       // [[baseBuilder]] fans out across executors. A structural
       // surprise (except-order NOT a delete-in-place) falls back to
       // the memoized path, so semantics cannot drift.
       val seedDeps2 = mutable.TreeMap.empty[String, D]
-      val fullOrder = graph.calculateDependencies(SortedSet.empty,
-        includeAll(seedDeps.iterator.concat(useDeps.iterator).to(Iterable)))
       val posOf = fullOrder.iterator.zipWithIndex.toMap
-      // LAZY: the O(n) cold fold is paid only once the first fast-path
-      // conc actually needs a prefix state — a round where every conc
-      // is deferred or lands on the structural fallback (which replays
-      // through the memoized runDeps path) costs nothing here
-      lazy val prefixStates: Array[Any] = {
-        val ps = new Array[Any](fullOrder.length + 1)
-        var st: D = stGet(SortedSet.empty[String]).getOrElse(throw new DatasetNotFound)
-        ps(0) = st
-        var i = 0
-        while (i < fullOrder.length) {
-          val ev = graph.events(fullOrder(i))
-          st = engine.runEvent(ev.cmd, ev.arg, st)
-          ps(i + 1) = st
-          i += 1
-        }
-        ps
-      }
       val fastPath = Vector.newBuilder[(String, Int)]
       seedDeps.foreach { concEvid =>
         val incl = SortedMap.from(
@@ -283,13 +292,13 @@ final class WorkCache[A, D](
             // ~n/2-event suffix fold it already runs (see ShelveRound)
             val stride = math.max(1, math.ceil(math.sqrt(fullOrder.length + 1.0)).toInt)
             val anchors = (0 to fullOrder.length by stride)
-              .map(i => prefixStates(i).asInstanceOf[D]).toVector
+              .map(prefixStates).toVector
             ft(ShelveRound(cmd, arg, curSt,
               fullOrder.map { id => val e = graph.events(id); (e.cmd, e.arg) },
               anchors, stride, fp))
           case _ =>
             val ts = fp.map { case (evid, p) =>
-              BaseTask(evid, prefixStates(p).asInstanceOf[D],
+              BaseTask(evid, prefixStates(p),
                 fullOrder.drop(p + 1).map { id =>
                   val e = graph.events(id); (e.cmd, e.arg)
                 })

@@ -9,10 +9,16 @@ package graft.functions.wasm
   * `wasmtime::Store` + `Instance` per event.
   *
   * Sandbox properties enforced here (not just assumed):
-  *  - memory is bounds-checked on every access (WasmTrap on OOB);
+  *  - memory is bounds-checked on every access (WasmTrap on OOB); a
+  *    load/store address is the unsigned i32 operand plus the unsigned
+  *    static offset, summed in 64 bits (spec §4.4.7), so no address
+  *    wraps back into bounds;
   *  - memory growth is capped at [[maxPages]];
   *  - execution is metered: more than [[fuel]] instructions traps
   *    (guaranteed termination — a spinning module cannot hang replay);
+  *  - control nesting (calls plus the blocks/loops/ifs inside them) is
+  *    capped at [[WasmModule.MaxDepth]], so runaway recursion traps
+  *    instead of overflowing the host's JVM stack;
   *  - no imports exist, so a module cannot reach the host at all.
   *
   * Branch semantics per spec §4.4.8: a `br` to a block/if exits it
@@ -34,6 +40,7 @@ final class WasmInstance(mod: WasmModule,
   private var mem = new Array[Byte](math.min(mod.memMinPages, maxPages) * PageSize)
   private val globals: Array[Long] = mod.globals.map(_.init.toLong).toArray
   private var remaining = fuel
+  private var depth = 0 // control frames open in the current invoke
 
   mod.data.foreach { seg =>
     if (seg.offset < 0 || seg.offset + seg.bytes.length > mem.length)
@@ -61,6 +68,7 @@ final class WasmInstance(mod: WasmModule,
       case Some(("func", i)) => i
       case _ => throw WasmTrap(s"unable to get export `$name`")
     }
+    depth = 0 // a trapped earlier invoke may have left frames counted
     callFunction(idx, args.map(_.toLong).toArray).toInt
   }
 
@@ -74,8 +82,28 @@ final class WasmInstance(mod: WasmModule,
     if (f.tpe.results == 1) stack.pop() else 0L
   }
 
-  /** Run a body; returns branch depth (-1 = fell through / returned). */
+  /** Run a body one control frame deeper; returns branch depth
+    * (-1 = fell through / returned).
+    */
   private def exec(body: Vector[Instr], locals: Array[Long], stack: ValStack): Int = {
+    if (depth >= WasmModule.MaxDepth) throw WasmTrap("call stack exhausted (runaway recursion)")
+    depth += 1
+    val br = run(body, locals, stack)
+    depth -= 1
+    br
+  }
+
+  /** Effective address of a `width`-byte access: unsigned i32 base plus
+    * unsigned static offset, in 64 bits; traps unless the whole access
+    * lies inside memory.
+    */
+  private def effectiveAddr(base: Long, offset: Int, width: Int, what: String): Int = {
+    val ea = (base & 0xffffffffL) + (offset & 0xffffffffL)
+    if (ea + width > mem.length) throw WasmTrap(s"$what out of bounds: $ea+$width/${mem.length}")
+    ea.toInt
+  }
+
+  private def run(body: Vector[Instr], locals: Array[Long], stack: ValStack): Int = {
     var i = 0
     while (i < body.length) {
       remaining -= 1
@@ -143,8 +171,7 @@ final class WasmInstance(mod: WasmModule,
           if (!mod.globals(n).mutable) throw WasmTrap(s"global $n is immutable")
           globals(n) = stack.pop()
         case Load(width, signed, offset, wide) =>
-          val addr = stack.pop().toInt + offset
-          if (addr < 0 || addr + width > mem.length) throw WasmTrap(s"load out of bounds: $addr")
+          val addr = effectiveAddr(stack.pop(), offset, width, "load")
           stack.push(width match {
             case 1 => if (signed) mem(addr).toLong else (mem(addr) & 0xff).toLong
             case 2 =>
@@ -161,8 +188,7 @@ final class WasmInstance(mod: WasmModule,
           })
         case Store(width, offset) =>
           val v = stack.pop()
-          val addr = stack.pop().toInt + offset
-          if (addr < 0 || addr + width > mem.length) throw WasmTrap(s"store out of bounds: $addr")
+          val addr = effectiveAddr(stack.pop(), offset, width, "store")
           var k = 0
           while (k < width) { mem(addr + k) = (v >>> (8 * k)).toByte; k += 1 }
         case MemoryCopy =>

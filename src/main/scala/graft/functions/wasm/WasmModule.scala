@@ -96,6 +96,18 @@ final case class WasmModule(
     table: Vector[Int] = Vector.empty)
 
 object WasmModule {
+  /** Deepest control nesting a module may reach: function calls plus
+    * the blocks/loops/ifs open inside them at run time, and block
+    * nesting within one body at decode time. Both the interpreter and
+    * the decoder recurse once per level, so this fixed bound is what
+    * keeps a hostile or runaway module a [[WasmTrap]] instead of a
+    * host StackOverflowError. Sized for the JVM's default 1 MiB thread
+    * stack: cold (interpreted) runaway recursion overflowed it at ~880
+    * calls, ~1.2 KB per call. The checked-in compiler-output fixtures
+    * nest at most 15 deep.
+    */
+  val MaxDepth: Int = 500
+
   /** Decode a binary module. Throws [[WasmTrap]] on malformed input or
     * constructs outside the hosted subset.
     */
@@ -103,6 +115,7 @@ object WasmModule {
 
   private final class Decoder(b: Array[Byte]) {
     private var p = 0
+    private var nesting = 0 // blocks open in the body being decoded
     private def u8(): Int = {
       if (p >= b.length) throw WasmTrap("unexpected end of module")
       val v = b(p) & 0xff; p += 1; v
@@ -287,6 +300,14 @@ object WasmModule {
       * the terminator is consumed. Returns (instrs, endedAtElse).
       */
     private def exprUntil(allowElse: Boolean): (Vector[Instr], Boolean) = {
+      if (nesting >= MaxDepth) throw WasmTrap(s"blocks nested deeper than $MaxDepth")
+      nesting += 1
+      val r = exprBody(allowElse)
+      nesting -= 1
+      r
+    }
+
+    private def exprBody(allowElse: Boolean): (Vector[Instr], Boolean) = {
       import Instr._
       val out = ArrayBuffer.empty[Instr]
       while (true) {

@@ -272,6 +272,27 @@ class WorkCacheSpec extends AnyFunSuite {
     val (r2, _) = w.materialize(g, xs)
     assert(r1 == r2)
     assert(calls == afterFirst) // fully cached second time
+
+    // A shelve round's prefix states come from its one memoized walk:
+    // shelving onto a hard-dependent chain (one fast-path conc per
+    // round) runs the engine once per state the memo lacks plus a
+    // fixed few (the new event's state per walk, the commutation
+    // test) — never another fold of the round's whole linearization,
+    // so the cost does not grow with the chain.
+    def shelveOntoChain(n: Int): (Int, Int) = {
+      val g = new EventGraph[SearArg](CountingEngine)
+      val w = new WorkCache[SearArg, String](CountingEngine, "<0>")
+      var ys = SortedSet.empty[String]
+      (0 until n).foreach(i => ys += w.shelveEvent(g, ys, 0, SearArg(s"<$i>", s"<${i + 1}>")).get)
+      val (calls0, memo0) = (calls, w.memoSize)
+      w.shelveEvent(g, ys, 0, SearArg(s"<$n>", s"<${n + 1}>")).get
+      (calls - calls0, w.memoSize - memo0)
+    }
+    val (short, shortMisses) = shelveOntoChain(4)
+    val (long, longMisses) = shelveOntoChain(16)
+    assert(shortMisses == 1 && longMisses == 1) // only the chain's head state was new
+    assert(long - longMisses == short - shortMisses,
+      s"engine calls beyond memo misses grew with the chain: $short -> $long")
   }
 }
 

@@ -20,6 +20,8 @@ import scala.collection.immutable.{SortedMap, SortedSet}
   * reproducible.
   */
 class SearPropertySpec extends AnyFunSuite {
+  import SearPropertySpec.assertWalkIsColdFold
+
   private val smallStr = Gen.chooseNum(0, 6).flatMap(n => Gen.stringOfN(n, Gen.oneOf('a', 'b', 'c')))
   private val nonEmptyStr = Gen.chooseNum(1, 4).flatMap(n => Gen.stringOfN(n, Gen.oneOf('a', 'b', 'c')))
   private val searGen: Gen[(String, String)] = for {
@@ -39,6 +41,7 @@ class SearPropertySpec extends AnyFunSuite {
     var xs = SortedSet.empty[String]
     sears.foreach { case (s, r) =>
       w.shelveEvent(g, xs, 0, SearArg(s, r)).foreach(h => xs += h)
+      assertWalkIsColdFold(g, w, init, xs)
     }
     val minx = SortedSet.from(
       g.foldState(SortedMap.from(xs.iterator.map(_ -> false)), expand = false).keysIterator)
@@ -48,6 +51,7 @@ class SearPropertySpec extends AnyFunSuite {
     assert(got == expected, s"replay != sequential fold for init=$init sears=$sears")
     // merge totality over the shelved set
     w.tryMerge(g, xs)
+    assertWalkIsColdFold(g, w, init, xs)
   }
 
   test("replay equivalence + merge totality, 300 random cases (sear0.rs:65-136)") {
@@ -60,6 +64,25 @@ class SearPropertySpec extends AnyFunSuite {
       seed = seed.next
       i += 1
     }
+  }
+}
+
+object SearPropertySpec {
+  import org.scalatest.Assertions._
+
+  /** The prefix datums a shelve round's memoized walk hands back (memo
+    * hits included, with the memo as earlier rounds left it) equal a
+    * cold left fold of the same linearization from the initial datum.
+    */
+  def assertWalkIsColdFold[A, D](g: EventGraph[A], w: WorkCache[A, D], init: D,
+                                 xs: SortedSet[String]): Unit = {
+    val order = g.calculateDependencies(SortedSet.empty,
+      SortedMap.from(xs.iterator.map(_ -> (IncludeSpec.All: IncludeSpec))))
+    val (walked, _) = w.walkPrefixes(g, SortedSet.empty, order)
+    val cold = order.scanLeft(init) { (st, id) =>
+      val e = g.events(id); w.engine.runEvent(e.cmd, e.arg, st)
+    }
+    assert(walked == cold, s"memoized prefix walk != cold fold over $order")
   }
 }
 
@@ -98,7 +121,12 @@ class ExvcPropertySpec extends AnyFunSuite {
       val g = new EventGraph[Command](ExvcEngine)
       val w = new WorkCache[Command, Vector[String]](ExvcEngine, init)
       var xs = SortedSet.empty[String]
-      cmds.foreach(c => w.shelveEvent(g, xs, 0, c).foreach(h => xs += h))
+      cmds.foreach { c =>
+        w.shelveEvent(g, xs, 0, c).foreach(h => xs += h)
+        withClue(s"case #$i init=$init cmds=$cmds: ") {
+          SearPropertySpec.assertWalkIsColdFold(g, w, init, xs)
+        }
+      }
       val minx = SortedSet.from(
         g.foldState(SortedMap.from(xs.iterator.map(_ -> false)), expand = false).keysIterator)
       val (got, tt) = w.runForeachRecursively(
@@ -107,6 +135,7 @@ class ExvcPropertySpec extends AnyFunSuite {
         assert(tt == xs)
         assert(got == expected)
         w.tryMerge(g, xs)
+        SearPropertySpec.assertWalkIsColdFold(g, w, init, xs)
       }
       seed = seed.next
       i += 1

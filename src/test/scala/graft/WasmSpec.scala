@@ -108,6 +108,80 @@ class WasmSpec extends AnyFunSuite {
     assert(inst.invoke("fact", 12) == 479001600)
   }
 
+  test("interpreter: load/store address is unsigned i32 + unsigned offset, never wrapped") {
+    import WasmAssembler._
+    val ld8 = new FuncBuilder(params = 1, results = 1, locals = 0)
+    ld8.localGet(0).load8u(2) // i32.load8_u offset=2
+    val st8 = new FuncBuilder(params = 1, results = 0, locals = 0)
+    st8.localGet(0).i32Const(0x77).store8(2) // i32.store8 offset=2
+    val ld32 = new FuncBuilder(params = 1, results = 1, locals = 0)
+    ld32.localGet(0).load() // i32.load offset=0
+    val ldHigh = new FuncBuilder(params = 1, results = 1, locals = 0)
+    ldHigh.localGet(0).load8u(-16) // offset 0xFFFFFFF0
+    val wasm = module(Seq(ld8, st8, ld32, ldHigh), memPages = 1, globals = Nil,
+      exports = Map("ld8" -> 0, "st8" -> 1, "ld32" -> 2, "ldHigh" -> 3),
+      data = Seq(0 -> Array[Byte](10, 11, 12, 13)))
+    val inst = new WasmInstance(WasmModule.decode(wasm))
+    assert(inst.invoke("ld8", 1) == 13) // in bounds: 1 + 2 = 3
+    // 0xFFFFFFFF + 2 is past 4 GiB, not address 1
+    assert(intercept[WasmTrap](inst.invoke("ld8", 0xFFFFFFFF)).msg.contains("out of bounds"))
+    assert(intercept[WasmTrap](inst.invoke("st8", 0xFFFFFFFF)).msg.contains("out of bounds"))
+    assert(inst.readBytes(0, 4).toSeq == Seq[Byte](10, 11, 12, 13)) // nothing written
+    // 0x7FFFFFFE + 4 overflows Int: still a trap, not an index exception
+    assert(intercept[WasmTrap](inst.invoke("ld32", 0x7FFFFFFE)).msg.contains("out of bounds"))
+    // 0x20 + 0xFFFFFFF0 is 0x1_0000_0010, not 0x10
+    assert(intercept[WasmTrap](inst.invoke("ldHigh", 0x20)).msg.contains("out of bounds"))
+  }
+
+  test("interpreter: runaway recursion and over-deep block nesting trap, not overflow the stack") {
+    import WasmAssembler._
+    // what `f` throws on a thread with the JVM's default 1 MiB stack
+    def thrownOnDefaultStack(f: => Any): Throwable = {
+      var thrown: Throwable = null
+      val t = new Thread(null, () => try f catch { case e: Throwable => thrown = e }, "wasm-1MiB", 1L << 20)
+      t.start(); t.join()
+      thrown
+    }
+    // forever(n) = forever(n + 1): no base case
+    val forever = new FuncBuilder(params = 1, results = 1, locals = 0)
+    forever.localGet(0).i32Const(1).add.call(0)
+    val wasm = module(Seq(forever), memPages = 1, globals = Nil, exports = Map("forever" -> 0))
+    val inst = new WasmInstance(WasmModule.decode(wasm))
+    assert(thrownOnDefaultStack(inst.invoke("forever", 0)) == WasmTrap("call stack exhausted (runaway recursion)"))
+    // 20,000 nested blocks: refused at decode
+    val deep = new FuncBuilder(params = 0, results = 0, locals = 0)
+    (0 until 20000).foreach(_ => deep.block)
+    (0 until 20000).foreach(_ => deep.end)
+    val deepWasm = module(Seq(deep), memPages = 1, globals = Nil, exports = Map("deep" -> 0))
+    assert(thrownOnDefaultStack(WasmModule.decode(deepWasm)) match {
+      case WasmTrap(msg) => msg.contains("nested deeper")
+      case _ => false
+    })
+    // 200 nested blocks (far beyond compiler output) still decode and run
+    val ok = new FuncBuilder(params = 0, results = 0, locals = 0)
+    (0 until 200).foreach(_ => ok.block)
+    (0 until 200).foreach(_ => ok.end)
+    val okWasm = module(Seq(ok), memPages = 1, globals = Nil, exports = Map("ok" -> 0))
+    assert(new WasmInstance(WasmModule.decode(okWasm)).invoke("ok") == 0)
+    // through the host: a wbindgen-ABI module whose transform calls
+    // itself with its own arguments surfaces as EngineException
+    val malloc = new FuncBuilder(params = 1, results = 1, locals = 0)
+    malloc.i32Const(2048)
+    val stackPtr = new FuncBuilder(params = 1, results = 1, locals = 0)
+    stackPtr.i32Const(1024)
+    val transform = new FuncBuilder(params = 5, results = 0, locals = 0)
+    (0 until 5).foreach(transform.localGet)
+    transform.call(2)
+    val abiWasm = module(Seq(malloc, stackPtr, transform), memPages = 1, globals = Nil,
+      exports = Map("__wbindgen_malloc" -> 0, "__wbindgen_add_to_stack_pointer" -> 1, "transform" -> 2))
+    val en = new WasmEngine
+    en.addCommands(Seq(abiWasm))
+    assert(thrownOnDefaultStack(en.runEvent(0, ArraySeq.empty[Byte], bytes("x"))) match {
+      case e: EngineException => e.getMessage.contains("call stack exhausted")
+      case _ => false
+    })
+  }
+
   test("imports are rejected: the sandbox is closed") {
     // minimal module with an import section: magic+version, then
     // section 2 declaring one function import "e"."f"
