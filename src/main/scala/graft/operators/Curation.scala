@@ -310,7 +310,7 @@ object Curation {
     * position (index = pos). Both gram UDFs delegate here so the
     * positional and set faces can never drift.
     */
-  private def gramHashArray(toks: Seq[String], k: Int): Array[Long] = {
+  private[graft] def gramHashArray(toks: Seq[String], k: Int): Array[Long] = {
     val n = if (toks == null) 0 else toks.length
     if (n < k) Array.emptyLongArray
     else {

@@ -116,15 +116,109 @@ object Dedup {
     val nHashes = bands * rows
     val explodedH = norm
       .select(col("doc_id"), explode(shinglesRaw(col("__text"), shingleN)).as("s"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").as("h"))
+      .select(col("doc_id"), expr(ShingleHashSql).as("h"))
     val minhashes = explodedH.groupBy("doc_id").agg(
       min(col("h").bitwiseXOR(lit(minhashMask(0)))).as("h0"),
       (1 until nHashes).map(k => min(col("h").bitwiseXOR(lit(minhashMask(k)))).as(s"h$k")): _*)
     minhashes.select(col("doc_id"), explode(array(
       (0 until bands).map { b =>
-        md5(concat_ws("|", (0 until rows).map(r => col(s"h${b * rows + r}")): _*))
+        bandKey((0 until rows).map(r => col(s"h${b * rows + r}")))
       }: _*)).as("band_key"))
+  }
+
+  /** A shingle `s` as a 60-bit int: the high 15 hex digits of its md5. */
+  private[graft] val ShingleHashSql = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
+
+  /** A band's key: md5 of its `rows` minhashes joined by "|". */
+  private[graft] def bandKey(minhashes: Seq[Column]): Column = md5(concat_ws("|", minhashes: _*))
+
+  /** The per-document near-dup and substring pieces evaluated on the
+    * DRIVER over driver-held texts — the small-batch twin of the
+    * executor plans, equal to them by construction: the Catalyst parts
+    * ([[tokens]], [[ShingleHashSql]], [[bandKey]]) are the same resolved
+    * expressions the executors run, compiled once into projections
+    * over a local row; the rest ([[shingleArr]], the XOR-mask minima,
+    * the sorted distinct shingle set [[graft.functions.SortedIntersect]]
+    * walks) is the same Scala. No job runs. Not thread-safe — one per
+    * micro-batch.
+    */
+  private[graft] final class DriverKernels(spark: org.apache.spark.sql.SparkSession) {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+
+    private def projection(input: StructType, out: Column): UnsafeProjection =
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), input)
+        .select(out).queryExecution.analyzed match {
+        case Project(list, child) => UnsafeProjection.create(list, child.output)
+        case other => sys.error(s"DriverKernels: unexpected analyzed plan $other")
+      }
+
+    private val tokensP = projection(StructType(Seq(StructField("t", StringType))), tokens(col("t")))
+    private val shingleHashP = projection(StructType(Seq(StructField("s", StringType))),
+      expr(ShingleHashSql))
+    private val bandKeyP = scala.collection.mutable.Map.empty[Int, UnsafeProjection]
+    private val shingleHashes = scala.collection.mutable.HashMap.empty[String, Long]
+    private val masks = scala.collection.mutable.Map.empty[Int, Long]
+
+    /** [[tokens]] of one text; null for a null text. */
+    def tokensOf(text: String): Array[String] = {
+      val r = tokensP(InternalRow(UTF8String.fromString(text)))
+      if (r.isNullAt(0)) null
+      else {
+        val a = r.getArray(0)
+        Array.tabulate(a.numElements())(i => a.getUTF8String(i).toString)
+      }
+    }
+
+    /** The doc's [[bandKeys]] rows in band order; empty when it has no
+      * shingle (the executor's explode then yields no row either).
+      */
+    def bandKeysOf(toks: Array[String], shingleN: Int, bands: Int, rows: Int): Array[String] = {
+      val sh = shingleArr(toks.toSeq, shingleN)
+      if (sh.isEmpty) Array.empty[String]
+      else {
+        val nHashes = bands * rows
+        val mins = Array.fill(nHashes)(Long.MaxValue)
+        sh.foreach { s =>
+          val h = shingleHashes.getOrElseUpdate(s,
+            shingleHashP(InternalRow(UTF8String.fromString(s))).getLong(0))
+          var k = 0
+          while (k < nHashes) {
+            val x = h ^ masks.getOrElseUpdate(k, minhashMask(k))
+            if (x < mins(k)) mins(k) = x
+            k += 1
+          }
+        }
+        val keyP = bandKeyP.getOrElseUpdate(rows, projection(
+          StructType((0 until rows).map(r => StructField(s"h$r", LongType))),
+          bandKey((0 until rows).map(r => col(s"h$r")))))
+        Array.tabulate(bands) { b =>
+          keyP(InternalRow.fromSeq((0 until rows).map(r => mins(b * rows + r))))
+            .getUTF8String(0).toString
+        }
+      }
+    }
+
+    /** `sort_array(shingles(text, n))` of the tokens: distinct, in the
+      * binary string order [[graft.functions.SortedIntersect]] walks.
+      */
+    def shingleSet(toks: Array[String], n: Int): ArrayData = {
+      val u = shingleArr(toks.toSeq, n).distinct.map(UTF8String.fromString)
+        .sortWith(_.compareTo(_) < 0)
+      new GenericArrayData(u.toArray[Any])
+    }
+
+    /** Exact shingle Jaccard of two [[shingleSet]]s, as the verify
+      * kernels compute it before the threshold filter.
+      */
+    def jaccard(a: ArrayData, b: ArrayData): Double = {
+      val inter = graft.functions.SortedIntersect.interSize(a, b).toInt
+      inter.toDouble / (a.numElements() + b.numElements() - inter).toDouble
+    }
   }
 
   def nearDupPairs(docs: DataFrame, textCol: String, idCol: String,

@@ -2832,12 +2832,16 @@ object Similarity {
                                            indexPath: String, idCol: String,
                                            what: String,
                                            foldVerb: String = "annTombstoneFold"): Unit =
-    tombstoneHit(batch, tombstonesOf(spark, indexPath), idCol).foreach { id =>
-      sys.error(s"$what: batch id $id is tombstoned at $indexPath — appending it " +
-        "would be invisible to every probe until the next fold, which would then " +
-        s"physically drop it. Run $foldVerb first if the delete should " +
-        "become physical (re-appends are then admitted), or append under fresh ids")
-    }
+    tombstoneHit(batch, tombstonesOf(spark, indexPath), idCol).foreach(
+      tombstoneHitRefusal(_, indexPath, what, foldVerb))
+
+  /** The [[requireNoTombstoneHit]] refusal for a tombstoned `id`. */
+  private[graft] def tombstoneHitRefusal(id: Long, indexPath: String, what: String,
+                                         foldVerb: String): Nothing =
+    sys.error(s"$what: batch id $id is tombstoned at $indexPath — appending it " +
+      "would be invisible to every probe until the next fold, which would then " +
+      s"physically drop it. Run $foldVerb first if the delete should " +
+      "become physical (re-appends are then admitted), or append under fresh ids")
 
   /** Refuse a rebuild over a live tombstone set — the retrain
     * re-encodes from the caller's corpus and would silently resurrect

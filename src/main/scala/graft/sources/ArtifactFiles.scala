@@ -46,4 +46,30 @@ object ArtifactFiles {
     if (!has) SwapRecovery.requireNoCrashEvidence(fs, p)
     has
   }
+
+  /** The row count `spark.read.parquet(path).count()` would return,
+    * summed from the visible data files' parquet footers on the driver:
+    * O(files) metadata reads (compaction bounds the file count), no
+    * job and no row scan. 0 when [[hasDataFiles]] is false.
+    */
+  def footerRows(spark: SparkSession, path: String): Long =
+    if (!hasDataFiles(spark, path)) 0L
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      def visible(s: org.apache.hadoop.fs.FileStatus): Boolean = {
+        val n = s.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      }
+      def rowsUnder(dir: Path): Long = fs.listStatus(dir).iterator.filter(visible).map { s =>
+        if (s.isDirectory) rowsUnder(s.getPath)
+        else {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
+          try r.getRecordCount finally r.close()
+        }
+      }.sum
+      rowsUnder(p)
+    }
 }

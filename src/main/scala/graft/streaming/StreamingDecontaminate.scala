@@ -41,19 +41,27 @@ object StreamingDecontaminate {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.map { d =>
-      val toks = Option(d.text).getOrElse("")
-        .toLowerCase(java.util.Locale.ROOT)
-        .split(" +").filter(_.nonEmpty)
-      val set = grams.value
-      val seen = scala.collection.mutable.HashSet.empty[String]
-      var i = 0
-      var overlap = 0L
-      while (i + n <= toks.length) {
-        val g = toks.slice(i, i + n).mkString(" ")
-        if (set.contains(g) && seen.add(g)) overlap += 1
-        i += 1
-      }
-      (d.doc_id, overlap, overlap < minOverlap)
+      val (overlap, keep) = verdictOf(d.text, grams.value, n, minOverlap)
+      (d.doc_id, overlap, keep)
     }.toDF("doc_id", "n_overlap", "keep")
+  }
+
+  /** One document's (n_overlap, keep) — the per-row kernel of
+    * [[verdicts]], also called on driver-held rows.
+    */
+  private[graft] def verdictOf(text: String, set: Set[String], n: Int,
+                               minOverlap: Int): (Long, Boolean) = {
+    val toks = Option(text).getOrElse("")
+      .toLowerCase(java.util.Locale.ROOT)
+      .split(" +").filter(_.nonEmpty)
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    var i = 0
+    var overlap = 0L
+    while (i + n <= toks.length) {
+      val g = toks.slice(i, i + n).mkString(" ")
+      if (set.contains(g) && seen.add(g)) overlap += 1
+      i += 1
+    }
+    (overlap, overlap < minOverlap)
   }
 }

@@ -124,8 +124,10 @@ object StreamingNearDup {
     * bucket, if `n` rows are already indexed, the `bucketCap - n`
     * lowest-doc_id newcomers enter and the rest are sacrificed — the
     * same cap algebra as [[graft.operators.Dedup.capBucket]], applied
-    * incrementally. History is never rewritten, so the index grows by
-    * one parquet append per batch regardless of its size. With
+    * incrementally ([[admitToBucket]]). A row the bucket already holds
+    * is no newcomer, so re-appending a batch (an at-least-once retry)
+    * admits nothing twice. History is never rewritten, so the index
+    * grows by one parquet append per batch regardless of its size. With
     * monotone-increasing doc ids (the normal ingest contract) the grown
     * index is exactly `capBucket(bandKeys(corpus so far))`.
     *
@@ -145,7 +147,6 @@ object StreamingNearDup {
   def appendToIndex(newBands: DataFrame, indexPath: String, bucketCap: Int = 128,
                     stampParams: Option[(Int, Int, Int)] = None): Long = {
     val spark = newBands.sparkSession
-    import org.apache.spark.sql.expressions.Window
     stampParams.foreach { case (shingleN, bands, rows) =>
       graft.sources.ArtifactHeader.validateOrStamp(spark, indexPath, "bands",
         bandParams(shingleN, bands, rows, bucketCap))
@@ -154,16 +155,24 @@ object StreamingNearDup {
     // with this family's own fold verb named
     graft.operators.Similarity.requireNoTombstoneHit(newBands, spark, indexPath,
       "doc_id", "appendToIndex", foldVerb = "neardupTombstoneFold")
-    val idx = readIndex(spark, indexPath)
-    val occ = idx.groupBy("band_key").agg(count(lit(1)).as("__n"))
-    // materialize before writing: `admitted` reads indexPath (via occ),
-    // and appending to a path mid-read is undefined
-    val admitted = newBands
-      .join(occ, Seq("band_key"), "left")
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("band_key")).orderBy(col("doc_id"))))
-      .filter(coalesce(col("__n"), lit(0L)) + col("__rk") <= bucketCap)
-      .select(col("doc_id"), col("band_key"))
+    import spark.implicits._
+    // a bucket's indexed ids, at most bucketCap by the cap rule
+    val held = readIndex(spark, indexPath).groupBy("band_key")
+      .agg(collect_list(col("doc_id").cast("long")).as("__held"))
+    // the lowest bucketCap newcomers per bucket are all the rule can
+    // admit, so the per-bucket lists stay bounded; materialize before
+    // writing: `admitted` reads indexPath (via held), and appending to
+    // a path mid-read is undefined
+    val admitted = Dedup.capBucket(newBands, "band_key", "doc_id", bucketCap)
+      .groupBy("band_key").agg(collect_list(col("doc_id").cast("long")).as("__new"))
+      .join(held, Seq("band_key"), "left")
+      .select(col("band_key"), col("__new"), coalesce(col("__held"), typedLit(Seq.empty[Long])))
+      .as[(String, Seq[Long], Seq[Long])]
+      .flatMap { case (key, fresh, indexed) =>
+        admitToBucket(fresh, indexed, bucketCap).map(id => (id, key))
+      }
+      .select(col("_1").cast(newBands.schema("doc_id").dataType).as("doc_id"),
+        col("_2").as("band_key"))
       .localCheckpoint()
     val n = admitted.count()
     // one file per micro-batch append (see
@@ -174,6 +183,47 @@ object StreamingNearDup {
         .option("compression", "zstd").parquet(indexPath)
     graft.plans.CheckpointHygiene.free(admitted)
     n
+  }
+
+  /** The cap rule for one bucket, shared by both band appenders: of
+    * the `newcomers` the bucket does not already hold (`indexed`, its
+    * live rows' ids), the `bucketCap - indexed.size` lowest ids enter.
+    */
+  private[graft] def admitToBucket(newcomers: Seq[Long], indexed: Seq[Long],
+                                   bucketCap: Int): Seq[Long] = {
+    val present = indexed.toSet
+    newcomers.distinct.filterNot(present).sorted
+      .take(math.max(0, bucketCap - indexed.size))
+  }
+
+  /** [[appendToIndex]] for driver-held band rows `(doc_id, band_key)`
+    * whose buckets' live ids the caller already read (`indexed(key)`,
+    * empty for an unseen key): the same header stamp, tombstone refusal
+    * and cap rule ([[admitToBucket]]), with the one append write as the
+    * only job.
+    *
+    * @return number of admitted rows
+    */
+  private[graft] def appendRowsToIndex(spark: org.apache.spark.sql.SparkSession,
+                                       newBands: Seq[(Long, String)],
+                                       indexed: String => Seq[Long],
+                                       indexPath: String, bucketCap: Int,
+                                       shingleN: Int, bands: Int, rows: Int): Long = {
+    graft.sources.ArtifactHeader.validateOrStamp(spark, indexPath, "bands",
+      bandParams(shingleN, bands, rows, bucketCap))
+    val tombs = graft.sources.Tombstones.read(spark, indexPath).toSet
+    newBands.find(r => tombs.contains(r._1)).foreach(r =>
+      graft.operators.Similarity.tombstoneHitRefusal(r._1, indexPath, "appendToIndex",
+        "neardupTombstoneFold"))
+    val admitted = newBands.groupBy(_._2).iterator.flatMap { case (key, rs) =>
+      admitToBucket(rs.map(_._1), indexed(key), bucketCap).map(_ -> key)
+    }.toSeq
+    if (admitted.nonEmpty) {
+      import spark.implicits._
+      admitted.toDF("doc_id", "band_key").coalesce(1).write.mode("append")
+        .option("compression", "zstd").parquet(indexPath)
+    }
+    admitted.size.toLong
   }
 
   /** Canonical header params for a band index. */

@@ -84,25 +84,33 @@ object StreamingSemDecontaminate {
     import spark.implicits._
     val keysOf = Similarity.bucketKeysScalar(idx.planes, idx.tables, idx.dim)
     stream.flatMap { r =>
-      val keys = keysOf(r.embedding)
-      val cands = keys.iterator
-        .flatMap(idx.buckets.get(_).iterator.flatten).toArray.distinct
-      if (cands.isEmpty) Iterator.empty
-      else {
-        val v = r.embedding
-        val vn = math.sqrt(Similarity.dotScalar(v, v))
-        var bestS = Double.NegativeInfinity
-        var bestB = Long.MinValue
-        cands.foreach { b =>
-          val (bv, bn) = idx.vecs(b)
-          val s = Similarity.dotScalar(v, bv) / (vn * bn)
-          if (s > bestS || (s == bestS && b > bestB)) { bestS = s; bestB = b }
-        }
-        val rounded = BigDecimal(bestS)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        if (rounded >= threshold) Iterator.single((r.vec_id, bestB, rounded))
-        else Iterator.empty
-      }
+      flagOf(r.embedding, idx, keysOf, threshold).iterator
+        .map { case (b, score) => (r.vec_id, b, score) }
     }.toDF("vec_id", "bench_id", "score")
+  }
+
+  /** One vector's (bench_id, score) flag, if any — the per-row kernel
+    * of [[flags]] (`keysOf` is `Similarity.bucketKeysScalar` over the
+    * index's planes, tables and dim), also called on driver-held rows.
+    */
+  private[graft] def flagOf(v: Seq[Float], idx: BenchIndex,
+                            keysOf: Seq[Float] => Seq[String],
+                            threshold: Double): Option[(Long, Double)] = {
+    val cands = keysOf(v).iterator
+      .flatMap(idx.buckets.get(_).iterator.flatten).toArray.distinct
+    if (cands.isEmpty) None
+    else {
+      val vn = math.sqrt(Similarity.dotScalar(v, v))
+      var bestS = Double.NegativeInfinity
+      var bestB = Long.MinValue
+      cands.foreach { b =>
+        val (bv, bn) = idx.vecs(b)
+        val s = Similarity.dotScalar(v, bv) / (vn * bn)
+        if (s > bestS || (s == bestS && b > bestB)) { bestS = s; bestB = b }
+      }
+      val rounded = BigDecimal(bestS)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if (rounded >= threshold) Some((bestB, rounded)) else None
+    }
   }
 }

@@ -54,6 +54,14 @@ object StreamingSubstringDedup {
     * present-but-headerless one refuses with guidance.
     */
   def indexFor(spark: SparkSession, indexPath: String, k: Int): DataFrame = {
+    requireIndexK(spark, indexPath, k)
+    readIndex(spark, indexPath)
+  }
+
+  /** [[indexFor]]'s refusal alone: a present plain index must carry
+    * the gram length `k`; a missing path is the empty index.
+    */
+  private[graft] def requireIndexK(spark: SparkSession, indexPath: String, k: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(indexPath)
     if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) {
       val hdr = graft.sources.ArtifactHeader.required(spark, indexPath, "grams")
@@ -62,7 +70,6 @@ object StreamingSubstringDedup {
           s"probed with k=$k — k-gram hashes never match across k; rebuild or " +
           "pass the build-time k")
     }
-    readIndex(spark, indexPath)
   }
 
   /** Append a document batch's grams to the index, new hashes only —
@@ -99,6 +106,19 @@ object StreamingSubstringDedup {
     if (n > 0) fresh.coalesce(1).write.mode("append").parquet(indexPath)
     graft.plans.CheckpointHygiene.free(fresh)
     n
+  }
+
+  /** [[appendToIndex]] for `fresh` gram hashes the caller already
+    * found absent from the index: the same header stamp and one-file
+    * append, with the write as the only job.
+    */
+  private[graft] def appendRows(spark: SparkSession, fresh: Seq[Long],
+                                indexPath: String, k: Int): Long = {
+    import spark.implicits._
+    graft.sources.ArtifactHeader.validateOrStamp(spark, indexPath, "grams",
+      Seq("k" -> k.toString))
+    if (fresh.nonEmpty) fresh.toDF("h").coalesce(1).write.mode("append").parquet(indexPath)
+    fresh.size.toLong
   }
 
   /** Rebuild the gram index FROM A SURVIVING CORPUS — the
@@ -206,7 +226,7 @@ object StreamingSubstringDedup {
       .groupBy("h").agg((count(lit(1)) * sign).as("delta"))
       .withColumn("batch_id", lit(stampId))
 
-  private def docsRegistryPath(indexPath: String): String = s"$indexPath/_docs"
+  private[graft] def docsRegistryPath(indexPath: String): String = s"$indexPath/_docs"
 
   /** Raw rows of a delta-log path ((first, delta, batch_id) shape),
     * empty frame when the path is missing or data-less — the shared
@@ -275,11 +295,7 @@ object StreamingSubstringDedup {
                            indexPath: String, k: Int,
                            stampId: Long): Long = {
     val spark = batch.sparkSession
-    require(stampId >= 0L,
-      "appendToIndexCounted: ingest stamps are non-negative (negative ids are " +
-        "reserved for removal deltas)")
-    graft.sources.ArtifactHeader.validateOrStamp(spark, indexPath, "gramsc",
-      Seq("k" -> k.toString))
+    countedWriterEntry(spark, indexPath, k, stampId)
     // checkpoint the admission DECISION (distinct ids), not the
     // admitted documents: the old full-frame checkpoint copied every
     // admitted text into block storage just to be read back once —
@@ -303,94 +319,30 @@ object StreamingSubstringDedup {
       .filter(col("batch_id") === stampId).select("h", "delta")
     try {
       val n = deltas.count()
-      if (n > 0) {
-        // stamp-collision detector: rows already logged under this stamp
-        // are legitimate ONLY for a crash-retry of this same batch, in
-        // which case the re-derived rows are IDENTICAL — any symmetric
-        // difference means two different batches share a stamp, and the
-        // read-time retry collapse would silently lose owner counts.
-        // One batch_id-pushdown scan of the log slice, O(stamp's rows).
-        val isRetry = existing.limit(1).count() > 0L
-        if (isRetry) {
+      countedAppend(spark, indexPath, stampId)(
+        hasDeltas = n > 0,
+        // one batch_id-pushdown scan of the log slice, O(stamp's rows)
+        isRetry = existing.limit(1).count() > 0L,
+        sameAtStamp = {
           val fresh = deltas.select("h", "delta")
-          val collides = existing.join(fresh, Seq("h", "delta"), "left_anti")
+          existing.join(fresh, Seq("h", "delta"), "left_anti")
             .unionByName(fresh.join(existing, Seq("h", "delta"), "left_anti"))
-            .limit(1).count() > 0L
-          require(!collides,
-            s"appendToIndexCounted: stamp $stampId already logged at $indexPath " +
-              "with DIFFERENT gram rows — two batches are sharing one stamp, which " +
-              "would silently collapse their owner counts at read. Pass a " +
-              "per-batch-unique stamp (the checkpointed micro-batch id).")
-          // identical rows present -> this IS the crash-retry; the grams
-          // are already durable. Repair the max-ingest watermark the
-          // crash may have lost (it lands after the gram write), then
-          // fall through to (re-)write the registry half too.
-          stampMaxIngest(spark, indexPath, stampId)
-        } else {
-          val folded = foldedThroughOf(spark, indexPath)
-          val maxIngest = maxIngestOf(spark, indexPath)
-          if (stampId <= folded) {
-            // FOLDED crash-retry — or a stamp-contract violation.
-            // compactCounted nets the ingest side to batch_id NULL
-            // (per-batch stamps are erased) and records the max ingest
-            // stamp it folded in the gramsc_fold watermark: under
-            // MONOTONE stamps, a stamp at or below it with no surviving
-            // rows can only be this batch's own folded write replayed.
-            // A violating caller (checkpoint reset restarting ids at 0,
-            // a second stream) would previously lose its batch's grams
-            // SILENTLY here — demand the folded-retry's evidence: every
-            // re-derived gram hash must already be in the log (the fold
-            // preserves every netted ingest hash).
-            val absent = deltas.select("h")
-              .join(readDeltaRaw(spark, indexPath, "h").select("h"),
-                Seq("h"), "left_anti")
-              .limit(1).count() > 0L
-            require(!absent,
-              s"appendToIndexCounted: stamp $stampId is at or below the fold " +
-                s"watermark ($folded) of $indexPath but the batch's grams are NOT " +
-                "in the log — this is not the folded crash-retry the watermark " +
-                "skip exists for; it is a NEW batch with an out-of-order stamp " +
-                "(a checkpoint reset or a second stream writer). Ingest stamps " +
-                "must be MONOTONE over the artifact's lifetime; checkpoint " +
-                "resets against an existing counted index are unsupported — " +
-                "resume the original checkpoint, or ingest under stamps above " +
-                s"${math.max(folded, maxIngest)}.")
-            // evidence holds: the grams are durable (folded to stampless
-            // rows) — skip the gram write, still repair the registry
-            // half below. (Residual: a violating batch whose grams ALL
-            // pre-exist in the log passes this check and loses its owner
-            // counts — unreachable under the documented monotone
-            // contract, which the branch below enforces everywhere the
-            // fold has not yet erased the distinguishing rows.)
-          } else {
-            require(stampId > maxIngest,
-              s"appendToIndexCounted: stamp $stampId is at or below this index's " +
-                s"max ingest stamp ($maxIngest) at $indexPath with no rows logged " +
-                "under it — an out-of-order FRESH stamp. Ingest stamps must be " +
-                "MONOTONE (the checkpointed micro-batch id of one long-lived " +
-                "stream); after a maintenance fold an out-of-order stamp becomes " +
-                "indistinguishable from a folded crash-retry and would silently " +
-                "lose this batch's owner counts. Ingest under a stamp above " +
-                s"$maxIngest.")
-            deltas.coalesce(1).write.mode("append")
-              .option("compression", "zstd").parquet(indexPath)
-            // watermark AFTER the gram write: a crash between the two
-            // re-runs into the identical-rows retry path, which repairs
-            // it — the reverse order would make the crashed first
-            // attempt's retry refuse as "out of order"
-            stampMaxIngest(spark, indexPath, stampId)
-          }
-        }
-      }
-      // gate the registry write on the ADMITTED id count (a doc
-      // shorter than k still registers, so n alone cannot gate it):
-      // one cheap count over the checkpointed id frame, and the write
-      // streams straight from it
-      if (admittedIds.count() > 0)
-        admittedIds
+            .limit(1).count() == 0L
+        },
+        allInLog = deltas.select("h")
+          .join(readDeltaRaw(spark, indexPath, "h").select("h"), Seq("h"), "left_anti")
+          .limit(1).count() == 0L,
+        writeDeltas = () => deltas.coalesce(1).write.mode("append")
+          .option("compression", "zstd").parquet(indexPath),
+        // gated on the ADMITTED id count (a doc shorter than k still
+        // registers, so n alone cannot gate it): one cheap count over
+        // the checkpointed id frame, and the write streams straight
+        // from it
+        hasAdmitted = admittedIds.count() > 0,
+        writeRegistry = () => admittedIds
           .withColumn("delta", lit(1L)).withColumn("batch_id", lit(stampId))
           .coalesce(1).write.mode("append")
-          .option("compression", "zstd").parquet(docsRegistryPath(indexPath))
+          .option("compression", "zstd").parquet(docsRegistryPath(indexPath)))
       n
     } finally {
       // refusal paths above throw BEFORE the frees — release the
@@ -398,6 +350,146 @@ object StreamingSubstringDedup {
       graft.plans.CheckpointHygiene.free(admittedIds, deltas)
     }
   }
+
+  /** What both counted appenders check before they read anything: a
+    * non-negative stamp, and the `gramsc` header at `k`.
+    */
+  private def countedWriterEntry(spark: SparkSession, indexPath: String, k: Int,
+                                 stampId: Long): Unit = {
+    require(stampId >= 0L,
+      "appendToIndexCounted: ingest stamps are non-negative (negative ids are " +
+        "reserved for removal deltas)")
+    graft.sources.ArtifactHeader.validateOrStamp(spark, indexPath, "gramsc",
+      Seq("k" -> k.toString))
+  }
+
+  /** The counted append's rules, shared by [[appendToIndexCounted]]
+    * (executor plans) and [[appendCountedRows]] (driver-held rows):
+    * each appender makes its reads and writes its own way, and this
+    * decides which writes happen and which refusal fires. The reads:
+    * `hasDeltas`, the admitted docs own a gram; `isRetry`, the log
+    * already holds rows under `stampId`; `sameAtStamp`, those rows
+    * equal the re-derived deltas; `allInLog`, every re-derived hash is
+    * in the log under some stamp; `hasAdmitted`, some doc of the batch
+    * is not yet registered live. The by-name reads run only on the
+    * branch that needs them.
+    */
+  private def countedAppend(spark: SparkSession, indexPath: String, stampId: Long)(
+      hasDeltas: Boolean, isRetry: => Boolean, sameAtStamp: => Boolean,
+      allInLog: => Boolean, writeDeltas: () => Unit,
+      hasAdmitted: => Boolean, writeRegistry: () => Unit): Unit = {
+    if (hasDeltas) {
+      // stamp-collision detector: rows already logged under this stamp
+      // are legitimate ONLY for a crash-retry of this same batch, in
+      // which case the re-derived rows are IDENTICAL — any symmetric
+      // difference means two different batches share a stamp, and the
+      // read-time retry collapse would silently lose owner counts.
+      if (isRetry) {
+        require(sameAtStamp,
+          s"appendToIndexCounted: stamp $stampId already logged at $indexPath " +
+            "with DIFFERENT gram rows — two batches are sharing one stamp, which " +
+            "would silently collapse their owner counts at read. Pass a " +
+            "per-batch-unique stamp (the checkpointed micro-batch id).")
+        // identical rows present -> this IS the crash-retry; the grams
+        // are already durable. Repair the max-ingest watermark the
+        // crash may have lost (it lands after the gram write), then
+        // fall through to (re-)write the registry half too.
+        stampMaxIngest(spark, indexPath, stampId)
+      } else {
+        val folded = foldedThroughOf(spark, indexPath)
+        val maxIngest = maxIngestOf(spark, indexPath)
+        if (stampId <= folded) {
+          // FOLDED crash-retry — or a stamp-contract violation.
+          // compactCounted nets the ingest side to batch_id NULL
+          // (per-batch stamps are erased) and records the max ingest
+          // stamp it folded in the gramsc_fold watermark: under
+          // MONOTONE stamps, a stamp at or below it with no surviving
+          // rows can only be this batch's own folded write replayed.
+          // A violating caller (checkpoint reset restarting ids at 0,
+          // a second stream) would previously lose its batch's grams
+          // SILENTLY here — demand the folded-retry's evidence: every
+          // re-derived gram hash must already be in the log (the fold
+          // preserves every netted ingest hash).
+          require(allInLog,
+            s"appendToIndexCounted: stamp $stampId is at or below the fold " +
+              s"watermark ($folded) of $indexPath but the batch's grams are NOT " +
+              "in the log — this is not the folded crash-retry the watermark " +
+              "skip exists for; it is a NEW batch with an out-of-order stamp " +
+              "(a checkpoint reset or a second stream writer). Ingest stamps " +
+              "must be MONOTONE over the artifact's lifetime; checkpoint " +
+              "resets against an existing counted index are unsupported — " +
+              "resume the original checkpoint, or ingest under stamps above " +
+              s"${math.max(folded, maxIngest)}.")
+          // evidence holds: the grams are durable (folded to stampless
+          // rows) — skip the gram write, still repair the registry
+          // half below. (Residual: a violating batch whose grams ALL
+          // pre-exist in the log passes this check and loses its owner
+          // counts — unreachable under the documented monotone
+          // contract, which the branch below enforces everywhere the
+          // fold has not yet erased the distinguishing rows.)
+        } else {
+          require(stampId > maxIngest,
+            s"appendToIndexCounted: stamp $stampId is at or below this index's " +
+              s"max ingest stamp ($maxIngest) at $indexPath with no rows logged " +
+              "under it — an out-of-order FRESH stamp. Ingest stamps must be " +
+              "MONOTONE (the checkpointed micro-batch id of one long-lived " +
+              "stream); after a maintenance fold an out-of-order stamp becomes " +
+              "indistinguishable from a folded crash-retry and would silently " +
+              "lose this batch's owner counts. Ingest under a stamp above " +
+              s"$maxIngest.")
+          writeDeltas()
+          // watermark AFTER the gram write: a crash between the two
+          // re-runs into the identical-rows retry path, which repairs
+          // it — the reverse order would make the crashed first
+          // attempt's retry refuse as "out of order"
+          stampMaxIngest(spark, indexPath, stampId)
+        }
+      }
+    }
+    if (hasAdmitted) writeRegistry()
+  }
+
+  /** [[appendToIndexCounted]] for a driver-held batch, with its reads
+    * already done by the caller's pushed-down scans: `docs` are the
+    * batch's (doc_id, per-doc-distinct gram hashes); `registered` the
+    * ids among them the `_docs` registry holds live; `atStamp` the
+    * (h, delta) rows the log already holds under `stampId`; `inLog`
+    * whether the log holds a hash of the batch under any stamp. Same
+    * branches, same refusals, same write order; the gram and registry
+    * appends are its only jobs.
+    */
+  private[graft] def appendCountedRows(spark: SparkSession, docs: Seq[(Long, Array[Long])],
+                                       registered: Set[Long], atStamp: Seq[(Long, Long)],
+                                       inLog: Long => Boolean, indexPath: String, k: Int,
+                                       stampId: Long): Long = {
+    import spark.implicits._
+    countedWriterEntry(spark, indexPath, k, stampId)
+    val admitted = docs.filterNot(d => registered.contains(d._1))
+    val admittedIds = admitted.map(_._1).distinct
+    val deltas = admitted.flatMap(_._2).groupBy(identity).iterator
+      .map { case (h, owners) => (h, owners.size.toLong) }.toSeq
+    countedAppend(spark, indexPath, stampId)(
+      hasDeltas = deltas.nonEmpty,
+      isRetry = atStamp.nonEmpty,
+      sameAtStamp = deltas.toSet == atStamp.toSet,
+      allInLog = deltas.forall(d => inLog(d._1)),
+      writeDeltas = () => deltas.map { case (h, d) => (h, d, stampId) }
+        .toDF("h", "delta", "batch_id").coalesce(1).write.mode("append")
+        .option("compression", "zstd").parquet(indexPath),
+      hasAdmitted = admittedIds.nonEmpty,
+      writeRegistry = () => admittedIds.map(id => (id, 1L, stampId))
+        .toDF("doc_id", "delta", "batch_id").coalesce(1).write.mode("append")
+        .option("compression", "zstd").parquet(docsRegistryPath(indexPath)))
+    deltas.size.toLong
+  }
+
+  /** Net (key, delta, batch_id) delta-log rows held on the driver the
+    * way [[nettedPerKey]] nets them on the executors: max(delta) per
+    * (key, stamp) collapses retry copies, the sum over stamps nets.
+    */
+  private[graft] def netRows(rows: Iterable[(Long, Long, Option[Long])]): Map[Long, Long] =
+    rows.groupMapReduce(r => (r._1, r._3))(_._2)(math.max).toSeq
+      .groupMapReduce(_._1._1)(_._2)(_ + _)
 
   /** The fold watermark: the highest ingest stamp whose rows a
     * [[compactCounted]] has netted into stampless (batch_id NULL)
@@ -657,6 +749,14 @@ object StreamingSubstringDedup {
     * [[indexFor]] twin).
     */
   def countedLiveFor(spark: SparkSession, indexPath: String, k: Int): DataFrame = {
+    requireCountedK(spark, indexPath, k)
+    countedLive(spark, indexPath)
+  }
+
+  /** Refuse probing a present counted index at a k it was not built
+    * with; a missing path is the empty index.
+    */
+  private[graft] def requireCountedK(spark: SparkSession, indexPath: String, k: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(indexPath)
     if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) {
       val hdr = graft.sources.ArtifactHeader.required(spark, indexPath, "gramsc")
@@ -665,7 +765,20 @@ object StreamingSubstringDedup {
           s"${hdr.getOrElse("k", "?")}, probed with k=$k — rebuild or pass " +
           "the build-time k")
     }
-    countedLive(spark, indexPath)
+  }
+
+  /** [[countedLiveFor]] as of before ingest stamp `stampId`: rows the
+    * log already holds under that stamp — an at-least-once retry's own
+    * first attempt — are left out, so a retried batch probes the
+    * history its first attempt probed. (A retry whose first attempt a
+    * fold has already netted into stampless rows cannot be told apart.)
+    */
+  private[graft] def countedLiveBefore(spark: SparkSession, indexPath: String, k: Int,
+                                       stampId: Long): DataFrame = {
+    requireCountedK(spark, indexPath, k)
+    nettedPerKey(readDeltaRaw(spark, indexPath, "h")
+        .filter(col("batch_id").isNull || col("batch_id") =!= stampId), "h")
+      .filter(col("__net") > 0L).select("h")
   }
 
   /** Net the delta log's INGEST side (one (h, net, null) row per

@@ -293,6 +293,12 @@ class WorkCacheSpec extends AnyFunSuite {
     assert(shortMisses == 1 && longMisses == 1) // only the chain's head state was new
     assert(long - longMisses == short - shortMisses,
       s"engine calls beyond memo misses grew with the chain: $short -> $long")
+    // the new event is applied once per distinct base datum: the
+    // pre-loop check, the round's base and its audit share one call
+    // where their bases are equal (7 calls beyond misses before that)
+    assert(short - shortMisses < 7 && long - longMisses < 7,
+      s"engine calls beyond memo misses: ${short - shortMisses} (chain of 4), " +
+        s"${long - longMisses} (chain of 16)")
   }
 }
 

@@ -390,4 +390,242 @@ class StreamingCurationFullSpec extends AnyFunSuite with SharedSpark {
       shingleN = 3, bands = 6, rows = 2, threshold = 0.4))
     assert(viaIndex == recomputed && recomputed.nonEmpty)
   }
+
+  // -- the two batch regimes, driven through Chain.runBatch ---------------
+
+  /** A seeded synthetic corpus for the regime cases: 300 docs of 40-80
+    * words over a 60-word vocabulary. Every fifth doc is a near-copy of
+    * an earlier one (three words changed), inside its batch or across
+    * batches; every seventh carries a 12-word span of an earlier doc;
+    * every ninth embedding sits next to a held-out bench vector.
+    */
+  private lazy val (docsDf, embDf) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(6)
+    val vocab = (0 until 60).map(i => s"w$i")
+    def words(n: Int) = Array.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val texts = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
+    (0 until 300).foreach { i =>
+      texts += (
+        if (i > 0 && i % 5 == 0) {
+          val c = texts(rnd.nextInt(i)).clone()
+          (0 until 3).foreach(_ => c(rnd.nextInt(c.length)) = vocab(rnd.nextInt(vocab.size)))
+          c
+        } else if (i > 0 && i % 7 == 0) {
+          val src = texts(rnd.nextInt(i))
+          val at = rnd.nextInt(src.length - 12)
+          words(20) ++ src.slice(at, at + 12) ++ words(20 + rnd.nextInt(21))
+        } else words(40 + rnd.nextInt(41)))
+    }
+    val vecs = Array.fill(300)(Array.fill(64)(rnd.nextGaussian().toFloat))
+    val emb = vecs.indices.map { i =>
+      val v = if (i % 9 == 0 && i % 50 != 2) vecs(50 * (i % 6) + 2).map(_ + 0.05f * rnd.nextGaussian().toFloat)
+              else vecs(i)
+      (i + 1L, v)
+    }
+    (texts.zipWithIndex.map { case (t, i) => (i + 1L, t.mkString(" ")) }.toSeq.toDF("doc_id", "text"),
+      emb.toDF("vec_id", "embedding"))
+  }
+  private lazy val benchGrams = StreamingDecontaminate.benchGrams(spark,
+    docsDf.filter(col("doc_id") % 50 === 3), "text", n = 3)
+  private lazy val benchVecs = StreamingSemDecontaminate.benchIndex(
+    embDf.filter(col("vec_id") % 50 === 3), dim = 64)
+
+  /** Every bound a test batch meets, and none. */
+  private val Small = graft.streaming.StreamingCurationFull.DriverBound(1 << 20, 1L << 40)
+  private val Distributed = graft.streaming.StreamingCurationFull.DriverBound(0, 0L)
+
+  /** Three id-ordered exact-dedup winner batches (doc_id, content_hash)
+    * of ~100 docs each.
+    */
+  private def winnerBatches: Seq[DataFrame] = {
+    val ids = docsDf.select("doc_id").collect().map(_.getLong(0)).sorted.take(300)
+    ids.grouped(100).map { g =>
+      docsDf.filter(col("doc_id").between(g.head, g.last))
+        .select(col("doc_id"), md5(lower(trim(col("text")))).as("content_hash"))
+    }.toSeq
+  }
+
+  private def chainOf(stateDir: String, counted: Boolean,
+                      bound: graft.streaming.StreamingCurationFull.DriverBound,
+                      onBatch: graft.streaming.StreamingCurationFull.BatchMetrics => Unit = _ => ()) =
+    new graft.streaming.StreamingCurationFull.Chain(docsDf, embDf, benchGrams, benchVecs,
+      stateDir, shingleN = 3, bands = 6, rows = 2, threshold = 0.4, bucketCap = 128,
+      gramN = 3, minOverlap = 3, semThreshold = 0.3, substrK = 8, onBatch = onBatch,
+      targetAppendBytes = 64L << 20, countedGrams = counted, bound = bound)
+
+  /** The chain's batch_id-stamped append logs: a retry of a batch
+    * re-appends its rows by design, and their readers dedupe by stamp.
+    */
+  private val StampedLogs = Set("survivors", "winners", "substr_spans")
+
+  /** Each chain artifact's rows, with their multiplicity (one count per
+    * distinct row for the stamped logs).
+    */
+  private def artifacts(stateDir: String): Map[String, Map[Seq[Any], Int]] =
+    Seq("survivors", "winners", "bands", "substr_spans", "grams", "grams/_docs").map { a =>
+      val p = s"$stateDir/$a"
+      val rows =
+        if (!graft.sources.ArtifactFiles.hasDataFiles(spark, p)) Seq.empty[Seq[Any]]
+        else spark.read.parquet(p).collect().map(_.toSeq).toSeq
+      a -> rows.groupMapReduce(identity)(_ => 1)((m, n) => if (StampedLogs(a)) 1 else m + n)
+    }.toMap
+
+  private def assertSameArtifacts(a: String, b: String): Unit =
+    artifacts(a).zip(artifacts(b)).foreach { case ((name, x), (_, y)) =>
+      val (onlyX, onlyY) = (x.toSet -- y.toSet, y.toSet -- x.toSet)
+      assert(x == y, s"$name differs: only-first=${onlyX.take(3)} only-second=${onlyY.take(3)}")
+    }
+
+  /** `f`'s result, the Spark jobs it started and the serialized task
+    * result bytes those jobs shipped to the driver.
+    */
+  private def traced[T](f: => T): (T, Int, Long) = {
+    val sc = spark.sparkContext
+    val tag = "cur-trace-" + java.util.UUID.randomUUID()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("graft.test.tag")).foreach {
+          case `tag` => jobs.incrementAndGet(); js.stageIds.foreach(stages.add)
+          case t if t == tag + "-end" => drained.countDown()
+          case _ => ()
+        }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null)
+          resultBytes.addAndGet(te.taskMetrics.resultSize)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      val r = f
+      sc.setLocalProperty("graft.test.tag", tag + "-end")
+      sc.parallelize(Seq(0), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (r, jobs.get(), resultBytes.get())
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("driver and executor regimes write identical rows, across the bound both ways " +
+    "(countedGrams on and off)") {
+    val batches = winnerBatches
+    Seq(false, true).foreach { counted =>
+      def run(regimes: Seq[graft.streaming.StreamingCurationFull.DriverBound]): (String,
+          Seq[graft.streaming.StreamingCurationFull.BatchMetrics]) = {
+        val dir = java.nio.file.Files.createTempDirectory("cur_regime").toString
+        val ms = scala.collection.mutable.ArrayBuffer
+          .empty[graft.streaming.StreamingCurationFull.BatchMetrics]
+        batches.zip(regimes).zipWithIndex.foreach { case ((b, bound), i) =>
+          // a rights-removal between batches: the probes must skip it
+          if (i == 2) Dedup.neardupIndexDeleteAt(spark, s"$dir/bands",
+            Seq(batches.head.select("doc_id").head().getLong(0)))
+          chainOf(dir, counted, bound, ms += _).runBatch(b, i.toLong)
+        }
+        (dir, ms.toSeq)
+      }
+      val (driverDir, driverMs) = run(Seq(Small, Small, Small))
+      val (mixedDir, mixedMs) = run(Seq(Distributed, Small, Distributed))
+      assertSameArtifacts(driverDir, mixedDir)
+      def counts(ms: Seq[graft.streaming.StreamingCurationFull.BatchMetrics]) =
+        ms.map(_.copy(stageSec = Nil))
+      assert(counts(driverMs) == counts(mixedMs))
+      // the batches exercise every drop path
+      assert(driverMs.map(_.nCrossDrop).sum > 0 && driverMs.map(_.nWithinDrop).sum > 0 &&
+        driverMs.map(_.nGramDrop).sum > 0 && driverMs.map(_.nSemDrop).sum > 0 &&
+        driverMs.map(_.nSurvivors).sum > 0, driverMs.mkString("; "))
+      assert(artifacts(driverDir)("substr_spans").keys.exists(_(2) != 0L), "no span was trimmed")
+    }
+  }
+
+  test("a small batch runs in at most 15 jobs and leaves no checkpoint block live") {
+    val sc = spark.sparkContext
+    val batches = winnerBatches
+    val dir = java.nio.file.Files.createTempDirectory("cur_jobs").toString
+    chainOf(dir, counted = true, Small).runBatch(batches(0), 0L)
+    val before = sc.getPersistentRDDs.keySet
+    val (_, jobs, _) = traced(chainOf(dir, counted = true, Small).runBatch(batches(1), 1L))
+    assert(jobs <= 15, s"$jobs jobs for one small batch")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"live blocks after the batch: ${sc.getPersistentRDDs.keySet -- before}")
+  }
+
+  test("the driver bound is checked in text bytes before the texts reach the driver") {
+    import spark.implicits._
+    // 40 docs of ~14 KiB of random words each (collect results travel
+    // compressed, so the text must not compress away): under the row
+    // bound, ~9x past the byte bound
+    val rnd = new scala.util.Random(40)
+    val long = (1L to 40L).map(i => (i, s"h$i",
+        Seq.fill(2000)(rnd.alphanumeric.take(6).mkString).mkString(" ")))
+      .toDF("doc_id", "content_hash", "text")
+    val textBytes = long.select(sum(octet_length(col("text")))).head().getLong(0)
+    val bound = graft.streaming.StreamingCurationFull.DriverBound(1 << 20, 64L << 10)
+    val (held, jobs, shipped) =
+      traced(graft.streaming.StreamingCurationFull.holdOnDriver(long, bound))
+    assert(held.isEmpty, "a batch past the byte bound must take the executor regime")
+    assert(jobs == 1, s"$jobs jobs for the bound check")
+    assert(shipped < bound.textBytes + (16L << 10),
+      s"$shipped result bytes reached the driver for a $textBytes-byte batch")
+    // the same batch under a bound it fits comes back whole
+    val fits = graft.streaming.StreamingCurationFull.DriverBound(40, textBytes)
+    assert(graft.streaming.StreamingCurationFull.holdOnDriver(long, fits)
+      .map(_.map(_.id).toSeq.sorted).contains((1L to 40L).toSeq))
+    // one row past the row bound is past the bound too
+    assert(graft.streaming.StreamingCurationFull.holdOnDriver(long,
+      graft.streaming.StreamingCurationFull.DriverBound(39, textBytes)).isEmpty)
+  }
+
+  test("an at-least-once retry of one batch id leaves the band index and the counted " +
+    "gram log row-identical and the stamped logs set-identical, in each regime, " +
+    "and the next batch's results unchanged") {
+    val batches = winnerBatches
+    Seq(Small, Distributed).foreach { bound =>
+      def run(retry: Boolean): (String, Seq[graft.streaming.StreamingCurationFull.BatchMetrics]) = {
+        val dir = java.nio.file.Files.createTempDirectory("cur_retry").toString
+        val ms = scala.collection.mutable.ArrayBuffer
+          .empty[graft.streaming.StreamingCurationFull.BatchMetrics]
+        chainOf(dir, counted = true, bound).runBatch(batches(0), 0L)
+        chainOf(dir, counted = true, bound).runBatch(batches(1), 1L)
+        if (retry) chainOf(dir, counted = true, bound).runBatch(batches(1), 1L)
+        chainOf(dir, counted = true, bound, ms += _).runBatch(batches(2), 2L)
+        (dir, ms.map(_.copy(stageSec = Nil, winnersRows = 0L)).toSeq)
+      }
+      val (onceDir, onceMs) = run(retry = false)
+      val (retryDir, retryMs) = run(retry = true)
+      assertSameArtifacts(onceDir, retryDir)
+      assert(onceMs == retryMs)
+    }
+  }
+
+  test("reported artifact sizes are the parquet row counts, across a fold and a " +
+    "compaction between batches") {
+    val batches = winnerBatches.take(2)
+    val dir = java.nio.file.Files.createTempDirectory("cur_sizes").toString
+    val checked = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def check(m: graft.streaming.StreamingCurationFull.BatchMetrics): Unit = {
+      Seq("winners" -> m.winnersRows, "bands" -> m.bandIdxRows, "grams" -> m.gramIdxRows)
+        .foreach { case (a, rows) =>
+          assert(rows == spark.read.parquet(s"$dir/$a").count(), s"$a after batch ${m.batch}")
+        }
+      checked += m.batch
+    }
+    chainOf(dir, counted = true, Small, check).runBatch(batches(0), 0L)
+    // maintenance between the batches: a tombstone fold of the winner
+    // store and band index, the counted log's fold, and compaction
+    Dedup.neardupIndexDeleteAt(spark, s"$dir/bands",
+      Seq(batches.head.select("doc_id").head().getLong(0)))
+    Dedup.neardupTombstoneFold(spark, s"$dir/bands", Some(s"$dir/winners"))
+    StreamingSubstringDedup.compactCounted(spark, s"$dir/grams")
+    Seq("winners", "bands").foreach(a =>
+      graft.sources.ArtifactCompaction.compactFiles(spark, s"$dir/$a"))
+    chainOf(dir, counted = true, Small, check).runBatch(batches(1), 1L)
+    chainOf(dir, counted = true, Distributed, check).runBatch(batches(1), 2L)
+    assert(checked == Seq(0L, 1L, 2L))
+  }
 }
