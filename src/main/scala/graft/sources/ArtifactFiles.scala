@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** The one honest way to read a maybe-empty artifact directory.
   *
@@ -47,13 +48,23 @@ object ArtifactFiles {
     has
   }
 
+  /** Rows and uncompressed column bytes of a parquet table, from its
+    * footers.
+    */
+  final case class FooterSize(rows: Long, bytes: Long)
+
   /** The row count `spark.read.parquet(path).count()` would return,
     * summed from the visible data files' parquet footers on the driver:
     * O(files) metadata reads (compaction bounds the file count), no
     * job and no row scan. 0 when [[hasDataFiles]] is false.
     */
-  def footerRows(spark: SparkSession, path: String): Long =
-    if (!hasDataFiles(spark, path)) 0L
+  def footerRows(spark: SparkSession, path: String): Long = footerSize(spark, path).rows
+
+  /** [[footerRows]] plus the row groups' total uncompressed bytes, from
+    * the same footer reads.
+    */
+  def footerSize(spark: SparkSession, path: String): FooterSize =
+    if (!hasDataFiles(spark, path)) FooterSize(0L, 0L)
     else {
       val conf = spark.sessionState.newHadoopConf()
       val p = new Path(path)
@@ -62,14 +73,15 @@ object ArtifactFiles {
         val n = s.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
       }
-      def rowsUnder(dir: Path): Long = fs.listStatus(dir).iterator.filter(visible).map { s =>
-        if (s.isDirectory) rowsUnder(s.getPath)
+      def sizeUnder(dir: Path): FooterSize = fs.listStatus(dir).iterator.filter(visible).map { s =>
+        if (s.isDirectory) sizeUnder(s.getPath)
         else {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
-          try r.getRecordCount finally r.close()
+          try FooterSize(r.getRecordCount, r.getRowGroups.iterator.asScala.map(_.getTotalByteSize).sum)
+          finally r.close()
         }
-      }.sum
-      rowsUnder(p)
+      }.foldLeft(FooterSize(0L, 0L))((a, b) => FooterSize(a.rows + b.rows, a.bytes + b.bytes))
+      sizeUnder(p)
     }
 }

@@ -5,10 +5,12 @@ import graft.sources.{GraphSession, GraphStore}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.immutable.{SortedMap, SortedSet}
+import scala.jdk.CollectionConverters._
 
-/** Frames-only graph session: open / validate / compress / merge with
+/** Persisted graph session: open / validate / compress / merge with
   * the driver holding only frontiers, at a scale where the collect()
-  * path (GraphStore.load) is not an option.
+  * path (GraphStore.load) is not an option; and the small-store driver
+  * regime, held equal to the frames regime on the same fixtures.
   */
 class GraphSessionSpec extends AnyFunSuite with SharedSpark {
 
@@ -58,6 +60,10 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
       .write.option("compression", "zstd").parquet(s"$dir/nstates")
   }
 
+  /** Bounds that force each regime: nothing fits the frames bound. */
+  private val Driver = GraphSession.DriverBound(Long.MaxValue, Long.MaxValue)
+  private val Frames = GraphSession.DriverBound(0L, 0L)
+
   test("1M-event store: open/validate/merge with driver bounded by the frontier") {
     val dir = java.nio.file.Files.createTempDirectory("graftsession").toString
     val depth = 8
@@ -65,7 +71,7 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     genStore(s"$dir/local", 0L, colsPerSide, depth)
     genStore(s"$dir/foreign", colsPerSide, 2 * colsPerSide, depth)
 
-    val s = GraphSession.open(spark, ByteEngine, s"$dir/local")
+    val s = GraphSession.open(spark, ByteEngine, s"$dir/local", Frames)
     assert(s.eventCount === colsPerSide * depth)
     assert(s.states("").size === colsPerSide)
     assert(s.validate() === 0L)
@@ -106,41 +112,54 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     graft.plans.CheckpointHygiene.releaseAll(spark)
   }
 
-  test("a dangling dependency is refused: mergeFrom before its append, editingGraph too") {
+  private def ev(arg: String, deps: String*): (String, Int, Array[Byte], Map[String, Boolean]) = {
+    val d = SortedMap.from(deps.map(_ -> true))
+    val a = arg.getBytes("UTF-8")
+    (Hashes.eventHash(0, a, d), 0, a, d.toMap)
+  }
+
+  private def writeEvents(dir: String, rows: Seq[(String, Int, Array[Byte], Map[String, Boolean])]): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftsessdangling").toString
+    rows.toDF("hash", "cmd", "arg", "deps")
+      .write.option("compression", "zstd").parquet(s"$dir/events")
+  }
+
+  /** A local store of chains and a foreign store whose head depends on
+    * an event the foreign store never holds; returns that hash.
+    */
+  private def danglingFixture(dir: String): String = {
     genStore(s"$dir/local", 0L, 4L, 3)
-    def ev(arg: String, deps: String*) = {
-      val d = SortedMap.from(deps.map(_ -> true))
-      val a = arg.getBytes("UTF-8")
-      (Hashes.eventHash(0, a, d), 0, a, d.toMap)
-    }
-    // the foreign head depends on an event its store never holds
     val root = ev("root")
     val absent = ev("absent", root._1)
     val head = ev("head", root._1, absent._1)
-    Seq(root, head).toDF("hash", "cmd", "arg", "deps")
-      .write.option("compression", "zstd").parquet(s"$dir/foreign/events")
+    writeEvents(s"$dir/foreign", Seq(root, head))
     writeHeads(s"$dir/foreign", Seq(head._1))
+    absent._1
+  }
+
+  test("a dangling dependency is refused: mergeFrom before its append, editingGraph too") {
+    val dir = java.nio.file.Files.createTempDirectory("graftsessdangling").toString
+    val absent = danglingFixture(dir)
 
     val s = GraphSession.open(spark, ByteEngine, s"$dir/local")
     val before = s.eventCount
     val states = s.states("")
     val m = intercept[DependencyNotFound](s.mergeFrom(s"$dir/foreign"))
-    assert(m.h === absent._1)
+    assert(m.h === absent)
     assert(s.eventCount === before)
     assert(s.states("") === states)
 
     val f = GraphSession.open(spark, ByteEngine, s"$dir/foreign")
     assert(f.validate() === 0L)
     val g = intercept[DependencyNotFound](f.editingGraph(""))
-    assert(g.h === absent._1)
+    assert(g.h === absent)
     graft.plans.CheckpointHygiene.releaseAll(spark)
   }
 
-  test("small-store parity: session merge == driver-path merge frontier and datum") {
-    val dir = java.nio.file.Files.createTempDirectory("graftsessparity").toString
-    // same fixture as GraphStoreSpec: shared base edit + a divergent one
+  /** The GraphStoreSpec fixture: a local store with one edit, and a
+    * foreign store with the same edit plus a divergent one.
+    */
+  private def parityFixture(dir: String): Unit = {
     val g = new EventGraph[SearArg](SearEngine)
     val w = new WorkCache[SearArg, String](SearEngine, "A|B|C")
     var xs = SortedSet.empty[String]
@@ -155,13 +174,18 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     ys += w2.shelveEvent(g2, ys, 0, SearArg("A|D", "E|D")).get
     g2.nstates.update("", ys)
     GraphStore.save(spark, g2, s"$dir/foreign")
+  }
+
+  test("small-store parity: session merge == driver-path merge frontier and datum") {
+    val dir = java.nio.file.Files.createTempDirectory("graftsessparity").toString
+    parityFixture(dir)
 
     // driver path (collect-based, engine-level re-shelve included)
     val gl = GraphStore.load(spark, SearEngine, s"$dir/local")
     val wl = new WorkCache[SearArg, String](SearEngine, "A|B|C")
     val mergedDriver = GraphStore.mergeFrom(spark, gl, wl, s"$dir/foreign")
 
-    // frames-only path on its own copy
+    // store-backed session on its own copy
     val s = GraphSession.open(spark, SearEngine, s"$dir/local")
     val mergedFrames = s.mergeFrom(s"$dir/foreign")
     assert(mergedFrames === mergedDriver)
@@ -173,6 +197,156 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     val we = new WorkCache[SearArg, String](SearEngine, "A|B|C")
     val (dat, _) = we.materialize(ge, mergedFrames)
     assert(dat === "E|D|C")
+    graft.plans.CheckpointHygiene.releaseAll(spark)
+  }
+
+  /** A local store holding a row with a valid foreign hash but another
+    * arg, and a foreign store holding the valid event; returns the hash.
+    */
+  private def collisionFixture(dir: String): String = {
+    val root = ev("root")
+    val head = ev("head", root._1)
+    writeEvents(s"$dir/foreign", Seq(root, head))
+    writeHeads(s"$dir/foreign", Seq(head._1))
+    val forged = head.copy(_3 = "other".getBytes("UTF-8"))
+    writeEvents(s"$dir/local", Seq(root, forged))
+    writeHeads(s"$dir/local", Seq(forged._1))
+    head._1
+  }
+
+  /** Every file under `dir` with its length: what a refusal must leave. */
+  private def files(dir: String): Set[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p)).toSet
+    finally walk.close()
+  }
+
+  private def eventRows(dir: String): Set[(String, Int, Seq[Byte], Map[String, Boolean])] =
+    spark.read.parquet(s"$dir/events").collect().map(r => (r.getString(0), r.getInt(1),
+      r.getAs[Array[Byte]](2).toSeq, r.getMap[String, Boolean](3).toMap)).toSet
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def jobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = "graph-session-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("graft.test.tag")).foreach {
+          case `tag` => n.incrementAndGet()
+          case t if t == tag + "-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      val r = f
+      // the listener bus is asynchronous: a last tagged job drains it
+      sc.setLocalProperty("graft.test.tag", tag + "-end")
+      sc.parallelize(Seq(0), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (r, n.get())
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("cross-regime: driver and frames regimes merge, refuse and edit alike") {
+    val regimes = Seq("driver" -> Driver, "frames" -> Frames)
+
+    // parity fixture: equal frontiers, event rows, persisted nstates and
+    // editing graphs; the driver regime reads each table once
+    val parity = regimes.map { case (name, bound) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graftsessx-$name").toString
+      parityFixture(dir)
+      val s = GraphSession.open(spark, SearEngine, s"$dir/local", bound)
+      val (merged, mergeJobs) = jobs(s.mergeFrom(s"$dir/foreign"))
+      val (eg, editJobs) = jobs(s.editingGraph(""))
+      if (name == "driver") {
+        // nstates + foreign events + local events + append + saveStates
+        assert(mergeJobs <= 5, s"driver-regime mergeFrom ran $mergeJobs jobs")
+        assert(editJobs === 1)
+      }
+      assert(s.validate() === 0L)
+      (merged, eventRows(s"$dir/local"), GraphSession.open(spark, SearEngine, s"$dir/local").states.toMap,
+        eg.events.toMap)
+    }
+    assert(parity(0) === parity(1))
+    assert(parity(0)._4.size === 2)
+
+    // refusal fixtures: in each regime the same exception type and
+    // hash, and nothing written
+    def refusal[E <: GraphException](fixture: String => String)(hashOf: E => String)(
+        implicit ct: scala.reflect.ClassTag[E]): Unit =
+      regimes.foreach { case (name, bound) =>
+        val dir = java.nio.file.Files.createTempDirectory(s"graftsessr-$name").toString
+        val h = fixture(dir)
+        val before = files(s"$dir/local")
+        val s = GraphSession.open(spark, ByteEngine, s"$dir/local", bound)
+        val states = s.states.toMap
+        assert(hashOf(intercept[E](s.mergeFrom(s"$dir/foreign"))) === h)
+        assert(files(s"$dir/local") === before, s"$name regime wrote before refusing")
+        assert(s.states.toMap === states)
+      }
+    refusal[DependencyNotFound](danglingFixture)(_.h)
+    refusal[HashCollision](collisionFixture)(_.h)
+
+    // a foreign row whose stored hash is not its content hash
+    regimes.foreach { case (name, bound) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graftsesst-$name").toString
+      collisionFixture(dir) // its local side holds the forged row: merge it in
+      val s = GraphSession.open(spark, ByteEngine, s"$dir/foreign", bound)
+      val before = files(s"$dir/foreign")
+      val e = intercept[EngineException](s.mergeFrom(s"$dir/local"))
+      assert(e.getMessage.contains("1 events fail hash validation"), s"$name: ${e.getMessage}")
+      assert(files(s"$dir/foreign") === before)
+    }
+
+    // editingGraph refuses the foreign store's dangling closure alike
+    val dir = java.nio.file.Files.createTempDirectory("graftsessxe").toString
+    val absent = danglingFixture(dir)
+    regimes.foreach { case (_, bound) =>
+      val f = GraphSession.open(spark, ByteEngine, s"$dir/foreign", bound)
+      assert(intercept[DependencyNotFound](f.editingGraph("")).h === absent)
+      assert(intercept[EngineException](f.editingGraph("", cap = 2L)).getMessage.contains("cap 2"))
+    }
+    graft.plans.CheckpointHygiene.releaseAll(spark)
+  }
+
+  test("driver regime: a local closure with a missing dependency is refused before the append") {
+    val dir = java.nio.file.Files.createTempDirectory("graftsesslocal").toString
+    // the dangling store is the local side here; the foreign one is whole
+    val absent = danglingFixture(s"$dir/swap")
+    genStore(s"$dir/foreign", 4L, 8L, 3)
+    val s = GraphSession.open(spark, ByteEngine, s"$dir/swap/foreign", Driver)
+    val before = files(s"$dir/swap/foreign")
+    assert(intercept[DependencyNotFound](s.mergeFrom(s"$dir/foreign")).h === absent)
+    assert(files(s"$dir/swap/foreign") === before)
+  }
+
+  test("driver regime: editingGraph sees an append another session made after mergeFrom") {
+    val dir = java.nio.file.Files.createTempDirectory("graftsessappend").toString
+    parityFixture(dir)
+    val later = new EventGraph[SearArg](SearEngine)
+    val wl = new WorkCache[SearArg, String](SearEngine, "A|B|C")
+    val h = wl.shelveEvent(later, SortedSet.empty, 0, SearArg("C", "F")).get
+    later.nstates.update("", SortedSet(h))
+    GraphStore.save(spark, later, s"$dir/later")
+
+    val s = GraphSession.open(spark, SearEngine, s"$dir/local", Driver)
+    val merged = s.mergeFrom(s"$dir/foreign")
+    // a second session on the same store appends `later` meanwhile
+    val other = GraphSession.open(spark, SearEngine, s"$dir/local", Driver)
+    val both = other.mergeFrom(s"$dir/later")
+    assert(both === merged + h)
+    s.states.update("", both)
+    val eg = s.editingGraph("")
+    assert(eg.events.contains(h) && eg.events.size === 3)
     graft.plans.CheckpointHygiene.releaseAll(spark)
   }
 }
