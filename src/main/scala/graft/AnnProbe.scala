@@ -226,23 +226,23 @@ object AnnProbe {
     val (_, pq256Build) = time(Similarity.ivfPqIndexWrite(emb, s"$base/pq256", dim = 64,
       codes = 256, centroids = Some(cents), codebooks = Some(cbs256)))
     val q = emb0.filter(col("vec_id") < 8)
-    val sqSec = min2(Similarity.annIvfSqProbeAt(spark, s"$base/sq", q, k = 5).count())
-    val pqSec = min2(Similarity.annIvfPqProbeAt(spark, s"$base/pq", q, k = 5).count())
-    val resSec = min2(Similarity.annIvfPqProbeAt(spark, s"$base/pqres", q, k = 5).count())
-    val pq256Sec = min2(Similarity.annIvfPqProbeAt(spark, s"$base/pq256", q, k = 5).count())
+    val sqSec = min2(Similarity.annProbeAt(spark, s"$base/sq", q, k = 5).count())
+    val pqSec = min2(Similarity.annProbeAt(spark, s"$base/pq", q, k = 5).count())
+    val resSec = min2(Similarity.annProbeAt(spark, s"$base/pqres", q, k = 5).count())
+    val pq256Sec = min2(Similarity.annProbeAt(spark, s"$base/pq256", q, k = 5).count())
     val refSec = min2(
-      Similarity.annIvfPqRefineAt(spark, s"$base/pq", emb, q, k = 5).count())
+      Similarity.annRefineAt(spark, s"$base/pq", emb, q, k = 5).count())
     val exact = Similarity.topKDot(emb, q, 5).localCheckpoint()
     def recall(approx: org.apache.spark.sql.DataFrame): Double =
       Similarity.annRecall(exact, approx, 5)
         .agg(avg(col("recall"))).collect()(0).getDouble(0)
-    val sqRec = recall(Similarity.annIvfSqProbeAt(spark, s"$base/sq", q, k = 5))
-    val pqRec = recall(Similarity.annIvfPqProbeAt(spark, s"$base/pq", q, k = 5))
-    val resRec = recall(Similarity.annIvfPqProbeAt(spark, s"$base/pqres", q, k = 5))
-    val pq256Rec = recall(Similarity.annIvfPqProbeAt(spark, s"$base/pq256", q, k = 5))
-    val refRec = recall(Similarity.annIvfPqRefineAt(spark, s"$base/pq", emb, q, k = 5))
-    val resRefRec = recall(Similarity.annIvfPqRefineAt(spark, s"$base/pqres", emb, q, k = 5))
-    val pq256RefRec = recall(Similarity.annIvfPqRefineAt(spark, s"$base/pq256", emb, q, k = 5))
+    val sqRec = recall(Similarity.annProbeAt(spark, s"$base/sq", q, k = 5))
+    val pqRec = recall(Similarity.annProbeAt(spark, s"$base/pq", q, k = 5))
+    val resRec = recall(Similarity.annProbeAt(spark, s"$base/pqres", q, k = 5))
+    val pq256Rec = recall(Similarity.annProbeAt(spark, s"$base/pq256", q, k = 5))
+    val refRec = recall(Similarity.annRefineAt(spark, s"$base/pq", emb, q, k = 5))
+    val resRefRec = recall(Similarity.annRefineAt(spark, s"$base/pqres", emb, q, k = 5))
+    val pq256RefRec = recall(Similarity.annRefineAt(spark, s"$base/pq256", emb, q, k = 5))
     graft.plans.CheckpointHygiene.free(exact, emb)
     println(s"""{"n_vec":$nVec,"copies":$copies,""" +
       f""""train_coarse_sec":$centsSec%.2f,"train_pq_sec":$cbsSec%.2f,"train_respq_sec":$resCbsSec%.2f,"train_pq256_sec":$cbs256Sec%.2f,""" +
@@ -278,12 +278,12 @@ object AnnProbe {
     val (_, buildSec) = time(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
     val q = emb0.filter(col("vec_id") < 8)
     val (nAll, allSec) = (1 to 2).map(_ =>
-      time(Similarity.annIvfPqProbeAt(spark, out, q, k = 5).count())).minBy(_._2)
+      time(Similarity.annProbeAt(spark, out, q, k = 5).count())).minBy(_._2)
     val filters = Seq(10L, 20L, 50L, 100L).map { m =>
       val allowed = emb.filter(col("vec_id") % m === 0).select("vec_id")
       val nAllowed = allowed.count()
       val (n, sec) = (1 to 2).map(_ => time(
-        Similarity.annIvfPqProbeFilteredAt(spark, out, q, allowed, k = 5)
+        Similarity.annProbeAt(spark, out, q, k = 5, allowedIds = Some(allowed))
           .count())).minBy(_._2)
       // same EFFECTIVE set through the semi-join branch: pad with ids
       // outside every copy range so the id-count crosses the pushdown
@@ -293,7 +293,7 @@ object AnnProbe {
         spark.range(100000000000L, 100000000000L +
           graft.operators.Similarity.AnnFilterPushdownMax + 1).as[Long]).toDF("vec_id")
       val (_, semiSec) = (1 to 2).map(_ => time(
-        Similarity.annIvfPqProbeFilteredAt(spark, out, q, padded, k = 5)
+        Similarity.annProbeAt(spark, out, q, k = 5, allowedIds = Some(padded))
           .count())).minBy(_._2)
       s"""{"mod":$m,"allowed":$nAllowed,"rows":$n,""" +
         s""""pushdown_sec":${f"$sec%.3f"},"semijoin_sec":${f"$semiSec%.3f"}}"""
@@ -323,7 +323,7 @@ object AnnProbe {
     }
     val (needs, auditSec) = time(Similarity.ivfPqNeedsRebuild(spark, out))
     val q = emb.filter(col("vec_id") < 8)
-    def probe(): Long = Similarity.annIvfPqProbeAt(spark, out, q, k = 5).count()
+    def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeSec = (1 to 2).map(_ => time(probe())._2).min
     // the r13 closing of the staleness loop: the audit DECIDED, now
     // EXECUTE — sample-bounded data-seeded retrain, re-encode, verify
@@ -346,7 +346,7 @@ object AnnProbe {
     val resumeBatch = emb.filter(col("vec_id") < 100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
     val (nResumed, resumeSec) = time(
-      Similarity.ivfPqIndexAppendAt(resumeBatch, out))
+      Similarity.annAppendAt(resumeBatch, out))
     // the hazard the offset comment describes must FAIL, not time an
     // empty write into the committed soak table
     require(nResumed == 100,
@@ -400,7 +400,7 @@ object AnnProbe {
     val out = java.nio.file.Files.createTempDirectory("ann_tombstones").toString + "/idx"
     val (_, writeSec) = time(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
     val q = emb0.filter(col("vec_id") < 8).localCheckpoint()
-    def probe(): Long = Similarity.annIvfPqProbeAt(spark, out, q, k = 5).count()
+    def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeClean = min2(probe())
     // 1%: under the pushdown bound -> NOT-IN scan predicate
     val (nSmall, delSmallSec) = time(Similarity.annIndexDeleteAt(spark, out,
@@ -417,7 +417,7 @@ object AnnProbe {
     val probeFolded = min2(probe())
     // deleted ids stay gone and ingest resumes (a folded id may return)
     require(spark.read.parquet(out).filter(col("vec_id") % 10 === 1).count() == 0L)
-    val (nResumed, resumeSec) = time(Similarity.ivfPqIndexAppendAt(
+    val (nResumed, resumeSec) = time(Similarity.annAppendAt(
       emb.filter(col("vec_id") % 10 === 1).limit(100), out))
     require(nResumed == 100L, s"resume admitted $nResumed/100")
     graft.plans.CheckpointHygiene.free(emb, q)
@@ -457,7 +457,7 @@ object AnnProbe {
     val (_, writeSec) = time(
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
     val appendSecs = (6 to 8).map { s =>
-      time(Similarity.ivfSqIndexAppendAt(
+      time(Similarity.annAppendAt(
         emb.filter(col("vec_id") % 10 === s), out))._2
     }
     // the drift batch: every value shifted past the trained span, so
@@ -467,13 +467,13 @@ object AnnProbe {
       x => (x + lit(2.0f)).cast("float")).as("embedding")
     val drift = emb.filter(col("vec_id") % 10 === 9)
       .select(col("vec_id"), shifted).localCheckpoint()
-    val (_, driftAppendSec) = time(Similarity.ivfSqIndexAppendAt(drift, out))
+    val (_, driftAppendSec) = time(Similarity.annAppendAt(drift, out))
     val (satMax, satSec) = time(Similarity.ivfSqSaturation(spark, out)
       .agg(max(col("sat_pm"))).collect()(0).getLong(0))
     val (needs, auditSec) = time(Similarity.ivfSqNeedsRebuild(spark, out))
     val q = emb.filter(col("vec_id") < 8).select(col("vec_id"), shifted)
       .localCheckpoint()
-    def probe(): Long = Similarity.annIvfSqProbeAt(spark, out, q, k = 5).count()
+    def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeSec = (1 to 2).map(_ => time(probe())._2).min
     val (report, rebuildSec) = time(Similarity.ivfSqRebuild(
       emb.filter(col("vec_id") % 10 =!= 9).unionByName(drift), out,
@@ -487,7 +487,7 @@ object AnnProbe {
     // any entity-copy range, the lifecycle-probe convention)
     val resumeBatch = emb.filter(col("vec_id") < 100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
-    val (nResumed, resumeSec) = time(Similarity.ivfSqIndexAppendAt(resumeBatch, out))
+    val (nResumed, resumeSec) = time(Similarity.annAppendAt(resumeBatch, out))
     require(nResumed == 100,
       s"resume batch collided with existing ids (admitted $nResumed/100)")
     val rowsBefore = probe()
@@ -559,7 +559,7 @@ object AnnProbe {
       Similarity.pcaCaptureAudit(genA, out, trainSample = 65536))
     // drift lands through the STALE rotation — the degradation the
     // quantizer audits cannot see
-    val (_, driftAppendSec) = time(Similarity.pcaIvfPqIndexAppendAt(genB, out))
+    val (_, driftAppendSec) = time(Similarity.annAppendAt(genB, out))
     val grown = genA.unionByName(genB).localCheckpoint()
     val ((s1, f1), auditSec) = time(
       Similarity.pcaCaptureAudit(grown, out, trainSample = 65536))
@@ -568,7 +568,7 @@ object AnnProbe {
     val exact = Similarity.topKCosine(grown, probes, 5).localCheckpoint()
     def refRecall(): Double =
       Similarity.annRecall(exact,
-          Similarity.annPcaIvfPqRefineAt(spark, out, grown, probes, k = 5,
+          Similarity.annRefineAt(spark, out, grown, probes, k = 5,
             rerank = 64), 5)
         .agg(avg(col("recall"))).collect()(0).getDouble(0)
     val (recBefore, _) = time(refRecall())
@@ -581,7 +581,7 @@ object AnnProbe {
     val (recAfter, _) = time(refRecall())
     val resume = genB.limit(100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
-    val (nResumed, resumeSec) = time(Similarity.pcaIvfPqIndexAppendAt(resume, out))
+    val (nResumed, resumeSec) = time(Similarity.annAppendAt(resume, out))
     require(nResumed == 100,
       s"resume batch collided with existing ids (admitted $nResumed/100)")
     graft.plans.CheckpointHygiene.free(genA, genB, grown, probes, exact)
@@ -668,21 +668,21 @@ object AnnProbe {
       val (_, m4Build) = time(Similarity.pcaIvfPqIndexWrite(corpus, pcaM4,
         dim = 64, outDim = 32, m = 4, trainSample = 65536, trainQuantizers = true))
       val fullSec = min2(
-        Similarity.annIvfPqRefineAt(spark, full, corpus, queries, k = 5).count())
+        Similarity.annRefineAt(spark, full, corpus, queries, k = 5).count())
       val pcaSec = min2(
-        Similarity.annPcaIvfPqRefineAt(spark, pca, corpus, queries, k = 5).count())
+        Similarity.annRefineAt(spark, pca, corpus, queries, k = 5).count())
       val m4Sec = min2(
-        Similarity.annPcaIvfPqRefineAt(spark, pcaM4, corpus, queries, k = 5).count())
+        Similarity.annRefineAt(spark, pcaM4, corpus, queries, k = 5).count())
       val exact = Similarity.topKCosine(corpus, queries, 5).localCheckpoint()
       def recall(approx: org.apache.spark.sql.DataFrame): Double =
         Similarity.annRecall(exact, approx, 5)
           .agg(avg(col("recall"))).collect()(0).getDouble(0)
       val fullRec = recall(
-        Similarity.annIvfPqRefineAt(spark, full, corpus, queries, k = 5))
+        Similarity.annRefineAt(spark, full, corpus, queries, k = 5))
       val pcaRec = recall(
-        Similarity.annPcaIvfPqRefineAt(spark, pca, corpus, queries, k = 5))
+        Similarity.annRefineAt(spark, pca, corpus, queries, k = 5))
       val m4Rec = recall(
-        Similarity.annPcaIvfPqRefineAt(spark, pcaM4, corpus, queries, k = 5))
+        Similarity.annRefineAt(spark, pcaM4, corpus, queries, k = 5))
       graft.plans.CheckpointHygiene.free(exact)
       f""""$tag":{"full_bytes":${dirBytes(full)},"pca_bytes":${dirBytes(pca)},"pca_m4_bytes":${dirBytes(pcaM4)},""" +
         f""""full_build_sec":$fullBuild%.2f,"pca_build_sec":$pcaBuild%.2f,"pca_m4_build_sec":$m4Build%.2f,""" +
@@ -753,26 +753,26 @@ object AnnProbe {
       val (_, opqiBuild) = time(Similarity.opqIvfPqIndexWrite(corpus, opqi,
         dim = 64, trainSample = 65536, refineIters = 2))
       val pqSec = min2(
-        Similarity.annIvfPqRefineAt(spark, pq, corpus, queries, k = 5).count())
+        Similarity.annRefineAt(spark, pq, corpus, queries, k = 5).count())
       val opqSec = min2(
-        Similarity.annPcaIvfPqRefineAt(spark, opq, corpus, queries, k = 5).count())
+        Similarity.annRefineAt(spark, opq, corpus, queries, k = 5).count())
       val exact = Similarity.topKDot(corpus, queries, 5).localCheckpoint()
       def recall(approx: org.apache.spark.sql.DataFrame): Double =
         Similarity.annRecall(exact, approx, 5)
           .agg(avg(col("recall"))).collect()(0).getDouble(0)
-      val pqAdc = recall(Similarity.annIvfPqProbeAt(spark, pq, queries, k = 5))
-      val opqAdc = recall(Similarity.annPcaIvfPqProbeAt(spark, opq, queries, k = 5))
-      val opqiAdc = recall(Similarity.annPcaIvfPqProbeAt(spark, opqi, queries, k = 5))
-      val pqRef = recall(Similarity.annIvfPqRefineAt(spark, pq, corpus, queries, k = 5))
-      val opqRef = recall(Similarity.annPcaIvfPqRefineAt(spark, opq, corpus, queries, k = 5))
-      val opqiRef = recall(Similarity.annPcaIvfPqRefineAt(spark, opqi, corpus, queries, k = 5))
+      val pqAdc = recall(Similarity.annProbeAt(spark, pq, queries, k = 5))
+      val opqAdc = recall(Similarity.annProbeAt(spark, opq, queries, k = 5))
+      val opqiAdc = recall(Similarity.annProbeAt(spark, opqi, queries, k = 5))
+      val pqRef = recall(Similarity.annRefineAt(spark, pq, corpus, queries, k = 5))
+      val opqRef = recall(Similarity.annRefineAt(spark, opq, corpus, queries, k = 5))
+      val opqiRef = recall(Similarity.annRefineAt(spark, opqi, corpus, queries, k = 5))
       // all lists probed: the coarse-quantizer recall ceiling removed,
       // so this pair isolates the ENCODING stage the rotation is for
-      val pqRefAll = recall(Similarity.annIvfPqRefineAt(spark, pq, corpus,
+      val pqRefAll = recall(Similarity.annRefineAt(spark, pq, corpus,
         queries, k = 5, nprobe = 16))
-      val opqRefAll = recall(Similarity.annPcaIvfPqRefineAt(spark, opq, corpus,
+      val opqRefAll = recall(Similarity.annRefineAt(spark, opq, corpus,
         queries, k = 5, nprobe = 16))
-      val opqiRefAll = recall(Similarity.annPcaIvfPqRefineAt(spark, opqi, corpus,
+      val opqiRefAll = recall(Similarity.annRefineAt(spark, opqi, corpus,
         queries, k = 5, nprobe = 16))
       graft.plans.CheckpointHygiene.free(exact)
       f""""$tag":{"pq_build_sec":$pqBuild%.2f,"opq_build_sec":$opqBuild%.2f,"opqi_build_sec":$opqiBuild%.2f,""" +

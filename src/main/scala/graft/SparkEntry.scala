@@ -1016,13 +1016,13 @@ object SparkEntry {
 
     // the SQ8 artifact lifecycle inside the gate: ivfSqIndexWrite
     // trains bounds on the indexed corpus and stamps the header;
-    // annIvfSqProbeAt decodes under the header's OWN bounds (the
+    // annProbeAt decodes under the header's OWN bounds (the
     // incremental %3 split of q_ann_probe_incremental)
     "q_ann_sq_probe" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq", dir)
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
-      Similarity.annIvfSqProbeAt(s, path,
+      Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
 
@@ -1036,8 +1036,8 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_append", dir)
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
-      Similarity.ivfSqIndexAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
-      Similarity.annIvfSqProbeAt(s, path, emb.filter(col("vec_id") < 8), k = 5)
+      Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
+      Similarity.annProbeAt(s, path, emb.filter(col("vec_id") < 8), k = 5)
     }),
 
     // the SQ-specific staleness AUDIT oracle-gated: per-dimension
@@ -1048,7 +1048,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_sat", dir)
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
-      Similarity.ivfSqIndexAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
+      Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
       Similarity.ivfSqSaturation(s, path)
     }),
 
@@ -1061,7 +1061,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_sat_inc", dir)
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
-      Similarity.ivfSqIndexAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
+      Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
       Similarity.ivfSqSaturationFromStats(s, path).get
     }),
 
@@ -1229,17 +1229,17 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       // through the PERSISTED path: ivfPqIndexWrite stamps the
       // self-describing header (params + quantizer arrays + content
-      // hash) and annIvfPqProbeAt loads every parameter FROM it — the
+      // hash) and annProbeAt loads every parameter FROM it — the
       // correctness gate covers the full write/validate/probe
       // round-trip, not just the in-memory composition
       val path = runTmp("ann_index", dir)
       Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
-      Similarity.annIvfPqProbeAt(s, path,
+      Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
 
     // search-as-shipped against the PERSISTED artifact: ADC probe from
-    // the header-trusted index (annIvfPqProbeAt, rerank=32 survivors)
+    // the header-trusted index (annProbeAt, rerank=32 survivors)
     // + exact-cosine refine touching prior-corpus vectors ONLY for the
     // survivor ids — the Faiss IndexRefine shape with the index on
     // disk, same incremental split as q_ann_probe_incremental
@@ -1248,7 +1248,7 @@ object SparkEntry {
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("ann_refine", dir)
       Similarity.ivfPqIndexWrite(prior, path, dim = 64)
-      Similarity.annIvfPqRefineAt(s, path, prior,
+      Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 5, rerank = 32)
     }),
@@ -1263,7 +1263,7 @@ object SparkEntry {
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("ann_sq_refine", dir)
       Similarity.ivfSqIndexWrite(prior, path, dim = 64)
-      Similarity.annIvfSqRefineAt(s, path, prior,
+      Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 5, rerank = 32)
     }),
@@ -1279,10 +1279,9 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_filtered", dir)
       Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
-      Similarity.annIvfPqProbeFilteredAt(s, path,
-        emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
-        allowedIds = emb.filter(col("vec_id") % 5 <= 1).select("vec_id"),
-        k = 5)
+      Similarity.annProbeAt(s, path,
+        emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5,
+        allowedIds = Some(emb.filter(col("vec_id") % 5 <= 1).select("vec_id")))
     }),
 
     // DELETION, tombstone-live (the Faiss remove_ids verb): the
@@ -1304,7 +1303,7 @@ object SparkEntry {
       Similarity.annIndexDeleteAt(s, path,
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"))
-      Similarity.annIvfPqProbeAt(s, path,
+      Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
 
@@ -1322,7 +1321,7 @@ object SparkEntry {
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"))
       Similarity.annTombstoneFold(s, path)
-      Similarity.annIvfPqProbeAt(s, path,
+      Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
 
@@ -1341,7 +1340,7 @@ object SparkEntry {
       Similarity.annIndexDeleteAt(s, path,
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"))
-      Similarity.annIvfSqProbeAt(s, path,
+      Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
 
@@ -1357,7 +1356,7 @@ object SparkEntry {
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("ann_mmr", dir)
       Similarity.ivfPqIndexWrite(prior, path, dim = 64)
-      val refined = Similarity.annIvfPqRefineAt(s, path, prior,
+      val refined = Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 32, rerank = 32)
       Similarity.mmrRerank(refined, prior, k = 5)
@@ -2549,7 +2548,7 @@ object SparkEntry {
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"),
         graft.operators.Forget.Targets(annIndexPaths = Seq(path)))
-      Similarity.annIvfPqProbeAt(s, path,
+      Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
 
@@ -2572,7 +2571,7 @@ object SparkEntry {
       graft.operators.Forget.forgetDocuments(s,
         prior.filter(col("vec_id") % 7 === 1).select("vec_id"),
         graft.operators.Forget.Targets(annIndexPaths = Seq(path)))
-      Similarity.annPcaIvfPqRefineAt(s, path, prior,
+      Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 5, nprobe = 16, rerank = 1 << 20)
     }),

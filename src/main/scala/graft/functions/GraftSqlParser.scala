@@ -76,16 +76,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *        over the indexed-history slice of
   *        <dir>/embeddings.parquet; returns (path, n_vectors)
   *   PROBE ANN INDEX '<path>' FROM '<dir>'
-  *     -> annIvfPqProbeAt / annIvfSqProbeAt / annPcaIvfPqProbeAt: new
-  *        query vectors search the persisted header-trusted
-  *        artifact — no USING on the read side, the verb dispatches
-  *        on the artifact's own stored header kind (encoding is an
-  *        artifact property, not a query parameter; a pcarot sidecar
-  *        marks the projected index)
+  *     -> annProbeAt: new query vectors search the persisted
+  *        header-trusted artifact — no USING on the read side, the
+  *        verb dispatches on the artifact's own stored header kind
+  *        (encoding is an artifact property, not a query parameter; a
+  *        pcarot sidecar marks the projected index)
   *   PROBE ANN INDEX '<path>' FROM '<dir>' ALLOWING <predicate>
-  *     -> annIvfPqProbeFilteredAt / annPcaIvfPqProbeFilteredAt
-  *        (header-kind dispatch like PROBE): filtered search — <predicate> is
-  *        ordinary SQL over the embeddings table; its admitted ids
+  *     -> annProbeAt with allowedIds: filtered search — <predicate>
+  *        is ordinary SQL over the embeddings table; its admitted ids
   *        become the allowed set and the k-cut is taken within it
   *   REBUILD ANN INDEX IF NEEDED '<path>' FROM '<dir>'
   *     -> ivfPqRebuildIfNeeded / ivfSqRebuildIfNeeded (header-kind
@@ -420,10 +418,8 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       val emb = graft.sources.TableArmor.embeddings(
         session.read.parquet(s"$dir/embeddings.parquet"))
       val qs = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24)
-      val probed = graft.operators.AnnLifecycle.kindOf(session, path)
-        .getOrElse(graft.operators.AnnLifecycle.IvfPq)
-        .probe(session, path, qs, k = 5)
-      probed.queryExecution.logical
+      graft.operators.Similarity.annProbeAt(session, path, qs, k = 5)
+        .queryExecution.logical
     }
     case ProbeAnnIndexFiltered(path, dir, pred) => wrapGraft(sqlText) {
       // filtered search: top-k among the ids the predicate admits —
@@ -435,18 +431,8 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       val allowed = emb.filter(org.apache.spark.sql.functions.expr(pred))
         .select("vec_id")
       val qs = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24)
-      // like PROBE, the filtered verb dispatches on the stored header
-      // kind — a pcarot artifact projects the queries through its own
-      // rotation (raw queries against projected rows score a different
-      // space silently)
-      val probed =
-        if (graft.operators.AnnLifecycle.kindOf(session, path)
-            .contains(graft.operators.AnnLifecycle.PcaIvfPq))
-          graft.operators.Similarity.annPcaIvfPqProbeFilteredAt(session, path,
-            qs, allowed, k = 5)
-        else graft.operators.Similarity.annIvfPqProbeFilteredAt(session, path,
-          qs, allowed, k = 5)
-      probed.queryExecution.logical
+      graft.operators.Similarity.annProbeAt(session, path, qs, k = 5,
+        allowedIds = Some(allowed)).queryExecution.logical
     }
     case RebuildAnnIndex(path, dir) => wrapGraft(sqlText) {
       // the maintainer one-call: audit the persisted artifact's

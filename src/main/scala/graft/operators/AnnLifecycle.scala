@@ -4,15 +4,29 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The lifecycle of a persisted ANN artifact — IVF-PQ, IVF-SQ8, or
-  * IVF-PQ under a stored pcarot rotation (PCA / OPQ) — written ONCE
-  * over a small per-kind codec. This is the Faiss `index_factory`
-  * split (Douze et al., "The Faiss library", 2024): the codec encodes
-  * and probes, the lifecycle owns the artifact.
+/** The lifecycle of a persisted ANN artifact — IVF-PQ (plain or
+  * residual), IVF-SQ8, or IVF-PQ under a stored pcarot rotation (PCA /
+  * OPQ) — written ONCE over a small per-kind codec. This is the Faiss
+  * `index_factory` split (Douze et al., "The Faiss library", 2024): the
+  * codec encodes and scores, the lifecycle owns the artifact.
   *
   *  - [[kindOf]] is the one answer to "which kind of artifact is at
   *    this path". The SQL verbs, the fold, the delete and
   *    [[Forget]] dispatch on it.
+  *  - [[Kind.open]] reads a kind's headers once and returns its
+  *    [[Codec]]: the header generation, the accepted input dim, the
+  *    encoder, the query projection (identity, or the stored pcarot
+  *    rotation) and the scorer over the artifact scan
+  *    ([[Similarity.annIvfPqProbe]] for the PQ kinds,
+  *    [[Similarity.annIvfSqProbeFrame]] for SQ8). [[open]] resolves the
+  *    kind first.
+  *  - The read and append surface is three verbs over [[open]]:
+  *    [[Similarity.annProbeAt]] (project, then score the
+  *    tombstone-excluded, id-restricted scan), [[Similarity.annRefineAt]]
+  *    (exact refine over that probe) and [[Similarity.annAppendAt]]
+  *    ([[appendAt]]). There is one entry per verb and it always
+  *    projects, so a raw query cannot reach a projected artifact
+  *    unprojected.
   *  - [[writerEntry]] repairs a crashed swap, THEN runs the header
   *    trust check. Every writer verb enters here, so a crash between
   *    a rebuild's two renames is healed before any header is read
@@ -22,10 +36,12 @@ import org.apache.spark.sql.functions._
   *    write, post-write generation backstop.
   *  - [[rebuild]] is the verify, recall-gate, carry and swap skeleton.
   *    A verb supplies only its retrain + write-to-tmp ([[Retrain]]);
-  *    the [[Kind]] supplies the recall ground truth and the probe.
+  *    the [[Kind]] supplies the recall ground truth, and the gate
+  *    probes through [[Similarity.annProbeAt]].
   *
-  * The public verbs in [[Similarity]] keep their names and signatures
-  * and delegate here.
+  * The builders (`*IndexWrite`), the rebuild and audit verbs stay per
+  * encoding in [[Similarity]] (their parameter sets differ) and
+  * delegate here.
   */
 private[graft] object AnnLifecycle {
 
@@ -34,19 +50,12 @@ private[graft] object AnnLifecycle {
     * retrains and re-encodes it.
     */
   sealed abstract class Kind(val idCol: String, val rebuildVerb: String) {
-    /** The header-trusted probe of this kind at `path` (the PCA probe
-      * projects raw queries through the stored rotation).
+    /** Read this kind's headers at `path` once and return its codec;
+      * a missing or damaged header refuses, naming `what`.
       */
-    def probe(spark: SparkSession, path: String, q: DataFrame, k: Int,
-              nprobe: Int = 4, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = this match {
-      case IvfPq => Similarity.annIvfPqProbeAt(spark, path, q, k, nprobe, idCol, vecCol)
-      case IvfSq => Similarity.annIvfSqProbeAt(spark, path, q, k, nprobe, idCol, vecCol)
-      case PcaIvfPq =>
-        Similarity.annPcaIvfPqProbeAt(spark, path, q, k, nprobe, idCol, vecCol)
-    }
+    def open(spark: SparkSession, path: String, what: String): Codec
 
-    /** The exact ranking the recall gate grades [[probe]] against. ADC
+    /** The exact ranking the recall gate grades the probe against. ADC
       * approximates the inner product, so the PQ kinds gate on exact
       * MIPS ([[Similarity.topKDot]]; for PCA over the RAW space, so the
       * gate spans projection loss too); SQ8 decode-dot scores are
@@ -58,10 +67,44 @@ private[graft] object AnnLifecycle {
       if (this == IvfSq) Similarity.topKCosine(corpus, q, k, idCol, vecCol)
       else Similarity.topKDot(corpus, q, k, idCol, vecCol)
   }
-  case object IvfPq extends Kind("vec_id", "ivfPqRebuild")
-  case object IvfSq extends Kind("neighbor_id", "ivfSqRebuild")
-  /** IVF-PQ over vectors projected through a stored pcarot rotation. */
-  case object PcaIvfPq extends Kind("vec_id", "pcaIvfPqRebuild")
+  case object IvfPq extends Kind("vec_id", "ivfPqRebuild") {
+    def open(spark: SparkSession, path: String, what: String): Codec = {
+      val h = Similarity.ivfPqRequireHeader(spark, path, what)
+      val (cents, cbs) = (Some(h.centroids), Some(h.codebooks))
+      Codec(this, h.paramsHash, h.dim,
+        encode = Similarity.ivfPqIndex(_, h.dim, h.lists, h.m, h.codes, _, _, cents, cbs,
+          h.residual),
+        score = (scan, q, k, nprobe, idCol, vecCol) =>
+          Similarity.annIvfPqProbe(scan, q, k, h.dim, h.lists, nprobe, h.m, h.codes,
+            idCol, vecCol, cents, cbs, h.residual))
+    }
+  }
+  case object IvfSq extends Kind("neighbor_id", "ivfSqRebuild") {
+    def open(spark: SparkSession, path: String, what: String): Codec = {
+      val h = Similarity.sqRequireHeader(spark, path, what)
+      Codec(this, h.paramsHash, h.dim,
+        encode = Similarity.ivfSqIndex(_, h.dim, h.lists, _, _, Some(h.cents),
+          Some((h.vmin, h.vmax))),
+        score = Similarity.annIvfSqProbeFrame(_, _, _, _, h.cents, h.vmin, h.vmax, _, _),
+        afterAppend = Similarity.sqStatsAccumulate(spark, path, _, h.dim))
+    }
+  }
+  /** IVF-PQ over vectors projected through a stored pcarot rotation:
+    * the IVF-PQ codec behind the rotation — raw vectors and queries
+    * project first, the ivfpq header generation stays the token.
+    */
+  case object PcaIvfPq extends Kind("vec_id", "pcaIvfPqRebuild") {
+    def open(spark: SparkSession, path: String, what: String): Codec = {
+      val pq = IvfPq.open(spark, path, what)
+      val rot = Similarity.pcaRotationAt(spark, path, what)
+      require(rot.length == pq.inputDim,
+        s"$what: the pcarot rotation at $path projects to ${rot.length} dims but " +
+          s"the ivfpq header encodes dim=${pq.inputDim}")
+      val project = Similarity.pcaProject(_: DataFrame, rot, _: String, _: String)
+      pq.copy(kind = this, inputDim = rot.head.length, project = project,
+        encode = (v, i, c) => pq.encode(project(v, i, c), i, c))
+    }
+  }
 
   /** Whether the artifact carries a pcarot rotation — its rows are
     * then PROJECTED vectors.
@@ -86,21 +129,16 @@ private[graft] object AnnLifecycle {
     */
   def requireKind(spark: SparkSession, path: String, what: String): Kind =
     kindOf(spark, path).getOrElse(throw new IllegalArgumentException(
-      s"$what: no ivfpq/ivfsq header at $path — not a stamped ANN artifact"))
+      s"$what: no ivfpq/ivfsq header at $path — not a stamped ANN artifact, so " +
+        "nothing verifies which quantizers built it. Write it with ivfPqIndexWrite, " +
+        "ivfSqIndexWrite or pcaIvfPqIndexWrite (which stamp one), or stamp a " +
+        "legacy IVF-PQ artifact with ivfPqWriteHeader"))
 
-  /** Refuse a plain probe/gate entry on a PCA-composed artifact — its
-    * rows are PROJECTED vectors, and a full-rank rotation (outDim ==
-    * dim) sails through every dim guard while scoring raw queries in
-    * the rotated basis (silent wrong neighbors). The pcarot sidecar's
-    * PRESENCE is the signal; `instead` names the entry that projects.
+  /** The codec of the stamped artifact at `path`: [[requireKind]],
+    * then that kind's [[Kind.open]].
     */
-  def requireNotPca(spark: SparkSession, path: String, what: String,
-                    instead: String): Unit =
-    require(!hasRotation(spark, path),
-      s"$what: the artifact at $path carries a pcarot rotation — it holds " +
-        "PROJECTED vectors, and this entry would score the queries without " +
-        s"projecting them (wrong neighbors silently, even at full rank); use " +
-        s"$instead, which projects raw queries through the stored basis")
+  def open(spark: SparkSession, path: String, what: String): Codec =
+    requireKind(spark, path, what).open(spark, path, what)
 
   /** The one writer entry: repair a crashed rebuild/fold swap at
     * `path` (a no-op without crash evidence), THEN run the header
@@ -112,14 +150,20 @@ private[graft] object AnnLifecycle {
     trust
   }
 
-  /** One header generation of an artifact, as the append sees it:
-    * `generation` is the header's content hash (the backstop token),
-    * `inputDim` the dim of the vectors the verb accepts, `encode` maps
-    * them to stored rows, and `afterAppend` updates derived sidecars
-    * from the admitted rows (the SQ8 rail-count stats).
+  /** One header generation of an artifact: `generation` is the
+    * header's content hash (the append backstop token), `inputDim` the
+    * dim of the raw vectors and queries the verbs accept, `encode`
+    * maps raw `(frame, idCol, vecCol)` to stored rows, `project` maps
+    * raw queries into the stored space (identity unless a rotation is
+    * stored), `score` ranks `(scan, projected queries, k, nprobe,
+    * idCol, vecCol)` over the artifact rows, and `afterAppend` updates
+    * derived sidecars from the admitted rows (the SQ8 rail-count
+    * stats).
     */
   final case class Codec(kind: Kind, generation: String, inputDim: Int,
                          encode: (DataFrame, String, String) => DataFrame,
+                         score: (DataFrame, DataFrame, Int, Int, String, String) => DataFrame,
+                         project: (DataFrame, String, String) => DataFrame = (q, _, _) => q,
                          afterAppend: DataFrame => Unit = _ => ())
 
   /** Content-addressed admission: encode only the rows of `newVectors`
@@ -149,24 +193,24 @@ private[graft] object AnnLifecycle {
     } finally graft.plans.CheckpointHygiene.free(fresh)
   }
 
-  /** The header-driven append shared by every kind: writer entry,
-    * dim guard, tombstone admission check, [[admit]], then the
-    * post-write generation backstop — `open` is re-read AFTER the
-    * write and a changed header hash refuses LOUDLY (a concurrent
+  /** The header-driven append shared by every kind: writer entry +
+    * [[open]], dim guard, tombstone admission check, [[admit]], then
+    * the post-write generation backstop — the codec is re-opened AFTER
+    * the write and a changed header hash refuses LOUDLY (a concurrent
     * rebuild swapped generations underneath, so the artifact now holds
     * mixed codes). The backstop runs BEFORE `afterAppend`, so a new
     * generation's freshly rebuilt sidecars are never overwritten with
     * counts from the doomed batch.
     */
   def appendAt(newVectors: DataFrame, indexPath: String, idCol: String,
-               vecCol: String, what: String)(open: => Codec): Long = {
+               vecCol: String, what: String): Long = {
     val spark = newVectors.sparkSession
-    val c = writerEntry(spark, indexPath)(open)
+    val c = writerEntry(spark, indexPath)(open(spark, indexPath, what))
     Similarity.requireCorpusDim(newVectors, c.inputDim, indexPath, vecCol, what)
     Similarity.requireNoTombstoneHit(newVectors, spark, indexPath, idCol, what)
     admit(newVectors, indexPath, idCol, c.kind.idCol)(c.encode(_, idCol, vecCol)) {
       (fresh, n) =>
-        val after = open.generation
+        val after = open(spark, indexPath, what).generation
         if (after != c.generation)
           sys.error(s"$what: the artifact at $indexPath was re-stamped " +
             s"MID-APPEND (header ${c.generation} -> $after): a concurrent " +
@@ -262,7 +306,7 @@ private[graft] object AnnLifecycle {
         val exact = kind.truth(corpus, q, k, idCol, vecCol).localCheckpoint()
         def meanRecall(path: String): Double =
           Similarity.annRecall(exact,
-              kind.probe(spark, path, q, k, nprobe, idCol, vecCol), k)
+              Similarity.annProbeAt(spark, path, q, k, nprobe, idCol, vecCol), k)
             .agg(avg(col("recall"))).collect()(0).getDouble(0)
         val before = meanRecall(indexPath)
         val after = meanRecall(tmp.toString)

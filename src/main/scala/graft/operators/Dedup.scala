@@ -352,7 +352,7 @@ object Dedup {
     * through its header: every index-binding parameter (shingleN,
     * bands, rows, bucketCap) comes FROM the artifact, so a probe
     * cannot drift from the build — the
-    * [[graft.operators.Similarity.annIvfPqProbeAt]] convention for the
+    * [[graft.operators.Similarity.annProbeAt]] convention for the
     * near-dup family. `threshold` stays a query-time knob (it binds
     * the verify, not the stored keys). A missing PATH means no prior
     * corpus yet (the bootstrap batch of an incremental ingest) and

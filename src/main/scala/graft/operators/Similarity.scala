@@ -709,31 +709,14 @@ object Similarity {
         col("neighbor_id"), round(col("score"), 6).as("score"))
   }
 
-  /** Nearest-centroid assignment UDF shared by [[annIvf]],
-    * [[semanticDedup]], and the streaming index maintainer
-    * ([[graft.streaming.StreamingIvf]]): argmax over `lists` of
-    * (v . c_i - ||c_i||^2/2) — exact L2 argmin — with ties to the
-    * smaller list id.
+  /** Nearest-centroid assignment UDF shared by [[semanticDedup]],
+    * [[hardNegatives]] and the streaming index maintainer
+    * ([[graft.streaming.StreamingIvf]]) over the salted centroids:
+    * [[ivfNearestFn]], exact L2 argmin with ties to the smaller list
+    * id, refusing a ragged row.
     */
-  def ivfAssignUdf(dim: Int, lists: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val cents: Array[Array[Double]] = Array.tabulate(lists)(c => ivfCentroidSql(c, dim))
-    val normHalf: Array[Double] = cents.map(c => 0.5 * c.foldLeft(0.0)((a, x) => a + x * x))
-    udf { (v: Seq[Float]) =>
-      val arr = v.toArray
-      var best = 0; var bestS = Double.NegativeInfinity
-      var c = 0
-      while (c < lists) {
-        val cent = cents(c)
-        var dotv = 0.0
-        var i = 0
-        while (i < arr.length) { dotv += arr(i).toDouble * cent(i); i += 1 }
-        val s = dotv - normHalf(c)
-        if (s > bestS) { bestS = s; best = c }
-        c += 1
-      }
-      best
-    }
-  }
+  def ivfAssignUdf(dim: Int, lists: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf(ivfNearestFn(Array.tabulate(lists)(c => ivfCentroidSql(c, dim))))
 
   /** IVF (inverted-file) approximate nearest neighbors — the classic
     * coarse-quantize-then-probe scale path, complementing the sign-LSH
@@ -765,28 +748,8 @@ object Similarity {
     val cents: Array[Array[Double]] =
       centroids.getOrElse(Array.tabulate(lists)(c => ivfCentroidSql(c, dim)))
     require(cents.length == lists, s"centroids.length ${cents.length} != lists $lists")
-    val normHalf: Array[Double] = cents.map(c => 0.5 * c.foldLeft(0.0)((a, x) => a + x * x))
-    val nLists = lists
-    val nProbe = nprobe
-    def listScores(v: Seq[Float]): Array[Double] = {
-      val arr = v.toArray
-      Array.tabulate(nLists) { c =>
-        val cent = cents(c)
-        var dotv = 0.0
-        var i = 0
-        while (i < arr.length) { dotv += arr(i).toDouble * cent(i); i += 1 }
-        dotv - normHalf(c)
-      }
-    }
-    val assign = udf { (v: Seq[Float]) =>
-      val s = listScores(v)
-      var best = 0; var c = 1
-      while (c < s.length) { if (s(c) > s(best)) best = c; c += 1 } // tie -> smaller c
-      best
-    }
-    val probe = udf { (v: Seq[Float]) =>
-      listScores(v).zipWithIndex.sortBy { case (s, c) => (-s, c) }.take(nProbe).map(_._2).toSeq
-    }
+    val assign = udf(ivfNearestFn(cents))
+    val probe = udf(ivfProbeListsFn(cents, nprobe))
 
     val base = Par.spread(embeddings)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
@@ -1177,7 +1140,8 @@ object Similarity {
       codebooks, residual = residual)
 
   /** Per-vector IVF list scores (dot - ||c||^2/2 per centroid), the
-    * shared kernel of assignment (argmax) and probing (top-nprobe).
+    * shared kernel of assignment ([[ivfNearestFn]]) and probing
+    * ([[ivfProbeListsFn]]).
     */
   private def ivfListScoresFn(cents: Array[Array[Double]]): Seq[Float] => Array[Double] = {
     val normHalf: Array[Double] = cents.map(c => 0.5 * c.foldLeft(0.0)((a, x) => a + x * x))
@@ -1196,6 +1160,30 @@ object Similarity {
         dotv - normHalf(c)
       }
     }
+  }
+
+  /** The nearest list of a vector: argmax of its [[ivfListScoresFn]]
+    * scores, ties to the smaller list id — THE assignment kernel of
+    * every IVF build, append and residual, so an artifact's stored
+    * `list_id` and a probe's list choice cannot disagree.
+    */
+  private def ivfNearestFn(cents: Array[Array[Double]]): Seq[Float] => Int = {
+    val listScores = ivfListScoresFn(cents)
+    (v: Seq[Float]) => {
+      val s = listScores(v)
+      var best = 0; var c = 1
+      while (c < s.length) { if (s(c) > s(best)) best = c; c += 1 } // tie -> smaller c
+      best
+    }
+  }
+
+  /** The `nprobe` nearest lists of a query vector, nearest first, ties
+    * to the smaller list id — the probe kernel of every IVF search.
+    */
+  private def ivfProbeListsFn(cents: Array[Array[Double]], nprobe: Int): Seq[Float] => Seq[Int] = {
+    val listScores = ivfListScoresFn(cents)
+    (v: Seq[Float]) =>
+      listScores(v).zipWithIndex.sortBy { case (s, c) => (-s, c) }.take(nprobe).map(_._2).toSeq
   }
 
   /** The PERSISTED IVF-PQ index artifact — `(vec_id, list_id, codes)`,
@@ -1222,16 +1210,9 @@ object Similarity {
                  residual: Boolean = false): DataFrame = {
     val (cents, cbs) = ivfPqResolve(dim, lists, m, codes, centroids, codebooks)
     val subDim = dim / m
-    val listScores = ivfListScoresFn(cents)
-    val assign = udf { (v: Seq[Float]) =>
-      val s = listScores(v)
-      var best = 0; var c = 1
-      while (c < s.length) { if (s(c) > s(best)) best = c; c += 1 } // tie -> smaller c
-      best
-    }
     val assigned = Par.spread(embeddings)
       .select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-      .withColumn("list_id", assign(col("v")))
+      .withColumn("list_id", udf(ivfNearestFn(cents)).apply(col("v")))
     val coded =
       if (residual)
         assigned.withColumn("codes",
@@ -1299,12 +1280,9 @@ object Similarity {
     */
   private[graft] def residualFloatFrame(corpus: DataFrame, cents: Array[Array[Double]],
                                         idCol: String, vecCol: String): DataFrame = {
-    val listScores = ivfListScoresFn(cents)
+    val nearest = ivfNearestFn(cents)
     val resid = udf { (v: Seq[Float]) =>
-      val s = listScores(v)
-      var best = 0; var c = 1
-      while (c < s.length) { if (s(c) > s(best)) best = c; c += 1 }
-      val cent = cents(best)
+      val cent = cents(nearest(v))
       val out = new Array[Float](v.length)
       var i = 0
       while (i < out.length) { out(i) = (v(i).toDouble - cent(i)).toFloat; i += 1 }
@@ -1319,51 +1297,12 @@ object Similarity {
     * [[ivfPqResolve]] convention applied to the trust checks): an
     * entry that cannot verify the quantizers would guess.
     */
-  private def ivfPqRequireHeader(spark: org.apache.spark.sql.SparkSession,
-                                 indexPath: String, what: String): IvfPqHeader =
+  private[operators] def ivfPqRequireHeader(spark: org.apache.spark.sql.SparkSession,
+                                           indexPath: String, what: String): IvfPqHeader =
     ivfPqReadHeader(spark, indexPath).getOrElse(throw new IllegalArgumentException(
       s"$what: no IVF-PQ header at $indexPath: cannot verify which quantizers built " +
         "this artifact. Write it with ivfPqIndexWrite / pcaIvfPqIndexWrite (which " +
         "stamp one), or stamp it explicitly with ivfPqWriteHeader."))
-
-  /** [[ivfPqIndexAppend]] with every parameter taken FROM the
-    * artifact's own header — the appender a maintained index needs
-    * AFTER [[ivfPqRebuild]] swaps retrained quantizers under it: the
-    * caller-passed-arrays form would keep encoding with the stale
-    * arrays it was configured with and refuse at the header seam;
-    * this one ADOPTS whatever quantizer generation currently owns the
-    * artifact (exactly like [[annIvfPqProbeAt]] on the read side), so
-    * ingest resumes across rebuilds with zero re-configuration.
-    * Refuses headerless artifacts with guidance — an append whose
-    * parameters cannot be verified would silently mix quantizer
-    * generations.
-    *
-    * CONCURRENCY CONTRACT: append and rebuild must be serialized by
-    * the maintenance loop that owns the artifact (the same
-    * single-writer window every job here has — ArtifactCompaction,
-    * DeltaLogCompaction). A rebuild that swaps MID-append could
-    * otherwise land old-generation codes under the new header; as a
-    * backstop this appender re-reads the header AFTER its write and
-    * refuses LOUDLY if the generation changed underneath it — the
-    * artifact then holds mixed codes and the recovery is to re-run
-    * ivfPqRebuild (which re-encodes everything).
-    */
-  def ivfPqIndexAppendAt(newVectors: DataFrame, indexPath: String,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Long =
-    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "ivfPqIndexAppendAt")(
-      ivfPqCodec(newVectors.sparkSession, indexPath, "ivfPqIndexAppendAt"))
-
-  /** The IVF-PQ append codec of the header generation at `indexPath`:
-    * every parameter from the artifact's own header.
-    */
-  private def ivfPqCodec(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                         what: String): AnnLifecycle.Codec = {
-    val hdr = ivfPqRequireHeader(spark, indexPath, what)
-    AnnLifecycle.Codec(AnnLifecycle.IvfPq, hdr.paramsHash, hdr.dim,
-      ivfPqIndex(_, hdr.dim, hdr.lists, hdr.m, hdr.codes, _, _,
-        Some(hdr.centroids), Some(hdr.codebooks), hdr.residual))
-  }
 
   /** Shared default-resolution + shape validation of the IVF-PQ build
     * parameters — the single place the salted fallbacks are chosen, so
@@ -1564,122 +1503,107 @@ object Similarity {
     spark.read.parquet(indexPath).count()
   }
 
-  /** [[annIvfPqProbe]] against a PERSISTED artifact, trusted through
-    * its header: every shape param and both quantizer arrays come FROM
-    * the artifact itself, so a probe cannot drift from the build. A
-    * caller passing explicit `centroids`/`codebooks` (e.g. the learned
-    * arrays it trained) is hash-validated against the header and
-    * refused loudly on mismatch — today's silent-wrong-neighbors
-    * failure becomes an error message. Headerless artifacts refuse
-    * with guidance (stamp via [[ivfPqWriteHeader]], or probe the
-    * DataFrame form directly if the quantizers are known-correct).
-    */
-  def annIvfPqProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                      queries: DataFrame, k: Int, nprobe: Int = 4,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      centroids: Option[Array[Array[Double]]] = None,
-                      codebooks: Option[Array[Array[Array[Double]]]] = None,
-                      allowedIds: Option[DataFrame] = None): DataFrame = {
-    // the dim guard below cannot catch a FULL-RANK rotation (outDim ==
-    // dim) — the pcarot presence check can, so every public non-PCA
-    // entry refuses here and the PCA wrappers go through the trusted
-    // internal after projecting
-    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqProbeAt", "annPcaIvfPqProbeAt")
-    ivfPqProbeAtTrusted(spark, indexPath, queries, k, nprobe, idCol, vecCol,
-      centroids, codebooks, allowedIds)
-  }
-
-  /** The probe body behind [[annIvfPqProbeAt]], reachable only from
-    * callers that already resolved the projection question (the PCA
-    * wrappers project first; the plain public entry refuses pcarot
-    * artifacts outright).
-    */
-  private def ivfPqProbeAtTrusted(spark: org.apache.spark.sql.SparkSession,
-                                  indexPath: String,
-                                  queries: DataFrame, k: Int, nprobe: Int,
-                                  idCol: String, vecCol: String,
-                                  centroids: Option[Array[Array[Double]]],
-                                  codebooks: Option[Array[Array[Array[Double]]]],
-                                  allowedIds: Option[DataFrame]): DataFrame = {
-    val hdr = ivfPqRequireHeader(spark, indexPath, "annIvfPqProbeAt")
-    (centroids, codebooks) match {
-      case (None, None) => () // everything from the header — nothing to mismatch
-      case _ =>
-        ivfPqRequireMatch(hdr, hdr.dim, hdr.lists, hdr.m, hdr.codes,
-          centroids.getOrElse(hdr.centroids), codebooks.getOrElse(hdr.codebooks),
-          indexPath, residual = hdr.residual)
-    }
-    // a dim-mismatched query frame (raw queries against a PCA-
-    // projected artifact) would silently LUT the first hdr.dim
-    // coordinates — refuse like the rebuild path does
-    requireCorpusDim(queries, hdr.dim, indexPath, vecCol, "annIvfPqProbeAt")
-    // tombstoned ids are excluded at the artifact scan, BEFORE the
-    // rank cut — a deleted row must neither surface nor displace a
-    // live neighbor out of the top-k
-    annIvfPqProbe(
-      tombstoneExclude(spark.read.parquet(indexPath),
-        tombstonesOf(spark, indexPath), "vec_id"),
-      queries, k, hdr.dim, hdr.lists,
-      nprobe, hdr.m, hdr.codes, idCol, vecCol,
-      Some(hdr.centroids), Some(hdr.codebooks), allowedIds = allowedIds,
-      residual = hdr.residual)
-  }
-
-  /** Filtered ANN search against the persisted artifact — top-k by
-    * ADC among the vectors in `allowedIds` ONLY (metadata-filtered
-    * vector search: "nearest neighbors among docs where lang = 'en'").
-    * The filter restricts candidates BEFORE ranking, so every result
-    * is allowed and the k-cut is taken within the allowed set; a
-    * post-filter of the unfiltered top-k would under-fill exactly
-    * when the filter is selective. Pair with the id column of any
-    * predicate over a metadata table (`docs.filter(...).select("id")`).
+  /** Search a PERSISTED ANN artifact of any kind — IVF-PQ (plain or
+    * residual), IVF-SQ8, or IVF-PQ under a stored pcarot rotation (PCA
+    * or OPQ) — trusted through its own headers. The artifact's stored
+    * kind opens its codec ([[AnnLifecycle.open]]): every shape param
+    * and quantizer array comes FROM the artifact, raw queries project
+    * through the stored rotation when there is one (a raw query can
+    * never score a projected artifact unprojected), and the kind's
+    * scorer ranks [[annScan]]'s rows — [[annIvfPqProbe]]'s exact BIGINT
+    * ADC (`score_e6`) for the PQ kinds, SQ8 decode-dot cosine
+    * (`score`) for IVF-SQ8. Headerless paths refuse with guidance.
     *
-    * 100 TB posture: candidates are `allowed INTERSECT probed lists`,
-    * so the nprobe/lists scan bound still holds and a selective
-    * filter only SHRINKS the ADC join (small sets push down to the
-    * artifact scan as an id predicate; large ones semi-join). The
-    * escape hatch this does not take: at extreme selectivity
-    * (|allowed| comparable to k x |queries|) skip the index and
-    * brute-force the fetched full-precision vectors — that variant
-    * changes result semantics (exact vs ADC ordering), so it is the
-    * caller's explicit choice via [[topKCosine]] over the filtered
-    * corpus, not a silent switch.
+    * `allowedIds` is filtered search ("nearest neighbors among docs
+    * where lang = 'en'"): its first column is the id, and the
+    * restriction applies BEFORE the rank cut, so every result is
+    * allowed and the k-cut is taken within the allowed set — a
+    * post-filter of the unfiltered top-k would under-fill exactly when
+    * the filter is selective. Candidates are `allowed INTERSECT probed
+    * lists`, so the nprobe/lists scan bound still holds. At extreme
+    * selectivity the caller's explicit alternative is [[topKCosine]]
+    * over the filtered corpus (exact vs approximate ordering is a
+    * semantic choice, not a silent switch).
     */
-  def annIvfPqProbeFilteredAt(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, queries: DataFrame,
-                              allowedIds: DataFrame, k: Int, nprobe: Int = 4,
-                              idCol: String = "vec_id",
-                              vecCol: String = "embedding"): DataFrame = {
-    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqProbeFilteredAt",
-      "annPcaIvfPqProbeFilteredAt")
-    annIvfPqProbeAt(spark, indexPath, queries, k, nprobe, idCol, vecCol,
-      allowedIds = Some(allowedIds))
+  def annProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                 queries: DataFrame, k: Int, nprobe: Int = 4,
+                 idCol: String = "vec_id", vecCol: String = "embedding",
+                 allowedIds: Option[DataFrame] = None): DataFrame = {
+    val c = AnnLifecycle.open(spark, indexPath, "annProbeAt")
+    // a dim-mismatched query frame would silently score a slice (or a
+    // different space) — refuse like the rebuild path does
+    requireCorpusDim(queries, c.inputDim, indexPath, vecCol, "annProbeAt")
+    c.score(annScan(spark, indexPath, c.kind.idCol, allowedIds),
+      c.project(queries, idCol, vecCol), k, nprobe, idCol, vecCol)
   }
 
-  /** [[annIvfPqRefineAt]] under a metadata filter: filtered ADC keeps
-    * `rerank` allowed survivors per query, exact cosine re-ranks and
-    * cuts to k — full-precision vectors touched only for
-    * queries x allowed survivors.
+  /** [[annProbeAt]] with the exact-refine stage search-as-shipped needs
+    * (Faiss's IndexRefine): the probe keeps `rerank` candidates per
+    * query, [[refineExact]] re-scores them with TRUE cosine over the
+    * full-precision `corpus` (in the ORIGINAL space — for a projected
+    * artifact the refine undoes the projection loss too) and cuts to
+    * k. The corpus is touched only for queries x survivors, fetched by
+    * a broadcast of the candidate ids, never shuffled or re-encoded.
     */
-  def annIvfPqRefineFilteredAt(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String, corpus: DataFrame,
-                               queries: DataFrame, allowedIds: DataFrame,
-                               k: Int, nprobe: Int = 4, rerank: Int = 32,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame = {
-    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqRefineFilteredAt",
-      "annPcaIvfPqRefineFilteredAt")
+  def annRefineAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                  corpus: DataFrame, queries: DataFrame, k: Int,
+                  nprobe: Int = 4, rerank: Int = 32,
+                  idCol: String = "vec_id", vecCol: String = "embedding",
+                  allowedIds: Option[DataFrame] = None): DataFrame =
     refineExact(corpus,
-      annIvfPqProbeAt(spark, indexPath, queries, k = rerank, nprobe, idCol,
-        vecCol, allowedIds = Some(allowedIds)),
+      annProbeAt(spark, indexPath, queries, rerank, nprobe, idCol, vecCol, allowedIds),
       queries, k, idCol, vecCol)
+
+  /** Header-driven append-only growth of a persisted ANN artifact of
+    * any kind ([[AnnLifecycle.appendAt]] over the kind's codec): every
+    * parameter comes FROM the artifact's own header, so ingest adopts
+    * whatever quantizer generation a rebuild installed with zero
+    * re-configuration; raw vectors project through a stored rotation
+    * (the basis is never retrained per batch — basis drift is a
+    * rebuild decision). Admission is content-addressed by id
+    * (re-sending a batch is idempotent), history is never re-encoded,
+    * a tombstoned id refuses, and the post-write backstop refuses
+    * LOUDLY if a concurrent rebuild swapped generations mid-append.
+    * SQ8 values outside the stored bounds CLAMP to rail codes 0/255
+    * ([[ivfSqSaturation]] notices, [[ivfSqRebuildIfNeeded]] heals).
+    * Returns the number of admitted vectors.
+    *
+    * CONCURRENCY CONTRACT: appends and rebuilds are serialized by the
+    * maintenance loop that owns the artifact (the single-writer window
+    * of ArtifactCompaction and DeltaLogCompaction); the backstop is the
+    * net, and its recovery is the kind's rebuild verb.
+    */
+  def annAppendAt(newVectors: DataFrame, indexPath: String,
+                  idCol: String = "vec_id", vecCol: String = "embedding"): Long =
+    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "annAppendAt")
+
+  /** The artifact rows a probe may rank — one path for every kind: the
+    * stored rows minus the live tombstones (excluded at the scan,
+    * BEFORE the rank cut, so a deleted row neither surfaces nor
+    * displaces a live neighbor out of the top-k), restricted to
+    * `allowedIds` when given. Small id sets push down as a scan
+    * predicate (row-group stats prune), larger ones semi-join
+    * ([[AnnFilterPushdownMax]]).
+    */
+  private def annScan(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                      storedIdCol: String, allowedIds: Option[DataFrame]): DataFrame = {
+    val live = tombstoneExclude(spark.read.parquet(indexPath),
+      tombstonesOf(spark, indexPath), storedIdCol)
+    allowedIds match {
+      case None => live
+      case Some(a) =>
+        val idsDf = a.select(col(a.columns.head).as(storedIdCol)).distinct()
+        val ids = idsDf.limit(AnnFilterPushdownMax + 1).collect().map(_.get(0))
+        if (ids.length <= AnnFilterPushdownMax) live.filter(col(storedIdCol).isin(ids: _*))
+        else live.join(idsDf, Seq(storedIdCol), "left_semi")
+    }
   }
 
   /** The retrain trigger a periodic index maintainer polls: true when
     * any list of the PERSISTED artifact at `indexPath` exceeds
     * `rebuildPm` thousandths of the uniform share. `lists` comes from
     * the artifact's own header — the audit needs no caller-remembered
-    * parameters at all, exactly like [[annIvfPqProbeAt]]. One
+    * parameters at all, exactly like [[annProbeAt]]. One
     * lists-row aggregate over the (vec_id, list_id) columns; corpus
     * vectors are never touched.
     */
@@ -1755,12 +1679,16 @@ object Similarity {
         idCol, vecCol) {
       val spark = corpus.sparkSession
       val hdr = ivfPqRequireHeader(spark, indexPath, "ivfPqRebuild")
-      // the gate probes via the plain entry, which refuses pcarot
-      // artifacts — refuse HERE, before the expensive retrain, with the
-      // composed verb named (its gate probes through each generation's
-      // own rotation)
+      // the gate would grade a rotation-less rewrite against the live
+      // artifact's projecting probe — refuse HERE, before the expensive
+      // retrain, with the composed verb named (its gate probes through
+      // each generation's own rotation)
       if (recallQueries.isDefined)
-        AnnLifecycle.requireNotPca(spark, indexPath, "ivfPqRebuild", "pcaIvfPqRebuild")
+        require(!AnnLifecycle.hasRotation(spark, indexPath),
+          s"ivfPqRebuild: the artifact at $indexPath carries a pcarot rotation, " +
+            "and this rebuild's rewrite would not — its recall gate would grade " +
+            "two different spaces; use pcaIvfPqRebuild, which retrains the " +
+            "rotation and gates each generation through its own basis")
       AnnLifecycle.Retrain(hdr.dim, { tmp =>
         // retrain on the NEW corpus — the whole point of the rebuild.
         // seedFromData defaults ON here (unlike the bulk trainers): a
@@ -1950,38 +1878,15 @@ object Similarity {
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     centroids: Option[Array[Array[Double]]] = None,
                     codebooks: Option[Array[Array[Array[Double]]]] = None,
-                    allowedIds: Option[DataFrame] = None,
                     residual: Boolean = false): DataFrame = {
     require(Seq("vec_id", "list_id", "codes").forall(index.columns.contains),
       s"index must be an ivfPqIndex artifact (vec_id, list_id, codes); got ${index.columns.mkString(", ")}")
     val (cents, cbs) = ivfPqResolve(dim, lists, m, codes, centroids, codebooks)
     val subDim = dim / m
-    val listScores = ivfListScoresFn(cents)
-    val nProbe = nprobe
-    val probe = udf { (v: Seq[Float]) =>
-      listScores(v).zipWithIndex.sortBy { case (s, c) => (-s, c) }.take(nProbe).map(_._2).toSeq
-    }
+    val probe = udf(ivfProbeListsFn(cents, nprobe))
     val lut = pqLutUdf(cbs, subDim)
     val adc = pqAdcUdf(m, codes)
-    val base0 = index.select(col("vec_id").as("neighbor_id"), col("list_id"), col("codes"))
-    // filtered search (the Faiss IDSelector shape): restrict the
-    // CANDIDATE set before ADC ranking, so the result is top-k AMONG
-    // allowed — not a post-filter of the unfiltered top-k, which
-    // silently drops allowed neighbors past the unfiltered cut. The
-    // restriction composes with the coarse bound (candidates =
-    // allowed INTERSECT probed lists): small id sets push down as a
-    // scan predicate on the artifact (row-group stats prune), larger
-    // ones fall back to a semi-join (broadcast when the filter frame
-    // is small enough). First column of `allowedIds` is the id.
-    val base = allowedIds match {
-      case None => base0
-      case Some(a) =>
-        val idsDf = a.select(col(a.columns.head).as("neighbor_id")).distinct()
-        val ids = idsDf.limit(AnnFilterPushdownMax + 1).collect().map(_.get(0))
-        if (ids.length <= AnnFilterPushdownMax)
-          base0.filter(col("neighbor_id").isin(ids: _*))
-        else base0.join(idsDf, Seq("neighbor_id"), "left_semi")
-    }
+    val base = index.select(col("vec_id").as("neighbor_id"), col("list_id"), col("codes"))
     // residual ADC: q . x ~ q . c_list + q . r_hat — the coarse term
     // is exact per (query, probed list) and rides the broadcast query
     // frame (one extra BIGINT per probed list, never per candidate)
@@ -2023,33 +1928,13 @@ object Similarity {
         m, codes, idCol, vecCol),
       queries, k, idCol, vecCol)
 
-  /** [[annIvfPqRefine]] against a PERSISTED artifact, trusted through
-    * its header — the production probe-with-refine: the ADC stage is
-    * [[annIvfPqProbeAt]] (every shape param and both quantizer arrays
-    * FROM the artifact, nprobe/lists of 4-byte codes scanned), and
-    * full-precision `corpus` vectors are touched ONLY for the
-    * queries x rerank ADC survivors, fetched by a broadcast of the
-    * candidate id list — the corpus is never shuffled and never
-    * re-encoded. This closes the last inline-only gap in the IVF-PQ
-    * family: search-as-shipped (Faiss IndexRefine) now runs entirely
-    * off the stored index plus a survivor-bounded vector fetch.
-    */
-  def annIvfPqRefineAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                       corpus: DataFrame, queries: DataFrame, k: Int,
-                       nprobe: Int = 4, rerank: Int = 32,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    AnnLifecycle.requireNotPca(spark, indexPath, "annIvfPqRefineAt", "annPcaIvfPqRefineAt")
-    refineExact(corpus,
-      annIvfPqProbeAt(spark, indexPath, queries, k = rerank, nprobe, idCol, vecCol),
-      queries, k, idCol, vecCol)
-  }
-
   /** The exact-refine kernel shared by the inline and artifact paths
     * (Faiss's IndexRefine): re-score the ADC survivors with TRUE
     * cosine, cut to k. `adcTop` carries (query_id, neighbor_id).
     */
-  private def refineExact(corpus: DataFrame, adcTop: DataFrame, queries: DataFrame,
-                          k: Int, idCol: String, vecCol: String): DataFrame = {
+  private[operators] def refineExact(corpus: DataFrame, adcTop: DataFrame,
+                                     queries: DataFrame, k: Int, idCol: String,
+                                     vecCol: String): DataFrame = {
     val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
       .withColumn("nn", norm(col("nv")))
     val qs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
@@ -2074,7 +1959,7 @@ object Similarity {
     * the SemDeDup/cluster-balanced sampling already in this file.
     *
     * `candidates` is any (query_id, neighbor_id, score) frame — in
-    * practice [[annIvfPqRefineAt]]'s output at k = rerank, so the
+    * practice [[annRefineAt]]'s output at k = rerank, so the
     * relevance scores are exact cosine. All selection arithmetic is
     * e6 fixed-point BIGINT (scores and pairwise sims rounded to 6
     * digits then scaled), so the greedy choice is bit-reproducible
@@ -2325,24 +2210,21 @@ object Similarity {
     }
 
   /** The probe kernel shared by the inline ([[annIvfSq]]) and artifact
-    * ([[annIvfSqProbeAt]]) paths so they cannot drift: queries pick
+    * ([[annProbeAt]]) paths so they cannot drift: queries pick
     * their `nprobe` nearest coarse lists, candidates equi-join on
     * `list_id` (per-query work is |corpus| * nprobe / lists — vectors
     * never pairwise-join outside probed lists), scores decode-dot the
     * stored codes. Queries broadcast (they carry the only float
     * vectors in the join); the coded base side never shuffles.
     */
-  private def annIvfSqProbeFrame(index: DataFrame, queries: DataFrame, k: Int,
-                                 nprobe: Int, cents: Array[Array[Double]],
-                                 vmin: Array[Double], vmax: Array[Double],
-                                 idCol: String): DataFrame = {
-    val listScores = ivfListScoresFn(cents)
-    val nProbe = nprobe
-    val probe = udf { (v: Seq[Float]) =>
-      listScores(v).zipWithIndex.sortBy { case (s, c) => (-s, c) }.take(nProbe).map(_._2).toSeq
-    }
+  private[operators] def annIvfSqProbeFrame(index: DataFrame, queries: DataFrame,
+                                            k: Int, nprobe: Int,
+                                            cents: Array[Array[Double]],
+                                            vmin: Array[Double], vmax: Array[Double],
+                                            idCol: String, vecCol: String): DataFrame = {
+    val probe = udf(ivfProbeListsFn(cents, nprobe))
     val score = sqAdcCosineUdf(vmin, vmax)
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col("qv"))
+    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("list_id", explode(probe(col("qv")))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
     index.join(q, Seq("list_id"))
@@ -2368,16 +2250,9 @@ object Similarity {
     val (vmin, vmax) = bounds.getOrElse(sqTrainBounds(embeddings, dim, idCol, vecCol))
     require(vmin.length == dim && vmax.length == dim,
       s"bounds dim ${vmin.length}/${vmax.length} != $dim")
-    val listScores = ivfListScoresFn(cents)
-    val assign = udf { (v: Seq[Float]) =>
-      val s = listScores(v)
-      var best = 0; var c = 1
-      while (c < s.length) { if (s(c) > s(best)) best = c; c += 1 }
-      best
-    }
     Par.spread(embeddings)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
-      .select(col("neighbor_id"), assign(col("v")).as("list_id"),
+      .select(col("neighbor_id"), udf(ivfNearestFn(cents)).apply(col("v")).as("list_id"),
         sqEncodeUdf(vmin, vmax)(col("v")).as("codes"))
   }
 
@@ -2399,8 +2274,7 @@ object Similarity {
       sqTrainBounds(embeddings, dim, idCol, vecCol, trainSample, trainFraction))
     val index = ivfSqIndex(embeddings, dim, lists, idCol, vecCol,
       Some(cents), Some((vmin, vmax)))
-    val q = queries.select(col(idCol).as(idCol), col(vecCol).as("qv"))
-    annIvfSqProbeFrame(index, q, k, nprobe, cents, vmin, vmax, idCol)
+    annIvfSqProbeFrame(index, queries, k, nprobe, cents, vmin, vmax, idCol, vecCol)
   }
 
   private def sqHeaderParams(dim: Int, lists: Int, cents: Array[Array[Double]],
@@ -2444,31 +2318,12 @@ object Similarity {
     stats.headOption.map(_._1).getOrElse(0L)
   }
 
-  /** Probe a persisted IVF-SQ8 artifact, trusted through its header:
-    * centroids and bounds come FROM the artifact itself (a probe
-    * cannot drift from the build). Headerless artifacts refuse with
-    * guidance — stored codes decoded under guessed bounds are silently
-    * wrong neighbors, the exact failure the header exists to prevent.
-    */
-  def annIvfSqProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                      queries: DataFrame, k: Int, nprobe: Int = 4,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val hdr = sqRequireHeader(spark, indexPath, "annIvfSqProbeAt")
-    requireCorpusDim(queries, hdr.dim, indexPath, vecCol, "annIvfSqProbeAt")
-    // same deletion contract as the PQ probe: tombstoned ids leave the
-    // candidate set at the scan, before the rank cut
-    val index = tombstoneExclude(spark.read.parquet(indexPath),
-      tombstonesOf(spark, indexPath), "neighbor_id")
-    val q = queries.select(col(idCol).as(idCol), col(vecCol).as("qv"))
-    annIvfSqProbeFrame(index, q, k, nprobe, hdr.cents, hdr.vmin, hdr.vmax, idCol)
-  }
-
   /** Parsed ivfsq header plus its content hash — the generation token
-    * [[ivfSqIndexAppendAt]] compares across its own write (a rebuild
+    * [[annAppendAt]] compares across its own write (a rebuild
     * swapped in mid-append means the artifact now mixes codes from two
     * bounds generations).
     */
-  private final case class IvfSqHeader(dim: Int, lists: Int,
+  private[operators] final case class IvfSqHeader(dim: Int, lists: Int,
                                        cents: Array[Array[Double]],
                                        vmin: Array[Double], vmax: Array[Double],
                                        paramsHash: String)
@@ -2479,8 +2334,8 @@ object Similarity {
     * silently wrong neighbors, so headerless artifacts refuse with
     * guidance instead.
     */
-  private def sqRequireHeader(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, what: String): IvfSqHeader = {
+  private[operators] def sqRequireHeader(spark: org.apache.spark.sql.SparkSession,
+                                         indexPath: String, what: String): IvfSqHeader = {
     val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "ivfsq").getOrElse(
       sys.error(s"$what: no ivfsq header at $indexPath — stored codes " +
         "cannot be decoded without the exact bounds they were encoded under; " +
@@ -2493,59 +2348,6 @@ object Similarity {
       s"$what: header arrays at $indexPath disagree with dim=$dim")
     IvfSqHeader(dim, kv("lists").toInt, cents, vmin, vmax,
       graft.sources.ArtifactHeader.paramsHash("ivfsq", kv.toSeq))
-  }
-
-  /** [[annIvfSqProbeAt]] + exact-cosine refine — the SQ8 artifact's
-    * search-as-shipped posture, sharing [[refineExact]] with the
-    * IVF-PQ paths so the re-rank semantics cannot drift between
-    * encodings: decode-dot over the stored uint8 codes ranks `rerank`
-    * candidates per query, then full-precision vectors are touched
-    * only for queries x survivors (the Faiss IndexRefine shape — at
-    * 100 TB the exact stage reads `|queries| * rerank` vectors via a
-    * broadcast id fetch, never the corpus).
-    */
-  def annIvfSqRefineAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                       corpus: DataFrame, queries: DataFrame, k: Int,
-                       nprobe: Int = 4, rerank: Int = 32,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    refineExact(corpus,
-      annIvfSqProbeAt(spark, indexPath, queries, k = rerank, nprobe, idCol, vecCol),
-      queries, k, idCol, vecCol)
-
-  /** Header-driven append-only growth of a persisted SQ8 artifact —
-    * [[ivfPqIndexAppendAt]]'s contract for the scalar encoding: every
-    * parameter (centroids, bounds) comes FROM the artifact's own
-    * header, admission is content-addressed by id (re-sending a batch
-    * is idempotent), history is never re-encoded, and the post-write
-    * backstop re-reads the header and refuses LOUDLY if a concurrent
-    * rebuild swapped bounds generations mid-append (mixed-generation
-    * codes decode to wrong neighbors silently — the one failure this
-    * family never allows).
-    *
-    * The SQ-specific caveat is CLAMPING, not refusal: new values
-    * outside the stored bounds encode to rail codes 0/255 (spec-held
-    * on the write path), losing resolution exactly where the data
-    * drifted — [[ivfSqSaturation]] is the audit that notices, and
-    * [[ivfSqRebuildIfNeeded]] the maintenance verb that heals it.
-    */
-  def ivfSqIndexAppendAt(newVectors: DataFrame, indexPath: String,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Long = {
-    val spark = newVectors.sparkSession
-    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "ivfSqIndexAppendAt") {
-      val hdr = sqRequireHeader(spark, indexPath, "ivfSqIndexAppendAt")
-      AnnLifecycle.Codec(AnnLifecycle.IvfSq, hdr.paramsHash, hdr.dim,
-        ivfSqIndex(_, hdr.dim, hdr.lists, _, _, Some(hdr.cents), Some((hdr.vmin, hdr.vmax))),
-        // accumulate the admitted rows' rail counts into the stats
-        // sidecar (the fresh frame is already checkpointed — one cheap
-        // aggregate instead of the audit's full-artifact scan later);
-        // a legacy stats-less artifact stays stats-less (scan fallback)
-        fresh => sqStatsRead(spark, indexPath).foreach { prior =>
-          sqStatsWrite(spark, indexPath, prior.zip(sqStatsArray(fresh, hdr.dim)).map {
-            case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z)
-          })
-        })
-    }
   }
 
   /** Bounds-saturation audit of a persisted SQ8 artifact — the
@@ -2616,6 +2418,20 @@ object Similarity {
       "n_codes" -> stats.map(_._1).mkString(","),
       "n_lo" -> stats.map(_._2).mkString(","),
       "n_hi" -> stats.map(_._3).mkString(",")))
+
+  /** Accumulate an append's admitted rows' rail counts into the stats
+    * sidecar (the fresh frame is already checkpointed — one cheap
+    * aggregate instead of the audit's full-artifact scan later); a
+    * legacy stats-less artifact stays stats-less (scan fallback).
+    */
+  private[operators] def sqStatsAccumulate(spark: org.apache.spark.sql.SparkSession,
+                                           indexPath: String, fresh: DataFrame,
+                                           dim: Int): Unit =
+    sqStatsRead(spark, indexPath).foreach { prior =>
+      sqStatsWrite(spark, indexPath, prior.zip(sqStatsArray(fresh, dim)).map {
+        case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z)
+      })
+    }
 
   private def sqStatsRead(spark: org.apache.spark.sql.SparkSession,
                           indexPath: String): Option[Array[(Long, Long, Long)]] =
@@ -3313,97 +3129,6 @@ object Similarity {
     n
   }
 
-  /** Probe the composed artifact: the stored rotation projects the
-    * RAW queries into index space, then the header-trusted IVF-PQ
-    * probe runs as usual. A missing pcarot sidecar refuses — probing
-    * a PCA index with unprojected queries scores garbage silently.
-    */
-  def annPcaIvfPqProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                         queries: DataFrame, k: Int, nprobe: Int = 4,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame =
-    pcaProbeAt(spark, indexPath, queries, k, nprobe, idCol, vecCol, None,
-      "annPcaIvfPqProbeAt")
-
-  /** The projecting probe behind every PCA entry: raw queries through
-    * the stored rotation, then the header-trusted IVF-PQ probe.
-    */
-  private def pcaProbeAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                         queries: DataFrame, k: Int, nprobe: Int, idCol: String,
-                         vecCol: String, allowedIds: Option[DataFrame],
-                         what: String): DataFrame =
-    ivfPqProbeAtTrusted(spark, indexPath,
-      pcaProject(queries, pcaRotationAt(spark, indexPath, what), idCol, vecCol),
-      k, nprobe, idCol, vecCol, None, None, allowedIds)
-
-  /** Filtered search against the composed PCA artifact — the
-    * [[annIvfPqProbeFilteredAt]] semantics (top-k WITHIN the allowed
-    * set, pre-rank-cut restriction, pushdown-vs-semi-join crossover)
-    * with the stored rotation projecting the raw queries first. The
-    * allowed-id frame needs no projection: ids live outside the
-    * vector space.
-    */
-  def annPcaIvfPqProbeFilteredAt(spark: org.apache.spark.sql.SparkSession,
-                                 indexPath: String, queries: DataFrame,
-                                 allowedIds: DataFrame, k: Int, nprobe: Int = 4,
-                                 idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): DataFrame =
-    pcaProbeAt(spark, indexPath, queries, k, nprobe, idCol, vecCol, Some(allowedIds),
-      "annPcaIvfPqProbeFilteredAt")
-
-  /** [[annPcaIvfPqRefineAt]] under a metadata filter: filtered ADC in
-    * PCA space keeps `rerank` allowed survivors, exact cosine in the
-    * ORIGINAL space re-ranks and cuts to k.
-    */
-  def annPcaIvfPqRefineFilteredAt(spark: org.apache.spark.sql.SparkSession,
-                                  indexPath: String, corpus: DataFrame,
-                                  queries: DataFrame, allowedIds: DataFrame,
-                                  k: Int, nprobe: Int = 4, rerank: Int = 32,
-                                  idCol: String = "vec_id",
-                                  vecCol: String = "embedding"): DataFrame =
-    refineExact(corpus,
-      annPcaIvfPqProbeFilteredAt(spark, indexPath, queries, allowedIds,
-        k = rerank, nprobe, idCol, vecCol),
-      queries, k, idCol, vecCol)
-
-  /** Search-as-shipped for the composed artifact: ADC candidates in
-    * PCA space, exact-cosine refine in the ORIGINAL space (rerank
-    * survivors fetch full-precision raw vectors — the Faiss
-    * refine-after-pretransform shape, where the refine undoes both
-    * the quantization AND the projection loss).
-    */
-  def annPcaIvfPqRefineAt(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                          corpus: DataFrame, queries: DataFrame, k: Int,
-                          nprobe: Int = 4, rerank: Int = 32,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame =
-    refineExact(corpus,
-      pcaProbeAt(spark, indexPath, queries, rerank, nprobe, idCol, vecCol, None,
-        "annPcaIvfPqRefineAt"),
-      queries, k, idCol, vecCol)
-
-  /** Header-driven append for the composed PCA artifact: RAW vectors
-    * project through the STORED rotation, then encode under the
-    * artifact's IVF-PQ header through the shared header-driven append
-    * ([[AnnLifecycle.appendAt]]: idempotent admission, generation
-    * backstop). The rotation is deliberately NOT retrained per batch —
-    * an index has one projection basis; drift in the basis itself is
-    * a rebuild decision (fresh [[pcaIvfPqIndexWrite]]), not an append
-    * side effect. A raw append bypassing this wrapper refuses on the
-    * ivfpq dim guard instead of silently slicing.
-    */
-  def pcaIvfPqIndexAppendAt(newVectors: DataFrame, indexPath: String,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): Long = {
-    val spark = newVectors.sparkSession
-    AnnLifecycle.appendAt(newVectors, indexPath, idCol, vecCol, "pcaIvfPqIndexAppendAt") {
-      val rot = pcaRotationAt(spark, indexPath, "pcaIvfPqIndexAppendAt")
-      val pq = ivfPqCodec(spark, indexPath, "pcaIvfPqIndexAppendAt")
-      pq.copy(kind = AnnLifecycle.PcaIvfPq, inputDim = rot.head.length,
-        encode = (v, i, c) => pq.encode(pcaProject(v, rot, i, c), i, c))
-    }
-  }
-
   /** The stored rotation of a composed PCA artifact — the read-path
     * accessor every consumer (probe, refine, projected-corpus rebuild)
     * trusts instead of retraining.
@@ -3536,7 +3261,7 @@ object Similarity {
     * live artifact — including its old rotation — untouched.
     *
     * From the swap on, a stale appender still projecting through the
-    * old rotation refuses at [[ivfPqIndexAppendAt]]'s generation
+    * old rotation refuses at [[annAppendAt]]'s generation
     * backstop (the quantizer arrays changed with the basis), exactly
     * like any cross-generation append.
     */
@@ -3681,8 +3406,8 @@ object Similarity {
     * rotated vectors, stamp the rotation as the pcarot sidecar with
     * `method=opq_p`. Every pcarot consumer then just works: probe and
     * refine project queries through the stored rotation
-    * ([[annPcaIvfPqProbeAt]]/[[annPcaIvfPqRefineAt]]), the appender
-    * rotates new batches ([[pcaIvfPqIndexAppendAt]]), and the
+    * ([[annProbeAt]]/[[annRefineAt]]), the appender rotates new
+    * batches ([[annAppendAt]]), and the
     * full-stack rebuild re-learns rotation + allocation + quantizers
     * ([[pcaIvfPqRebuild]] is method-aware). The capture baseline is
     * 1000 by construction (full rank discards nothing) — this

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * lived in scaladoc backstops:
   *
   *  - rebuild vs append: [[graft.operators.Similarity.ivfPqRebuild]]'s
-  *    swap must not race a concurrent `ivfPqIndexAppendAt` (the
+  *    swap must not race a concurrent `annAppendAt` (the
   *    post-write generation backstop turns that race into a loud
   *    failure, but a maintainer should make it impossible, not
   *    survivable);

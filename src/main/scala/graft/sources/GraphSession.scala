@@ -147,16 +147,18 @@ final class GraphSession[A] private (
     *     [[DependencyNotFound]];
     *  3. collision audit (OP-3): a local row with an imported hash but a
     *     different cmd, arg or deps throws [[HashCollision]];
-    *  4. new events are appended to the events table;
-    *  5. the frontier union is compressed; `nstates` is updated and
+    *  4. the frontier union's closure over local + imported events must
+    *     have a row for every hash — a local state naming an event the
+    *     store does not hold throws [[DependencyNotFound]];
+    *  5. new events are appended to the events table;
+    *  6. the frontier union is compressed; `nstates` is updated and
     *     persisted.
     *
     * When both events tables fit the [[GraphSession.DriverBound]], each
-    * is read once and steps 1-3 and 5 run on the held rows; the driver
-    * regime also refuses a local closure with a missing dependency
-    * (step 5) before the append. Past the bound, every step is a frames
-    * plan (executor-side validation, [[GraphOps.closure]], joins) and
-    * neither event table is materialized on the driver.
+    * is read once and steps 1-4 and 6 run on the held rows. Past the
+    * bound, every step is a frames plan (executor-side validation,
+    * [[GraphOps.closure]], joins) and neither event table is
+    * materialized on the driver.
     *
     * Engine-level re-shelving of divergent events (the reference's
     * workcache `try_merge`) is the [[editingGraph]] + [[WorkCache]]
@@ -177,7 +179,7 @@ final class GraphSession[A] private (
     minimized
   }
 
-  /** [[mergeFrom]] steps 1-5 over one collect of each events table. */
+  /** [[mergeFrom]] steps 1-6 over one collect of each events table. */
   private def mergeOnDriver(foreignPath: String, fst: SortedSet[String],
                             union: SortedSet[String]): SortedSet[String] = {
     val foreign = GraphStore.readEvents(spark, s"$foreignPath/events")
@@ -200,7 +202,7 @@ final class GraphSession[A] private (
     union.filterNot(reach)
   }
 
-  /** [[mergeFrom]] steps 1-5 as frames plans. */
+  /** [[mergeFrom]] steps 1-6 as frames plans. */
   private def mergeFrames(foreignPath: String, fst: SortedSet[String],
                           union: SortedSet[String]): SortedSet[String] = {
     val foreign = spark.read.schema(GraphStore.eventsSchema).parquet(s"$foreignPath/events")
@@ -220,6 +222,12 @@ final class GraphSession[A] private (
         array_sort(map_entries(col("f.deps"))) =!= array_sort(map_entries(col("l.deps"))))
       .select("hash").limit(1).collect()
     if (collision.nonEmpty) throw new HashCollision(collision.head.getString(0))
+
+    // the edge view cannot tell a missing event from a root, so the
+    // union's closure is checked against the rows it will have
+    val merged = events.unionByName(imports)
+    requireFound(GraphOps.closure(seedsDF(union), edgesOf(merged))
+      .withColumnRenamed("id", "hash"), merged)
 
     imports.join(events.select("hash"), Seq("hash"), "left_anti")
       .select("hash", "cmd", "arg", "deps")
@@ -340,12 +348,14 @@ object GraphSession {
     ids.iterator.filterNot(rows.contains).minOption.foreach(h => throw new DependencyNotFound(h))
 
   /** Refuse a dependency closure `need` (column `hash`) with a hash
-    * that `found` has no event for — the edge view counts such a hash
-    * in the closure but no row backs it.
+    * (the least, as [[requireRows]] reports) that `found` has no event
+    * for — the edge view counts such a hash in the closure but no row
+    * backs it.
     */
   private def requireFound(need: DataFrame, found: DataFrame): Unit =
-    need.join(found.select("hash"), Seq("hash"), "left_anti").limit(1).collect()
-      .headOption.foreach(r => throw new DependencyNotFound(r.getString(0)))
+    Option(need.join(found.select("hash"), Seq("hash"), "left_anti")
+        .agg(min(col("hash"))).collect()(0).getString(0))
+      .foreach(h => throw new DependencyNotFound(h))
 
   private def edgesOf(ev: DataFrame): DataFrame =
     ev.select(col("hash").as("id"), explode(map_keys(col("deps"))).as("dep"))

@@ -50,7 +50,7 @@ object StreamingAnnProbe {
 
   /** [[probeStream]] trusted through the artifact's round-12 header:
     * every shape param and both quantizer arrays come FROM the index
-    * ([[Similarity.annIvfPqProbeAt]] per micro-batch), so a stream
+    * ([[Similarity.annProbeAt]] per micro-batch), so a stream
     * probing a header-stamped artifact cannot drift from its build —
     * and keeps answering correctly across an
     * [[graft.operators.Similarity.ivfPqIndexAppend]] growth or an
@@ -64,7 +64,7 @@ object StreamingAnnProbe {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          sink(Similarity.annIvfPqProbeAt(batch.sparkSession, indexPath, batch,
+          sink(Similarity.annProbeAt(batch.sparkSession, indexPath, batch,
             k, nprobe))
       }
       .start()

@@ -81,7 +81,7 @@ object StreamingCms {
   /** Point-frequency estimates straight from the PERSISTED delta log,
     * trusted through its header: (d, w) come FROM the artifact, so an
     * estimate cannot run under a foreign hash shape — the
-    * [[graft.operators.Similarity.annIvfPqProbeAt]] convention for
+    * [[graft.operators.Similarity.annProbeAt]] convention for
     * the sketch family.
     */
   def estimateFrom(spark: SparkSession, cmsPath: String,

@@ -24,10 +24,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * artifact-side `ivfPqNeedsRebuild`) decides, and
   * [[Similarity.ivfPqRebuildIfNeeded]] retrains/re-encodes/swaps with
   * the header re-stamped, after which ingest resumes through the
-  * header-driven `ivfPqIndexAppendAt` (SQ8 artifacts run the same
-  * loop through `ivfSqNeedsRebuild`/`ivfSqRebuildIfNeeded`/
-  * `ivfSqIndexAppendAt`, with bounds saturation as the added
-  * staleness signal). Streaming only maintains
+  * header-driven `annAppendAt` (SQ8 artifacts run the same loop
+  * through `ivfSqNeedsRebuild`/`ivfSqRebuildIfNeeded`, with bounds
+  * saturation as the added staleness signal). Streaming only maintains
   * membership — the standard split for production vector indexes.
   */
 object StreamingIvf {

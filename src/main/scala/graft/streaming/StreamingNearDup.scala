@@ -151,7 +151,7 @@ object StreamingNearDup {
       graft.sources.ArtifactHeader.validateOrStamp(spark, indexPath, "bands",
         bandParams(shingleN, bands, rows, bucketCap))
     }
-    // the deletion contract — the shared ivfPqIndexAppendAt refusal,
+    // the deletion contract — the shared annAppendAt refusal,
     // with this family's own fold verb named
     graft.operators.Similarity.requireNoTombstoneHit(newBands, spark, indexPath,
       "doc_id", "appendToIndex", foldVerb = "neardupTombstoneFold")

@@ -153,7 +153,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val appender = new Thread(() => {
       try chunks.foreach { c =>
         maint.withAccess {
-          assert(Similarity.ivfPqIndexAppendAt(
+          assert(Similarity.annAppendAt(
             c.toDF("vec_id", "embedding"), dir) == c.size.toLong)
           appended.add(c)
         }
@@ -175,7 +175,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val idx = spark.read.parquet(dir)
     assert(idx.count() == 320L)
     assert(idx.select("vec_id").distinct().count() == 320L)
-    assert(Similarity.annIvfPqProbeAt(spark, dir,
+    assert(Similarity.annProbeAt(spark, dir,
       day2.take(4).toDF("vec_id", "embedding"), k = 3).count() > 0)
   }
 
@@ -266,7 +266,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val drift = (1000 until 1256).map { i =>
       (i.toLong, Seq.fill(8)((0.85 + rnd.nextDouble() * 0.1).toFloat))
     }
-    Similarity.ivfPqIndexAppendAt(drift.toDF("vec_id", "embedding"), dir)
+    Similarity.annAppendAt(drift.toDF("vec_id", "embedding"), dir)
     corpusRows = base ++ drift
     val rep = maint.maintainIfDue(Seq(check))
     assert(rep.isDefined, "drifted index did not trip the audit")
@@ -295,7 +295,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     // due probe must trip on SATURATION (and say so), not balance
     val drift = (1000 until 1064).map(i =>
       (i.toLong, Seq.fill(8)((1.5 + rnd.nextDouble()).toFloat)))
-    Similarity.ivfSqIndexAppendAt(drift.toDF("vec_id", "embedding"), dir)
+    Similarity.annAppendAt(drift.toDF("vec_id", "embedding"), dir)
     corpusRows = base ++ drift
     val due = check.check()
     assert(due.exists(_.contains("saturation")), s"due reason: $due")

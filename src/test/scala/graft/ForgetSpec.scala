@@ -69,7 +69,7 @@ class ForgetSpec extends AnyFunSuite with SharedSpark {
   private def annNeighbors(fx: Fx): Set[Long] = {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    Similarity.annIvfPqProbeAt(spark, fx.annPath,
+    Similarity.annProbeAt(spark, fx.annPath,
       emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
       .select(col("neighbor_id").cast("long"))
       .collect().map(_.getLong(0)).toSet
@@ -712,7 +712,7 @@ class ForgetSpec extends AnyFunSuite with SharedSpark {
       s"pcarot sidecar lost or stripped: ${rot.map(_.keySet)}")
     // the projecting probe (stored-rotation projection + header-trusted
     // ADC) surfaces ONLY surviving neighbors
-    val res = Similarity.annPcaIvfPqProbeAt(spark, path,
+    val res = Similarity.annProbeAt(spark, path,
       emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
       .select("neighbor_id").collect().map(_.getLong(0))
     assert(res.nonEmpty && res.toSet.intersect(victims).isEmpty,

@@ -197,7 +197,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     def tmpIdx(p: String) = new java.io.File(
       java.nio.file.Files.createTempDirectory(p).toFile, "idx").getPath
-    // BUILD + PROBE == ivfPqIndexWrite + annIvfPqProbeAt
+    // BUILD + PROBE == ivfPqIndexWrite + annProbeAt
     val p1 = tmpIdx("sql_ann")
     val built = spark.sql(s"BUILD ANN INDEX FROM '$sf' AT '$p1'").collect().head
     assert(built.getString(0) == p1 && built.getLong(1) > 0)
@@ -207,7 +207,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     val emb = graft.sources.TableArmor.embeddings(
       spark.read.parquet(s"$sf/embeddings.parquet"))
     Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), p2, dim = 64)
-    val viaApi = Similarity.annIvfPqProbeAt(spark, p2,
+    val viaApi = Similarity.annProbeAt(spark, p2,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
       .collect().map(_.toString).sorted
     assert(viaSql.nonEmpty && viaSql.sameElements(viaApi))
@@ -308,7 +308,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
       .collect().map(_.toString).sorted
     val p2 = tmpIdx("sql_ann_sq_twin")
     Similarity.ivfSqIndexWrite(prior, p2, dim = 64)
-    val sqApi = Similarity.annIvfSqProbeAt(spark, p2, qs, k = 5)
+    val sqApi = Similarity.annProbeAt(spark, p2, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(sqSql.nonEmpty && sqSql.sameElements(sqApi))
 
@@ -320,7 +320,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
       .collect().map(_.toString).sorted
     val p4 = tmpIdx("sql_ann_res_twin")
     Similarity.ivfPqIndexWrite(prior, p4, dim = 64, residual = true)
-    val resApi = Similarity.annIvfPqProbeAt(spark, p4, qs, k = 5)
+    val resApi = Similarity.annProbeAt(spark, p4, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(resSql.nonEmpty && resSql.sameElements(resApi))
 
@@ -332,7 +332,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
       .exists(_.get("method").contains("opq_p")))
     val opqSql = spark.sql(s"PROBE ANN INDEX '$p5' FROM '$sf'")
       .collect().map(_.toString).sorted
-    val opqApi = Similarity.annPcaIvfPqProbeAt(spark, p5, qs, k = 5)
+    val opqApi = Similarity.annProbeAt(spark, p5, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(opqSql.nonEmpty && opqSql.sameElements(opqApi))
 
@@ -373,7 +373,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
       .collect().map(_.toString).sorted
     val p2 = tmpIdx("sql_ann_pca_twin")
     Similarity.pcaIvfPqIndexWrite(prior, p2, dim = 64, outDim = 32)
-    val viaApi = Similarity.annPcaIvfPqProbeAt(spark, p2, qs, k = 5)
+    val viaApi = Similarity.annProbeAt(spark, p2, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(viaSql.nonEmpty && viaSql.sameElements(viaApi))
 
@@ -410,9 +410,9 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
       .collect().map(_.toString).sorted
     val emb = graft.sources.TableArmor.embeddings(
       spark.read.parquet(s"$sf/embeddings.parquet"))
-    val viaApi = Similarity.annIvfPqProbeFilteredAt(spark, p1,
-        emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
-        emb.filter(col("vec_id") % 5 <= 1).select("vec_id"), k = 5)
+    val viaApi = Similarity.annProbeAt(spark, p1,
+        emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5,
+        allowedIds = Some(emb.filter(col("vec_id") % 5 <= 1).select("vec_id")))
       .collect().map(_.toString).sorted
     assert(viaSql.nonEmpty && viaSql.sameElements(viaApi))
     // the filter is load-bearing: the allowed set changes the frame

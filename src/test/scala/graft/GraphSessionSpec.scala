@@ -318,15 +318,18 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     graft.plans.CheckpointHygiene.releaseAll(spark)
   }
 
-  test("driver regime: a local closure with a missing dependency is refused before the append") {
-    val dir = java.nio.file.Files.createTempDirectory("graftsesslocal").toString
-    // the dangling store is the local side here; the foreign one is whole
-    val absent = danglingFixture(s"$dir/swap")
-    genStore(s"$dir/foreign", 4L, 8L, 3)
-    val s = GraphSession.open(spark, ByteEngine, s"$dir/swap/foreign", Driver)
-    val before = files(s"$dir/swap/foreign")
-    assert(intercept[DependencyNotFound](s.mergeFrom(s"$dir/foreign")).h === absent)
-    assert(files(s"$dir/swap/foreign") === before)
+  test("both regimes: a local closure with a missing dependency is refused before the append") {
+    Seq("driver" -> Driver, "frames" -> Frames).foreach { case (name, bound) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graftsesslocal-$name").toString
+      // the dangling store is the local side here; the foreign one is whole
+      val absent = danglingFixture(s"$dir/swap")
+      genStore(s"$dir/foreign", 4L, 8L, 3)
+      val s = GraphSession.open(spark, ByteEngine, s"$dir/swap/foreign", bound)
+      val before = files(s"$dir/swap/foreign")
+      assert(intercept[DependencyNotFound](s.mergeFrom(s"$dir/foreign")).h === absent, name)
+      assert(files(s"$dir/swap/foreign") === before, name)
+    }
+    graft.plans.CheckpointHygiene.releaseAll(spark)
   }
 
   test("driver regime: editingGraph sees an append another session made after mergeFrom") {

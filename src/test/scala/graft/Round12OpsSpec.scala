@@ -31,7 +31,7 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     assert(hdr.centroids.length == 16 && hdr.codebooks.length == 8)
     // every param and both quantizer arrays come FROM the artifact:
     // the probe takes no dim/lists/m/codes at all
-    val fromHeader = rows(Similarity.annIvfPqProbeAt(spark, dir, q, k = 5))
+    val fromHeader = rows(Similarity.annProbeAt(spark, dir, q, k = 5))
     val inline = rows(Similarity.annIvfPq(emb, q, k = 5, dim = 64))
     assert(fromHeader == inline && inline.nonEmpty)
     // the header round-trips the arrays bit-exactly (raw-bit hex, no
@@ -47,32 +47,35 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     .select(col("vec_id"), col("list_id"), col("codes").cast("string"))
     .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
 
-  test("a wrong-quantizer probe refuses loudly instead of returning wrong neighbors") {
+  test("a wrong-quantizer append refuses loudly; the probe takes every quantizer from the header") {
     val dir = tmp("ann_mismatch")
     Similarity.ivfPqIndexWrite(emb, dir, dim = 64) // salted defaults
     val q = emb.filter(col("vec_id") < 8)
-    // learned codebooks are NOT the ones the artifact stored codes for
+    // the probe has no quantizer parameters at all — nothing a caller
+    // passes can disagree with the stored codes
+    assert(rows(Similarity.annProbeAt(spark, dir, q, k = 5)) ==
+      rows(Similarity.annIvfPq(emb, q, k = 5, dim = 64)))
+    // learned codebooks are NOT the ones the artifact stored codes for:
+    // an append encoding under them refuses before touching the data
     val learned = Similarity.pqLearnedCodebooks(emb, dim = 64, iters = 1)
     val ex = intercept[IllegalArgumentException] {
-      Similarity.annIvfPqProbeAt(spark, dir, q, k = 5, codebooks = Some(learned))
+      Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
+        codebooks = Some(learned))
     }
     assert(ex.getMessage.contains("different quantizers"), ex.getMessage)
     // mismatched centroids refuse the same way
     val wrongCents = Array.tabulate(16)(c => Similarity.ivfCentroidSql(c + 1, 64))
     val ex2 = intercept[IllegalArgumentException] {
-      Similarity.annIvfPqProbeAt(spark, dir, q, k = 5, centroids = Some(wrongCents))
+      Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
+        centroids = Some(wrongCents))
     }
     assert(ex2.getMessage.contains("different quantizers"), ex2.getMessage)
-    // the MATCHING arrays pass the same gate (explicitly re-supplied)
+    // the MATCHING arrays pass the same gate (explicitly re-supplied;
+    // every id is already indexed, so nothing is admitted)
     val okCents = Array.tabulate(16)(c => Similarity.ivfCentroidSql(c, 64))
-    assert(rows(Similarity.annIvfPqProbeAt(spark, dir, q, k = 5,
-      centroids = Some(okCents))).nonEmpty)
-    // append with foreign quantizers refuses before touching the data
-    val ex3 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
-        codebooks = Some(learned))
-    }
-    assert(ex3.getMessage.contains("different quantizers"), ex3.getMessage)
+    assert(Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
+      centroids = Some(okCents)) == 0L)
+    assert(spark.read.parquet(dir).count() == emb.count())
   }
 
   test("headerless artifacts refuse the trusted probe path; stamping enables it") {
@@ -80,15 +83,16 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     Similarity.ivfPqIndex(emb, dim = 64).write.parquet(dir) // pre-r12 shape
     val q = emb.filter(col("vec_id") < 8)
     val ex = intercept[IllegalArgumentException] {
-      Similarity.annIvfPqProbeAt(spark, dir, q, k = 5)
+      Similarity.annProbeAt(spark, dir, q, k = 5)
     }
-    assert(ex.getMessage.contains("no IVF-PQ header"), ex.getMessage)
+    assert(ex.getMessage.contains("not a stamped ANN artifact") &&
+      ex.getMessage.contains("ivfPqWriteHeader"), ex.getMessage)
     // explicit stamping (the caller's params were the only pre-header
     // contract) upgrades the artifact in place
     val cents = Array.tabulate(16)(c => Similarity.ivfCentroidSql(c, 64))
     Similarity.ivfPqWriteHeader(spark, dir, 64, 16, 8, 16, cents,
       defaultCodebooks())
-    assert(rows(Similarity.annIvfPqProbeAt(spark, dir, q, k = 5)) ==
+    assert(rows(Similarity.annProbeAt(spark, dir, q, k = 5)) ==
       rows(Similarity.annIvfPq(emb, q, k = 5, dim = 64)))
   }
 
@@ -120,7 +124,7 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     val out = fs.create(hp, true)
     try out.write(flipped.getBytes("UTF-8")) finally out.close()
     val ex = intercept[IllegalArgumentException] {
-      Similarity.annIvfPqProbeAt(spark, dir, emb.filter(col("vec_id") < 8), k = 5)
+      Similarity.annProbeAt(spark, dir, emb.filter(col("vec_id") < 8), k = 5)
     }
     assert(ex.getMessage.contains("corrupt"), ex.getMessage)
   }
@@ -140,7 +144,7 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     assert(rows2(spark.read.parquet(dir)) == rows2(Similarity.ivfPqIndex(e, dim = 64)))
     // the first append stamped a header, so the trusted probe works
     val q = e.filter(col("vec_id") < 8)
-    assert(rows(Similarity.annIvfPqProbeAt(spark, dir, q, k = 5)) ==
+    assert(rows(Similarity.annProbeAt(spark, dir, q, k = 5)) ==
       rows(Similarity.annIvfPq(e, q, k = 5, dim = 64)))
   }
 
@@ -245,10 +249,10 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     Similarity.ivfPqIndexWrite(e.filter(col("vec_id") % 2 === 0), annPath, dim = 64)
     Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 2 =!= 0), annPath, dim = 64)
     val q = e.filter(col("vec_id") < 8)
-    val beforeProbe = rows(Similarity.annIvfPqProbeAt(spark, annPath, q, k = 5))
+    val beforeProbe = rows(Similarity.annProbeAt(spark, annPath, q, k = 5))
     ArtifactCompaction.compactFiles(spark, annPath, targetFiles = 1)
     assert(Similarity.ivfPqReadHeader(spark, annPath).isDefined)
-    assert(rows(Similarity.annIvfPqProbeAt(spark, annPath, q, k = 5)) == beforeProbe)
+    assert(rows(Similarity.annProbeAt(spark, annPath, q, k = 5)) == beforeProbe)
     assert(beforeProbe.nonEmpty)
   }
 

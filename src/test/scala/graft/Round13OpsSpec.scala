@@ -180,8 +180,8 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     // generation owns the artifact with zero re-configuration — the
     // form a maintained ingest keeps using ACROSS rebuilds
     val day4 = Seq((2001L, Seq.fill(8)(-0.2f))).toDF("vec_id", "embedding")
-    assert(Similarity.ivfPqIndexAppendAt(day4, dir) == 1L)
-    assert(Similarity.ivfPqIndexAppendAt(day4, dir) == 0L) // idempotent
+    assert(Similarity.annAppendAt(day4, dir) == 1L)
+    assert(Similarity.annAppendAt(day4, dir) == 0L) // idempotent
     val grown = corpus.unionByName(day3).unionByName(day4)
     assert(rows2(spark.read.parquet(dir)) ==
       rows2(Similarity.ivfPqIndex(grown, dim = 8, lists = 4, m = 8,
@@ -210,7 +210,7 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     assert(ex.getMessage.contains("left untouched"), ex.getMessage)
     // live artifact intact and still headed by the ORIGINAL quantizers
     assert(spark.read.parquet(dir).count() == before)
-    assert(Similarity.annIvfPqProbeAt(spark, dir,
+    assert(Similarity.annProbeAt(spark, dir,
       day1.filter(col("vec_id") < 4), k = 3).count() > 0)
     // no tmp residue
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -225,9 +225,9 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     }
     assert(ex2.getMessage.contains("no IVF-PQ header"), ex2.getMessage)
     val ex3 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppendAt(day1, bare)
+      Similarity.annAppendAt(day1, bare)
     }
-    assert(ex3.getMessage.contains("no IVF-PQ header"), ex3.getMessage)
+    assert(ex3.getMessage.contains("not a stamped ANN artifact"), ex3.getMessage)
   }
 
   test("annIvfPqRefineAt: artifact-path refine == inline refine; rebuildIfNeeded polls then executes") {
@@ -239,7 +239,7 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     // search-as-shipped off the stored index == the inline composition
-    val atPath = rows(Similarity.annIvfPqRefineAt(spark, dir, corpus, probes,
+    val atPath = rows(Similarity.annRefineAt(spark, dir, corpus, probes,
       k = 3, nprobe = 2, rerank = 16))
     val inline = rows(Similarity.annIvfPqRefine(corpus, probes, k = 3, dim = 8,
       lists = 4, nprobe = 2, m = 8, rerank = 16))
@@ -280,7 +280,7 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     // the trusted probe still answers from the legacy header...
     val back = Similarity.ivfPqReadHeader(spark, dir).get
     assert(back.paramsHash == hdr.paramsHash)
-    assert(Similarity.annIvfPqProbeAt(spark, dir,
+    assert(Similarity.annProbeAt(spark, dir,
       vecs.filter(col("vec_id") < 2), k = 3).count() > 0)
     // ...and a corrupted legacy line still refuses
     val bad = legacy.replace("hash=", "hash=f")

@@ -56,7 +56,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     assert(ex.getMessage.contains("allowShrink"), ex.getMessage)
     // live artifact untouched, original generation still serving
     assert(spark.read.parquet(dir).count() == 320L)
-    assert(Similarity.annIvfPqProbeAt(spark, dir,
+    assert(Similarity.annProbeAt(spark, dir,
       day1.filter(col("vec_id") < 2), k = 3).count() > 0)
     // no tmp residue from the refusal
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -190,14 +190,14 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     Similarity.ivfPqIndexWrite(corpus, dir, dim = 64)
     val allowedPred = col("vec_id") % 5 <= 1
     val allowed = emb.filter(allowedPred).select("vec_id")
-    val filtered = Similarity.annIvfPqProbeFilteredAt(
-      spark, dir, queries, allowed, k = 5)
+    val filtered = Similarity.annProbeAt(
+      spark, dir, queries, k = 5, allowedIds = Some(allowed))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // ground truth for the SEMANTICS claim: rank the FULL ADC ordering
     // (k = corpus size, nothing cut), restrict to allowed, re-rank,
     // cut to 5 — "top-k among allowed", not "allowed among top-k"
     val n = corpus.count().toInt
-    val full = Similarity.annIvfPqProbeAt(spark, dir, queries, k = n)
+    val full = Similarity.annProbeAt(spark, dir, queries, k = n)
     val allowedSet = emb.filter(allowedPred)
       .select("vec_id").as[Long].collect().toSet
     val expected = full.collect()
@@ -210,7 +210,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     assert(filtered == expected, "filtered probe is not the in-set rank cut")
     // and the claim post-filtering misses: some allowed neighbor ranks
     // inside the filtered top-5 but OUTSIDE the unfiltered top-5
-    val post = Similarity.annIvfPqProbeAt(spark, dir, queries, k = 5)
+    val post = Similarity.annProbeAt(spark, dir, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
       .filter { case (_, nb) => allowedSet.contains(nb) }.toSet
     assert(post.size < filtered.size, "fixture too permissive to show under-fill")
@@ -221,8 +221,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
       .union(spark.range(10000000L, 10000000L +
         graft.operators.Similarity.AnnFilterPushdownMax + 1).as[Long])
       .toDF("vec_id")
-    val viaSemiJoin = Similarity.annIvfPqProbeFilteredAt(
-      spark, dir, queries, padded, k = 5)
+    val viaSemiJoin = Similarity.annProbeAt(
+      spark, dir, queries, k = 5, allowedIds = Some(padded))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaSemiJoin == filtered)
   }
@@ -340,7 +340,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val n = Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") < 196), dir,
       dim = 16, lists = 4)
     assert(n == 196L)
-    val at = Similarity.annIvfSqProbeAt(spark, dir, qs, k = 5)
+    val at = Similarity.annProbeAt(spark, dir, qs, k = 5)
       .orderBy("query_id", "rank").collect()
     val bounds = Similarity.sqTrainBounds(emb.filter(col("vec_id") < 196), dim = 16)
     val inline = Similarity.annIvfSq(emb.filter(col("vec_id") < 196), qs,
@@ -354,7 +354,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val bare = tmpIdx("ann_sq_bare")
     spark.read.parquet(dir).write.parquet(bare)
     val ex = intercept[RuntimeException] {
-      Similarity.annIvfSqProbeAt(spark, bare, qs, k = 5)
+      Similarity.annProbeAt(spark, bare, qs, k = 5)
     }
     assert(ex.getMessage.contains("header"), ex.getMessage)
   }
@@ -407,7 +407,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     Similarity.ivfPqIndexWrite(prior, dir, dim = 16, lists = 4, m = 8,
       residual = true)
     assert(Similarity.ivfPqReadHeader(spark, dir).exists(_.residual))
-    val at = Similarity.annIvfPqProbeAt(spark, dir, qs, k = 5)
+    val at = Similarity.annProbeAt(spark, dir, qs, k = 5)
       .orderBy("query_id", "rank").collect()
     val inline = Similarity.annIvfPq(prior, qs, k = 5, dim = 16, lists = 4,
         m = 8, residual = true)
@@ -425,7 +425,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
 
     // the header-driven appender ADOPTS the artifact's encoding:
     // grown artifact == one-shot residual build, byte for byte
-    assert(Similarity.ivfPqIndexAppendAt(mid, dir) == 36L)
+    assert(Similarity.annAppendAt(mid, dir) == 36L)
     val grown = spark.read.parquet(dir).orderBy("vec_id").collect()
     val oneShot = Similarity.ivfPqIndex(emb.filter(col("vec_id") < 196),
         dim = 16, lists = 4, m = 8, residual = true)
@@ -439,7 +439,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     assert(rep.rowsAfter == 196L)
     val hdr2 = Similarity.ivfPqReadHeader(spark, dir).get
     assert(hdr2.residual)
-    assert(Similarity.annIvfPqProbeAt(spark, dir, qs, k = 5).count() > 0)
+    assert(Similarity.annProbeAt(spark, dir, qs, k = 5).count() > 0)
   }
 
   test("sqTrainBounds: sample-trained bounds clamp out-of-range encodes instead of failing") {
@@ -468,13 +468,13 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.get(1).toString.toLong, r.getLong(2), r.getDouble(3)))
       .toSet
-    val refined = rows(Similarity.annIvfSqRefineAt(spark, dir, corpus, probes,
+    val refined = rows(Similarity.annRefineAt(spark, dir, corpus, probes,
       k = 3, nprobe = 4, rerank = 1024))
     val brute = rows(Similarity.topKCosine(corpus, probes, k = 3))
     assert(refined == brute && refined.size == 24)
     // the shipped posture (bounded rerank) still returns full k per
     // query with exact-cosine scores for what it returns
-    val shipped = Similarity.annIvfSqRefineAt(spark, dir, corpus, probes,
+    val shipped = Similarity.annRefineAt(spark, dir, corpus, probes,
       k = 3, nprobe = 2, rerank = 8)
     assert(shipped.groupBy("query_id").count()
       .agg(min("count")).collect()(0).getLong(0) == 3L)
@@ -503,14 +503,14 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val bare = tmpIdx("ann_sq_bare")
     day1.write.parquet(bare)
     val ex = intercept[RuntimeException] {
-      Similarity.ivfSqIndexAppendAt(day2, bare)
+      Similarity.annAppendAt(day2, bare)
     }
-    assert(ex.getMessage.contains("no ivfsq header"), ex.getMessage)
+    assert(ex.getMessage.contains("not a stamped ANN artifact"), ex.getMessage)
 
     // header-driven append: admits day 2 under day-1 bounds, and a
     // re-sent batch is idempotent (content-addressed by id)
-    assert(Similarity.ivfSqIndexAppendAt(day2, dir) == 256L)
-    assert(Similarity.ivfSqIndexAppendAt(day2, dir) == 0L)
+    assert(Similarity.annAppendAt(day2, dir) == 256L)
+    assert(Similarity.annAppendAt(day2, dir) == 0L)
     assert(spark.read.parquet(dir).count() == 320L)
     // every appended value exceeded the stale span -> rail code 255
     val railed = spark.read.parquet(dir).filter(col("neighbor_id") >= 1000L)
@@ -566,8 +566,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     assert(rows(Similarity.ivfSqSaturationFromStats(spark, dir).get) ==
       rows(Similarity.ivfSqSaturation(spark, dir)))
     // accumulated across two appends (the second a clamping one)
-    Similarity.ivfSqIndexAppendAt(day2.filter(col("vec_id") < 1064), dir)
-    Similarity.ivfSqIndexAppendAt(day2.filter(col("vec_id") >= 1064), dir)
+    Similarity.annAppendAt(day2.filter(col("vec_id") < 1064), dir)
+    Similarity.annAppendAt(day2.filter(col("vec_id") >= 1064), dir)
     val viaStats = rows(Similarity.ivfSqSaturationFromStats(spark, dir).get)
     assert(viaStats == rows(Similarity.ivfSqSaturation(spark, dir)))
     assert(viaStats.exists(_._5 >= 600L), s"clamped appends must rail: $viaStats")
@@ -665,15 +665,14 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.get(1).toString.toLong, r.getLong(2), r.get(3).toString))
       .toSet
-    val refined = rows(Similarity.annPcaIvfPqRefineAt(spark, dir, corpus, probes,
+    val refined = rows(Similarity.annRefineAt(spark, dir, corpus, probes,
       k = 3, nprobe = 4, rerank = 300))
     assert(refined == rows(Similarity.topKCosine(corpus, probes, k = 3)))
     // probeAt == the inline composition bit-for-bit (the stored
-    // rotation IS the trained rotation). The plain probe refuses
-    // pcarot artifacts since r15, so the inline side builds the SAME
-    // index as a plain artifact over the projected corpus — identical
-    // shape params resolve identical salted quantizers
-    val atPath = rows(Similarity.annPcaIvfPqProbeAt(spark, dir, probes, k = 3))
+    // rotation IS the trained rotation): the inline side builds the
+    // SAME index as a plain artifact over the projected corpus —
+    // identical shape params resolve identical salted quantizers
+    val atPath = rows(Similarity.annProbeAt(spark, dir, probes, k = 3))
     val rot8 = Similarity.pcaRotation(corpus, dim = 16, outDim = 8)
     assert(rot8.flatMap(_.toSeq).sameElements(
         Similarity.pcaRotationAt(spark, dir).flatMap(_.toSeq)),
@@ -681,37 +680,39 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val plain = tmpIdx("ann_pca_plain")
     Similarity.ivfPqIndexWrite(Similarity.pcaProject(corpus, rot8), plain,
       dim = 8, lists = 4, m = 8)
-    val inline = rows(Similarity.annIvfPqProbeAt(spark, plain,
+    val inline = rows(Similarity.annProbeAt(spark, plain,
       Similarity.pcaProject(probes, rot8), k = 3))
     assert(atPath == inline && atPath.nonEmpty)
 
-    // a plain IVF-PQ artifact has no pcarot header: the PCA probe
-    // refuses instead of scoring a different space silently
+    // a plain IVF-PQ artifact has no pcarot header: the rotation
+    // accessor refuses, and the one probe entry scores it unprojected
     val bare = tmpIdx("ann_pca_bare")
     Similarity.ivfPqIndexWrite(corpus, bare, dim = 16, m = 8)
     val ex = intercept[RuntimeException] {
-      Similarity.annPcaIvfPqProbeAt(spark, bare, probes, k = 3)
+      Similarity.pcaRotationAt(spark, bare)
     }
     assert(ex.getMessage.contains("no pcarot header"), ex.getMessage)
+    assert(rows(Similarity.annProbeAt(spark, bare, probes, k = 3)) ==
+      rows(Similarity.annIvfPq(corpus, probes, k = 3, dim = 16)))
 
-    // the dim guards close every raw-vs-projected seam: a RAW frame
-    // against the projected artifact refuses at probe AND append —
-    // the silent first-half slice these paths used to allow
-    val exP = intercept[IllegalArgumentException] {
-      Similarity.annIvfPqProbeAt(spark, dir, probes, k = 3)
-    }
-    assert(exP.getMessage.contains("PROJECTED"), exP.getMessage)
+    // the dim guards close every raw-vs-projected seam: an
+    // already-PROJECTED frame against the projecting artifact refuses at
+    // probe AND append instead of slicing the rotation's input
     val late = (9000 until 9032).map(i => mk(i.toLong))
       .toDF("vec_id", "embedding").localCheckpoint()
+    val exP = intercept[IllegalArgumentException] {
+      Similarity.annProbeAt(spark, dir, Similarity.pcaProject(probes, rot8), k = 3)
+    }
+    assert(exP.getMessage.contains("PROJECTED"), exP.getMessage)
     val exA = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppendAt(late, dir)
+      Similarity.annAppendAt(Similarity.pcaProject(late, rot8), dir)
     }
     assert(exA.getMessage.contains("PROJECTED"), exA.getMessage)
-    // the projecting appender is the append path: grown artifact ==
-    // one-shot build over the union (same rotation, same quantizers)
-    assert(Similarity.pcaIvfPqIndexAppendAt(late, dir) == 32L)
-    assert(Similarity.pcaIvfPqIndexAppendAt(late, dir) == 0L) // idempotent
-    val grownProbe = rows(Similarity.annPcaIvfPqProbeAt(spark, dir, probes, k = 3))
+    // the one appender projects: grown artifact == one-shot build over
+    // the union (same rotation, same quantizers)
+    assert(Similarity.annAppendAt(late, dir) == 32L)
+    assert(Similarity.annAppendAt(late, dir) == 0L) // idempotent
+    val grownProbe = rows(Similarity.annProbeAt(spark, dir, probes, k = 3))
     assert(grownProbe.nonEmpty &&
       spark.read.parquet(dir).count() == 288L)
     CheckpointHygiene.free(late)

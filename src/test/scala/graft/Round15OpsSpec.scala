@@ -91,6 +91,11 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
       Similarity.pcaProject(ragged, rot).select("embedding").collect()
     }
     assert(causeChain(pcaEx).exists(_.contains("ragged")), causeChain(pcaEx))
+    // the salted-centroid assignment UDF shares the IVF argmax kernel
+    val assignEx = intercept[Exception] {
+      ragged.select(Similarity.ivfAssignUdf(8, 2)(col("embedding"))).collect()
+    }
+    assert(causeChain(assignEx).exists(_.contains("ragged")), causeChain(assignEx))
   }
 
   // ------------------------------------------------------------------
@@ -212,7 +217,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
   private def refineRecall(dir: String, corpus: DataFrame,
                            probes: DataFrame): Double = {
     val exact = Similarity.topKCosine(corpus, probes, k = 5)
-    val approx = Similarity.annPcaIvfPqRefineAt(spark, dir, corpus, probes,
+    val approx = Similarity.annRefineAt(spark, dir, corpus, probes,
       k = 5, nprobe = 2, rerank = 16)
     Similarity.annRecall(exact, approx, 5)
       .agg(avg(col("recall"))).collect()(0).getDouble(0)
@@ -229,7 +234,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     assert(!Similarity.pcaNeedsRebuild(genA, dir), s"fresh $fresh0 vs $stored0")
     // drifted generation lands through the appender (projected via the
     // STALE rotation — exactly the silent-degradation scenario)
-    assert(Similarity.pcaIvfPqIndexAppendAt(genB, dir) == 96L)
+    assert(Similarity.annAppendAt(genB, dir) == 96L)
     val grown = genA.unionByName(genB)
     val (stored1, fresh1) = Similarity.pcaCaptureAudit(grown, dir)
     assert(stored1 == stored0, "append must not touch the baseline")
@@ -271,9 +276,9 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     // appends resume through the new-generation headers (fresh
     // rotation projects the new batch; idempotent admission holds)
     val more = genB.withColumn("vec_id", col("vec_id") + 1000L)
-    assert(Similarity.pcaIvfPqIndexAppendAt(more, dir) == 96L)
+    assert(Similarity.annAppendAt(more, dir) == 96L)
     assert(spark.read.parquet(dir).count() == 288L)
-    assert(Similarity.pcaIvfPqIndexAppendAt(more, dir) == 0L)
+    assert(Similarity.annAppendAt(more, dir) == 0L)
   }
 
   test("pcaRebuildDue self-heals a legacy pcarot without a capture baseline; bounded-audit refusal") {
@@ -309,26 +314,39 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
   }
 
   // ------------------------------------------------------------------
-  // pcarot guard closure: presence, not dim mismatch, is the dispatch
+  // pcarot dispatch: presence, not dim mismatch, decides the projection
   // ------------------------------------------------------------------
 
-  test("FULL-RANK PCA artifacts refuse every plain probe/gate entry by pcarot presence; the PCA filtered probe is the in-set rank cut") {
+  test("FULL-RANK PCA artifacts: the one probe entry projects by pcarot presence; the quantizer-only rebuild refuses the gate; the filtered probe is the in-set rank cut") {
     val dir = tmpIdx("pca_fullrank_guard")
     val corpus = smallCorpus(seed = 1506)
-    // outDim == dim: the dim guard alone can NEVER catch raw queries
+    // outDim == dim: the dim guard alone can NEVER tell raw queries
+    // from projected ones — only the pcarot sidecar can
     Similarity.pcaIvfPqIndexWrite(corpus, dir, dim = 8, outDim = 8,
       lists = 2, m = 2, codes = 8)
     val probes = corpus.filter(col("vec_id") < 4)
-    def refusesPca(body: => Any): Unit = {
-      val ex = intercept[IllegalArgumentException](body)
-      assert(ex.getMessage.contains("pcarot"), ex.getMessage)
-    }
-    refusesPca(Similarity.annIvfPqProbeAt(spark, dir, probes, k = 3))
-    refusesPca(Similarity.annIvfPqProbeFilteredAt(spark, dir, probes,
-      corpus.select("vec_id"), k = 3))
-    refusesPca(Similarity.annIvfPqRefineAt(spark, dir, corpus, probes, k = 3))
-    refusesPca(Similarity.annIvfPqRefineFilteredAt(spark, dir, corpus, probes,
-      corpus.select("vec_id"), k = 3))
+    val rot = Similarity.pcaRotationAt(spark, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.get(3).toString)).toSet
+    // the same index as a plain artifact over the hand-projected corpus:
+    // the one entry must score the RAW queries exactly as this scores
+    // the hand-projected ones, plain and filtered, probe and refine
+    val plain = tmpIdx("pca_fullrank_plain")
+    Similarity.ivfPqIndexWrite(Similarity.pcaProject(corpus, rot), plain, dim = 8,
+      lists = 2, m = 2, codes = 8)
+    val projected = Similarity.pcaProject(probes, rot)
+    val some = corpus.filter(col("vec_id") % 2 === 0).select("vec_id")
+    assert(rows(Similarity.annProbeAt(spark, dir, probes, k = 3)) ==
+      rows(Similarity.annProbeAt(spark, plain, projected, k = 3)))
+    assert(rows(Similarity.annProbeAt(spark, dir, probes, k = 3, allowedIds = Some(some))) ==
+      rows(Similarity.annProbeAt(spark, plain, projected, k = 3, allowedIds = Some(some))))
+    // the refine re-ranks in the ORIGINAL space: exact cosine of the raw
+    // queries over the raw corpus, cut from the projected probe's survivors
+    val survivors = Similarity.annProbeAt(spark, plain, projected, k = 32)
+      .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val refined = Similarity.annRefineAt(spark, dir, corpus, probes, k = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    assert(refined.nonEmpty && refined.subsetOf(survivors))
     // the quantizer-only rebuild refuses a recall gate it cannot probe
     // — BEFORE training anything
     val gateEx = intercept[IllegalArgumentException] {
@@ -339,10 +357,10 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     // one: top-k WITHIN the allowed set of the full projected ranking
     val allowed = corpus.filter(col("vec_id") % 3 === 0).select("vec_id")
     val allowedSet = allowed.collect().map(_.getLong(0)).toSet
-    val filtered = Similarity.annPcaIvfPqProbeFilteredAt(
-        spark, dir, probes, allowed, k = 3)
+    val filtered = Similarity.annProbeAt(
+        spark, dir, probes, k = 3, allowedIds = Some(allowed))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val full = Similarity.annPcaIvfPqProbeAt(spark, dir, probes, k = 32)
+    val full = Similarity.annProbeAt(spark, dir, probes, k = 32)
     val expected = full.collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
       .filter { case (_, nb, _) => allowedSet.contains(nb) }
@@ -412,9 +430,9 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     def recall(approx: DataFrame): Double =
       Similarity.annRecall(exact, approx, 5)
         .agg(avg(col("recall"))).collect()(0).getDouble(0)
-    val pqRec = recall(Similarity.annIvfPqProbeAt(spark, pqDir, probes,
+    val pqRec = recall(Similarity.annProbeAt(spark, pqDir, probes,
       k = 5, nprobe = 4))
-    val opqRec = recall(Similarity.annPcaIvfPqProbeAt(spark, opqDir, probes,
+    val opqRec = recall(Similarity.annProbeAt(spark, opqDir, probes,
       k = 5, nprobe = 4))
     assert(opqRec > pqRec,
       f"OPQ ADC recall $opqRec%.3f must beat plain PQ $pqRec%.3f on the " +
@@ -428,7 +446,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val more = corpus.select((col("vec_id") + 10000L).as("vec_id"),
       col("embedding"))
-    assert(Similarity.pcaIvfPqIndexAppendAt(more, opqDir) == 256L)
+    assert(Similarity.annAppendAt(more, opqDir) == 256L)
     val rep = Similarity.pcaIvfPqRebuild(corpus.unionByName(more), opqDir,
       recallQueries = Some(probes), minRecallRatio = 0.0)
     assert(rep.rowsAfter == 512L)
@@ -450,8 +468,8 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
         s"PROBE ANN INDEX '$path' FROM '$dir' ALLOWING vec_id % 5 <= 1")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val qs = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24)
-    val viaApi = Similarity.annPcaIvfPqProbeFilteredAt(spark, path, qs,
-        emb.filter(col("vec_id") % 5 <= 1).select("vec_id"), k = 5)
+    val viaApi = Similarity.annProbeAt(spark, path, qs, k = 5,
+        allowedIds = Some(emb.filter(col("vec_id") % 5 <= 1).select("vec_id")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaSql == viaApi && viaSql.nonEmpty)
   }

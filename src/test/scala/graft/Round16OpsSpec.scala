@@ -181,20 +181,20 @@ class Round16OpsSpec extends AnyFunSuite with SharedSpark {
       m = 4, codes = 16, refineIters = 2) == 256L)
     val kv = graft.sources.ArtifactHeader.read(spark, dir, "pcarot").get
     assert(kv("method") == "opq_i" && kv("opq_iters") == "2")
-    val probed = Similarity.annPcaIvfPqProbeAt(spark, dir, probes, k = 5,
+    val probed = Similarity.annProbeAt(spark, dir, probes, k = 5,
       nprobe = 4)
     assert(probed.count() == 40L)
     import spark.implicits._
     val more = corpus.select((col("vec_id") + 10000L).as("vec_id"),
       col("embedding"))
-    assert(Similarity.pcaIvfPqIndexAppendAt(more, dir) == 256L)
+    assert(Similarity.annAppendAt(more, dir) == 256L)
     val rep = Similarity.pcaIvfPqRebuild(corpus.unionByName(more), dir,
       recallQueries = Some(probes), minRecallRatio = 0.0)
     assert(rep.rowsAfter == 512L)
     val kv2 = graft.sources.ArtifactHeader.read(spark, dir, "pcarot").get
     assert(kv2("method") == "opq_i" && kv2("opq_iters") == "2",
       "rebuild must carry the opq_i method AND its iteration stamp")
-    assert(Similarity.annPcaIvfPqProbeAt(spark, dir, probes, k = 5,
+    assert(Similarity.annProbeAt(spark, dir, probes, k = 5,
       nprobe = 4).count() == 40L)
     // refinement composes with neither untrained quantizers nor
     // residual encoding — both refuse by name

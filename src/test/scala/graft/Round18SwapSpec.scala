@@ -199,17 +199,17 @@ class Round18SwapSpec extends AnyFunSuite with SharedSpark {
       ("ivfPqIndexAppend", pq, _ => (), dir =>
         assert(Similarity.ivfPqIndexAppend(vecs(1000, 32), dir, dim = 8, lists = 4,
           m = 8) === 32L), 96L),
-      ("ivfPqIndexAppendAt", pq, _ => (), dir =>
-        assert(Similarity.ivfPqIndexAppendAt(vecs(1000, 32), dir) === 32L), 96L),
-      ("ivfSqIndexAppendAt",
+      ("annAppendAt (IVF-PQ)", pq, _ => (), dir =>
+        assert(Similarity.annAppendAt(vecs(1000, 32), dir) === 32L), 96L),
+      ("annAppendAt (SQ8)",
         dir => Similarity.ivfSqIndexWrite(vecs(0, 64), dir, dim = 8, lists = 4),
         _ => (), dir =>
-        assert(Similarity.ivfSqIndexAppendAt(vecs(1000, 32), dir) === 32L), 96L),
-      ("pcaIvfPqIndexAppendAt",
+        assert(Similarity.annAppendAt(vecs(1000, 32), dir) === 32L), 96L),
+      ("annAppendAt (PCA)",
         dir => Similarity.pcaIvfPqIndexWrite(vecs(0, 64), dir, dim = 8, outDim = 4,
           lists = 4, m = 4),
         _ => (), dir =>
-        assert(Similarity.pcaIvfPqIndexAppendAt(vecs(1000, 32), dir) === 32L), 96L),
+        assert(Similarity.annAppendAt(vecs(1000, 32), dir) === 32L), 96L),
       ("annIndexDeleteAt", pq, _ => (), dir =>
         assert(Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)) === 2L), 64L),
       ("annTombstoneFold", pq,
@@ -233,7 +233,7 @@ class Round18SwapSpec extends AnyFunSuite with SharedSpark {
         assert(!fs.exists(p))
         verb(dir)
         assert(!fs.exists(tmp) && !fs.exists(old))
-        val idCol = if (name.startsWith("ivfSq")) "neighbor_id" else "vec_id"
+        val idCol = if (name.contains("SQ8")) "neighbor_id" else "vec_id"
         val n = spark.read.parquet(dir).select(idCol).distinct().count()
         assert(n === held, s"corpus lost through the crashed swap: $n")
       }.failed.toOption.map(e => s"$name: ${e.getMessage}")

@@ -43,12 +43,12 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val (corpus, probes) = corpusAndProbes()
     val dir = tmpIdx("tomb_pq")
     Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 2, m = 2, codes = 4)
-    val full = Similarity.annIvfPqProbeAt(spark, dir, probes, k = 5, nprobe = 2)
+    val full = Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
     val victims = full.select(col("neighbor_id").cast("long"))
       .limit(2).collect().map(_.getLong(0)).distinct
     assert(victims.nonEmpty)
     assert(Similarity.annIndexDeleteAt(spark, dir, victims.toSeq) == victims.length)
-    val after = Similarity.annIvfPqProbeAt(spark, dir, probes, k = 5, nprobe = 2)
+    val after = Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
     val got = resultSet(after)
     assert(!got.exists(r => victims.contains(r._3)),
       s"tombstoned ids surfaced: $got")
@@ -59,7 +59,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
       corpus.filter(!col("vec_id").isin(victims.map(java.lang.Long.valueOf): _*)),
       dir2, dim = 8, lists = 2, m = 2, codes = 4)
     assert(got == resultSet(
-      Similarity.annIvfPqProbeAt(spark, dir2, probes, k = 5, nprobe = 2)))
+      Similarity.annProbeAt(spark, dir2, probes, k = 5, nprobe = 2)))
   }
 
   test("delete is idempotent, merges batches, admits unknown ids; non-artifact paths refuse; the sidecar bound refuses past MaxIds") {
@@ -97,16 +97,16 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val batch = Seq((7L, Seq.fill(8)(0.5f)), (200L, Seq.fill(8)(0.25f)))
       .toDF("vec_id", "embedding")
     val e1 = intercept[RuntimeException] {
-      Similarity.ivfPqIndexAppendAt(batch, pq)
+      Similarity.annAppendAt(batch, pq)
     }
     assert(e1.getMessage.contains("tombstoned"), e1.getMessage)
     val e2 = intercept[RuntimeException] {
-      Similarity.ivfSqIndexAppendAt(batch, sq)
+      Similarity.annAppendAt(batch, sq)
     }
     assert(e2.getMessage.contains("tombstoned"), e2.getMessage)
     // the fresh-id remainder of the batch appends fine
-    assert(Similarity.ivfPqIndexAppendAt(batch.filter(col("vec_id") =!= 7L), pq) == 1L)
-    assert(Similarity.ivfSqIndexAppendAt(batch.filter(col("vec_id") =!= 7L), sq) == 1L)
+    assert(Similarity.annAppendAt(batch.filter(col("vec_id") =!= 7L), pq) == 1L)
+    assert(Similarity.annAppendAt(batch.filter(col("vec_id") =!= 7L), sq) == 1L)
   }
 
   test("fold makes the removal physical: verified row accounting, sidecar cleared, headers survive, SQ8 stats re-seeded, re-append admitted") {
@@ -115,7 +115,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val dir = tmpIdx("tomb_fold_sq")
     Similarity.ivfSqIndexWrite(corpus, dir, dim = 8, lists = 2)
     Similarity.annIndexDeleteAt(spark, dir, Seq(3L, 5L, 999L)) // 999 not present
-    val before = resultSet(Similarity.annIvfSqProbeAt(spark, dir, probes, k = 5, nprobe = 2)
+    val before = resultSet(Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
       .withColumnRenamed("score", "score_e6")
       .withColumn("score_e6", (col("score_e6") * 1e6).cast("long")))
     val (b, a) = Similarity.annTombstoneFold(spark, dir)
@@ -123,7 +123,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     assert(Tombstones.count(spark, dir) == 0L)
     assert(spark.read.parquet(dir).filter(col("neighbor_id").isin(3L, 5L)).count() == 0L)
     // the artifact stays self-describing and probe-identical
-    val after = resultSet(Similarity.annIvfSqProbeAt(spark, dir, probes, k = 5, nprobe = 2)
+    val after = resultSet(Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
       .withColumnRenamed("score", "score_e6")
       .withColumn("score_e6", (col("score_e6") * 1e6).cast("long")))
     assert(after == before, "fold must be result-invariant")
@@ -134,7 +134,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(fromStats == fromScan)
     // a folded id is legitimately appendable again
-    assert(Similarity.ivfSqIndexAppendAt(
+    assert(Similarity.annAppendAt(
       Seq((3L, Seq.fill(8)(0.5f))).toDF("vec_id", "embedding"), dir) == 1L)
     // an empty set folds as a sidecar-only no-op (never scans rows)
     assert(Similarity.annTombstoneFold(spark, dir) == (0L, 0L))
@@ -152,7 +152,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     // the projecting probe excludes too (the exclusion sits under the
     // shared trusted probe body)
     val (_, probes) = corpusAndProbes(seed = 1515)
-    assert(!resultSet(Similarity.annPcaIvfPqProbeAt(spark, pca, probes, k = 5,
+    assert(!resultSet(Similarity.annProbeAt(spark, pca, probes, k = 5,
         nprobe = 2)).exists(_._3 == 11L))
     def refusal(body: => Any): String =
       intercept[IllegalArgumentException](body).getMessage
@@ -212,7 +212,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val (corpus, probes) = corpusAndProbes(seed = 1517)
     val dir = tmpIdx("tomb_live")
     Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 2, m = 2, codes = 4)
-    val victims = Similarity.annIvfPqProbeAt(spark, dir, probes, k = 5, nprobe = 2)
+    val victims = Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
       .select(col("neighbor_id").cast("long")).limit(2).collect()
       .map(_.getLong(0)).distinct
     assert(victims.nonEmpty)
@@ -228,7 +228,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val appender = new Thread(() => {
       try chunks.foreach { c =>
         maint.withAccess {
-          assert(Similarity.ivfPqIndexAppendAt(
+          assert(Similarity.annAppendAt(
             c.toDF("vec_id", "embedding"), dir) == c.size.toLong)
           appended.addAndGet(c.size)
         }
@@ -239,7 +239,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
       try while (!stop.get()) {
         val flagged = deleteDone.get() // read BEFORE the probe starts
         val got = maint.withAccess {
-          Similarity.annIvfPqProbeAt(spark, dir, probes, k = 5, nprobe = 2)
+          Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
             .select(col("neighbor_id").cast("long")).collect().map(_.getLong(0)).toSet
         }
         if (flagged && victims.exists(got.contains)) violations.incrementAndGet()
