@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.GraftSession.timed
 
 /** Scale probe for the IVF index: times `annIvf` at a given
   * lists/nprobe over SPARK_GRAFT_SF_DIR embeddings — the `lists`
@@ -15,13 +16,18 @@ import graft.operators.Similarity
   * convention): "runMain graft.AnnProbe 160 4 learned 40960".
   */
 object AnnProbe {
-  /** `f`'s result and its wall time in seconds. */
-  private def time[T](f: => T): (T, Double) = {
-    val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
+  /** The scale probes' session: shuffles start 256 wide and AQE
+    * coalesces them down.
+    */
+  private def session(): SparkSession = {
+    val spark = GraftSession.builder()
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
 
   /** Best-of-2 wall time of `f` (the first pass carries plan/codegen). */
-  private def min2(f: => Any): Double = (1 to 2).map(_ => time(f)._2).min
+  private def min2(f: => Any): Double = (1 to 2).map(_ => timed(f)._2).min
 
   def main(args: Array[String]): Unit = {
     if (args.nonEmpty && args(0) == "pq") { pqRecall(args.drop(1)); return }
@@ -37,12 +43,7 @@ object AnnProbe {
     if (args.nonEmpty && args(0) == "dims") { dimScaling(args.drop(1)); return }
     val lists = if (args.nonEmpty) args(0).toInt else 16
     val nprobe = if (args.length > 1) args(1).toInt else 4
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     // "learned" as 3rd arg: kmeans-trained centroids (the production
@@ -87,12 +88,7 @@ object AnnProbe {
     * Run: SPARK_GRAFT_SF_DIR=/tmp/sf10 sbt "runMain graft.AnnProbe index"
     */
   private def indexArtifact(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val out = java.nio.file.Files.createTempDirectory("ann_index_soak").toString
@@ -123,12 +119,12 @@ object AnnProbe {
     val idx = spark.read.parquet(out)
     val q = emb.filter(col("vec_id") < 8)
     val probeRuns = (1 to 2).map(_ =>
-      time(Similarity.annIvfPqProbe(idx, q, k = 5, dim = 64,
+      timed(Similarity.annIvfPqProbe(idx, q, k = 5, dim = 64,
         centroids = cents, codebooks = cbs).count()))
     // (c) the rebuild-per-batch posture the artifact replaces — in the
     // learned case that includes re-training, every time
     val rebuildRuns = (1 to 2).map { _ =>
-      time {
+      timed {
         val (c2, b2) = train()
         Similarity.annIvfPq(emb, q, k = 5, dim = 64,
           centroids = c2, codebooks = b2).count()
@@ -178,12 +174,7 @@ object AnnProbe {
     */
   private def sqVsPq(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
     val emb =
@@ -204,26 +195,26 @@ object AnnProbe {
     // ONE shared coarse quantizer for all three artifacts (the trade
     // under test is the FINE encoding), trained the way ivfPqRebuild
     // trains: data-seeded, sample-bounded
-    val (cents, centsSec) = time(Similarity.kmeansCentroids(emb, k = 16, iters = 2,
+    val (cents, centsSec) = timed(Similarity.kmeansCentroids(emb, k = 16, iters = 2,
       dim = 64, trainFraction = 0.05, seedFromData = true))
-    val (cbs, cbsSec) = time(Similarity.pqLearnedCodebooks(emb, dim = 64, m = 8,
+    val (cbs, cbsSec) = timed(Similarity.pqLearnedCodebooks(emb, dim = 64, m = 8,
       codes = 16, iters = 2, trainFraction = 0.05, seedFromData = true))
-    val (resCbs, resCbsSec) = time(Similarity.pqLearnedCodebooks(
+    val (resCbs, resCbsSec) = timed(Similarity.pqLearnedCodebooks(
       Similarity.residualFloatFrame(emb, cents, "vec_id", "embedding"),
       dim = 64, m = 8, codes = 16, iters = 2, trainFraction = 0.05,
       seedFromData = true))
     // the Faiss-default byte budget (PQ8: 256 centroids/subspace =
     // 8 bits/subcode, 8 bytes/vec) — the ladder rung between 4-bit PQ
     // (4 bytes/vec) and SQ8 (64 bytes/vec)
-    val (cbs256, cbs256Sec) = time(Similarity.pqLearnedCodebooks(emb, dim = 64, m = 8,
+    val (cbs256, cbs256Sec) = timed(Similarity.pqLearnedCodebooks(emb, dim = 64, m = 8,
       codes = 256, iters = 2, trainFraction = 0.05, seedFromData = true))
-    val (_, sqBuild) = time(Similarity.ivfSqIndexWrite(emb, s"$base/sq", dim = 64,
+    val (_, sqBuild) = timed(Similarity.ivfSqIndexWrite(emb, s"$base/sq", dim = 64,
       centroids = Some(cents)))
-    val (_, pqBuild) = time(Similarity.ivfPqIndexWrite(emb, s"$base/pq", dim = 64,
+    val (_, pqBuild) = timed(Similarity.ivfPqIndexWrite(emb, s"$base/pq", dim = 64,
       centroids = Some(cents), codebooks = Some(cbs)))
-    val (_, resBuild) = time(Similarity.ivfPqIndexWrite(emb, s"$base/pqres", dim = 64,
+    val (_, resBuild) = timed(Similarity.ivfPqIndexWrite(emb, s"$base/pqres", dim = 64,
       centroids = Some(cents), codebooks = Some(resCbs), residual = true))
-    val (_, pq256Build) = time(Similarity.ivfPqIndexWrite(emb, s"$base/pq256", dim = 64,
+    val (_, pq256Build) = timed(Similarity.ivfPqIndexWrite(emb, s"$base/pq256", dim = 64,
       codes = 256, centroids = Some(cents), codebooks = Some(cbs256)))
     val q = emb0.filter(col("vec_id") < 8)
     val sqSec = min2(Similarity.annProbeAt(spark, s"$base/sq", q, k = 5).count())
@@ -256,12 +247,7 @@ object AnnProbe {
 
   private def filteredProbe(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
     val emb =
@@ -275,14 +261,14 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_filtered").toString + "/idx"
-    val (_, buildSec) = time(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
+    val (_, buildSec) = timed(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
     val q = emb0.filter(col("vec_id") < 8)
     val (nAll, allSec) = (1 to 2).map(_ =>
-      time(Similarity.annProbeAt(spark, out, q, k = 5).count())).minBy(_._2)
+      timed(Similarity.annProbeAt(spark, out, q, k = 5).count())).minBy(_._2)
     val filters = Seq(10L, 20L, 50L, 100L).map { m =>
       val allowed = emb.filter(col("vec_id") % m === 0).select("vec_id")
       val nAllowed = allowed.count()
-      val (n, sec) = (1 to 2).map(_ => time(
+      val (n, sec) = (1 to 2).map(_ => timed(
         Similarity.annProbeAt(spark, out, q, k = 5, allowedIds = Some(allowed))
           .count())).minBy(_._2)
       // same EFFECTIVE set through the semi-join branch: pad with ids
@@ -292,7 +278,7 @@ object AnnProbe {
       val padded = allowed.as[Long].union(
         spark.range(100000000000L, 100000000000L +
           graft.operators.Similarity.AnnFilterPushdownMax + 1).as[Long]).toDF("vec_id")
-      val (_, semiSec) = (1 to 2).map(_ => time(
+      val (_, semiSec) = (1 to 2).map(_ => timed(
         Similarity.annProbeAt(spark, out, q, k = 5, allowedIds = Some(padded))
           .count())).minBy(_._2)
       s"""{"mod":$m,"allowed":$nAllowed,"rows":$n,""" +
@@ -305,35 +291,30 @@ object AnnProbe {
   }
 
   private def lifecycle(): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_lifecycle").toString + "/idx"
-    val (_, writeSec) = time(
+    val (_, writeSec) = timed(
       Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
     val appendSecs = (6 to 9).map { s =>
-      time(Similarity.ivfPqIndexAppend(
+      timed(Similarity.ivfPqIndexAppend(
         emb.filter(col("vec_id") % 10 === s), out, dim = 64))._2
     }
-    val (needs, auditSec) = time(Similarity.ivfPqNeedsRebuild(spark, out))
+    val (needs, auditSec) = timed(Similarity.ivfPqNeedsRebuild(spark, out))
     val q = emb.filter(col("vec_id") < 8)
     def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
-    val probeSec = (1 to 2).map(_ => time(probe())._2).min
+    val probeSec = (1 to 2).map(_ => timed(probe())._2).min
     // the r13 closing of the staleness loop: the audit DECIDED, now
     // EXECUTE — sample-bounded data-seeded retrain, re-encode, verify
     // (rows + ADC recall vs exact-dot ground truth), atomic swap with
     // the header re-stamped; the header-only probe keeps answering
     // afterwards without the caller learning anything new
-    val (report, rebuildSec) = time(Similarity.ivfPqRebuild(emb, out,
+    val (report, rebuildSec) = timed(Similarity.ivfPqRebuild(emb, out,
       kmIters = 2, pqIters = 2, trainFraction = 0.25,
       recallQueries = Some(q), k = 5, nprobe = 4))
-    val (needsAfter, _) = time(Similarity.ivfPqNeedsRebuild(spark, out))
+    val (needsAfter, _) = timed(Similarity.ivfPqNeedsRebuild(spark, out))
     // ingest RESUMES across the rebuild through the header-driven
     // appender — it adopts the retrained quantizers from the artifact
     // itself, no re-configuration of the maintainer
@@ -345,7 +326,7 @@ object AnnProbe {
     // colliding ids would be anti-joined away and measure nothing
     val resumeBatch = emb.filter(col("vec_id") < 100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
-    val (nResumed, resumeSec) = time(
+    val (nResumed, resumeSec) = timed(
       Similarity.annAppendAt(resumeBatch, out))
     // the hazard the offset comment describes must FAIL, not time an
     // empty write into the committed soak table
@@ -353,9 +334,9 @@ object AnnProbe {
       s"resume batch collided with existing ids (admitted $nResumed/100): " +
         "raise the id offset past the soak data's entity-copy ranges")
     val rowsBefore = probe()
-    val ((fb, fa), compactSec) = time(
+    val ((fb, fa), compactSec) = timed(
       graft.sources.ArtifactCompaction.compactFiles(spark, out, targetFiles = 4))
-    val probeAfterSec = (1 to 2).map(_ => time(probe())._2).min
+    val probeAfterSec = (1 to 2).map(_ => timed(probe())._2).min
     require(probe() == rowsBefore, "compaction changed probe results")
     println(s"""{"dir":"$dir","n_vectors":$nVec,"write_sec":$writeSec,""" +
       s""""append_secs":${appendSecs.map(s => f"$s%.2f").mkString("[", ",", "]")},""" +
@@ -379,12 +360,7 @@ object AnnProbe {
     */
   private def tombstoneLifecycle(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
     val emb =
@@ -398,26 +374,26 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_tombstones").toString + "/idx"
-    val (_, writeSec) = time(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
+    val (_, writeSec) = timed(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
     val q = emb0.filter(col("vec_id") < 8).localCheckpoint()
     def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeClean = min2(probe())
     // 1%: under the pushdown bound -> NOT-IN scan predicate
-    val (nSmall, delSmallSec) = time(Similarity.annIndexDeleteAt(spark, out,
+    val (nSmall, delSmallSec) = timed(Similarity.annIndexDeleteAt(spark, out,
       emb.filter(col("vec_id") % 100 === 1).select("vec_id")))
     val probeSmall = min2(probe())
     // 10%: past the pushdown bound -> broadcast anti-join branch
-    val (nBig, delBigSec) = time(Similarity.annIndexDeleteAt(spark, out,
+    val (nBig, delBigSec) = timed(Similarity.annIndexDeleteAt(spark, out,
       emb.filter(col("vec_id") % 10 === 1).select("vec_id")))
     val probeBig = min2(probe())
     // the per-batch poll a deployment runs: one sidecar-header read
-    val (debt, pollSec) = time(graft.sources.Tombstones.count(spark, out))
-    val ((rb, ra), foldSec) = time(Similarity.annTombstoneFold(spark, out))
+    val (debt, pollSec) = timed(graft.sources.Tombstones.count(spark, out))
+    val ((rb, ra), foldSec) = timed(Similarity.annTombstoneFold(spark, out))
     require(ra == nVec - nBig, s"fold accounting: $rb -> $ra, expected ${nVec - nBig}")
     val probeFolded = min2(probe())
     // deleted ids stay gone and ingest resumes (a folded id may return)
     require(spark.read.parquet(out).filter(col("vec_id") % 10 === 1).count() == 0L)
-    val (nResumed, resumeSec) = time(Similarity.annAppendAt(
+    val (nResumed, resumeSec) = timed(Similarity.annAppendAt(
       emb.filter(col("vec_id") % 10 === 1).limit(100), out))
     require(nResumed == 100L, s"resume admitted $nResumed/100")
     graft.plans.CheckpointHygiene.free(emb, q)
@@ -443,21 +419,16 @@ object AnnProbe {
     * Run: sbt "runMain graft.AnnProbe sqlifecycle"
     */
   private def sqLifecycle(): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding").localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_sq_lifecycle").toString + "/idx"
-    val (_, writeSec) = time(
+    val (_, writeSec) = timed(
       Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
     val appendSecs = (6 to 8).map { s =>
-      time(Similarity.annAppendAt(
+      timed(Similarity.annAppendAt(
         emb.filter(col("vec_id") % 10 === s), out))._2
     }
     // the drift batch: every value shifted past the trained span, so
@@ -467,31 +438,31 @@ object AnnProbe {
       x => (x + lit(2.0f)).cast("float")).as("embedding")
     val drift = emb.filter(col("vec_id") % 10 === 9)
       .select(col("vec_id"), shifted).localCheckpoint()
-    val (_, driftAppendSec) = time(Similarity.annAppendAt(drift, out))
-    val (satMax, satSec) = time(Similarity.ivfSqSaturation(spark, out)
+    val (_, driftAppendSec) = timed(Similarity.annAppendAt(drift, out))
+    val (satMax, satSec) = timed(Similarity.ivfSqSaturation(spark, out)
       .agg(max(col("sat_pm"))).collect()(0).getLong(0))
-    val (needs, auditSec) = time(Similarity.ivfSqNeedsRebuild(spark, out))
+    val (needs, auditSec) = timed(Similarity.ivfSqNeedsRebuild(spark, out))
     val q = emb.filter(col("vec_id") < 8).select(col("vec_id"), shifted)
       .localCheckpoint()
     def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
-    val probeSec = (1 to 2).map(_ => time(probe())._2).min
-    val (report, rebuildSec) = time(Similarity.ivfSqRebuild(
+    val probeSec = (1 to 2).map(_ => timed(probe())._2).min
+    val (report, rebuildSec) = timed(Similarity.ivfSqRebuild(
       emb.filter(col("vec_id") % 10 =!= 9).unionByName(drift), out,
       kmIters = 2, trainFraction = 0.25,
       recallQueries = Some(q), k = 5, nprobe = 4))
-    val (satAfter, _) = time(Similarity.ivfSqSaturation(spark, out)
+    val (satAfter, _) = timed(Similarity.ivfSqSaturation(spark, out)
       .agg(max(col("sat_pm"))).collect()(0).getLong(0))
-    val (needsAfter, _) = time(Similarity.ivfSqNeedsRebuild(spark, out))
+    val (needsAfter, _) = timed(Similarity.ivfSqNeedsRebuild(spark, out))
     // ingest resumes through the header: the appender adopts the
     // RETRAINED bounds from the artifact itself (1e10 offset — above
     // any entity-copy range, the lifecycle-probe convention)
     val resumeBatch = emb.filter(col("vec_id") < 100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
-    val (nResumed, resumeSec) = time(Similarity.annAppendAt(resumeBatch, out))
+    val (nResumed, resumeSec) = timed(Similarity.annAppendAt(resumeBatch, out))
     require(nResumed == 100,
       s"resume batch collided with existing ids (admitted $nResumed/100)")
     val rowsBefore = probe()
-    val ((fb, fa), compactSec) = time(
+    val ((fb, fa), compactSec) = timed(
       graft.sources.ArtifactCompaction.compactFiles(spark, out, targetFiles = 4))
     require(probe() == rowsBefore, "compaction changed probe results")
     graft.plans.CheckpointHygiene.free(emb, drift, q)
@@ -518,12 +489,7 @@ object AnnProbe {
     * Run: sbt "runMain graft.AnnProbe pcalifecycle"
     */
   private def pcaLifecycle(): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     // rank-4 signal in 64 dims, deterministic per id; generation A and
     // the DRIFTED generation B use disjoint direction sets, B at 2x
     // amplitude (the new data dominates variance but lives outside
@@ -553,17 +519,17 @@ object AnnProbe {
     val probes = spark.range(32).select((col("id") + 5000000L).as("vec_id"),
       mkGen(dirsB, 2.0)(col("id") + 5000000L).as("embedding")).localCheckpoint()
     val out = java.nio.file.Files.createTempDirectory("pca_lifecycle").toString + "/idx"
-    val (_, writeSec) = time(Similarity.pcaIvfPqIndexWrite(genA, out,
+    val (_, writeSec) = timed(Similarity.pcaIvfPqIndexWrite(genA, out,
       dim = 64, outDim = 16, trainSample = 65536, trainQuantizers = true))
-    val ((s0, f0), audit0Sec) = time(
+    val ((s0, f0), audit0Sec) = timed(
       Similarity.pcaCaptureAudit(genA, out, trainSample = 65536))
     // drift lands through the STALE rotation — the degradation the
     // quantizer audits cannot see
-    val (_, driftAppendSec) = time(Similarity.annAppendAt(genB, out))
+    val (_, driftAppendSec) = timed(Similarity.annAppendAt(genB, out))
     val grown = genA.unionByName(genB).localCheckpoint()
-    val ((s1, f1), auditSec) = time(
+    val ((s1, f1), auditSec) = timed(
       Similarity.pcaCaptureAudit(grown, out, trainSample = 65536))
-    val (needs, _) = time(
+    val (needs, _) = timed(
       Similarity.pcaNeedsRebuild(grown, out, trainSample = 65536))
     val exact = Similarity.topKCosine(grown, probes, 5).localCheckpoint()
     def refRecall(): Double =
@@ -571,17 +537,17 @@ object AnnProbe {
           Similarity.annRefineAt(spark, out, grown, probes, k = 5,
             rerank = 64), 5)
         .agg(avg(col("recall"))).collect()(0).getDouble(0)
-    val (recBefore, _) = time(refRecall())
-    val (report, rebuildSec) = time(Similarity.pcaIvfPqRebuild(grown, out,
+    val (recBefore, _) = timed(refRecall())
+    val (report, rebuildSec) = timed(Similarity.pcaIvfPqRebuild(grown, out,
       trainSample = 65536, recallQueries = Some(probes), minRecallRatio = 0.0))
-    val ((s2, f2), _) = time(
+    val ((s2, f2), _) = timed(
       Similarity.pcaCaptureAudit(grown, out, trainSample = 65536))
-    val (needsAfter, _) = time(
+    val (needsAfter, _) = timed(
       Similarity.pcaNeedsRebuild(grown, out, trainSample = 65536))
-    val (recAfter, _) = time(refRecall())
+    val (recAfter, _) = timed(refRecall())
     val resume = genB.limit(100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
-    val (nResumed, resumeSec) = time(Similarity.annAppendAt(resume, out))
+    val (nResumed, resumeSec) = timed(Similarity.annAppendAt(resume, out))
     require(nResumed == 100,
       s"resume batch collided with existing ids (admitted $nResumed/100)")
     graft.plans.CheckpointHygiene.free(genA, genB, grown, probes, exact)
@@ -607,12 +573,7 @@ object AnnProbe {
     */
   private def pcaProbe(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -652,7 +613,7 @@ object AnnProbe {
       val full = s"$base/$tag-full"; val pca = s"$base/$tag-pca32"
       // TRAINED quantizers on both sides (the production posture) so
       // the measured delta is the projection, not the untrained floor
-      val (_, fullBuild) = time {
+      val (_, fullBuild) = timed {
         val c = Similarity.kmeansCentroids(corpus, k = 16, iters = 2, dim = 64,
           trainSample = 65536, seedFromData = true)
         val cb = Similarity.pqLearnedCodebooks(corpus, dim = 64, m = 8, codes = 16,
@@ -660,12 +621,12 @@ object AnnProbe {
         Similarity.ivfPqIndexWrite(corpus, full, dim = 64,
           centroids = Some(c), codebooks = Some(cb))
       }
-      val (_, pcaBuild) = time(Similarity.pcaIvfPqIndexWrite(corpus, pca,
+      val (_, pcaBuild) = timed(Similarity.pcaIvfPqIndexWrite(corpus, pca,
         dim = 64, outDim = 32, trainSample = 65536, trainQuantizers = true))
       // the storage-halving variant PCA enables: 4 subspaces over the
       // 32 projected dims = 4 code bytes/vec vs the full-dim 8
       val pcaM4 = s"$base/$tag-pca32m4"
-      val (_, m4Build) = time(Similarity.pcaIvfPqIndexWrite(corpus, pcaM4,
+      val (_, m4Build) = timed(Similarity.pcaIvfPqIndexWrite(corpus, pcaM4,
         dim = 64, outDim = 32, m = 4, trainSample = 65536, trainQuantizers = true))
       val fullSec = min2(
         Similarity.annRefineAt(spark, full, corpus, queries, k = 5).count())
@@ -711,12 +672,7 @@ object AnnProbe {
     */
   private def opqLadder(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -738,7 +694,7 @@ object AnnProbe {
             queries: org.apache.spark.sql.DataFrame): String = {
       val pq = s"$base/$tag-pq"; val opq = s"$base/$tag-opq"
       val opqi = s"$base/$tag-opqi"
-      val (_, pqBuild) = time {
+      val (_, pqBuild) = timed {
         val c = Similarity.kmeansCentroids(corpus, k = 16, iters = 2, dim = 64,
           trainSample = 65536, seedFromData = true)
         val cb = Similarity.pqLearnedCodebooks(corpus, dim = 64, m = 8, codes = 16,
@@ -746,11 +702,11 @@ object AnnProbe {
         Similarity.ivfPqIndexWrite(corpus, pq, dim = 64,
           centroids = Some(c), codebooks = Some(cb))
       }
-      val (_, opqBuild) = time(Similarity.opqIvfPqIndexWrite(corpus, opq,
+      val (_, opqBuild) = timed(Similarity.opqIvfPqIndexWrite(corpus, opq,
         dim = 64, trainSample = 65536))
       // the iterative rung: Ge et al. non-parametric refinement at the
       // SAME byte budget, 2 alternating rounds from the OPQ_P start
-      val (_, opqiBuild) = time(Similarity.opqIvfPqIndexWrite(corpus, opqi,
+      val (_, opqiBuild) = timed(Similarity.opqIvfPqIndexWrite(corpus, opqi,
         dim = 64, trainSample = 65536, refineIters = 2))
       val pqSec = min2(
         Similarity.annRefineAt(spark, pq, corpus, queries, k = 5).count())
@@ -797,11 +753,7 @@ object AnnProbe {
     */
   private def pqRecall(args: Array[String]): Unit = {
     val trainSample = if (args.nonEmpty) args(0).toInt else 0
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 8)
@@ -839,10 +791,7 @@ object AnnProbe {
     val dim = if (args.nonEmpty) args(0).toInt else 1024
     val trainRows = if (args.length > 1) args(1).toInt else 4096
     val projRows = if (args.length > 2) args(2).toInt else 100000
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
     def synth(n: Int): org.apache.spark.sql.DataFrame =
       spark.range(n).select(col("id").as("vec_id"),
@@ -852,10 +801,10 @@ object AnnProbe {
           "(CAST(hash(id, d) AS DOUBLE) / 2147483647.0) * pow(2.0, -CAST(d AS DOUBLE) / 256.0)" +
           " AS FLOAT))").as("embedding"))
     val train = synth(trainRows).localCheckpoint()
-    val (cov, covSec) = time(Similarity.covarianceMatrix(train, dim))
-    val ((_, eigRows), eigSec) = time(Similarity.jacobiEigen(cov))
+    val (cov, covSec) = timed(Similarity.covarianceMatrix(train, dim))
+    val ((_, eigRows), eigSec) = timed(Similarity.jacobiEigen(cov))
     val proj = synth(projRows).localCheckpoint()
-    val (_, projSec) = time(
+    val (_, projSec) = timed(
       Similarity.pcaProject(proj, eigRows.take(dim / 4))
         .agg(count(lit(1))).collect())
     println(s"""{"dim":$dim,"train_rows":$trainRows,"proj_rows":$projRows,""" +

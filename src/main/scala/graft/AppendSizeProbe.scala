@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the r12 watch item the sized appends close: a winner-store
@@ -20,11 +19,7 @@ object AppendSizeProbe {
   def main(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 100
     val targetMb = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs0 = spark.read.parquet(s"$dir/documents.parquet")
 
@@ -50,10 +45,8 @@ object AppendSizeProbe {
       val walls = (1 to 2).map { _ =>
         val p = new org.apache.hadoop.fs.Path(out)
         p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-        val t0 = System.nanoTime()
-        batch.coalesce(n).write.mode("overwrite")
-          .option("compression", "zstd").parquet(out)
-        (System.nanoTime() - t0) / 1e9
+        GraftSession.timed(batch.coalesce(n).write.mode("overwrite")
+          .option("compression", "zstd").parquet(out))._2
       }
       val w = walls.min
       println(f"""{"write":"$label","files":$n,"sec":$w%.3f}""")

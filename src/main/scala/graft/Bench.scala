@@ -11,11 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder()
       // the generated-class cache (static conf) holds 100 entries by
       // default; a 137-query surface cycles it completely each pass, so
       // EVERY query in a full run recompiles + reloads + re-JITs its
@@ -27,18 +23,15 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // AQE sizes every post-shuffle stage by coalescing DOWN from the
       // initial partition count — but that initial count defaults to
-      // spark.sql.shuffle.partitions (32 here), so a 10x-scale soak
-      // shuffle gets 32 sort buffers and spills (measured: q_setsim_join
-      // 19x on 10x data at /tmp/sf10; ~1e9 candidate rows through
-      // 32 partitions). Start shuffles wide and let AQE coalesce small
+      // spark.sql.shuffle.partitions (one per core), so a 10x-scale soak
+      // shuffle gets one sort buffer per core and spills (measured at
+      // local[32]: q_setsim_join 19x on 10x data, ~1e9 candidate rows
+      // through 32 partitions). Start shuffles wide and let AQE coalesce small
       // ones back to a few partitions — exactly how a production job
       // sizes itself; small-query overhead is unchanged (coalesced),
       // big shuffles stop spilling.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // straggler armor: this box shows rare single-task stalls from
       // host-level page management (zero GC, thread parked 10-40 s —
       // see PLANS.md). The heap is pre-touched (build.sbt); speculation
@@ -238,13 +231,12 @@ object Bench {
 
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err =
+      val (err, dt) = GraftSession.timed {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable =>
           Some(e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("").take(160))
         }
-      val dt = (System.nanoTime() - t0) / 1e9
+      }
       // free checkpoint blocks the query left behind — outside the
       // timed region; accumulation across the run drags GC
       graft.plans.CheckpointHygiene.releaseAll(spark)

@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.{StreamingCuration, StreamingCurationFull,
   StreamingDecontaminate, StreamingSemDecontaminate}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Restart-under-checkpoint soak of the COUNTED curation chain — the
@@ -38,13 +37,7 @@ object CurationRestartProbe {
     val delRate = if (args.length > 2) args(2).toInt else 64
     require(stopAfter > 2 && stopAfter < nBatches,
       s"stopAfter must split the soak (2 < $stopAfter < $nBatches)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -78,9 +78,7 @@ object ExvcDemo {
 
     // persistence + merge-from-file (OP-19) through Spark parquet
     locally {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = GraftSession.local()
       val dir = java.nio.file.Files.createTempDirectory("graft-demo").toString
       g.nstates.update("", merged)
       graft.sources.GraphStore.save(spark, g, s"$dir/session")

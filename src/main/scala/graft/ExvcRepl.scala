@@ -3,7 +3,6 @@ package graft
 import graft.core._
 import graft.exvc._
 import graft.sources.GraphStore
-import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.{SortedMap, SortedSet}
 
 /** The interactive editor REPL — the reference's user-facing surface
@@ -30,8 +29,7 @@ import scala.collection.immutable.{SortedMap, SortedSet}
 object ExvcRepl {
   def main(args: Array[String]): Unit = {
     val path = args.headOption
-    lazy val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    lazy val spark = GraftSession.local()
 
     val g: EventGraph[Command] = path match {
       case Some(p) if new java.io.File(s"$p/events").exists() =>

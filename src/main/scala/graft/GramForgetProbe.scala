@@ -1,15 +1,15 @@
 package graft
 
 import graft.streaming.StreamingSubstringDedup
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.timed
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the two gram-index rights-removal strategies:
   * REBUILD (plain distinct-hash index re-derived from the surviving
   * corpus — O(corpus)) vs DECREMENT (counted owner-count delta log,
   * -counts from the deleted docs' own texts — O(deleted docs)). The
-  * `copies` arg entity-grows the corpus (disjoint token prefixes, the
-  * CurationStreamProbe convention) so the 1× vs N× pair shows which
+  * `copies` arg entity-grows the corpus (disjoint token prefixes per
+  * copy, the AppendSizeProbe convention) so the 1× vs N× pair shows which
   * wall grows with the corpus and which stays flat; the probe also
   * proves both strategies land on the SAME live gram set (bidirectional
   * anti-join count 0) before reporting.
@@ -21,11 +21,7 @@ object GramForgetProbe {
   def main(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 10
     val delDocs = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,12 +44,9 @@ object GramForgetProbe {
     val plain = s"$base/plain"
     val counted = s"$base/counted"
     docs.write.parquet(store)
-    def time[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
-    val (_, buildPlain) = time(
+    val (_, buildPlain) = timed(
       StreamingSubstringDedup.appendToIndex(docs, "text", "doc_id", plain, k = 8))
-    val (_, buildCounted) = time(
+    val (_, buildCounted) = timed(
       StreamingSubstringDedup.appendToIndexCounted(docs, "text", "doc_id",
         counted, k = 8, stampId = 0L))
 
@@ -72,12 +65,12 @@ object GramForgetProbe {
       .localCheckpoint()
 
     // DECREMENT: O(deleted docs' text)
-    val (_, decSec) = time(StreamingSubstringDedup.decrementCounted(
+    val (_, decSec) = timed(StreamingSubstringDedup.decrementCounted(
       deleted, "text", "doc_id", counted, stampId = -1L))
     // REBUILD: O(corpus)
     val surviving = spark.read.parquet(store)
       .filter(!col("doc_id").isin(ids.map(java.lang.Long.valueOf): _*))
-    val ((_, rebuiltRows), rebSec) = time(StreamingSubstringDedup.rebuildIndex(
+    val ((_, rebuiltRows), rebSec) = timed(StreamingSubstringDedup.rebuildIndex(
       spark, plain, surviving, "text", "doc_id"))
 
     // both strategies must land on the same live set
@@ -107,7 +100,7 @@ object GramForgetProbe {
       val frame = spark.read.parquet(store)
         .filter(col("doc_id").isin(set.map(java.lang.Long.valueOf): _*))
         .localCheckpoint()
-      val (n, sec) = time(StreamingSubstringDedup.decrementCounted(
+      val (n, sec) = timed(StreamingSubstringDedup.decrementCounted(
         frame, "text", "doc_id", counted, stampId = stamp))
       (n, sec)
     }
@@ -115,7 +108,7 @@ object GramForgetProbe {
     val logPre = rowsAt(counted)
     val (_, decPreSec) = removalOf(ids2, -2L)
     val ((logB, logA), compactSec) =
-      time(StreamingSubstringDedup.compactCounted(spark, counted))
+      timed(StreamingSubstringDedup.compactCounted(spark, counted))
     val regPost = rowsAt(s"$counted/_docs")
     val (_, decPostSec) = removalOf(ids3, -3L)
     // truth preserved through removal -> compact -> removal: the live

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.operators.Sketches
 
 /** Scale probe for the KMV artifact path: builds the k-row sketch
@@ -14,19 +13,16 @@ import graft.operators.Sketches
   */
 object KmvProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = GraftSession.builder()
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_KMV_OUT", "/tmp/kmv_artifact")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def tms[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"STAGE $name%-16s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
+      val (r, sec) = GraftSession.timed(f); println(f"STAGE $name%-16s $sec%8.2f s"); r
     }
     // nightly job: build + persist the artifact (one corpus scan)
     tms("sketch_build") {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.operators.Multimodal
 
 /** Scale probe for the multimodal/media family — the one operator
@@ -23,23 +22,14 @@ import graft.operators.Multimodal
 object MediaProbe {
   def main(args: Array[String]): Unit = {
     val nImages = if (args.nonEmpty) args(0).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val nDocs = docs.count()
-    def time(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // min-of-2: pass 1 carries codegen/JIT for the codec classes
-    def min2(f: => Unit): Double = Seq(time(f), time(f)).min
+    def min2(f: => Unit): Double = Seq(GraftSession.timed(f)._2, GraftSession.timed(f)._2).min
     val decodeSec = min2(noop(Multimodal.extractFeatures(
       Multimodal.withMediaPayload(docs, "text", "doc_id"), "doc_id")))
     val transformSec = min2(noop(Multimodal.extractFeatures(

@@ -3,8 +3,8 @@ package graft
 import graft.operators.{Dedup, Sketches}
 import graft.sources.DeltaLogCompaction
 import graft.streaming.StreamingCms
+import graft.GraftSession.timed
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** Scale probe for the two sum-merged-sketch rights-removal
   * strategies: REBUILD (re-derive the whole CMS counter log from the
@@ -24,11 +24,7 @@ object RetractProbe {
   def main(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 10
     val delDocs = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,9 +44,6 @@ object RetractProbe {
     val (d, w) = (4, 4096)
 
     val base = java.nio.file.Files.createTempDirectory("retractprobe").toString
-    def timed[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     def tokens(df: org.apache.spark.sql.DataFrame) =
       df.select(explode(Dedup.tokens(col("text"))).as("word"))
 

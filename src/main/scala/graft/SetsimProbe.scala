@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SetSimJoin
 
@@ -14,20 +13,17 @@ import graft.operators.SetSimJoin
   */
 object SetsimProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = GraftSession.builder()
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // the q_setsim_join parameters (tau = 19/20)
     val tauNum = 19; val tauDen = 20
     def tms[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"STAGE $name%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
+      val (r, sec) = GraftSession.timed(f); println(f"STAGE $name%-12s $sec%8.2f s"); r
     }
     val tok = tms("tok") {
       SetSimJoin.tokStage(docs, "text", "doc_id").localCheckpoint()

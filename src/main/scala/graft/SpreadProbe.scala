@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Scratch probe: the spread armor's cost shape on a multi-split
   * (production-shaped) input vs the single-row-group testdata file.
   */
 object SpreadProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     def run(tag: String, path: String): Unit = {
       val d = spark.read.parquet(path)
       println(s"$tag scan partitions: " + d.rdd.getNumPartitions +

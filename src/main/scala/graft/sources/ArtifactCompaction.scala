@@ -32,8 +32,9 @@ import org.apache.spark.sql.SparkSession
   * estimate that lists the artifact in the window between them sees
   * the path MISSING — not stale data, a hard read failure. Schedule
   * compaction from the same loop that owns all access to the artifact
-  * (the CurationStreamProbe pattern: after `query.stop()`), exactly
-  * like any table-maintenance OPTIMIZE window.
+  * ([[ArtifactMaintainer]]'s `maintain` window, after `query.stop()`,
+  * which perfbench's stream-curation workload drives), exactly like
+  * any table-maintenance OPTIMIZE window.
   */
 object ArtifactCompaction {
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession.timed
 import graft.operators.{Curation, Dedup, Similarity}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -204,7 +205,9 @@ object StreamingCurationFull {
     * derivation). With it, an at-least-once retry of a batch id leaves
     * the band index and the gram log row-identical to a single run, and
     * the batch_id-stamped logs (winners, survivors, spans) re-appended,
-    * which their readers dedupe by stamp. The plain index
+    * which their readers dedupe by stamp. A plain-index retry leaves the
+    * same rows, but writes no spans when its stamp already has some
+    * (its probe would find its first attempt's grams). The plain index
     * remains for LEGACY stateDirs whose gram artifact predates stamps —
     * their removal path is the rebuild-from-surviving-corpus verb. The
     * default stays `false` only so existing deployments never flip
@@ -377,30 +380,32 @@ object StreamingCurationFull {
       // -- stage 5: substring-span dedup vs the persisted gram
       // index; survivors' grams admitted after
       val (_, tSub) = timed {
-        // the index is consumed straight off parquet — a
-        // localCheckpoint here would copy the WHOLE (growing)
-        // index into executor memory every batch, turning an O(1)
-        // stage into O(history); the span write happens before
-        // the append, so the join never reads a path being
-        // appended to. The counted probe leaves out rows already
-        // logged under this batch's stamp (a retry's first attempt).
-        val gIdx =
-          if (countedGrams)
-            StreamingSubstringDedup.countedLiveBefore(spark, gramIdxPath, substrK, batchId)
-          else StreamingSubstringDedup.indexFor(spark, gramIdxPath, substrK)
-        // the span frame carries kept_text (near-full document
-        // text per survivor), so it is sized by its own bytes, off
-        // a checkpoint the scoped sweep frees
-        val spans = Curation.substringDedupAgainstIndex(
-            gIdx, fin, "text", "doc_id", k = substrK)
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint()
-        val spanBytes = spans
-          .agg(coalesce(
-            sum(octet_length(col("kept_text")).cast("long") + lit(64L)),
-            lit(0L)))
-          .collect()(0).getLong(0)
-        appendSpans(spans, spanBytes)
+        if (!plainRetry(spark, batchId)) {
+          // the index is consumed straight off parquet — a
+          // localCheckpoint here would copy the WHOLE (growing)
+          // index into executor memory every batch, turning an O(1)
+          // stage into O(history); the span write happens before
+          // the append, so the join never reads a path being
+          // appended to. The counted probe leaves out rows already
+          // logged under this batch's stamp (a retry's first attempt).
+          val gIdx =
+            if (countedGrams)
+              StreamingSubstringDedup.countedLiveBefore(spark, gramIdxPath, substrK, batchId)
+            else StreamingSubstringDedup.indexFor(spark, gramIdxPath, substrK)
+          // the span frame carries kept_text (near-full document
+          // text per survivor), so it is sized by its own bytes, off
+          // a checkpoint the scoped sweep frees
+          val spans = Curation.substringDedupAgainstIndex(
+              gIdx, fin, "text", "doc_id", k = substrK)
+            .withColumn("batch_id", lit(batchId))
+            .localCheckpoint()
+          val spanBytes = spans
+            .agg(coalesce(
+              sum(octet_length(col("kept_text")).cast("long") + lit(64L)),
+              lit(0L)))
+            .collect()(0).getLong(0)
+          appendSpans(spans, spanBytes)
+        }
         if (countedGrams)
           // ownership stamped with the (checkpoint-stable)
           // micro-batch id — the at-least-once retry seam; a
@@ -548,8 +553,9 @@ object StreamingCurationFull {
           val kept = t.indices.filterNot(i => covered(i)).map(t)
           (d.id, t.length.toLong, (t.length - kept.length).toLong, kept.mkString(" "), batchId)
         }
-        appendSpans(spans.toDF("doc_id", "n_tokens", "n_removed", "kept_text", "batch_id"),
-          spans.iterator.map(s => utf8Bytes(s._4) + 64L).sum)
+        if (!plainRetry(spark, batchId))
+          appendSpans(spans.toDF("doc_id", "n_tokens", "n_removed", "kept_text", "batch_id"),
+            spans.iterator.map(s => utf8Bytes(s._4) + 64L).sum)
         if (countedGrams) {
           val registered = StreamingSubstringDedup.netRows(
               scanMatching(spark, StreamingSubstringDedup.docsRegistryPath(gramIdxPath),
@@ -581,6 +587,17 @@ object StreamingCurationFull {
         .sortWithinPartitions("doc_id")
         .write.mode("append")
         .option("compression", "zstd").parquet(winnersPath)
+
+    /** Whether this is a plain-index retry of a batch whose spans are
+      * already logged under its stamp. The plain index has no stamps,
+      * so the retry's probe would find the first attempt's grams and
+      * trim every window; the logged spans stand instead. The counted
+      * probe leaves its own stamp out, so a counted retry never asks.
+      */
+    private def plainRetry(spark: SparkSession, batchId: Long): Boolean =
+      !countedGrams && graft.sources.ArtifactFiles.hasDataFiles(spark, spansPath) &&
+        !spark.read.schema(SpanStampSchema).parquet(spansPath)
+          .filter(col("batch_id") === batchId).isEmpty
 
     private def appendSpans(spans: DataFrame, spanBytes: Long): Unit =
       spans.coalesce(fileCount(spanBytes, targetAppendBytes))
@@ -685,6 +702,7 @@ object StreamingCurationFull {
   private val WinnerSchema = StructType(Seq(StructField("doc_id", LongType),
     StructField("text", StringType), StructField("batch_id", LongType)))
   private val PlainGramSchema = StructType(Seq(StructField("h", LongType)))
+  private val SpanStampSchema = StructType(Seq(StructField("batch_id", LongType)))
   private def DeltaSchema(key: String) = StructType(Seq(StructField(key, LongType),
     StructField("delta", LongType), StructField("batch_id", LongType)))
 
@@ -721,8 +739,4 @@ object StreamingCurationFull {
 
   private def utf8Bytes(s: String): Long =
     if (s == null) 0L else UTF8String.fromString(s).numBytes().toLong
-
-  private def timed[T](f: => T): (T, Double) = {
-    val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-  }
 }

@@ -125,14 +125,7 @@ object StreamingIngest {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_stream_ingest"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val (nBatches, missing, mismatched) = runAndCompare(spark, sfDir, workDir)
     if (missing == 0 && mismatched == 0 && nBatches >= 2)
       println(s"STREAM-INGEST-OK batches=$nBatches")

@@ -11,8 +11,9 @@ import scala.collection.immutable.{SortedMap, SortedSet}
   * a regression there (an extra minimization round per shelve, a
   * dropped deferral, re-testing settled deps) shows up as a count
   * blow-up long before a wall-clock probe could attribute it. The
-  * width-rung WALLS live in PLANS.md (ShelveProbe / `frontier` mode);
-  * this spec pins the structure those walls depend on.
+  * shelve-round walls are measured by perfbench's esvc workloads
+  * (`plans.shelve.*`); this spec pins the structure those walls
+  * depend on.
   */
 class ShelveEnvelopeSpec extends AnyFunSuite {
 
@@ -40,8 +41,8 @@ class ShelveEnvelopeSpec extends AnyFunSuite {
     (nRounds, nTests)
   }
 
-  /** One shelve against a pre-built W-wide independent frontier (the
-    * ShelveProbe `frontier` rung at spec scale); returns
+  /** One shelve against a pre-built W-wide independent frontier (a
+    * width rung at spec scale); returns
     * (rounds, tests) for that single shelve.
     */
   private def frontierCounts(w: Int): (Long, Long) = {

@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.immutable.{ArraySeq, SortedMap, SortedSet}
 
 trait SharedSpark extends BeforeAndAfterAll { this: org.scalatest.Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
   override protected def afterAll(): Unit = { /* shared session, keep alive */ }
 }
 
