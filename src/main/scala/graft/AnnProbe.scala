@@ -49,29 +49,24 @@ object AnnProbe {
     // "learned" as 3rd arg: kmeans-trained centroids (the production
     // posture) instead of the oracle-parity salted defaults
     val learned = args.length > 2 && args(2) == "learned"
-    val t0 = System.nanoTime()
     val trainSample = if (args.length > 3) args(3).toInt else 0
     val iters = sys.env.getOrElse("SPARK_GRAFT_KM_ITERS", "2").toInt
-    val cents =
+    val (cents, trainSec) = timed(
       if (learned) Some(Similarity.kmeansCentroids(emb, k = lists, iters = iters, dim = 64,
         trainSample = trainSample))
-      else None
-    val tTrain = System.nanoTime()
-    val n = Similarity.annIvf(emb, emb.filter(col("vec_id") < 8), k = 5,
-      dim = 64, lists = lists, nprobe = nprobe, centroids = cents).count()
-    val sec = (System.nanoTime() - tTrain) / 1e9
-    println(s"""{"dir":"$dir","lists":$lists,"nprobe":$nprobe,"learned":$learned,"iters":$iters,"train_sample":$trainSample,"rows":$n,"train_sec":${(tTrain - t0) / 1e9},"probe_sec":$sec}""")
+      else None)
+    val (n, sec) = timed(Similarity.annIvf(emb, emb.filter(col("vec_id") < 8), k = 5,
+      dim = 64, lists = lists, nprobe = nprobe, centroids = cents).count())
+    println(s"""{"dir":"$dir","lists":$lists,"nprobe":$nprobe,"learned":$learned,"iters":$iters,"train_sample":$trainSample,"rows":$n,"train_sec":$trainSec,"probe_sec":$sec}""")
     if (sys.env.contains("SPARK_GRAFT_ANN_DIAG")) {
       // stage decomposition: assignment-only scan vs candidate volume
-      val t1 = System.nanoTime()
       val listCol =
         if (learned) Similarity.assignClCol(cents.get)(col("embedding"))
         else Similarity.ivfAssignUdf(dim = 64, lists = lists)(col("embedding"))
-      val hist = emb
+      val (hist, assignSec) = timed(emb
         .withColumn("list_id", listCol)
-        .groupBy("list_id").count().collect().map(r => r.getLong(1)).sorted.reverse
-      val t2 = System.nanoTime()
-      println(s"""{"assign_sec":${(t2 - t1) / 1e9},"top_lists":${hist.take(8).mkString("[", ",", "]")},"n_lists_used":${hist.length}}""")
+        .groupBy("list_id").count().collect().map(r => r.getLong(1)).sorted.reverse)
+      println(s"""{"assign_sec":$assignSec,"top_lists":${hist.take(8).mkString("[", ",", "]")},"n_lists_used":${hist.length}}""")
     }
     spark.stop()
   }
@@ -105,11 +100,12 @@ object AnnProbe {
             Some(Similarity.pqLearnedCodebooks(emb, dim = 64, iters = 2,
               trainFraction = 0.25)))
     // (a) the index build, paid once per index lifetime
-    val t0 = System.nanoTime()
-    val (cents, cbs) = train()
-    Similarity.ivfPqIndex(emb, dim = 64, centroids = cents, codebooks = cbs)
-      .write.mode("overwrite").parquet(out)
-    val buildSec = (System.nanoTime() - t0) / 1e9
+    val ((cents, cbs), buildSec) = timed {
+      val (cents, cbs) = train()
+      Similarity.ivfPqIndex(emb, dim = 64, centroids = cents, codebooks = cbs)
+        .write.mode("overwrite").parquet(out)
+      (cents, cbs)
+    }
     val artifactBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
       .filter(p => p.toString.endsWith(".parquet")).mapToLong(p => p.toFile.length).sum()
     val corpusBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
@@ -160,7 +156,7 @@ object AnnProbe {
     */
   /** SQ8 vs PQ vs residual-PQ at a grown corpus, all three in the
     * PRODUCTION posture: one shared data-seeded learned coarse
-    * quantizer (trainFraction-bounded, what ivfPqRebuild installs),
+    * quantizer (trainFraction-bounded, what annRebuildAt installs),
     * learned PQ codebooks, and residual codebooks trained ON residuals
     * (the Faiss coarse-first order). An earlier cut of this probe used
     * the untrained salted-constant codebooks and measured PQ recall@5
@@ -193,7 +189,7 @@ object AnnProbe {
       Option(d.listFiles).map(_.map(f => if (f.isFile) f.length else 0L).sum).getOrElse(0L)
     }
     // ONE shared coarse quantizer for all three artifacts (the trade
-    // under test is the FINE encoding), trained the way ivfPqRebuild
+    // under test is the FINE encoding), trained the way annRebuildAt
     // trains: data-seeded, sample-bounded
     val (cents, centsSec) = timed(Similarity.kmeansCentroids(emb, k = 16, iters = 2,
       dim = 64, trainFraction = 0.05, seedFromData = true))
@@ -302,7 +298,7 @@ object AnnProbe {
       timed(Similarity.ivfPqIndexAppend(
         emb.filter(col("vec_id") % 10 === s), out, dim = 64))._2
     }
-    val (needs, auditSec) = timed(Similarity.ivfPqNeedsRebuild(spark, out))
+    val (needs, auditSec) = timed(Similarity.annNeedsRebuild(spark, out, emb).isDefined)
     val q = emb.filter(col("vec_id") < 8)
     def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeSec = (1 to 2).map(_ => timed(probe())._2).min
@@ -311,10 +307,9 @@ object AnnProbe {
     // (rows + ADC recall vs exact-dot ground truth), atomic swap with
     // the header re-stamped; the header-only probe keeps answering
     // afterwards without the caller learning anything new
-    val (report, rebuildSec) = timed(Similarity.ivfPqRebuild(emb, out,
-      kmIters = 2, pqIters = 2, trainFraction = 0.25,
-      recallQueries = Some(q), k = 5, nprobe = 4))
-    val (needsAfter, _) = timed(Similarity.ivfPqNeedsRebuild(spark, out))
+    val (report, rebuildSec) = timed(Similarity.annRebuildAt(emb, out,
+      Similarity.RebuildPolicy(trainFraction = 0.25, recallQueries = Some(q))))
+    val (needsAfter, _) = timed(Similarity.annNeedsRebuild(spark, out, emb).isDefined)
     // ingest RESUMES across the rebuild through the header-driven
     // appender — it adopts the retrained quantizers from the artifact
     // itself, no re-configuration of the maintainer
@@ -412,7 +407,7 @@ object AnnProbe {
   /** The SQ8 maintenance loop end to end, timed — the `lifecycle`
     * probe for the scalar encoding, with the drift the SQ audit
     * exists for: in-bounds appends ride the header, an OUT-OF-SPAN
-    * batch rail-clamps, `ivfSqNeedsRebuild` trips on saturation, the
+    * batch rail-clamps, `annNeedsRebuild` trips on saturation, the
     * rebuild retrains bounds (unclamping) + data-seeded centroids and
     * swaps, ingest resumes through the header-driven appender, and
     * compaction preserves probe results.
@@ -441,18 +436,17 @@ object AnnProbe {
     val (_, driftAppendSec) = timed(Similarity.annAppendAt(drift, out))
     val (satMax, satSec) = timed(Similarity.ivfSqSaturation(spark, out)
       .agg(max(col("sat_pm"))).collect()(0).getLong(0))
-    val (needs, auditSec) = timed(Similarity.ivfSqNeedsRebuild(spark, out))
+    val corpus = emb.filter(col("vec_id") % 10 =!= 9).unionByName(drift)
+    val (needs, auditSec) = timed(Similarity.annNeedsRebuild(spark, out, corpus).isDefined)
     val q = emb.filter(col("vec_id") < 8).select(col("vec_id"), shifted)
       .localCheckpoint()
     def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeSec = (1 to 2).map(_ => timed(probe())._2).min
-    val (report, rebuildSec) = timed(Similarity.ivfSqRebuild(
-      emb.filter(col("vec_id") % 10 =!= 9).unionByName(drift), out,
-      kmIters = 2, trainFraction = 0.25,
-      recallQueries = Some(q), k = 5, nprobe = 4))
+    val (report, rebuildSec) = timed(Similarity.annRebuildAt(corpus, out,
+      Similarity.RebuildPolicy(trainFraction = 0.25, recallQueries = Some(q))))
     val (satAfter, _) = timed(Similarity.ivfSqSaturation(spark, out)
       .agg(max(col("sat_pm"))).collect()(0).getLong(0))
-    val (needsAfter, _) = timed(Similarity.ivfSqNeedsRebuild(spark, out))
+    val (needsAfter, _) = timed(Similarity.annNeedsRebuild(spark, out, corpus).isDefined)
     // ingest resumes through the header: the appender adopts the
     // RETRAINED bounds from the artifact itself (1e10 offset — above
     // any entity-copy range, the lifecycle-probe convention)
@@ -529,8 +523,10 @@ object AnnProbe {
     val grown = genA.unionByName(genB).localCheckpoint()
     val ((s1, f1), auditSec) = timed(
       Similarity.pcaCaptureAudit(grown, out, trainSample = 65536))
+    val basisDrift = Similarity.RebuildPolicy(trainSample = 65536,
+      rebuildPm = Long.MaxValue)
     val (needs, _) = timed(
-      Similarity.pcaNeedsRebuild(grown, out, trainSample = 65536))
+      Similarity.annNeedsRebuild(spark, out, grown, basisDrift).isDefined)
     val exact = Similarity.topKCosine(grown, probes, 5).localCheckpoint()
     def refRecall(): Double =
       Similarity.annRecall(exact,
@@ -538,12 +534,12 @@ object AnnProbe {
             rerank = 64), 5)
         .agg(avg(col("recall"))).collect()(0).getDouble(0)
     val (recBefore, _) = timed(refRecall())
-    val (report, rebuildSec) = timed(Similarity.pcaIvfPqRebuild(grown, out,
-      trainSample = 65536, recallQueries = Some(probes), minRecallRatio = 0.0))
+    val (report, rebuildSec) = timed(Similarity.annRebuildAt(grown, out,
+      basisDrift.copy(recallQueries = Some(probes), minRecallRatio = 0.0)))
     val ((s2, f2), _) = timed(
       Similarity.pcaCaptureAudit(grown, out, trainSample = 65536))
     val (needsAfter, _) = timed(
-      Similarity.pcaNeedsRebuild(grown, out, trainSample = 65536))
+      Similarity.annNeedsRebuild(spark, out, grown, basisDrift).isDefined)
     val (recAfter, _) = timed(refRecall())
     val resume = genB.limit(100)
       .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding"))
@@ -765,10 +761,8 @@ object AnnProbe {
       math.rint(r * 1000) / 1000
     }
     val salted = meanRecall(Similarity.annPq(emb, q, k = k, dim = 64))
-    val t0 = System.nanoTime()
-    val learnedCbs = Similarity.pqLearnedCodebooks(emb, dim = 64,
-      trainSample = trainSample)
-    val tTrain = (System.nanoTime() - t0) / 1e9
+    val (learnedCbs, tTrain) = timed(Similarity.pqLearnedCodebooks(emb, dim = 64,
+      trainSample = trainSample))
     val learned = meanRecall(Similarity.annPq(emb, q, k = k, dim = 64,
       codebooks = Some(learnedCbs)))
     println(s"""{"dir":"$dir","train_sample":$trainSample,"train_sec":$tTrain,"recall_salted":$salted,"recall_learned":$learned}""")

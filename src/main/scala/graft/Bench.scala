@@ -115,9 +115,8 @@ object Bench {
       def minWall(name: String): Double = {
         val fn = SparkEntry.queries(name)
         (1 to vsPasses).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (_, dt) = GraftSession.timed(
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save())
           graft.plans.CheckpointHygiene.releaseAll(spark)
           dt
         }.min

@@ -15,17 +15,17 @@ object CcRounds {
     val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val t0 = System.nanoTime()
-    val pairs = graft.operators.Dedup.nearDupPairs(
-        docs, "text", "doc_id", shingleN = 3, bands = 6, rows = 2, threshold = 0.4)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val nPairs = pairs.count()
-    val t1 = System.nanoTime()
-    val (labels, rounds) = graft.plans.GraphOps.connectedComponentsWithRounds(pairs)
-    val nNodes = labels.count()
-    val nComps = labels.select("comp").distinct().count()
-    val t2 = System.nanoTime()
-    println(s"""{"dir":"$dir","pairs":$nPairs,"nodes":$nNodes,"components":$nComps,"cc_rounds":$rounds,"pairs_sec":${(t1 - t0) / 1e9},"cc_sec":${(t2 - t1) / 1e9}}""")
+    val ((pairs, nPairs), pairsSec) = GraftSession.timed {
+      val p = graft.operators.Dedup.nearDupPairs(
+          docs, "text", "doc_id", shingleN = 3, bands = 6, rows = 2, threshold = 0.4)
+        .select(col("doc_a"), col("doc_b")).localCheckpoint()
+      (p, p.count())
+    }
+    val ((rounds, nNodes, nComps), ccSec) = GraftSession.timed {
+      val (labels, rounds) = graft.plans.GraphOps.connectedComponentsWithRounds(pairs)
+      (rounds, labels.count(), labels.select("comp").distinct().count())
+    }
+    println(s"""{"dir":"$dir","pairs":$nPairs,"nodes":$nNodes,"components":$nComps,"cc_rounds":$rounds,"pairs_sec":$pairsSec,"cc_sec":$ccSec}""")
     spark.stop()
   }
 }

@@ -19,13 +19,10 @@ object DecontamProbe {
     val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val t0 = System.nanoTime()
-    val out = Similarity.semanticContaminationLsh(
+    val (n, sec) = GraftSession.timed(Similarity.semanticContaminationLsh(
       emb.filter(col("vec_id") % 50 =!= 3),
       emb.filter(col("vec_id") % 50 === 3), threshold = 0.3, dim = 64,
-      planes = planes, tables = tables)
-    val n = out.count()
-    val sec = (System.nanoTime() - t0) / 1e9
+      planes = planes, tables = tables).count())
     println(s"""{"dir":"$dir","planes":$planes,"tables":$tables,"flagged":$n,"sec":$sec}""")
     spark.stop()
   }

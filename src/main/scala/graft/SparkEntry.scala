@@ -1043,7 +1043,7 @@ object SparkEntry {
     // the SQ-specific staleness AUDIT oracle-gated: per-dimension
     // rail-code counts over the grown artifact (appended values
     // outside the stored span clamp to 0/255 — the drift signal
-    // ivfSqNeedsRebuild polls), all-BIGINT algebra
+    // annNeedsRebuild polls), all-BIGINT algebra
     "q_ann_sq_saturation" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_sat", dir)
@@ -1364,7 +1364,7 @@ object SparkEntry {
 
     // the FULL index-maintenance lifecycle inside the correctness
     // gate: a salted-default artifact is written + stamped, then
-    // ivfPqRebuild retrains BOTH quantizers on the corpus with
+    // annRebuildAt retrains BOTH quantizers on the corpus with
     // DATA-DERIVED seeds (hash-order picks — the k-means++-style
     // init the rebuild path defaults to, because constant seeds
     // provably cannot subdivide drifted dense regions), re-encodes,
@@ -1375,7 +1375,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_rebuilt", dir)
       Similarity.ivfPqIndexWrite(emb, path, dim = 64) // stale: salted defaults
-      Similarity.ivfPqRebuild(emb, path, kmIters = 2, pqIters = 2)
+      Similarity.annRebuildAt(emb, path) // kmIters = pqIters = 2
       s.read.parquet(path)
         .select(col("vec_id"), col("list_id").cast("long").as("list_id"),
           posexplode(col("codes")))

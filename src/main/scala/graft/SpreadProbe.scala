@@ -10,10 +10,10 @@ object SpreadProbe {
       println(s"$tag scan partitions: " + d.rdd.getNumPartitions +
         ", spread partitions: " + graft.operators.Par.spread(d).rdd.getNumPartitions)
       (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        graft.operators.Sketches.kmvSetOps(d, "text", "source", k = 256, shingleN = 3)
-          .write.format("noop").mode("overwrite").save()
-        println(f"$tag pass $i: ${(System.nanoTime()-t0)/1e9}%.2f s")
+        val (_, sec) = GraftSession.timed(
+          graft.operators.Sketches.kmvSetOps(d, "text", "source", k = 256, shingleN = 3)
+            .write.format("noop").mode("overwrite").save())
+        println(f"$tag pass $i: $sec%.2f s")
       }
       graft.plans.CheckpointHygiene.releaseAll(spark)
     }

@@ -86,13 +86,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *        is ordinary SQL over the embeddings table; its admitted ids
   *        become the allowed set and the k-cut is taken within it
   *   REBUILD ANN INDEX IF NEEDED '<path>' FROM '<dir>'
-  *     -> ivfPqRebuildIfNeeded / ivfSqRebuildIfNeeded (header-kind
-  *        dispatch; the SQ audit adds bounds saturation): staleness
-  *        audit, then retrain/verify/swap only if tripped; a pcarot
-  *        artifact audits BASIS-first (capture drift — a tripped
-  *        basis rebuild retrains rotation AND quantizers), falling
-  *        through to the quantizer-balance audit over the corpus
-  *        PROJECTED through the stored rotation; returns
+  *     -> annRebuildIfNeeded over the raw corpus (the stored kind
+  *        picks the audit and the retrain: list balance for IVF-PQ;
+  *        bounds saturation, then balance, for SQ8; basis capture,
+  *        then balance, for a pcarot artifact — a drifted basis
+  *        retrains rotation AND quantizers, a tripped balance the
+  *        quantizers under the stored rotation): retrain/verify/swap
+  *        only if a signal trips; returns
   *        (rebuilt, rows_before, rows_after)
   *   DELETE FROM ANN INDEX '<path>' FROM '<dir>' WHERE <predicate>
   *     -> annIndexDeleteAt: the ids the predicate admits over the
@@ -437,32 +437,10 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
     case RebuildAnnIndex(path, dir) => wrapGraft(sqlText) {
       // the maintainer one-call: audit the persisted artifact's
       // staleness signals, retrain/re-encode/verify/swap only if one
-      // trips — dispatching on the stored header kind like PROBE
-      // (encoding is an artifact property, and the SQ audit adds the
-      // bounds-saturation signal PQ doesn't have)
+      // trips — the stored kind picks the audit and the retrain, like
+      // PROBE (encoding is an artifact property)
       import session.implicits._
-      import graft.operators.AnnLifecycle
-      val sim = graft.operators.Similarity
-      // a writer verb: repair a crashed swap before reading the kind
-      val rep = AnnLifecycle.writerEntry(session, path)(
-          AnnLifecycle.kindOf(session, path)) match {
-        case Some(AnnLifecycle.IvfSq) => sim.ivfSqRebuildIfNeeded(annCorpus(dir), path)
-        // a PCA artifact audits BASIS-first (capture drift — a basis
-        // rebuild retrains rotation AND quantizers); a healthy basis
-        // falls through to the quantizer-balance audit IN projection
-        // space under the stored rotation (that swap carries the
-        // pcarot sidecar). Legacy pcarot without a capture baseline
-        // skips the basis audit (pcaCaptureRestamp is the repair).
-        case Some(AnnLifecycle.PcaIvfPq) =>
-          val raw = annCorpus(dir)
-          val basis =
-            if (sim.pcaHasCaptureBaseline(session, path))
-              sim.pcaIvfPqRebuildIfNeeded(raw, path)
-            else None
-          basis.orElse(sim.ivfPqRebuildIfNeeded(
-            sim.pcaProject(raw, sim.pcaRotationAt(session, path)), path))
-        case _ => sim.ivfPqRebuildIfNeeded(annCorpus(dir), path)
-      }
+      val rep = graft.operators.Similarity.annRebuildIfNeeded(annCorpus(dir), path)
       Seq((rep.isDefined, rep.map(_.rowsBefore).getOrElse(-1L),
         rep.map(_.rowsAfter).getOrElse(-1L)))
         .toDF("rebuilt", "rows_before", "rows_after").queryExecution.logical

@@ -34,22 +34,28 @@ import org.apache.spark.sql.functions._
   *    re-create the index from one batch).
   *  - [[appendAt]] is the header-driven append: admission anti-join,
   *    write, post-write generation backstop.
-  *  - [[rebuild]] is the verify, recall-gate, carry and swap skeleton.
-  *    A verb supplies only its retrain + write-to-tmp ([[Retrain]]);
-  *    the [[Kind]] supplies the recall ground truth, and the gate
-  *    probes through [[Similarity.annProbeAt]].
+  *  - Each [[Kind]] also owns the two decisions a maintainer makes:
+  *    its staleness [[Kind.audit]] (the first tripped signal by name)
+  *    and its [[Kind.retrain]] (the rewrite that signal calls for).
+  *    [[Similarity.annNeedsRebuild]], [[Similarity.annRebuildAt]] and
+  *    [[Similarity.annRebuildIfNeeded]] dispatch on the stored kind,
+  *    and every one takes the RAW corpus.
+  *  - [[rebuild]] is the verify, recall-gate, carry and swap skeleton
+  *    around the kind's retrain; the [[Kind]] supplies the recall
+  *    ground truth, and the gate probes through
+  *    [[Similarity.annProbeAt]].
   *
-  * The builders (`*IndexWrite`), the rebuild and audit verbs stay per
-  * encoding in [[Similarity]] (their parameter sets differ) and
-  * delegate here.
+  * Only the builders (`*IndexWrite`) stay per encoding in
+  * [[Similarity]]: their parameter sets really differ.
   */
 private[graft] object AnnLifecycle {
 
   /** One encoding of a persisted ANN artifact. `idCol` is the id
-    * column of its stored rows; `rebuildVerb` names the verb that
-    * retrains and re-encodes it.
+    * column of its stored rows; `samplesCorpus` says whether its
+    * audit aggregates over the corpus (a maintainer poll must then be
+    * sample-bounded).
     */
-  sealed abstract class Kind(val idCol: String, val rebuildVerb: String) {
+  sealed abstract class Kind(val idCol: String, val samplesCorpus: Boolean = false) {
     /** Read this kind's headers at `path` once and return its codec;
       * a missing or damaged header refuses, naming `what`.
       */
@@ -66,8 +72,57 @@ private[graft] object AnnLifecycle {
               vecCol: String): DataFrame =
       if (this == IvfSq) Similarity.topKCosine(corpus, q, k, idCol, vecCol)
       else Similarity.topKDot(corpus, q, k, idCol, vecCol)
+
+    /** The staleness audit: the reason of the first signal that trips,
+      * None on a healthy artifact. Each signal is computed at most
+      * once; only a basis audit evaluates `corpus`.
+      */
+    def audit(spark: SparkSession, path: String, corpus: => DataFrame,
+              p: Similarity.RebuildPolicy): Option[String]
+
+    /** The retrain `signal` calls for (None: the full retrain of
+      * [[Similarity.annRebuildAt]]) after the header check.
+      */
+    def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
+                signal: Option[String]): Retrain
+
+    /** Why a maintainer should restamp a legacy sidecar this kind's
+      * audit reads, when the artifact predates it.
+      */
+    def legacy(spark: SparkSession, path: String): Option[String] = None
+
+    /** Restamp the sidecar [[legacy]] names; returns the summary. */
+    def restamp(spark: SparkSession, path: String, corpus: => DataFrame,
+                p: Similarity.RebuildPolicy): String = ""
   }
-  case object IvfPq extends Kind("vec_id", "ivfPqRebuild") {
+
+  /** The list-balance signal every kind audits: one lists-row
+    * aggregate over the stored `list_id` column.
+    */
+  private val Balance = "list balance"
+
+  private def balance(spark: SparkSession, path: String, lists: Int,
+                      p: Similarity.RebuildPolicy): Option[String] =
+    Option.when(Similarity.ivfPqListBalance(spark.read.parquet(path), lists, p.rebuildPm)
+        .agg(max(col("rebuild"))).collect()(0).getLong(0) == 1L)(
+      s"$Balance past ${p.rebuildPm}pm of uniform share")
+
+  /** Retrain both IVF-PQ quantizers on `corpus` (data-seeded: a
+    * rebuild runs because the data outgrew the old quantizers, and
+    * constant seeds cannot subdivide a drifted dense region Lloyd's
+    * never plants a second seed in — see [[Similarity.dataSeedVectors]])
+    * and write the re-encoded artifact at `tmp` under `h`'s shape.
+    */
+  private def ivfPqRewrite(corpus: DataFrame, tmp: String, h: Similarity.IvfPqHeader,
+                           p: Similarity.RebuildPolicy): Long = {
+    val (cents, cbs) = Similarity.trainIvfPq(corpus, h.dim, h.lists, h.m, h.codes,
+      h.residual, p.kmIters, p.pqIters, p.idCol, p.vecCol, p.trainSample,
+      p.trainFraction, seedFromData = true)
+    Similarity.ivfPqIndexWrite(corpus, tmp, h.dim, h.lists, h.m, h.codes, p.idCol,
+      p.vecCol, Some(cents), Some(cbs), residual = h.residual)
+  }
+
+  case object IvfPq extends Kind("vec_id") {
     def open(spark: SparkSession, path: String, what: String): Codec = {
       val h = Similarity.ivfPqRequireHeader(spark, path, what)
       val (cents, cbs) = (Some(h.centroids), Some(h.codebooks))
@@ -78,8 +133,17 @@ private[graft] object AnnLifecycle {
           Similarity.annIvfPqProbe(scan, q, k, h.dim, h.lists, nprobe, h.m, h.codes,
             idCol, vecCol, cents, cbs, h.residual))
     }
+    def audit(spark: SparkSession, path: String, corpus: => DataFrame,
+              p: Similarity.RebuildPolicy): Option[String] =
+      balance(spark, path, Similarity.ivfPqRequireHeader(spark, path, "annNeedsRebuild").lists,
+        p)
+    def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
+                signal: Option[String]): Retrain = {
+      val h = Similarity.ivfPqRequireHeader(corpus.sparkSession, path, RebuildVerb)
+      Retrain(h.dim, "quantizers", ivfPqRewrite(corpus, _, h, p))
+    }
   }
-  case object IvfSq extends Kind("neighbor_id", "ivfSqRebuild") {
+  case object IvfSq extends Kind("neighbor_id") {
     def open(spark: SparkSession, path: String, what: String): Codec = {
       val h = Similarity.sqRequireHeader(spark, path, what)
       Codec(this, h.paramsHash, h.dim,
@@ -88,12 +152,52 @@ private[graft] object AnnLifecycle {
         score = Similarity.annIvfSqProbeFrame(_, _, _, _, h.cents, h.vmin, h.vmax, _, _),
         afterAppend = Similarity.sqStatsAccumulate(spark, path, _, h.dim))
     }
+    /** Bounds saturation (rail-clamped codes have lost the resolution
+      * the encoding exists to provide), from the O(dim) stats sidecar
+      * or, on a legacy artifact, the codes scan; then list balance.
+      * Both read only the `codes`/`list_id` columns.
+      */
+    def audit(spark: SparkSession, path: String, corpus: => DataFrame,
+              p: Similarity.RebuildPolicy): Option[String] = {
+      val h = Similarity.sqRequireHeader(spark, path, "annNeedsRebuild")
+      val sat = Similarity.ivfSqSaturationFromStats(spark, path)
+        .getOrElse(Similarity.ivfSqSaturation(spark, path))
+        .agg(max(col("sat_pm"))).collect()(0).getLong(0)
+      if (sat > p.satPm) Some(s"bounds saturation ${sat}pm past ${p.satPm}pm")
+      else balance(spark, path, h.lists, p)
+    }
+    /** Coarse centroids and bounds (exact min/max over the same
+      * training frame, so the stale rails unclamp), retrained on the
+      * corpus.
+      */
+    def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
+                signal: Option[String]): Retrain = {
+      val h = Similarity.sqRequireHeader(corpus.sparkSession, path, RebuildVerb)
+      Retrain(h.dim, "quantizers", { tmp =>
+        val cents = Similarity.kmeansCentroids(corpus, k = h.lists, iters = p.kmIters,
+          dim = h.dim, idCol = p.idCol, vecCol = p.vecCol, trainSample = p.trainSample,
+          trainFraction = p.trainFraction, seedFromData = true)
+        val bounds = Similarity.sqTrainBounds(corpus, h.dim, p.idCol, p.vecCol,
+          p.trainSample, p.trainFraction)
+        Similarity.ivfSqIndexWrite(corpus, tmp, h.dim, h.lists, p.idCol, p.vecCol,
+          Some(cents), Some(bounds))
+      })
+    }
+    override def legacy(spark: SparkSession, path: String): Option[String] =
+      Option.unless(Similarity.ivfSqHasStats(spark, path))(
+        "legacy stats-less artifact (this poll scanned the codes) — restamping " +
+          "ivfsq_stats so subsequent polls are O(dim)")
+    override def restamp(spark: SparkSession, path: String, corpus: => DataFrame,
+                         p: Similarity.RebuildPolicy): String = {
+      Similarity.ivfSqStatsRestamp(spark, path)
+      "stats restamped; "
+    }
   }
   /** IVF-PQ over vectors projected through a stored pcarot rotation:
     * the IVF-PQ codec behind the rotation — raw vectors and queries
     * project first, the ivfpq header generation stays the token.
     */
-  case object PcaIvfPq extends Kind("vec_id", "pcaIvfPqRebuild") {
+  case object PcaIvfPq extends Kind("vec_id", samplesCorpus = true) {
     def open(spark: SparkSession, path: String, what: String): Codec = {
       val pq = IvfPq.open(spark, path, what)
       val rot = Similarity.pcaRotationAt(spark, path, what)
@@ -103,6 +207,65 @@ private[graft] object AnnLifecycle {
       val project = Similarity.pcaProject(_: DataFrame, rot, _: String, _: String)
       pq.copy(kind = this, inputDim = rot.head.length, project = project,
         encode = (v, i, c) => pq.encode(project(v, i, c), i, c))
+    }
+    /** Basis capture first (the fresh sample's variance capture of the
+      * stored rotation against its training-time baseline, when the
+      * pcarot carries one — the drift the quantizer audits cannot
+      * see), then list balance.
+      */
+    def audit(spark: SparkSession, path: String, corpus: => DataFrame,
+              p: Similarity.RebuildPolicy): Option[String] = {
+      val h = Similarity.ivfPqRequireHeader(spark, path, "annNeedsRebuild")
+      val basis =
+        if (!Similarity.pcaHasCaptureBaseline(spark, path)) None
+        else {
+          val (stored, fresh) = Similarity.pcaCaptureAudit(corpus, path, p.trainSample,
+            p.trainFraction, p.idCol, p.vecCol)
+          Option.when(fresh * 1000L < p.driftRatioPm * stored)(
+            s"basis capture ${fresh}pm fell below ${p.driftRatioPm}/1000 of " +
+              s"baseline ${stored}pm")
+        }
+      basis.orElse(balance(spark, path, h.lists, p))
+    }
+    /** A tripped list balance retrains the quantizers in projection
+      * space under the STORED rotation (its pcarot sidecar is carried
+      * byte for byte); anything else retrains a fresh basis by the
+      * stored method (an OPQ_P artifact re-learns the eigenvalue
+      * allocation, an OPQ_I one re-runs the alternating loop at its
+      * stamped iteration count) and the quantizers in it, stamping the
+      * new rotation with its capture baseline. Either way the rotation
+      * rides the rewrite from birth, so the recall gate probes each
+      * generation through its own basis.
+      */
+    def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
+                signal: Option[String]): Retrain = {
+      val spark = corpus.sparkSession
+      val h = Similarity.ivfPqRequireHeader(spark, path, RebuildVerb)
+      val (kv, rot) = Similarity.pcaRotHeader(spark, path, RebuildVerb)
+      if (signal.exists(_.startsWith(Balance)))
+        Retrain(rot.head.length, "quantizers", { tmp =>
+          val n = ivfPqRewrite(Similarity.pcaProject(corpus, rot, p.idCol, p.vecCol), tmp,
+            h, p)
+          val (fs, live) = Similarity.hadoopFs(spark, path)
+          Similarity.carrySidecars(fs, live, new Path(tmp), spark.sessionState.newHadoopConf())
+          n
+        })
+      else
+        Retrain(rot.head.length, "rotation + quantizers", tmp =>
+          Similarity.rotatedIvfPqWrite(corpus, tmp, rot.head.length, rot.length,
+            kv.get("method"), kv.get("opq_iters").map(_.toInt).getOrElse(2), h.lists, h.m,
+            h.codes, h.residual, Some((p.kmIters, p.pqIters)), p.idCol, p.vecCol,
+            p.trainSample, p.trainFraction, finalCodebooks = false))
+    }
+    override def legacy(spark: SparkSession, path: String): Option[String] =
+      Option.unless(Similarity.pcaHasCaptureBaseline(spark, path))(
+        "legacy pcarot without a capture baseline — restamping from the current " +
+          "corpus so drift is measurable from here on")
+    override def restamp(spark: SparkSession, path: String, corpus: => DataFrame,
+                         p: Similarity.RebuildPolicy): String = {
+      val c = Similarity.pcaCaptureRestamp(corpus, path, p.trainSample, p.trainFraction,
+        p.idCol, p.vecCol)
+      s"capture baseline restamped at ${c}pm; "
     }
   }
 
@@ -129,7 +292,8 @@ private[graft] object AnnLifecycle {
     */
   def requireKind(spark: SparkSession, path: String, what: String): Kind =
     kindOf(spark, path).getOrElse(throw new IllegalArgumentException(
-      s"$what: no ivfpq/ivfsq header at $path — not a stamped ANN artifact, so " +
+      s"$what: no IVF-PQ header (ivfpq) or IVF-SQ8 header (ivfsq) at $path — not a " +
+        "stamped ANN artifact, so " +
         "nothing verifies which quantizers built it. Write it with ivfPqIndexWrite, " +
         "ivfSqIndexWrite or pcaIvfPqIndexWrite (which stamp one), or stamp a " +
         "legacy IVF-PQ artifact with ivfPqWriteHeader"))
@@ -216,40 +380,41 @@ private[graft] object AnnLifecycle {
             s"MID-APPEND (header ${c.generation} -> $after): a concurrent " +
             "rebuild swapped generations underneath this append, so the " +
             "artifact now holds mixed codes — serialize appends and rebuilds " +
-            s"in one maintenance loop, and re-run ${c.kind.rebuildVerb} to " +
+            s"in one maintenance loop, and re-run $RebuildVerb to " +
             "re-encode and heal it")
         if (n > 0) c.afterAppend(fresh)
     }
   }
 
-  /** What a rebuild verb contributes after its header check: the dim
-    * the corpus must have, and the retrain + write of the COMPLETE
-    * rewrite (rows, headers, owned sidecars) at a tmp path, returning
-    * its row count.
-    */
-  final case class Retrain(corpusDim: Int, writeTo: String => Long)
+  /** The verb named in rebuild refusals. */
+  private val RebuildVerb = "annRebuildAt"
 
-  /** The rebuild skeleton shared by every kind: writer entry + `open`
-    * (the verb's header check), tombstone refusal, recall-query
-    * bounds, corpus dim check, retrain to `.rebuild.tmp`, then verify
-    * BEFORE the swap — row count must equal the corpus, no shrink
-    * without `allowShrink`, and with `recallQueries` the two-tier
-    * recall gate (`recallAfter >= minRecallRatio * recallBefore` AND
-    * `recallAfter >= minRecallAbs`, strict when the stale recall is
-    * 0.0). Foreign sidecars are carried and the two-rename swap
-    * installs the rewrite; any failed check deletes the tmp and leaves
-    * the live artifact untouched.
+  /** What a kind's retrain contributes after its header check: the
+    * dim the corpus must have, what it retrains (for the report), and
+    * the retrain + write of the COMPLETE rewrite (rows, headers, owned
+    * sidecars) at a tmp path, returning its row count.
     */
-  def rebuild(corpus: DataFrame, indexPath: String, kind: Kind,
-              recallQueries: Option[DataFrame], k: Int, nprobe: Int,
-              minRecallRatio: Double, minRecallAbs: Double,
-              maxRecallQueryRows: Long, allowShrink: Boolean,
-              idCol: String, vecCol: String)
-             (open: => Retrain): Similarity.RebuildReport = {
+  final case class Retrain(corpusDim: Int, retrains: String, writeTo: String => Long)
+
+  /** The rebuild skeleton shared by every kind: writer entry + the
+    * kind's [[Kind.retrain]] for `signal` (its header check), tombstone
+    * refusal, recall-query bounds, corpus dim check, retrain to
+    * `.rebuild.tmp`, then verify BEFORE the swap — row count must
+    * equal the corpus, no shrink without `allowShrink`, and with
+    * `recallQueries` the two-tier recall gate (`recallAfter >=
+    * minRecallRatio * recallBefore` AND `recallAfter >= minRecallAbs`,
+    * strict when the stale recall is 0.0). Foreign sidecars are
+    * carried and the two-rename swap installs the rewrite; any failed
+    * check deletes the tmp and leaves the live artifact untouched.
+    */
+  def rebuild(corpus: DataFrame, indexPath: String, signal: Option[String],
+              p: Similarity.RebuildPolicy): Similarity.RebuildReport = {
     val spark = corpus.sparkSession
-    val verb = kind.rebuildVerb
-    val plan = writerEntry(spark, indexPath)(open)
-    Similarity.requireNoTombstones(spark, indexPath, verb)
+    val (kind, plan) = writerEntry(spark, indexPath) {
+      val kind = requireKind(spark, indexPath, RebuildVerb)
+      (kind, kind.retrain(corpus, indexPath, p, signal))
+    }
+    Similarity.requireNoTombstones(spark, indexPath, RebuildVerb)
     // argument refusals BEFORE the expensive retrain: an
     // accidentally-empty query frame would make the recall gate a
     // trivial 0-vs-0 pass (or a null-avg crash) after hours of
@@ -259,28 +424,28 @@ private[graft] object AnnLifecycle {
     // query frame goes quadratic exactly like
     // [[Similarity.semanticContamination]]'s brute baseline — same
     // bound, same guidance (gate on a SAMPLE of queries).
-    recallQueries.foreach { q =>
+    p.recallQueries.foreach { q =>
       val qRows =
-        q.limit(math.min(maxRecallQueryRows, Int.MaxValue - 1L).toInt + 1).count()
+        q.limit(math.min(p.maxRecallQueryRows, Int.MaxValue - 1L).toInt + 1).count()
       require(qRows > 0,
-        s"$verb: recallQueries is empty — the recall gate would verify " +
+        s"$RebuildVerb: recallQueries is empty — the recall gate would verify " +
           "nothing; pass None to skip it deliberately")
-      require(qRows <= maxRecallQueryRows,
-        s"$verb: recallQueries has >$maxRecallQueryRows rows; the gate's " +
+      require(qRows <= p.maxRecallQueryRows,
+        s"$RebuildVerb: recallQueries has >${p.maxRecallQueryRows} rows; the gate's " +
           "exact ground truth is a broadcast nested-loop over corpus x queries " +
           "(quadratic) — gate on a bounded query sample instead")
     }
-    Similarity.requireCorpusDim(corpus, plan.corpusDim, indexPath, vecCol, verb)
+    Similarity.requireCorpusDim(corpus, plan.corpusDim, indexPath, p.vecCol, RebuildVerb)
     val rowsBefore = spark.read.parquet(indexPath).count()
 
-    val (fs, p) = Similarity.hadoopFs(spark, indexPath)
-    val tmp = new Path(p.getParent, p.getName + ".rebuild.tmp")
-    val old = new Path(p.getParent, p.getName + ".rebuild.old")
+    val (fs, path) = Similarity.hadoopFs(spark, indexPath)
+    val tmp = new Path(path.getParent, path.getName + ".rebuild.tmp")
+    val old = new Path(path.getParent, path.getName + ".rebuild.old")
     fs.delete(tmp, true); fs.delete(old, true)
     val rowsAfter = plan.writeTo(tmp.toString)
     def refuse(msg: String): Nothing = {
       fs.delete(tmp, true)
-      sys.error(s"$verb: $msg")
+      sys.error(s"$RebuildVerb: $msg")
     }
 
     val corpusRows = corpus.count()
@@ -293,27 +458,27 @@ private[graft] object AnnLifecycle {
     // green — the artifact knows its own row count, so refuse a
     // shrinking rebuild unless the caller says it shrank on purpose
     // (a deletion-compaction rebuild passes allowShrink = true)
-    if (rowsAfter < rowsBefore && !allowShrink)
+    if (rowsAfter < rowsBefore && !p.allowShrink)
       refuse(s"corpus has $rowsAfter rows but the live artifact at " +
         s"$indexPath has $rowsBefore — a rebuild from a partial corpus would DROP " +
         "vectors. Pass the full corpus (did appends land since this snapshot?), " +
         "or allowShrink = true if the shrink is deliberate; artifact left untouched")
-    val (recallBefore, recallAfter) = recallQueries match {
+    val (recallBefore, recallAfter) = p.recallQueries match {
       case None => (Double.NaN, Double.NaN)
       case Some(q) =>
         // ground truth computed ONCE and reused for both sides (it is
         // the gate's dominant cost — an O(|corpus| x |q|) scan)
-        val exact = kind.truth(corpus, q, k, idCol, vecCol).localCheckpoint()
-        def meanRecall(path: String): Double =
+        val exact = kind.truth(corpus, q, p.k, p.idCol, p.vecCol).localCheckpoint()
+        def meanRecall(at: String): Double =
           Similarity.annRecall(exact,
-              Similarity.annProbeAt(spark, path, q, k, nprobe, idCol, vecCol), k)
+              Similarity.annProbeAt(spark, at, q, p.k, p.nprobe, p.idCol, p.vecCol), p.k)
             .agg(avg(col("recall"))).collect()(0).getDouble(0)
         val before = meanRecall(indexPath)
         val after = meanRecall(tmp.toString)
         graft.plans.CheckpointHygiene.free(exact)
-        if (after < minRecallRatio * before)
-          refuse(f"retrained recall@$k $after%.4f fell below " +
-            f"$minRecallRatio x stale recall $before%.4f; artifact at $indexPath " +
+        if (after < p.minRecallRatio * before)
+          refuse(f"retrained recall@${p.k} $after%.4f fell below " +
+            f"${p.minRecallRatio} x stale recall $before%.4f; artifact at $indexPath " +
             "left untouched — inspect the training sample or iterations")
         // the relative gate is vacuous exactly in the scenario rebuilds
         // target: a fully-drifted stale index has recall ~0, and
@@ -323,9 +488,9 @@ private[graft] object AnnLifecycle {
         // 0.02 would otherwise bypass a caller's explicit floor), and
         // at exactly-zero stale recall it is strict, so the default
         // floor of 0.0 still refuses a 0 -> 0 retrain
-        if (after < minRecallAbs || (before == 0.0 && after <= minRecallAbs))
-          refuse(f"retrained recall@$k $after%.4f did not clear " +
-            f"the absolute floor $minRecallAbs%.4f (stale recall $before%.4f" +
+        if (after < p.minRecallAbs || (before == 0.0 && after <= p.minRecallAbs))
+          refuse(f"retrained recall@${p.k} $after%.4f did not clear " +
+            f"the absolute floor ${p.minRecallAbs}%.4f (stale recall $before%.4f" +
             (if (before == 0.0) " — the relative gate proves nothing" else "") +
             f"); artifact at $indexPath left untouched — the retrain did not " +
             "recover the drifted region")
@@ -334,8 +499,9 @@ private[graft] object AnnLifecycle {
     // foreign sidecars (a pcarot rotation, a stats file another layer
     // owns) survive the swap; the rebuild's own fresh headers win
     // (carrySidecars copies only names tmp lacks)
-    Similarity.carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    Similarity.artifactSwap(fs, p, tmp, old, verb)
-    Similarity.RebuildReport(rowsBefore, rowsAfter, recallBefore, recallAfter)
+    Similarity.carrySidecars(fs, path, tmp, spark.sessionState.newHadoopConf())
+    Similarity.artifactSwap(fs, path, tmp, old, RebuildVerb)
+    Similarity.RebuildReport(rowsBefore, rowsAfter, recallBefore, recallAfter,
+      plan.retrains)
   }
 }

@@ -1565,7 +1565,7 @@ object Similarity {
     * a tombstoned id refuses, and the post-write backstop refuses
     * LOUDLY if a concurrent rebuild swapped generations mid-append.
     * SQ8 values outside the stored bounds CLAMP to rail codes 0/255
-    * ([[ivfSqSaturation]] notices, [[ivfSqRebuildIfNeeded]] heals).
+    * ([[ivfSqSaturation]] notices, [[annRebuildIfNeeded]] heals).
     * Returns the number of admitted vectors.
     *
     * CONCURRENCY CONTRACT: appends and rebuilds are serialized by the
@@ -1599,110 +1599,104 @@ object Similarity {
     }
   }
 
-  /** The retrain trigger a periodic index maintainer polls: true when
-    * any list of the PERSISTED artifact at `indexPath` exceeds
-    * `rebuildPm` thousandths of the uniform share. `lists` comes from
-    * the artifact's own header — the audit needs no caller-remembered
-    * parameters at all, exactly like [[annProbeAt]]. One
-    * lists-row aggregate over the (vec_id, list_id) columns; corpus
-    * vectors are never touched.
+  /** What a rebuild is held to, for every kind. The audit thresholds:
+    * `rebuildPm` (list balance, thousandths of the uniform share —
+    * every kind), `satPm` (SQ8 bounds saturation per dimension) and
+    * `driftRatioPm` (PCA/OPQ basis capture, thousandths of the stored
+    * training-time baseline). The retrain: `kmIters`/`pqIters`, and
+    * `trainSample`/`trainFraction`, which also bound the basis audit's
+    * corpus sample. The verification: the recall gate over
+    * `recallQueries` at `k`/`nprobe` (`minRecallRatio` x the stale
+    * recall AND `minRecallAbs`; at most `maxRecallQueryRows` queries)
+    * and no shrink without `allowShrink`. `idCol`/`vecCol` name the
+    * corpus columns.
     */
-  def ivfPqNeedsRebuild(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                        rebuildPm: Long = 3000L): Boolean = {
-    val hdr = ivfPqRequireHeader(spark, indexPath, "ivfPqNeedsRebuild")
-    listsSkewed(spark.read.parquet(indexPath), hdr.lists, rebuildPm)
-  }
+  final case class RebuildPolicy(
+      rebuildPm: Long = 3000L, satPm: Long = 100L, driftRatioPm: Long = 900L,
+      kmIters: Int = 2, pqIters: Int = 2, trainSample: Int = 0, trainFraction: Double = 0.0,
+      recallQueries: Option[DataFrame] = None, k: Int = 5, nprobe: Int = 4,
+      minRecallRatio: Double = 0.9, minRecallAbs: Double = 0.0,
+      maxRecallQueryRows: Long = DefaultMaxBenchRows, allowShrink: Boolean = false,
+      idCol: String = "vec_id", vecCol: String = "embedding")
 
-  /** The list-balance retrain signal of a persisted IVF artifact —
-    * the balance half of every quantizer audit (PQ and SQ8).
+  /** The staleness audit a periodic maintainer polls, for the stored
+    * kind ([[AnnLifecycle.Kind.audit]]): the reason of the first
+    * signal that trips, None on a healthy artifact. IVF-PQ (plain or
+    * residual) audits list balance; IVF-SQ8 bounds saturation (from
+    * the `ivfsq_stats` sidecar, or the codes scan on a legacy
+    * artifact), then balance; PCA/OPQ basis capture (when the pcarot
+    * carries a baseline), then balance. The balance and saturation
+    * audits read only `list_id`/`codes` or a sidecar, never `corpus`;
+    * the basis audit aggregates over the RAW corpus, sample-bounded by
+    * `trainSample`/`trainFraction`.
     */
-  private def listsSkewed(index: DataFrame, lists: Int, rebuildPm: Long): Boolean =
-    ivfPqListBalance(index, lists, rebuildPm)
-      .agg(max(col("rebuild")).as("r")).collect()(0).getLong(0) == 1L
+  def annNeedsRebuild(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                      corpus: => DataFrame,
+                      policy: RebuildPolicy = RebuildPolicy()): Option[String] =
+    AnnLifecycle.requireKind(spark, indexPath, "annNeedsRebuild")
+      .audit(spark, indexPath, corpus, policy)
 
-  /** What [[ivfPqRebuild]] measured and did — the maintenance-log row
-    * a production maintainer records next to the retrain trigger.
+  /** What [[annRebuildAt]] measured and did — the maintenance-log row
+    * a production maintainer records next to the retrain trigger;
+    * `retrained` names what was retrained ("quantizers", or "rotation
+    * + quantizers").
     */
   final case class RebuildReport(rowsBefore: Long, rowsAfter: Long,
-                                 recallBefore: Double, recallAfter: Double)
+                                 recallBefore: Double, recallAfter: Double,
+                                 retrained: String)
 
-  /** EXECUTE the rebuild [[ivfPqNeedsRebuild]] decides: retrain the
-    * coarse centroids and PQ codebooks on `corpus` (the deterministic
-    * fixed-point chains of [[kmeansCentroids]]/[[pqLearnedCodebooks]],
-    * sample-bounded via `trainFraction` exactly like a bulk build),
+  /** EXECUTE a rebuild of the artifact at `indexPath` from the RAW
+    * `corpus` ([[AnnLifecycle.rebuild]] over the stored kind's full
+    * retrain): retrain the quantizers — for a PCA/OPQ artifact a fresh
+    * rotation by the stored method too, the corpus projected through
+    * it — on `corpus` (data-seeded, sample-bounded via
+    * `trainSample`/`trainFraction` exactly like a bulk build),
     * re-encode every corpus vector, verify the rewrite BEFORE
     * touching the live artifact — row count must equal the corpus,
     * the rewrite must not SHRINK the artifact (a smaller corpus than
     * the live index means the caller scoped it wrong — refuse unless
-    * `allowShrink`), and when `recallQueries` is given, ADC recall@k
-    * against brute-force ground truth must hold `recallAfter >=
+    * `allowShrink`), and when `recallQueries` is given, recall@k
+    * against the kind's exact ground truth must hold `recallAfter >=
     * minRecallRatio * recallBefore` AND `recallAfter >= minRecallAbs`
-    * (strict `>` when the stale recall is 0.0 — the relative gate is
-    * vacuous there, so even the default floor of 0.0 refuses a
-    * 0 -> 0 retrain) — then atomically swap the new artifact in (the
-    * [[graft.sources.ArtifactCompaction]] two-rename discipline, with
-    * rollback). The header is re-stamped by construction: it rides
-    * INSIDE the artifact directory, so the swap installs the new
-    * quantizer arrays with the new rows — from that moment a stale
-    * appender still holding the old arrays refuses loudly at
-    * [[ivfPqIndexAppend]]'s header validation instead of silently
-    * mixing two quantizer generations in one artifact.
+    * (strict `>` when the stale recall is 0.0) — then atomically swap
+    * the new artifact in (the [[graft.sources.ArtifactCompaction]]
+    * two-rename discipline, with rollback). The headers ride INSIDE
+    * the artifact directory, so the swap installs the new quantizer
+    * arrays with the new rows — from that moment a stale appender
+    * refuses loudly at [[annAppendAt]]'s generation backstop instead
+    * of silently mixing two generations in one artifact.
     *
-    * Shape params (dim, lists, m, codes) come FROM the artifact's own
-    * header — a rebuild re-learns the arrays, it does not re-shape the
-    * index (re-shaping is a new index, not maintenance). Failing
-    * verification deletes the `.rebuild.tmp` and leaves the live
-    * artifact untouched.
+    * Shape params (dim, lists, m, codes, outDim) come FROM the
+    * artifact's own headers — a rebuild re-learns the arrays, it does
+    * not re-shape the index. Failing verification deletes the
+    * `.rebuild.tmp` and leaves the live artifact untouched.
     *
-    * 100 TB posture: this is the periodic batch job StreamingIvf's
-    * maintainer schedules when [[ivfPqNeedsRebuild]] trips — training
-    * cost is bounded by `trainFraction` (Faiss's sample-training
-    * convention), the re-encode is ONE corpus scan, and the swap is
-    * O(1) renames inside the same single-writer maintenance window
-    * every OPTIMIZE-style job already requires (readers pause too —
-    * the path is briefly missing between the two renames).
+    * 100 TB posture: training cost is bounded by the sample (Faiss's
+    * sample-training convention), the re-encode is ONE corpus scan,
+    * and the swap is O(1) renames inside the same single-writer
+    * maintenance window every OPTIMIZE-style job already requires
+    * (readers pause too — the path is briefly missing between the two
+    * renames).
     */
-  def ivfPqRebuild(corpus: DataFrame, indexPath: String,
-                   kmIters: Int = 2, pqIters: Int = 2,
-                   trainFraction: Double = 0.0,
-                   recallQueries: Option[DataFrame] = None,
-                   k: Int = 5, nprobe: Int = 4,
-                   minRecallRatio: Double = 0.9,
-                   seedFromData: Boolean = true,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding",
-                   allowShrink: Boolean = false,
-                   minRecallAbs: Double = 0.0,
-                   maxRecallQueryRows: Long = DefaultMaxBenchRows): RebuildReport =
-    AnnLifecycle.rebuild(corpus, indexPath, AnnLifecycle.IvfPq, recallQueries, k,
-        nprobe, minRecallRatio, minRecallAbs, maxRecallQueryRows, allowShrink,
-        idCol, vecCol) {
-      val spark = corpus.sparkSession
-      val hdr = ivfPqRequireHeader(spark, indexPath, "ivfPqRebuild")
-      // the gate would grade a rotation-less rewrite against the live
-      // artifact's projecting probe — refuse HERE, before the expensive
-      // retrain, with the composed verb named (its gate probes through
-      // each generation's own rotation)
-      if (recallQueries.isDefined)
-        require(!AnnLifecycle.hasRotation(spark, indexPath),
-          s"ivfPqRebuild: the artifact at $indexPath carries a pcarot rotation, " +
-            "and this rebuild's rewrite would not — its recall gate would grade " +
-            "two different spaces; use pcaIvfPqRebuild, which retrains the " +
-            "rotation and gates each generation through its own basis")
-      AnnLifecycle.Retrain(hdr.dim, { tmp =>
-        // retrain on the NEW corpus — the whole point of the rebuild.
-        // seedFromData defaults ON here (unlike the bulk trainers): a
-        // rebuild runs precisely because the data outgrew the old
-        // quantizers, and constant seeds cannot subdivide a drifted
-        // dense region Lloyd's never plants a second seed in (see
-        // [[dataSeedVectors]] — measured making balance AND recall worse)
-        val (cents, cbs) = trainIvfPq(corpus, hdr.dim, hdr.lists, hdr.m, hdr.codes,
-          hdr.residual, kmIters, pqIters, idCol, vecCol, 0, trainFraction,
-          seedFromData)
-        ivfPqIndexWrite(corpus, tmp, hdr.dim, hdr.lists, hdr.m, hdr.codes, idCol,
-          vecCol, Some(cents), Some(cbs), residual = hdr.residual)
-      })
-    }
+  def annRebuildAt(corpus: DataFrame, indexPath: String,
+                   policy: RebuildPolicy = RebuildPolicy()): RebuildReport =
+    AnnLifecycle.rebuild(corpus, indexPath, None, policy)
+
+  /** One-call maintenance step: [[annNeedsRebuild]], then the rebuild
+    * the tripped signal calls for — a PCA/OPQ artifact whose basis
+    * drifted retrains its rotation and its quantizers, one whose only
+    * tripped signal is list balance retrains its quantizers under the
+    * stored rotation. Returns None on a healthy artifact (nothing
+    * touched).
+    */
+  def annRebuildIfNeeded(corpus: DataFrame, indexPath: String,
+                         policy: RebuildPolicy = RebuildPolicy()): Option[RebuildReport] = {
+    val spark = corpus.sparkSession
+    val kind = AnnLifecycle.writerEntry(spark, indexPath)(
+      AnnLifecycle.requireKind(spark, indexPath, "annRebuildIfNeeded"))
+    kind.audit(spark, indexPath, corpus, policy).map(signal =>
+      AnnLifecycle.rebuild(corpus, indexPath, Some(signal), policy))
+  }
 
   /** Train both IVF-PQ quantizers on `train`: coarse centroids, then
     * PQ codebooks — on the residuals the coarse quantizer leaves when
@@ -1712,7 +1706,7 @@ object Similarity {
     * `codebooks` skips the codebook training for a caller that already
     * holds codebooks trained in this space (iterative OPQ).
     */
-  private def trainIvfPq(train: DataFrame, dim: Int, lists: Int, m: Int, codes: Int,
+  private[operators] def trainIvfPq(train: DataFrame, dim: Int, lists: Int, m: Int, codes: Int,
                          residual: Boolean, kmIters: Int, pqIters: Int,
                          idCol: String, vecCol: String, trainSample: Int,
                          trainFraction: Double, seedFromData: Boolean,
@@ -1751,9 +1745,9 @@ object Similarity {
     corpus.select(size(col(vecCol)).as("d")).limit(1).collect().foreach { r =>
       require(r.getInt(0) == dim,
         s"$tag: corpus vectors have ${r.getInt(0)} dims but the artifact at " +
-          s"$indexPath encodes dim=$dim — a PCA artifact rebuilds from the " +
-          "PROJECTED corpus (pcaProject with the stored pcarot rotation), or " +
-          "re-run pcaIvfPqIndexWrite to retrain the rotation too")
+          s"$indexPath takes dim=$dim — the verbs take RAW vectors and a PCA/OPQ " +
+          "artifact projects them through its stored rotation itself, so " +
+          "PROJECTED vectors refuse here too")
     }
 
   /** Copy `_`-prefixed sidecars the rewrite did not itself produce
@@ -1778,7 +1772,7 @@ object Similarity {
     }
 
   /** The two-rename atomic swap with rollback shared by the rebuild
-    * paths ([[ivfPqRebuild]], [[ivfSqRebuild]]): move the live
+    * path ([[AnnLifecycle.rebuild]]): move the live
     * artifact aside, move the verified rewrite in, delete the old
     * copy. On swap-in failure the original is restored and the tmp
     * deleted (corpus-sized residue); after a DOUBLE failure everything
@@ -2096,28 +2090,6 @@ object Similarity {
       picks.toSeq
   }
 
-  /** One-call maintenance step for a periodic index maintainer: poll
-    * the staleness audit and EXECUTE the rebuild when it trips —
-    * [[ivfPqNeedsRebuild]] composed with [[ivfPqRebuild]]. Returns
-    * None when the artifact is balanced (nothing touched).
-    */
-  def ivfPqRebuildIfNeeded(corpus: DataFrame, indexPath: String,
-                           rebuildPm: Long = 3000L,
-                           kmIters: Int = 2, pqIters: Int = 2,
-                           trainFraction: Double = 0.0,
-                           recallQueries: Option[DataFrame] = None,
-                           k: Int = 5, nprobe: Int = 4,
-                           minRecallRatio: Double = 0.9,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           allowShrink: Boolean = false,
-                           minRecallAbs: Double = 0.0): Option[RebuildReport] =
-    Option.when(ivfPqNeedsRebuild(corpus.sparkSession, indexPath, rebuildPm))(
-      ivfPqRebuild(corpus, indexPath, kmIters, pqIters, trainFraction,
-        recallQueries, k, nprobe, minRecallRatio,
-        seedFromData = true, idCol = idCol, vecCol = vecCol,
-        allowShrink = allowShrink, minRecallAbs = minRecallAbs))
-
   // ------------------------------------------------------------------
   // IVF-SQ8: trained per-dimension scalar quantizer under the IVF
   // coarse index — the OTHER standard billion-scale memory/recall
@@ -2363,7 +2335,7 @@ object Similarity {
     *
     * 100 TB: one posexplode + aggregate over the codes column only
     * (4-64 bytes/row); corpus vectors are never touched — the
-    * [[ivfPqNeedsRebuild]] audit-cost contract.
+    * [[annNeedsRebuild]] audit-cost contract.
     */
   def ivfSqSaturation(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String): DataFrame = {
@@ -2482,87 +2454,6 @@ object Similarity {
     sqStatsWrite(spark, indexPath,
       sqStatsArray(spark.read.parquet(indexPath), hdr.dim))
   }
-
-  /** The SQ8 retrain trigger a periodic maintainer polls — true when
-    * EITHER staleness signal trips on the persisted artifact: coarse
-    * list balance past `rebuildPm` (the [[ivfPqNeedsRebuild]] signal —
-    * a hot list erodes the nprobe/lists scan bound) or bounds
-    * saturation past `satPm` on any dimension (the scalar-specific
-    * signal — rail-clamped codes have lost the resolution the
-    * encoding exists to provide). Both audits read only the
-    * (list_id, codes) columns; short-circuits after the cheaper
-    * balance aggregate.
-    */
-  def ivfSqNeedsRebuild(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                        rebuildPm: Long = 3000L, satPm: Long = 100L): Boolean = {
-    val hdr = sqRequireHeader(spark, indexPath, "ivfSqNeedsRebuild")
-    val skewed = listsSkewed(spark.read.parquet(indexPath), hdr.lists, rebuildPm)
-    // the accumulated stats sidecar answers in O(dim) when present
-    // (every write/append since the stats landed maintains it);
-    // legacy artifacts fall back to the exact codes scan
-    skewed || ivfSqSaturationFromStats(spark, indexPath)
-      .getOrElse(ivfSqSaturation(spark, indexPath))
-      .agg(max(col("sat_pm")).as("s")).collect()(0).getLong(0) > satPm
-  }
-
-  /** EXECUTE the rebuild [[ivfSqNeedsRebuild]] decides — the
-    * [[ivfPqRebuild]] lifecycle for the scalar encoding: retrain the
-    * coarse centroids (data-seeded by default, sample-bounded via
-    * `trainFraction`) and the bounds (exact min/max over the same
-    * training frame — re-training bounds on the grown corpus is the
-    * whole point: the stale rails unclamp), re-encode every corpus
-    * vector in ONE scan, verify BEFORE touching the live artifact
-    * (row count == corpus; no silent shrink without `allowShrink`;
-    * optional recall gate), then the shared two-rename atomic swap
-    * with rollback. The recall gate's ground truth is [[topKCosine]],
-    * NOT [[topKDot]]: SQ8's decode-dot scores are normalized cosine
-    * (see [[annIvfSq]]), so cosine is the ranking this index actually
-    * promises — the PQ family gates on exact MIPS for the symmetric
-    * reason.
-    */
-  def ivfSqRebuild(corpus: DataFrame, indexPath: String,
-                   kmIters: Int = 2, trainFraction: Double = 0.0,
-                   recallQueries: Option[DataFrame] = None,
-                   k: Int = 5, nprobe: Int = 4,
-                   minRecallRatio: Double = 0.9,
-                   seedFromData: Boolean = true,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   allowShrink: Boolean = false, minRecallAbs: Double = 0.0,
-                   maxRecallQueryRows: Long = DefaultMaxBenchRows): RebuildReport =
-    AnnLifecycle.rebuild(corpus, indexPath, AnnLifecycle.IvfSq, recallQueries, k,
-        nprobe, minRecallRatio, minRecallAbs, maxRecallQueryRows, allowShrink,
-        idCol, vecCol) {
-      val hdr = sqRequireHeader(corpus.sparkSession, indexPath, "ivfSqRebuild")
-      AnnLifecycle.Retrain(hdr.dim, { tmp =>
-        val cents = kmeansCentroids(corpus, k = hdr.lists, iters = kmIters, dim = hdr.dim,
-          idCol = idCol, vecCol = vecCol, trainFraction = trainFraction,
-          seedFromData = seedFromData)
-        val (vmin, vmax) = sqTrainBounds(corpus, hdr.dim, idCol, vecCol,
-          trainFraction = trainFraction)
-        ivfSqIndexWrite(corpus, tmp, hdr.dim, hdr.lists, idCol, vecCol, Some(cents),
-          Some((vmin, vmax)))
-      })
-    }
-
-  /** One-call maintenance step for the SQ8 artifact — poll
-    * [[ivfSqNeedsRebuild]] and EXECUTE [[ivfSqRebuild]] when either
-    * staleness signal trips. Returns None when the artifact is
-    * healthy (nothing touched).
-    */
-  def ivfSqRebuildIfNeeded(corpus: DataFrame, indexPath: String,
-                           rebuildPm: Long = 3000L, satPm: Long = 100L,
-                           kmIters: Int = 2, trainFraction: Double = 0.0,
-                           recallQueries: Option[DataFrame] = None,
-                           k: Int = 5, nprobe: Int = 4,
-                           minRecallRatio: Double = 0.9,
-                           idCol: String = "vec_id", vecCol: String = "embedding",
-                           allowShrink: Boolean = false,
-                           minRecallAbs: Double = 0.0): Option[RebuildReport] =
-    Option.when(ivfSqNeedsRebuild(corpus.sparkSession, indexPath, rebuildPm, satPm))(
-      ivfSqRebuild(corpus, indexPath, kmIters, trainFraction,
-        recallQueries, k, nprobe, minRecallRatio,
-        seedFromData = true, idCol = idCol, vecCol = vecCol,
-        allowShrink = allowShrink, minRecallAbs = minRecallAbs))
 
   // ------------------------------------------------------------------
   // Deletion: the DELETE verb of the index lifecycle (Faiss
@@ -3071,7 +2962,7 @@ object Similarity {
     // expensive solve is already paid
     requireNoTombstones(spark, indexPath,
       "pcaIvfPqIndexWrite (build over an existing artifact)")
-    // trainQuantizers = the production posture (what ivfPqRebuild
+    // trainQuantizers = the production posture (what annRebuildAt
     // would install): data-seeded learned centroids + codebooks
     // trained IN PROJECTION space on the same bounded sample; off by
     // default to keep the salted oracle-shared quantizer chain
@@ -3094,7 +2985,7 @@ object Similarity {
     * `iters` = (kmeans, codebook) iterations of data-seeded quantizer
     * training in rotated space; None keeps the salted quantizers.
     */
-  private def rotatedIvfPqWrite(embeddings: DataFrame, path: String, dim: Int,
+  private[operators] def rotatedIvfPqWrite(embeddings: DataFrame, path: String, dim: Int,
                                 outDim: Int, method: Option[String], opqIters: Int,
                                 lists: Int, m: Int, codes: Int, residual: Boolean,
                                 iters: Option[(Int, Int)], idCol: String, vecCol: String,
@@ -3141,7 +3032,7 @@ object Similarity {
   /** The pcarot sidecar's params and its validated rotation; refuses a
     * path without one.
     */
-  private def pcaRotHeader(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+  private[operators] def pcaRotHeader(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                            what: String): (Map[String, String], Array[Array[Double]]) = {
     val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot").getOrElse(
       sys.error(s"$what: no pcarot header at $indexPath — the index holds PROJECTED " +
@@ -3164,7 +3055,7 @@ object Similarity {
   // aggregate over a bounded fresh sample (q_embed_cov's oracle-gated
   // BIGINT algebra) compared against the training-time capture the
   // write path stamps; the rebuild retrains rotation AND quantizers
-  // through the same verify-before-swap discipline as ivfPqRebuild.
+  // through the same verify-before-swap discipline as every rebuild.
   // ------------------------------------------------------------------
 
   /** The basis staleness audit: variance capture of the STORED
@@ -3224,106 +3115,6 @@ object Similarity {
                             indexPath: String): Boolean =
     graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot")
       .exists(_.contains("capture_pm"))
-
-  /** The basis retrain trigger a periodic maintainer polls: true when
-    * the fresh sample's capture has fallen below `driftRatioPm`
-    * thousandths of the stored training-time baseline (default 900 —
-    * a 10% relative loss of retained variance). Ratio-of-baseline, not
-    * an absolute floor: a corpus whose intrinsic dimensionality needs
-    * more than outDim dims has a LOW baseline by design, and only the
-    * DROP signals drift.
-    */
-  def pcaNeedsRebuild(corpus: DataFrame, indexPath: String,
-                      driftRatioPm: Long = 900L,
-                      trainSample: Int = 0, trainFraction: Double = 0.0,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Boolean = {
-    val (stored, fresh) = pcaCaptureAudit(corpus, indexPath,
-      trainSample, trainFraction, idCol, vecCol)
-    fresh * 1000L < driftRatioPm * stored
-  }
-
-  /** EXECUTE the rebuild [[pcaNeedsRebuild]] decides — the full-stack
-    * retrain the composed artifact's lifecycle was missing: a FRESH
-    * rotation from the current raw corpus (so the basis follows the
-    * drift), coarse centroids and PQ codebooks retrained IN THE NEW
-    * projection space (data-seeded, sample-bounded), every corpus
-    * vector re-projected and re-encoded in one scan, the new rotation
-    * stamped (with its new capture baseline) INTO the rewrite before
-    * any probe sees it — then the shared verify-before-swap: row count
-    * must equal the corpus, no silent shrink without `allowShrink`,
-    * and the optional recall gate measures what the composed artifact
-    * actually serves (probe through each generation's OWN rotation,
-    * exact [[topKDot]] ground truth over the RAW corpus and queries —
-    * the gate spans projection loss AND quantization loss, so a
-    * rebuild that fixed the basis but broke the quantizers still
-    * refuses). Failing verification deletes the tmp and leaves the
-    * live artifact — including its old rotation — untouched.
-    *
-    * From the swap on, a stale appender still projecting through the
-    * old rotation refuses at [[annAppendAt]]'s generation
-    * backstop (the quantizer arrays changed with the basis), exactly
-    * like any cross-generation append.
-    */
-  def pcaIvfPqRebuild(corpus: DataFrame, indexPath: String,
-                      kmIters: Int = 2, pqIters: Int = 2,
-                      trainSample: Int = 0, trainFraction: Double = 0.0,
-                      recallQueries: Option[DataFrame] = None,
-                      k: Int = 5, nprobe: Int = 4,
-                      minRecallRatio: Double = 0.9,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      allowShrink: Boolean = false,
-                      minRecallAbs: Double = 0.0,
-                      maxRecallQueryRows: Long = DefaultMaxBenchRows)
-      : RebuildReport =
-    AnnLifecycle.rebuild(corpus, indexPath, AnnLifecycle.PcaIvfPq, recallQueries, k,
-        nprobe, minRecallRatio, minRecallAbs, maxRecallQueryRows, allowShrink,
-        idCol, vecCol) {
-      val spark = corpus.sparkSession
-      val hdr = ivfPqRequireHeader(spark, indexPath, "pcaIvfPqRebuild")
-      val (oldKv, oldRot) = pcaRotHeader(spark, indexPath, "pcaIvfPqRebuild")
-      val (dim, outDim) = (oldRot.head.length, oldRot.length)
-      AnnLifecycle.Retrain(dim, { tmp =>
-        // fresh basis from the current corpus — the whole point —
-        // trained by the stored method: an OPQ_P artifact re-learns the
-        // eigenvalue ALLOCATION too, an OPQ_I one re-runs the full
-        // alternating loop at its stamped iteration count (skipping the
-        // loop's final codebook pass: the rebuild retrains codebooks
-        // with ITS pqIters/residual). The NEW rotation rides the
-        // rewrite from birth — the recall probe and every post-swap
-        // consumer read it from the artifact
-        rotatedIvfPqWrite(corpus, tmp, dim, outDim, oldKv.get("method"),
-          oldKv.get("opq_iters").map(_.toInt).getOrElse(2), hdr.lists, hdr.m,
-          hdr.codes, hdr.residual, Some((kmIters, pqIters)), idCol, vecCol,
-          trainSample, trainFraction, finalCodebooks = false)
-      })
-    }
-
-  /** One-call maintenance step for the composed artifact's BASIS: poll
-    * [[pcaNeedsRebuild]] and EXECUTE [[pcaIvfPqRebuild]] when the
-    * capture audit trips. Returns None on a healthy basis (nothing
-    * touched). Quantizer-balance staleness of the same artifact stays
-    * with [[ivfPqRebuildIfNeeded]] over the PROJECTED corpus — a basis
-    * rebuild retrains the quantizers anyway, so a maintainer composes
-    * the two as basis-first.
-    */
-  def pcaIvfPqRebuildIfNeeded(corpus: DataFrame, indexPath: String,
-                              driftRatioPm: Long = 900L,
-                              kmIters: Int = 2, pqIters: Int = 2,
-                              trainSample: Int = 0, trainFraction: Double = 0.0,
-                              recallQueries: Option[DataFrame] = None,
-                              k: Int = 5, nprobe: Int = 4,
-                              minRecallRatio: Double = 0.9,
-                              idCol: String = "vec_id",
-                              vecCol: String = "embedding",
-                              allowShrink: Boolean = false,
-                              minRecallAbs: Double = 0.0): Option[RebuildReport] =
-    Option.when(pcaNeedsRebuild(corpus, indexPath, driftRatioPm, trainSample,
-        trainFraction, idCol, vecCol))(
-      pcaIvfPqRebuild(corpus, indexPath, kmIters, pqIters,
-        trainSample, trainFraction, recallQueries, k, nprobe, minRecallRatio,
-        idCol, vecCol, allowShrink, minRecallAbs))
 
   // ------------------------------------------------------------------
   // OPQ (Ge et al., "Optimized Product Quantization", CVPR 2013 — the
@@ -3409,7 +3200,7 @@ object Similarity {
     * ([[annProbeAt]]/[[annRefineAt]]), the appender rotates new
     * batches ([[annAppendAt]]), and the
     * full-stack rebuild re-learns rotation + allocation + quantizers
-    * ([[pcaIvfPqRebuild]] is method-aware). The capture baseline is
+    * ([[annRebuildAt]] is method-aware). The capture baseline is
     * 1000 by construction (full rank discards nothing) — this
     * artifact's staleness signals are quantizer balance and rebuild's
     * own recall gate, not variance capture.

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * require — the component form of three contracts that previously
   * lived in scaladoc backstops:
   *
-  *  - rebuild vs append: [[graft.operators.Similarity.ivfPqRebuild]]'s
+  *  - rebuild vs append: [[graft.operators.Similarity.annRebuildAt]]'s
   *    swap must not race a concurrent `annAppendAt` (the
   *    post-write generation backstop turns that race into a loud
   *    failure, but a maintainer should make it impossible, not
@@ -137,6 +137,8 @@ final class ArtifactMaintainer(owner: Option[() => StreamingQuery] = None) {
         "(inside withAccess/start/stop/drain): read -> write upgrade is " +
         "impossible on the fair lock, so this would self-deadlock — run the " +
         "maintenance window outside the access scope")
+    // raw instants, not GraftSession.timed: quiesce, pause and window
+    // are three spans cut from the same shared instants
     val w0 = System.nanoTime()
     lock.writeLock().lock()
     try {
@@ -190,7 +192,7 @@ final class ArtifactMaintainer(owner: Option[() => StreamingQuery] = None) {
     * State may advance between the trigger read and the window (an
     * append lands, files grow) — benign: every shipped task is
     * idempotent and re-verifies inside the window (the ANN task
-    * re-audits staleness via `ivfPqRebuildIfNeeded`; compaction
+    * re-audits staleness via `annRebuildIfNeeded`; compaction
     * re-lists and verifies before its swap).
     */
   def maintainIfDue(checks: Seq[DueCheck]): Option[Report] = {
@@ -218,6 +220,7 @@ object ArtifactMaintainer {
                           windowSec: Double, tasks: Seq[TaskResult])
 
   import org.apache.spark.sql.SparkSession
+  import graft.operators.{AnnLifecycle, Similarity}
 
   /** One maintenance trigger + its task: `check` returns
     * `Some(reason)` when the task is due (cheap — listings and header
@@ -428,214 +431,78 @@ object ArtifactMaintainer {
       graft.operators.Forget.forgetDocuments(spark, ids, targets, annIds).summary
     }
 
-  /** Staleness-audited ANN rebuild. `corpus` is a THUNK evaluated
+  /** Staleness-audited rebuild of an ANN artifact of any kind —
+    * [[graft.operators.Similarity.annRebuildIfNeeded]] under the
+    * window contract. `corpus` is a THUNK of the RAW corpus evaluated
     * inside the window — after the quiesce, so it can (and must)
     * include every append that landed before the window opened; a
     * snapshot taken earlier would trip the rebuild's shrink guard.
+    *
+    * The rebuild refuses a live tombstone set (a retrain would
+    * resurrect deleted rows) — inside the exclusive window the fold is
+    * safe and cheap relative to the retrain, so fold first AND exclude
+    * the folded ids from this retrain's corpus (the thunk may predate
+    * the delete; the fold clears the sidecar, so a deleted doc left in
+    * the corpus would be re-encoded with no tombstone left to shadow
+    * it), instead of failing a window the due check opened. Then the
+    * kind's legacy-sidecar restamp when one is missing (the SQ8 stats,
+    * the PCA capture baseline), then `IfNeeded`, which re-audits
+    * in-window.
     */
   def annRebuildTask(indexPath: String, corpus: () => DataFrame,
-                     rebuildPm: Long = 3000L, trainFraction: Double = 0.0,
-                     recallQueries: Option[DataFrame] = None,
-                     k: Int = 5, nprobe: Int = 4,
-                     minRecallRatio: Double = 0.9,
-                     minRecallAbs: Double = 0.0): Task =
-    annRebuildBody("ann_rebuild", indexPath, corpus, "balanced — no rebuild",
-        "rebuilt") {
-      graft.operators.Similarity.ivfPqRebuildIfNeeded(_, indexPath,
-        rebuildPm, trainFraction = trainFraction, recallQueries = recallQueries,
-        k = k, nprobe = nprobe, minRecallRatio = minRecallRatio,
-        minRecallAbs = minRecallAbs)
-    }
-
-  /** The task body shared by the ANN rebuild tasks. The rebuild verbs
-    * refuse a live tombstone set (a retrain would resurrect deleted
-    * rows) — inside the exclusive window the fold is safe and cheap
-    * relative to the retrain, so fold first AND exclude the folded ids
-    * from this retrain's corpus (the thunk may predate the delete; the
-    * fold clears the sidecar, so a deleted doc left in the corpus
-    * would be re-encoded with no tombstone left to shadow it), instead
-    * of failing a window the due check opened. Then the verb's own
-    * audited `…IfNeeded`, which re-audits in-window.
-    */
-  private def annRebuildBody(tag: String, indexPath: String, corpus: () => DataFrame,
-                             healthy: String, rebuilt: String)
-                            (ifNeeded: DataFrame => Option[
-                              graft.operators.Similarity.RebuildReport]): Task =
-    Task(s"$tag:${new org.apache.hadoop.fs.Path(indexPath).getName}") { () =>
+                     policy: Similarity.RebuildPolicy = Similarity.RebuildPolicy()): Task =
+    Task(s"ann_rebuild:${new org.apache.hadoop.fs.Path(indexPath).getName}") { () =>
       val c0 = corpus()
       val spark = c0.sparkSession
       val ids = Tombstones.read(spark, indexPath)
-      val (pre, c) =
+      val (folded, c) =
         if (ids.isEmpty) ("", c0)
         else {
-          val (b, a) = graft.operators.Similarity.annTombstoneFold(spark, indexPath)
+          val (b, a) = Similarity.annTombstoneFold(spark, indexPath)
           (s"folded ${b - a} tombstoned rows; ",
-            graft.operators.Similarity.tombstoneExclude(c0, ids, "vec_id"))
+            Similarity.tombstoneExclude(c0, ids, policy.idCol))
         }
-      pre + (ifNeeded(c) match {
-        case None => healthy
+      val kind = AnnLifecycle.writerEntry(spark, indexPath)(
+        AnnLifecycle.requireKind(spark, indexPath, "annRebuildTask"))
+      val healed = kind.legacy(spark, indexPath)
+        .fold("")(_ => kind.restamp(spark, indexPath, c, policy))
+      folded + healed + (Similarity.annRebuildIfNeeded(c, indexPath, policy) match {
+        case None => "balanced — no rebuild"
         case Some(r) =>
-          f"$rebuilt rows ${r.rowsBefore} -> ${r.rowsAfter}, " +
+          f"${r.retrained} rebuilt rows ${r.rowsBefore} -> ${r.rowsAfter}, " +
             f"recall ${r.recallBefore}%.4f -> ${r.recallAfter}%.4f"
       })
     }
 
-  /** A rebuild due check whose task first runs `heal` (a legacy
-    * sidecar restamp the poll scheduled; "" when none is needed).
+  /** ANN rebuild trigger for an artifact of any kind: the stored
+    * kind's staleness audit ([[graft.operators.Similarity.annNeedsRebuild]];
+    * the due reason names the tripped signal — the maintenance log
+    * should say why an artifact was rewritten), else a missing legacy
+    * sidecar, which self-heals: the poll schedules the kind's restamp
+    * into the window it opens, so later polls read it (a stats-less
+    * SQ8 artifact answers every saturation poll with the O(rows) codes
+    * scan; a pcarot without a capture baseline cannot measure drift —
+    * its restamped baseline is the current corpus, earlier drift is
+    * unknowable). The balance and saturation audits read the artifact
+    * only; a PCA/OPQ basis audit aggregates over a corpus SAMPLE, so
+    * its poll REQUIRES a bound (`trainSample`/`trainFraction`),
+    * keeping the poll cost fixed at any corpus size. The task
+    * re-audits inside the window (`IfNeeded`), so the
+    * trigger-to-window gap cannot run a rebuild the artifact no longer
+    * needs.
     */
-  private def healingDue(signal: () => Option[String], inner: Task)
-                        (heal: () => String): DueCheck =
-    new DueCheck(inner.name, signal, Task(inner.name)(() => heal() + inner.run()))
-
-  /** ANN rebuild trigger on the persisted artifact's list-balance
-    * audit ([[graft.operators.Similarity.ivfPqNeedsRebuild]]): one
-    * lists-row aggregate over (vec_id, list_id), corpus vectors never
-    * touched. The task re-audits inside the window (`IfNeeded`), so
-    * the trigger-to-window gap cannot run a rebuild the artifact no
-    * longer needs.
-    */
-  def annRebuildDue(spark: SparkSession, indexPath: String,
-                    corpus: () => DataFrame,
-                    rebuildPm: Long = 3000L, trainFraction: Double = 0.0,
-                    recallQueries: Option[DataFrame] = None,
-                    k: Int = 5, nprobe: Int = 4,
-                    minRecallRatio: Double = 0.9,
-                    minRecallAbs: Double = 0.0): DueCheck = {
-    val task = annRebuildTask(indexPath, corpus, rebuildPm, trainFraction,
-      recallQueries, k, nprobe, minRecallRatio, minRecallAbs)
+  def annRebuildDue(spark: SparkSession, indexPath: String, corpus: () => DataFrame,
+                    policy: Similarity.RebuildPolicy = Similarity.RebuildPolicy()): DueCheck = {
+    val task = annRebuildTask(indexPath, corpus, policy)
     new DueCheck(task.name,
-      () => Option.when(graft.operators.Similarity.ivfPqNeedsRebuild(spark, indexPath,
-        rebuildPm))(s"list balance past ${rebuildPm}pm of uniform share"),
+      () => {
+        val kind = AnnLifecycle.requireKind(spark, indexPath, "annRebuildDue")
+        require(!kind.samplesCorpus || policy.trainSample > 0 || policy.trainFraction > 0.0,
+          "annRebuildDue: the per-poll capture audit must be sample-bounded — pass " +
+            "trainSample or trainFraction (an unbounded audit re-scans the full " +
+            "corpus every poll)")
+        kind.audit(spark, indexPath, corpus(), policy).orElse(kind.legacy(spark, indexPath))
+      },
       task)
-  }
-
-  /** The SQ8 twins — [[graft.operators.Similarity.ivfSqRebuildIfNeeded]]
-    * under the same window contract. The due probe names WHICH
-    * staleness signal tripped (list balance vs bounds saturation):
-    * the maintenance log should say why an artifact was rewritten.
-    */
-  def sqRebuildTask(indexPath: String, corpus: () => DataFrame,
-                    rebuildPm: Long = 3000L, satPm: Long = 100L,
-                    trainFraction: Double = 0.0,
-                    recallQueries: Option[DataFrame] = None,
-                    k: Int = 5, nprobe: Int = 4,
-                    minRecallRatio: Double = 0.9,
-                    minRecallAbs: Double = 0.0): Task =
-    annRebuildBody("sq_rebuild", indexPath, corpus, "healthy — no rebuild",
-        "rebuilt") {
-      graft.operators.Similarity.ivfSqRebuildIfNeeded(_, indexPath,
-        rebuildPm, satPm, trainFraction = trainFraction,
-        recallQueries = recallQueries, k = k, nprobe = nprobe,
-        minRecallRatio = minRecallRatio, minRecallAbs = minRecallAbs)
-    }
-
-  def sqRebuildDue(spark: SparkSession, indexPath: String,
-                   corpus: () => DataFrame,
-                   rebuildPm: Long = 3000L, satPm: Long = 100L,
-                   trainFraction: Double = 0.0,
-                   recallQueries: Option[DataFrame] = None,
-                   k: Int = 5, nprobe: Int = 4,
-                   minRecallRatio: Double = 0.9,
-                   minRecallAbs: Double = 0.0): DueCheck = {
-    val sim = graft.operators.Similarity
-    healingDue(
-      () => {
-        import org.apache.spark.sql.functions.{col, max}
-        val stats = sim.ivfSqSaturationFromStats(spark, indexPath)
-        val sat = stats.getOrElse(sim.ivfSqSaturation(spark, indexPath))
-          .agg(max(col("sat_pm"))).collect()(0).getLong(0)
-        if (sat > satPm) Some(s"bounds saturation ${sat}pm past ${satPm}pm")
-        // saturation just measured clean — disable it in the combined
-        // audit so this probe is the balance signal alone
-        else if (sim.ivfSqNeedsRebuild(spark, indexPath, rebuildPm,
-            satPm = Long.MaxValue))
-          Some(s"list balance past ${rebuildPm}pm of uniform share")
-        // healthy but LEGACY (no stats sidecar): this poll just paid
-        // the O(rows) codes scan, and every future poll would too —
-        // self-heal by scheduling the restamp (the existing repair
-        // verb) into the window this trigger opens; subsequent polls
-        // answer from the O(dim) sidecar
-        else if (stats.isEmpty)
-          Some("legacy stats-less artifact (this poll scanned the codes) — " +
-            "restamping ivfsq_stats so subsequent polls are O(dim)")
-        else None
-      },
-      sqRebuildTask(indexPath, corpus, rebuildPm, satPm,
-        trainFraction, recallQueries, k, nprobe, minRecallRatio, minRecallAbs)) { () =>
-      if (sim.ivfSqHasStats(spark, indexPath)) ""
-      else { sim.ivfSqStatsRestamp(spark, indexPath); "stats restamped; " }
-    }
-  }
-
-  /** Basis-staleness-audited rebuild of a PCA-composed artifact —
-    * [[graft.operators.Similarity.pcaIvfPqRebuildIfNeeded]] under the
-    * window contract: retrains the ROTATION as well as both
-    * quantizers, the one maintenance verb the quantizer-only twins
-    * above cannot substitute for (they carry the stale basis through
-    * every swap).
-    */
-  def pcaRebuildTask(indexPath: String, corpus: () => DataFrame,
-                     driftRatioPm: Long = 900L,
-                     trainSample: Int = 0, trainFraction: Double = 0.0,
-                     recallQueries: Option[DataFrame] = None,
-                     k: Int = 5, nprobe: Int = 4,
-                     minRecallRatio: Double = 0.9,
-                     minRecallAbs: Double = 0.0): Task =
-    annRebuildBody("pca_rebuild", indexPath, corpus, "basis healthy — no rebuild",
-        "rotation + quantizers rebuilt,") {
-      graft.operators.Similarity.pcaIvfPqRebuildIfNeeded(_, indexPath,
-        driftRatioPm, trainSample = trainSample, trainFraction = trainFraction,
-        recallQueries = recallQueries, k = k, nprobe = nprobe,
-        minRecallRatio = minRecallRatio, minRecallAbs = minRecallAbs)
-    }
-
-  /** The basis drift trigger: due when the stored rotation's variance
-    * capture on a fresh corpus sample falls below `driftRatioPm`
-    * thousandths of its header-stamped training-time baseline
-    * ([[graft.operators.Similarity.pcaCaptureAudit]]). UNLIKE the
-    * listing/header triggers above, this audit aggregates over a
-    * corpus SAMPLE — so the due check REQUIRES a bound
-    * (`trainSample`/`trainFraction`), keeping the poll cost fixed at
-    * any corpus size. A legacy pcarot without a capture baseline
-    * self-heals: the poll schedules
-    * [[graft.operators.Similarity.pcaCaptureRestamp]] into the window
-    * it opens (baseline = the current corpus; earlier drift is
-    * unknowable), mirroring the SQ8 stats restamp.
-    */
-  def pcaRebuildDue(spark: SparkSession, indexPath: String,
-                    corpus: () => DataFrame,
-                    driftRatioPm: Long = 900L,
-                    trainSample: Int = 0, trainFraction: Double = 0.0,
-                    recallQueries: Option[DataFrame] = None,
-                    k: Int = 5, nprobe: Int = 4,
-                    minRecallRatio: Double = 0.9,
-                    minRecallAbs: Double = 0.0): DueCheck = {
-    require(trainSample > 0 || trainFraction > 0.0,
-      "pcaRebuildDue: the per-poll capture audit must be sample-bounded — " +
-        "pass trainSample or trainFraction (an unbounded audit re-scans the " +
-        "full corpus every poll)")
-    val sim = graft.operators.Similarity
-    healingDue(
-      () => {
-        if (!sim.pcaHasCaptureBaseline(spark, indexPath))
-          Some("legacy pcarot without a capture baseline — restamping from " +
-            "the current corpus so drift is measurable from here on")
-        else {
-          val (stored, fresh) = sim.pcaCaptureAudit(corpus(), indexPath,
-            trainSample, trainFraction)
-          if (fresh * 1000L < driftRatioPm * stored)
-            Some(s"basis capture ${fresh}pm fell below " +
-              s"$driftRatioPm/1000 of baseline ${stored}pm")
-          else None
-        }
-      },
-      pcaRebuildTask(indexPath, corpus, driftRatioPm, trainSample, trainFraction,
-        recallQueries, k, nprobe, minRecallRatio, minRecallAbs)) { () =>
-      if (sim.pcaHasCaptureBaseline(spark, indexPath)) ""
-      else {
-        val c = sim.pcaCaptureRestamp(corpus(), indexPath, trainSample, trainFraction)
-        s"capture baseline restamped at ${c}pm; "
-      }
-    }
   }
 }

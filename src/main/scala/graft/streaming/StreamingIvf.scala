@@ -21,12 +21,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * carries (list_id, vec_id) pairs only, never the vectors. Centroid
   * RE-learning (full Lloyd's rounds) stays a periodic batch job —
   * since round 13 an EXECUTABLE one: [[retrainAudit]] (or the
-  * artifact-side `ivfPqNeedsRebuild`) decides, and
-  * [[Similarity.ivfPqRebuildIfNeeded]] retrains/re-encodes/swaps with
+  * artifact-side `annNeedsRebuild`) decides, and
+  * [[Similarity.annRebuildIfNeeded]] retrains/re-encodes/swaps with
   * the header re-stamped, after which ingest resumes through the
-  * header-driven `annAppendAt` (SQ8 artifacts run the same loop
-  * through `ivfSqNeedsRebuild`/`ivfSqRebuildIfNeeded`, with bounds
-  * saturation as the added staleness signal). Streaming only maintains
+  * header-driven `annAppendAt` (the same two verbs serve SQ8 and
+  * PCA/OPQ artifacts, whose kinds add bounds saturation and basis
+  * capture as staleness signals). Streaming only maintains
   * membership — the standard split for production vector indexes.
   */
 object StreamingIvf {
@@ -41,7 +41,7 @@ object StreamingIvf {
     * promises, computed from the maintained state rows alone: per-list
     * load vs the uniform share and the rebuild flag
     * ([[Similarity.listBalanceFromCounts]] — the same audit
-    * `ivfPqListBalance`/`ivfPqNeedsRebuild` run over persisted
+    * `ivfPqListBalance`/`annNeedsRebuild` run over persisted
     * IVF-PQ artifacts). Frozen centroids drift out from under a
     * growing stream; when any list trips, schedule the batch
     * kmeans re-learn.

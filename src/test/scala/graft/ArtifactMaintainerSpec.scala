@@ -163,8 +163,8 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     // wait until the drifted region dominates (>= 2 chunks landed),
     // then take the window mid-ingest
     while (appended.size() < 2 && appendErr.get() == null) Thread.sleep(20)
-    val report = maint.maintain(Seq(ArtifactMaintainer.annRebuildTask(
-      dir, () => corpus(), rebuildPm = 2500L)))
+    val report = maint.maintain(Seq(ArtifactMaintainer.annRebuildTask(dir, () => corpus(),
+      Similarity.RebuildPolicy(rebuildPm = 2500L))))
     appender.join(120000)
     assert(appendErr.get() == null,
       s"append hit the generation backstop: ${appendErr.get()}")
@@ -258,7 +258,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val maint = new ArtifactMaintainer()
     var corpusRows = base
     def check = ArtifactMaintainer.annRebuildDue(spark, dir,
-      () => corpusRows.toDF("vec_id", "embedding"), rebuildPm = 2500L)
+      () => corpusRows.toDF("vec_id", "embedding"), Similarity.RebuildPolicy(rebuildPm = 2500L))
 
     assert(maint.maintainIfDue(Seq(check)).isEmpty, "balanced index tripped the audit")
 
@@ -287,7 +287,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
       dim = 8, lists = 4)
     val maint = new ArtifactMaintainer()
     var corpusRows = base
-    def check = ArtifactMaintainer.sqRebuildDue(spark, dir,
+    def check = ArtifactMaintainer.annRebuildDue(spark, dir,
       () => corpusRows.toDF("vec_id", "embedding"))
     assert(maint.maintainIfDue(Seq(check)).isEmpty, "fresh index tripped the audit")
 
@@ -305,6 +305,31 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
       rep.get.tasks.head.summary)
     // retrained bounds unclamp: the poll is quiet again
     assert(maint.maintainIfDue(Seq(check)).isEmpty)
+  }
+
+  test("annRebuildDue: a healthy poll of a legacy SQ8 artifact computes each signal once and never reads the corpus") {
+    import spark.implicits._
+    val dir = new java.io.File(
+      java.nio.file.Files.createTempDirectory("graft_due_sq_legacy").toFile, "idx").getPath
+    val rnd = new scala.util.Random(1414)
+    Similarity.ivfSqIndexWrite((0 until 64).map(i =>
+        (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
+      .toDF("vec_id", "embedding"), dir, dim = 8, lists = 4)
+    // forge a pre-stats artifact: every saturation poll scans the codes
+    assert(new java.io.File(dir,
+      graft.sources.ArtifactHeader.sidecarName("ivfsq_stats")).delete())
+    val (_, balance) = jobs(Similarity.ivfPqListBalance(spark.read.parquet(dir), 4)
+      .agg(max(col("rebuild"))).collect())
+    val (_, saturation) = jobs(Similarity.ivfSqSaturation(spark, dir)
+      .agg(max(col("sat_pm"))).collect())
+    // health signals never trip, so the legacy heal is the due reason
+    val due = ArtifactMaintainer.annRebuildDue(spark, dir,
+      () => fail("the SQ8 audit read the corpus"),
+      Similarity.RebuildPolicy(rebuildPm = 100000L, satPm = 1000000L))
+    val (why, poll) = jobs(due.check())
+    assert(why.exists(_.startsWith("legacy stats-less artifact")), s"$why")
+    assert(poll <= balance + saturation,
+      s"poll ran $poll jobs; one balance aggregate is $balance, one codes scan $saturation")
   }
 
   test("start()/stop() park behind an open maintenance window — the restart cannot race lifecycle calls into a double writer") {

@@ -9,17 +9,29 @@ import scala.jdk.CollectionConverters._
   */
 class GraftSessionSpec extends AnyFunSuite with SharedSpark {
 
-  test("no source under src/main but GraftSession.scala builds a SparkSession") {
+  /** The `src/main` files, relative to it, that contain `needle`,
+    * leaving out the files named in `allowed`.
+    */
+  private def sourcesWith(needle: String, allowed: Set[String]): List[String] = {
     val root = java.nio.file.Paths.get("src", "main", "scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
     val stream = java.nio.file.Files.walk(root)
-    val builders =
-      try stream.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftSession.scala")
-        .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
-        .map(root.relativize(_).toString).toList.sorted
-      finally stream.close()
+    try stream.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+      .filter(p => java.nio.file.Files.readString(p).contains(needle))
+      .map(root.relativize(_).toString).toList.sorted
+    finally stream.close()
+  }
+
+  test("no source under src/main but GraftSession.scala builds a SparkSession") {
+    val builders = sourcesWith("SparkSession.builder", Set("GraftSession.scala"))
     assert(builders.isEmpty, s"hand-built sessions: ${builders.mkString(", ")}")
+  }
+
+  test("wall time is read through GraftSession.timed; only the maintenance window splits its own instants") {
+    val timers = sourcesWith("System.nanoTime",
+      Set("GraftSession.scala", "ArtifactMaintainer.scala"))
+    assert(timers.isEmpty, s"hand-rolled timers: ${timers.mkString(", ")}")
   }
 
   test("the shared session carries the canonical settings") {

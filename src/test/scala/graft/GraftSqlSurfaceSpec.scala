@@ -241,7 +241,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     // chains are deterministic)
     val p4 = tmpIdx("sql_ann_drift_twin")
     Similarity.ivfPqIndexWrite(drift, p4, dim = 64)
-    assert(Similarity.ivfPqRebuildIfNeeded(drift, p4).isDefined)
+    assert(Similarity.annRebuildIfNeeded(drift, p4).isDefined)
     def rows(p: String) = spark.read.parquet(p)
       .select(col("vec_id"), col("list_id").cast("long"), col("codes").cast("string"))
       .collect().map(_.toString).toSet
@@ -349,7 +349,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     // DataFrame twin)
     val rebuilt = spark.sql(s"REBUILD ANN INDEX IF NEEDED '$p1' FROM '$sf'")
       .collect().head
-    val twin = Similarity.ivfSqRebuildIfNeeded(prior, p2)
+    val twin = Similarity.annRebuildIfNeeded(prior, p2)
     assert(rebuilt.getBoolean(0) == twin.isDefined)
     def sqRows(p: String) = spark.read.parquet(p)
       .select(col("neighbor_id"), col("list_id").cast("long"),
@@ -392,10 +392,11 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     assert(after.nonEmpty && (after.sameElements(before) ||
       spark.read.parquet(p1).count() > 0))
 
-    // a raw-corpus rebuild of the projected artifact refuses on the
-    // dim guard instead of silently slicing vectors
+    // a corpus of the wrong dimension (here: the projected width)
+    // refuses on the dim guard instead of silently slicing vectors
     val ex = intercept[Exception] {
-      Similarity.ivfPqRebuild(prior, p2)
+      Similarity.annRebuildAt(
+        prior.select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding")), p2)
     }
     assert(ex.getMessage.contains("PROJECTED"), ex.getMessage)
   }

@@ -227,35 +227,6 @@ class GraphSessionSpec extends AnyFunSuite with SharedSpark {
     spark.read.parquet(s"$dir/events").collect().map(r => (r.getString(0), r.getInt(1),
       r.getAs[Array[Byte]](2).toSeq, r.getMap[String, Boolean](3).toMap)).toSet
 
-  /** `f`'s result and the number of Spark jobs it started. */
-  private def jobs[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = "graph-session-" + java.util.UUID.randomUUID()
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("graft.test.tag")).foreach {
-          case `tag` => n.incrementAndGet()
-          case t if t == tag + "-end" => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.tag", tag)
-      val r = f
-      // the listener bus is asynchronous: a last tagged job drains it
-      sc.setLocalProperty("graft.test.tag", tag + "-end")
-      sc.parallelize(Seq(0), 1).count()
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (r, n.get())
-    } finally {
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("cross-regime: driver and frames regimes merge, refuse and edit alike") {
     val regimes = Seq("driver" -> Driver, "frames" -> Frames)
 

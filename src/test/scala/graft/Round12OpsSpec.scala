@@ -201,10 +201,13 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     val totalPm = audit.map(_._3).sum
     assert(totalPm <= 4000L && totalPm >= 3996L, s"total load $totalPm")
     // the pollable trigger reads lists from the header the appends
-    // stamped — no caller-remembered parameters
-    assert(Similarity.ivfPqNeedsRebuild(spark, dir))
+    // stamped — no caller-remembered parameters, and never the corpus
+    def noCorpus: org.apache.spark.sql.DataFrame = fail("the balance audit read the corpus")
+    assert(Similarity.annNeedsRebuild(spark, dir, noCorpus)
+      .exists(_.startsWith("list balance")))
     // a balanced-enough artifact does not trip at a looser threshold
-    assert(!Similarity.ivfPqNeedsRebuild(spark, dir, rebuildPm = 4000L))
+    assert(Similarity.annNeedsRebuild(spark, dir, noCorpus,
+      Similarity.RebuildPolicy(rebuildPm = 4000L)).isEmpty)
   }
 
   test("ArtifactCompaction: fewer files, identical rows, sidecar header survives") {

@@ -137,20 +137,23 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 8) == 256L)
     // the decision fires (the r12 audit; 2500 pm is the maintainer's
     // tuned threshold — the hot list holds ~65% of the artifact)
-    assert(Similarity.ivfPqNeedsRebuild(spark, dir, rebuildPm = 2500L))
+    assert(Similarity.annNeedsRebuild(spark, dir, day1.unionByName(day2),
+      Similarity.RebuildPolicy(rebuildPm = 2500L)).isDefined)
 
     // ...and now the EXECUTION: retrain on the grown corpus, verify,
     // atomic swap with the header re-stamped by construction
     val corpus = day1.unionByName(day2).localCheckpoint()
-    val report = Similarity.ivfPqRebuild(corpus, dir,
-      kmIters = 2, pqIters = 2, recallQueries = Some(probes), k = 5, nprobe = 2)
+    val report = Similarity.annRebuildAt(corpus, dir,
+      Similarity.RebuildPolicy(kmIters = 2, pqIters = 2, recallQueries = Some(probes),
+        k = 5, nprobe = 2))
     assert(report.rowsBefore == 320L && report.rowsAfter == 320L)
     // recall provably improves: the stale corner-aliased codes cannot
     // rank the shifted region at all; the retrained codebooks tile it
     assert(report.recallAfter > report.recallBefore,
       s"recall ${report.recallBefore} -> ${report.recallAfter}")
     // retraining restored coarse balance: the trigger no longer fires
-    assert(!Similarity.ivfPqNeedsRebuild(spark, dir, rebuildPm = 2500L))
+    assert(Similarity.annNeedsRebuild(spark, dir, corpus,
+      Similarity.RebuildPolicy(rebuildPm = 2500L)).isEmpty)
 
     // the swapped artifact IS the data-seeded learned index, bit for
     // bit (the training chains are deterministic)
@@ -204,8 +207,9 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
       .toDF("vec_id", "embedding").localCheckpoint()
     val before = spark.read.parquet(dir).count()
     val ex = intercept[RuntimeException] {
-      Similarity.ivfPqRebuild(corpus, dir, recallQueries = Some(probes),
-        k = 5, nprobe = 2, minRecallRatio = 1000.0)
+      Similarity.annRebuildAt(corpus, dir,
+        Similarity.RebuildPolicy(recallQueries = Some(probes), k = 5, nprobe = 2,
+          minRecallRatio = 1000.0))
     }
     assert(ex.getMessage.contains("left untouched"), ex.getMessage)
     // live artifact intact and still headed by the ORIGINAL quantizers
@@ -221,7 +225,7 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     val bare = tmpIdx("ann_rebuild_bare")
     Similarity.ivfPqIndex(day1, dim = 8, lists = 4, m = 8).write.parquet(bare)
     val ex2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqRebuild(day1, bare)
+      Similarity.annRebuildAt(day1, bare)
     }
     assert(ex2.getMessage.contains("no IVF-PQ header"), ex2.getMessage)
     val ex3 = intercept[IllegalArgumentException] {
@@ -247,11 +251,14 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
 
     // the maintainer one-call: balanced threshold -> None (artifact
     // untouched), tripped threshold -> executes and reports
-    assert(Similarity.ivfPqRebuildIfNeeded(corpus, dir, rebuildPm = 3900L).isEmpty)
-    val rep = Similarity.ivfPqRebuildIfNeeded(corpus, dir, rebuildPm = 2500L,
-      recallQueries = Some(probes), k = 5, nprobe = 2)
+    assert(Similarity.annRebuildIfNeeded(corpus, dir,
+      Similarity.RebuildPolicy(rebuildPm = 3900L)).isEmpty)
+    val rep = Similarity.annRebuildIfNeeded(corpus, dir,
+      Similarity.RebuildPolicy(rebuildPm = 2500L, recallQueries = Some(probes), k = 5,
+        nprobe = 2))
     assert(rep.exists(r => r.recallAfter > r.recallBefore))
-    assert(!Similarity.ivfPqNeedsRebuild(spark, dir, rebuildPm = 2500L))
+    assert(Similarity.annNeedsRebuild(spark, dir, corpus,
+      Similarity.RebuildPolicy(rebuildPm = 2500L)).isEmpty)
   }
 
   test("header convergence: a legacy r12 IVF-PQ header (binary integrity line) still reads") {

@@ -50,7 +50,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     // check is green (rows == corpus), but swapping it in would DROP
     // 256 vectors — the artifact knows its own row count, so refuse
     val ex = intercept[RuntimeException] {
-      Similarity.ivfPqRebuild(day1, dir, kmIters = 1, pqIters = 1)
+      Similarity.annRebuildAt(day1, dir, Similarity.RebuildPolicy(kmIters = 1, pqIters = 1))
     }
     assert(ex.getMessage.contains("DROP"), ex.getMessage)
     assert(ex.getMessage.contains("allowShrink"), ex.getMessage)
@@ -63,8 +63,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".rebuild.tmp")))
     // a DELIBERATE shrink (deletion compaction) passes the flag
-    val rep = Similarity.ivfPqRebuild(day1, dir, kmIters = 1, pqIters = 1,
-      allowShrink = true)
+    val rep = Similarity.annRebuildAt(day1, dir,
+      Similarity.RebuildPolicy(kmIters = 1, pqIters = 1, allowShrink = true))
     assert(rep.rowsBefore == 320L && rep.rowsAfter == 64L)
     assert(spark.read.parquet(dir).count() == 64L)
   }
@@ -79,8 +79,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     // corpus x queries — the brute-guard convention refuses an
     // oversized query frame BEFORE the retrain spends anything
     val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqRebuild(corpus, dir, recallQueries = Some(probes),
-        maxRecallQueryRows = 4L)
+      Similarity.annRebuildAt(corpus, dir,
+        Similarity.RebuildPolicy(recallQueries = Some(probes), maxRecallQueryRows = 4L))
     }
     assert(ex.getMessage.contains(">4"), ex.getMessage)
     assert(ex.getMessage.contains("sample"), ex.getMessage)
@@ -91,21 +91,23 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     // must hold instead. An impossible floor proves the branch fires;
     // the flagship r13 drift test is the floor's happy path (1.0 > 0)
     val ex2 = intercept[RuntimeException] {
-      Similarity.ivfPqRebuild(corpus, dir, recallQueries = Some(probes),
-        k = 5, nprobe = 2, minRecallAbs = 1.01)
+      Similarity.annRebuildAt(corpus, dir,
+        Similarity.RebuildPolicy(recallQueries = Some(probes), k = 5, nprobe = 2,
+          minRecallAbs = 1.01))
     }
     assert(ex2.getMessage.contains("absolute floor"), ex2.getMessage)
     assert(spark.read.parquet(dir).count() == 320L) // untouched
     // with the default floor (0.0) the same rebuild passes: 0.0 -> 1.0
-    val rep = Similarity.ivfPqRebuild(corpus, dir,
-      recallQueries = Some(probes), k = 5, nprobe = 2)
+    val rep = Similarity.annRebuildAt(corpus, dir,
+      Similarity.RebuildPolicy(recallQueries = Some(probes), k = 5, nprobe = 2))
     assert(rep.recallBefore == 0.0 && rep.recallAfter > 0.0)
     // the floor is UNCONDITIONAL, not an exactly-0.0 special case: a
     // near-zero (or here: healthy) stale recall cannot bypass a
     // caller's explicit absolute bar via the relative gate alone
     val ex3 = intercept[RuntimeException] {
-      Similarity.ivfPqRebuild(corpus, dir, recallQueries = Some(probes),
-        k = 5, nprobe = 2, minRecallAbs = 1.01)
+      Similarity.annRebuildAt(corpus, dir,
+        Similarity.RebuildPolicy(recallQueries = Some(probes), k = 5, nprobe = 2,
+          minRecallAbs = 1.01))
     }
     assert(ex3.getMessage.contains("absolute floor"), ex3.getMessage)
     assert(spark.read.parquet(dir).count() == 320L) // untouched
@@ -434,8 +436,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
 
     // rebuild retrains BOTH quantizers (codebooks on residuals) and
     // re-stamps the header with the encoding preserved
-    val rep = Similarity.ivfPqRebuild(emb.filter(col("vec_id") < 196), dir,
-      kmIters = 1, pqIters = 1)
+    val rep = Similarity.annRebuildAt(emb.filter(col("vec_id") < 196), dir,
+      Similarity.RebuildPolicy(kmIters = 1, pqIters = 1))
     assert(rep.rowsAfter == 196L)
     val hdr2 = Similarity.ivfPqReadHeader(spark, dir).get
     assert(hdr2.residual)
@@ -521,11 +523,12 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val sat = Similarity.ivfSqSaturation(spark, dir)
       .agg(min(col("sat_pm")), max(col("sat_pm"))).collect()(0)
     assert(sat.getLong(0) >= 800L, s"expected heavy saturation, got $sat")
-    assert(Similarity.ivfSqNeedsRebuild(spark, dir))
+    assert(Similarity.annNeedsRebuild(spark, dir, corpus).isDefined)
     // stale-bounds recall on drifted probes is degenerate (all day-2
     // codes identical -> decode-dot cannot separate them)
-    val rep = Similarity.ivfSqRebuild(corpus, dir, trainFraction = 0.0,
-      recallQueries = Some(probes), k = 3, nprobe = 4)
+    val rep = Similarity.annRebuildAt(corpus, dir,
+      Similarity.RebuildPolicy(trainFraction = 0.0, recallQueries = Some(probes), k = 3,
+        nprobe = 4))
     assert(rep.rowsBefore == 320L && rep.rowsAfter == 320L)
     assert(rep.recallAfter > rep.recallBefore && rep.recallAfter >= 0.9,
       s"rebuild should heal drifted recall: $rep")
@@ -534,15 +537,16 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val satAfter = Similarity.ivfSqSaturation(spark, dir)
       .agg(max(col("sat_pm"))).collect()(0).getLong(0)
     assert(satAfter < 100L, s"post-rebuild saturation $satAfter")
-    assert(Similarity.ivfSqRebuildIfNeeded(corpus, dir).isEmpty)
+    assert(Similarity.annRebuildIfNeeded(corpus, dir).isEmpty)
 
     // mis-scoped corpus refuses; allowShrink overrides (the
     // ivfPqRebuild guard, same seam)
     val ex2 = intercept[RuntimeException] {
-      Similarity.ivfSqRebuild(day1, dir)
+      Similarity.annRebuildAt(day1, dir)
     }
     assert(ex2.getMessage.contains("partial corpus"), ex2.getMessage)
-    assert(Similarity.ivfSqRebuild(day1, dir, allowShrink = true).rowsAfter == 64L)
+    assert(Similarity.annRebuildAt(day1, dir,
+      Similarity.RebuildPolicy(allowShrink = true)).rowsAfter == 64L)
 
     CheckpointHygiene.free(day1, day2, probes, corpus)
   }
@@ -572,7 +576,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     assert(viaStats == rows(Similarity.ivfSqSaturation(spark, dir)))
     assert(viaStats.exists(_._5 >= 600L), s"clamped appends must rail: $viaStats")
     // rebuild re-seeds the sidecar inside the swapped artifact
-    Similarity.ivfSqRebuild(day1.unionByName(day2), dir)
+    Similarity.annRebuildAt(day1.unionByName(day2), dir)
     assert(rows(Similarity.ivfSqSaturationFromStats(spark, dir).get) ==
       rows(Similarity.ivfSqSaturation(spark, dir)))
 
@@ -584,7 +588,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
       graft.sources.ArtifactHeader.sidecarName("ivfsq_stats"))
     assert(fs.delete(sc, false))
     assert(Similarity.ivfSqSaturationFromStats(spark, dir).isEmpty)
-    assert(!Similarity.ivfSqNeedsRebuild(spark, dir))
+    assert(Similarity.annNeedsRebuild(spark, dir, day1.unionByName(day2)).isEmpty)
     // ...and the repair verb recomputes it from the canonical scan
     Similarity.ivfSqStatsRestamp(spark, dir)
     assert(rows(Similarity.ivfSqSaturationFromStats(spark, dir).get) ==

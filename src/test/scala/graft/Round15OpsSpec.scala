@@ -174,8 +174,9 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     assert(side.delete(), s"fixture: could not delete $side")
     assert(!Similarity.ivfSqHasStats(spark, dir))
     val m = new ArtifactMaintainer()
-    val due = ArtifactMaintainer.sqRebuildDue(spark, dir, () => corpus,
-      rebuildPm = 100000L, satPm = 1000000L) // health signals never trip
+    val due = ArtifactMaintainer.annRebuildDue(spark, dir, () => corpus,
+      // health signals never trip
+      Similarity.RebuildPolicy(rebuildPm = 100000L, satPm = 1000000L))
     val rep = m.maintainIfDue(Seq(due))
     assert(rep.isDefined, "legacy artifact must schedule its own restamp")
     assert(rep.get.tasks.exists(_.summary.contains("stats restamped")),
@@ -231,7 +232,9 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     // freshly trained: capture at (or within noise of) its baseline
     val (stored0, fresh0) = Similarity.pcaCaptureAudit(genA, dir)
     assert(stored0 > 900L, s"fixture: baseline capture $stored0 should be high")
-    assert(!Similarity.pcaNeedsRebuild(genA, dir), s"fresh $fresh0 vs $stored0")
+    def basisDrifted(corpus: org.apache.spark.sql.DataFrame, at: String): Boolean =
+      Similarity.annNeedsRebuild(spark, at, corpus).exists(_.startsWith("basis capture"))
+    assert(!basisDrifted(genA, dir), s"fresh $fresh0 vs $stored0")
     // drifted generation lands through the appender (projected via the
     // STALE rotation — exactly the silent-degradation scenario)
     assert(Similarity.annAppendAt(genB, dir) == 96L)
@@ -240,15 +243,16 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     assert(stored1 == stored0, "append must not touch the baseline")
     assert(fresh1 * 1000L < 900L * stored1,
       s"injected drift must trip the audit: fresh $fresh1 vs stored $stored1")
-    assert(Similarity.pcaNeedsRebuild(grown, dir))
+    assert(basisDrifted(grown, dir))
     val before = refineRecall(dir, grown, probes)
     // THROUGH the maintainer twins: the due check trips on the capture
     // drop, the window runs the rebuild task (which re-audits inside
     // via IfNeeded and verifies recall on the drifted probes before
     // swapping)
     val m = new ArtifactMaintainer()
-    val due = ArtifactMaintainer.pcaRebuildDue(spark, dir, () => grown,
-      trainSample = 192, recallQueries = Some(probes), minRecallRatio = 0.0)
+    val due = ArtifactMaintainer.annRebuildDue(spark, dir, () => grown,
+      Similarity.RebuildPolicy(trainSample = 192, recallQueries = Some(probes),
+        minRecallRatio = 0.0))
     val winRep = m.maintainIfDue(Seq(due)).get
     val taskSummary = winRep.tasks.map(_.summary).mkString("; ")
     assert(taskSummary.contains("basis capture"), taskSummary) // the trigger reason
@@ -272,7 +276,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     val (stored2, fresh2) = Similarity.pcaCaptureAudit(grown, dir)
     assert(stored2 != stored0 && fresh2 == stored2,
       s"rebuild re-stamps the baseline: $stored2 / $fresh2")
-    assert(!Similarity.pcaNeedsRebuild(grown, dir))
+    assert(!basisDrifted(grown, dir))
     // appends resume through the new-generation headers (fresh
     // rotation projects the new batch; idempotent admission holds)
     val more = genB.withColumn("vec_id", col("vec_id") + 1000L)
@@ -296,14 +300,15 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
       Similarity.pcaCaptureAudit(genA, dir)
     }
     assert(auditEx.getMessage.contains("pcaCaptureRestamp"), auditEx.getMessage)
-    // an unbounded due check refuses (per-poll audit must be sampled)
+    // an unbounded due check refuses on a PCA artifact (per-poll
+    // audit must be sampled)
     val boundEx = intercept[IllegalArgumentException] {
-      ArtifactMaintainer.pcaRebuildDue(spark, dir, () => genA)
+      ArtifactMaintainer.annRebuildDue(spark, dir, () => genA).check()
     }
     assert(boundEx.getMessage.contains("sample-bounded"), boundEx.getMessage)
     val m = new ArtifactMaintainer()
-    val due = ArtifactMaintainer.pcaRebuildDue(spark, dir, () => genA,
-      trainSample = 96)
+    val due = ArtifactMaintainer.annRebuildDue(spark, dir, () => genA,
+      Similarity.RebuildPolicy(trainSample = 96))
     val rep = m.maintainIfDue(Seq(due))
     assert(rep.isDefined)
     assert(rep.get.tasks.exists(_.summary.contains("baseline restamped")),
@@ -347,12 +352,20 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     val refined = Similarity.annRefineAt(spark, dir, corpus, probes, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(refined.nonEmpty && refined.subsetOf(survivors))
-    // the quantizer-only rebuild refuses a recall gate it cannot probe
-    // — BEFORE training anything
-    val gateEx = intercept[IllegalArgumentException] {
-      Similarity.ivfPqRebuild(corpus, dir, recallQueries = Some(probes))
+    // the quantizer-only rebuild (a tripped balance under the stored
+    // rotation) grades both generations through that rotation, so its
+    // recall gate measures — an impossible floor refuses, and the live
+    // artifact and its pcarot stay as they were
+    val pcarot = new java.io.File(dir,
+      graft.sources.ArtifactHeader.sidecarName("pcarot")).toPath
+    val rotBytes = java.nio.file.Files.readAllBytes(pcarot)
+    val gateEx = intercept[RuntimeException] {
+      Similarity.annRebuildIfNeeded(corpus, dir, Similarity.RebuildPolicy(
+        rebuildPm = 1L, driftRatioPm = 0L, recallQueries = Some(probes),
+        minRecallAbs = 1.01))
     }
-    assert(gateEx.getMessage.contains("pcaIvfPqRebuild"), gateEx.getMessage)
+    assert(gateEx.getMessage.contains("absolute floor"), gateEx.getMessage)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(pcarot), rotBytes))
     // the PCA filtered probe serves the same semantics as the plain
     // one: top-k WITHIN the allowed set of the full projected ranking
     val allowed = corpus.filter(col("vec_id") % 3 === 0).select("vec_id")
@@ -447,15 +460,16 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     val more = corpus.select((col("vec_id") + 10000L).as("vec_id"),
       col("embedding"))
     assert(Similarity.annAppendAt(more, opqDir) == 256L)
-    val rep = Similarity.pcaIvfPqRebuild(corpus.unionByName(more), opqDir,
-      recallQueries = Some(probes), minRecallRatio = 0.0)
+    val rep = Similarity.annRebuildAt(corpus.unionByName(more), opqDir,
+      Similarity.RebuildPolicy(recallQueries = Some(probes), minRecallRatio = 0.0))
     assert(rep.rowsAfter == 512L)
     val kv2 = graft.sources.ArtifactHeader.read(spark, opqDir, "pcarot").get
     assert(kv2("method") == "opq_p", "rebuild must carry the method stamp")
     // full-rank rotation: capture baseline is trivially 1000 — the
     // audit is vacuous by construction and must NOT trip
     assert(kv2("capture_pm").toLong == 1000L)
-    assert(!Similarity.pcaNeedsRebuild(corpus.unionByName(more), opqDir))
+    assert(!Similarity.annNeedsRebuild(spark, opqDir, corpus.unionByName(more))
+      .exists(_.startsWith("basis capture")))
   }
 
   test("SQL ALLOWING verb dispatches on the pcarot header like PROBE") {

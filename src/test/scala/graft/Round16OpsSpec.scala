@@ -188,8 +188,8 @@ class Round16OpsSpec extends AnyFunSuite with SharedSpark {
     val more = corpus.select((col("vec_id") + 10000L).as("vec_id"),
       col("embedding"))
     assert(Similarity.annAppendAt(more, dir) == 256L)
-    val rep = Similarity.pcaIvfPqRebuild(corpus.unionByName(more), dir,
-      recallQueries = Some(probes), minRecallRatio = 0.0)
+    val rep = Similarity.annRebuildAt(corpus.unionByName(more), dir,
+      Similarity.RebuildPolicy(recallQueries = Some(probes), minRecallRatio = 0.0))
     assert(rep.rowsAfter == 512L)
     val kv2 = graft.sources.ArtifactHeader.read(spark, dir, "pcarot").get
     assert(kv2("method") == "opq_i" && kv2("opq_iters") == "2",

@@ -14,6 +14,36 @@ import scala.collection.immutable.{ArraySeq, SortedMap, SortedSet}
 trait SharedSpark extends BeforeAndAfterAll { this: org.scalatest.Suite =>
   lazy val spark: SparkSession = GraftSession.local(4)
   override protected def afterAll(): Unit = { /* shared session, keep alive */ }
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  protected def jobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = "graft-test-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("graft.test.tag")).foreach {
+          case `tag` => n.incrementAndGet()
+          case t if t == tag + "-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      val r = f
+      // the listener bus is asynchronous: a last tagged job drains it
+      sc.setLocalProperty("graft.test.tag", tag + "-end")
+      sc.parallelize(Seq(0), 1).count()
+      require(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+      (r, n.get())
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** DataFrame graph operators vs hand-computed small graphs and vs the

@@ -156,10 +156,10 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
         nprobe = 2)).exists(_._3 == 11L))
     def refusal(body: => Any): String =
       intercept[IllegalArgumentException](body).getMessage
-    assert(refusal(Similarity.ivfPqRebuild(corpus, pq)).contains("Fold first"))
-    assert(refusal(Similarity.ivfSqRebuild(corpus, sq)).contains("Fold first"))
-    assert(refusal(Similarity.pcaIvfPqRebuild(corpus, pca,
-      trainSample = 64)).contains("Fold first"))
+    assert(refusal(Similarity.annRebuildAt(corpus, pq)).contains("Fold first"))
+    assert(refusal(Similarity.annRebuildAt(corpus, sq)).contains("Fold first"))
+    assert(refusal(Similarity.annRebuildAt(corpus, pca,
+      Similarity.RebuildPolicy(trainSample = 64))).contains("Fold first"))
     // the maintainer rebuild task folds inside its window instead of
     // failing it (the due check may have tripped for balance alone)
     val summary = ArtifactMaintainer.annRebuildTask(pq,
@@ -178,7 +178,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     // retrain to actually execute (any non-empty list is > 0.001 of
     // the uniform share)
     val summary = ArtifactMaintainer.annRebuildTask(pq,
-      () => corpus, rebuildPm = 1L).run()
+      () => corpus, Similarity.RebuildPolicy(rebuildPm = 1L)).run()
     assert(summary.contains("folded 1 tombstoned rows"), summary)
     assert(summary.contains("rebuilt"), summary)
     assert(spark.read.parquet(pq).filter(col("vec_id") === 11L).count() == 0L,
@@ -398,7 +398,8 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(loadPm() == Map(0L -> 1600L, 1L -> 400L),
       "balance must reflect storage truth (dead rows included) until the fold")
-    assert(Similarity.ivfPqNeedsRebuild(spark, dir, rebuildPm = 1500L),
+    assert(Similarity.annNeedsRebuild(spark, dir, corpus,
+      Similarity.RebuildPolicy(rebuildPm = 1500L)).isDefined,
       "the physical audit trips on dead-row imbalance — by design")
 
     // one maintainIfDue poll with the documented order (fold check
@@ -410,7 +411,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val rep = m.maintainIfDue(Seq(
       ArtifactMaintainer.tombstoneFoldDue(spark, dir, maxIds = 0L),
       ArtifactMaintainer.annRebuildDue(spark, dir,
-        () => corpus, rebuildPm = 1500L)))
+        () => corpus, Similarity.RebuildPolicy(rebuildPm = 1500L))))
     assert(rep.isDefined)
     val tasks = rep.get.tasks
     assert(tasks.map(_.name).exists(_.startsWith("tomb_fold")) &&
@@ -420,7 +421,8 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     assert(rebuildSummary.contains("balanced — no rebuild"),
       s"rebuild decision must re-audit post-fold live counts: $rebuildSummary")
     assert(loadPm() == Map(0L -> 1000L, 1L -> 1000L))
-    assert(!Similarity.ivfPqNeedsRebuild(spark, dir, rebuildPm = 1500L))
+    assert(Similarity.annNeedsRebuild(spark, dir, corpus,
+      Similarity.RebuildPolicy(rebuildPm = 1500L)).isEmpty)
     assert(spark.read.parquet(dir).count() == 20L,
       "no retrain ran — the folded artifact is the live generation")
 
