@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.operators.AnnLifecycle.{Given, IvfPqSpec, IvfSqSpec, OpqI, OpqP, Pca, RotatedSpec,
+  Trained}
 import graft.GraftSession.timed
 
 /** Scale probe for the IVF index: times `annIvf` at a given
@@ -204,14 +206,14 @@ object AnnProbe {
     // (4 bytes/vec) and SQ8 (64 bytes/vec)
     val (cbs256, cbs256Sec) = timed(Similarity.pqLearnedCodebooks(emb, dim = 64, m = 8,
       codes = 256, iters = 2, trainFraction = 0.05, seedFromData = true))
-    val (_, sqBuild) = timed(Similarity.ivfSqIndexWrite(emb, s"$base/sq", dim = 64,
-      centroids = Some(cents)))
-    val (_, pqBuild) = timed(Similarity.ivfPqIndexWrite(emb, s"$base/pq", dim = 64,
-      centroids = Some(cents), codebooks = Some(cbs)))
-    val (_, resBuild) = timed(Similarity.ivfPqIndexWrite(emb, s"$base/pqres", dim = 64,
-      centroids = Some(cents), codebooks = Some(resCbs), residual = true))
-    val (_, pq256Build) = timed(Similarity.ivfPqIndexWrite(emb, s"$base/pq256", dim = 64,
-      codes = 256, centroids = Some(cents), codebooks = Some(cbs256)))
+    val (_, sqBuild) = timed(Similarity.annIndexWrite(emb, s"$base/sq",
+      IvfSqSpec(64, centroids = Some(cents))))
+    val (_, pqBuild) = timed(Similarity.annIndexWrite(emb, s"$base/pq",
+      IvfPqSpec(64, quantizers = Given(cents, cbs))))
+    val (_, resBuild) = timed(Similarity.annIndexWrite(emb, s"$base/pqres",
+      IvfPqSpec(64, residual = true, quantizers = Given(cents, resCbs))))
+    val (_, pq256Build) = timed(Similarity.annIndexWrite(emb, s"$base/pq256",
+      IvfPqSpec(64, codes = 256, quantizers = Given(cents, cbs256))))
     val q = emb0.filter(col("vec_id") < 8)
     val sqSec = min2(Similarity.annProbeAt(spark, s"$base/sq", q, k = 5).count())
     val pqSec = min2(Similarity.annProbeAt(spark, s"$base/pq", q, k = 5).count())
@@ -257,7 +259,7 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_filtered").toString + "/idx"
-    val (_, buildSec) = timed(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
+    val (_, buildSec) = timed(Similarity.annIndexWrite(emb, out, IvfPqSpec(64)))
     val q = emb0.filter(col("vec_id") < 8)
     val (nAll, allSec) = (1 to 2).map(_ =>
       timed(Similarity.annProbeAt(spark, out, q, k = 5).count())).minBy(_._2)
@@ -293,10 +295,9 @@ object AnnProbe {
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_lifecycle").toString + "/idx"
     val (_, writeSec) = timed(
-      Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, IvfPqSpec(64)))
     val appendSecs = (6 to 9).map { s =>
-      timed(Similarity.ivfPqIndexAppend(
-        emb.filter(col("vec_id") % 10 === s), out, dim = 64))._2
+      timed(Similarity.annAppendAt(emb.filter(col("vec_id") % 10 === s), out))._2
     }
     val (needs, auditSec) = timed(Similarity.annNeedsRebuild(spark, out, emb).isDefined)
     val q = emb.filter(col("vec_id") < 8)
@@ -369,7 +370,7 @@ object AnnProbe {
       }.reduce(_.unionByName(_)).localCheckpoint()
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_tombstones").toString + "/idx"
-    val (_, writeSec) = timed(Similarity.ivfPqIndexWrite(emb, out, dim = 64))
+    val (_, writeSec) = timed(Similarity.annIndexWrite(emb, out, IvfPqSpec(64)))
     val q = emb0.filter(col("vec_id") < 8).localCheckpoint()
     def probe(): Long = Similarity.annProbeAt(spark, out, q, k = 5).count()
     val probeClean = min2(probe())
@@ -421,7 +422,7 @@ object AnnProbe {
     val nVec = emb.count()
     val out = java.nio.file.Files.createTempDirectory("ann_sq_lifecycle").toString + "/idx"
     val (_, writeSec) = timed(
-      Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, dim = 64))
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 10 < 6), out, IvfSqSpec(64)))
     val appendSecs = (6 to 8).map { s =>
       timed(Similarity.annAppendAt(
         emb.filter(col("vec_id") % 10 === s), out))._2
@@ -513,8 +514,8 @@ object AnnProbe {
     val probes = spark.range(32).select((col("id") + 5000000L).as("vec_id"),
       mkGen(dirsB, 2.0)(col("id") + 5000000L).as("embedding")).localCheckpoint()
     val out = java.nio.file.Files.createTempDirectory("pca_lifecycle").toString + "/idx"
-    val (_, writeSec) = timed(Similarity.pcaIvfPqIndexWrite(genA, out,
-      dim = 64, outDim = 16, trainSample = 65536, trainQuantizers = true))
+    val (_, writeSec) = timed(Similarity.annIndexWrite(genA, out,
+      RotatedSpec(64, Pca(16), quantizers = Trained(), trainSample = 65536)))
     val ((s0, f0), audit0Sec) = timed(
       Similarity.pcaCaptureAudit(genA, out, trainSample = 65536))
     // drift lands through the STALE rotation — the degradation the
@@ -609,21 +610,15 @@ object AnnProbe {
       val full = s"$base/$tag-full"; val pca = s"$base/$tag-pca32"
       // TRAINED quantizers on both sides (the production posture) so
       // the measured delta is the projection, not the untrained floor
-      val (_, fullBuild) = timed {
-        val c = Similarity.kmeansCentroids(corpus, k = 16, iters = 2, dim = 64,
-          trainSample = 65536, seedFromData = true)
-        val cb = Similarity.pqLearnedCodebooks(corpus, dim = 64, m = 8, codes = 16,
-          iters = 2, trainSample = 65536, seedFromData = true)
-        Similarity.ivfPqIndexWrite(corpus, full, dim = 64,
-          centroids = Some(c), codebooks = Some(cb))
-      }
-      val (_, pcaBuild) = timed(Similarity.pcaIvfPqIndexWrite(corpus, pca,
-        dim = 64, outDim = 32, trainSample = 65536, trainQuantizers = true))
+      val (_, fullBuild) = timed(Similarity.annIndexWrite(corpus, full,
+        IvfPqSpec(64, quantizers = Trained(), trainSample = 65536)))
+      val (_, pcaBuild) = timed(Similarity.annIndexWrite(corpus, pca,
+        RotatedSpec(64, Pca(32), quantizers = Trained(), trainSample = 65536)))
       // the storage-halving variant PCA enables: 4 subspaces over the
       // 32 projected dims = 4 code bytes/vec vs the full-dim 8
       val pcaM4 = s"$base/$tag-pca32m4"
-      val (_, m4Build) = timed(Similarity.pcaIvfPqIndexWrite(corpus, pcaM4,
-        dim = 64, outDim = 32, m = 4, trainSample = 65536, trainQuantizers = true))
+      val (_, m4Build) = timed(Similarity.annIndexWrite(corpus, pcaM4,
+        RotatedSpec(64, Pca(32), m = 4, quantizers = Trained(), trainSample = 65536)))
       val fullSec = min2(
         Similarity.annRefineAt(spark, full, corpus, queries, k = 5).count())
       val pcaSec = min2(
@@ -690,20 +685,14 @@ object AnnProbe {
             queries: org.apache.spark.sql.DataFrame): String = {
       val pq = s"$base/$tag-pq"; val opq = s"$base/$tag-opq"
       val opqi = s"$base/$tag-opqi"
-      val (_, pqBuild) = timed {
-        val c = Similarity.kmeansCentroids(corpus, k = 16, iters = 2, dim = 64,
-          trainSample = 65536, seedFromData = true)
-        val cb = Similarity.pqLearnedCodebooks(corpus, dim = 64, m = 8, codes = 16,
-          iters = 2, trainSample = 65536, seedFromData = true)
-        Similarity.ivfPqIndexWrite(corpus, pq, dim = 64,
-          centroids = Some(c), codebooks = Some(cb))
-      }
-      val (_, opqBuild) = timed(Similarity.opqIvfPqIndexWrite(corpus, opq,
-        dim = 64, trainSample = 65536))
+      val (_, pqBuild) = timed(Similarity.annIndexWrite(corpus, pq,
+        IvfPqSpec(64, quantizers = Trained(), trainSample = 65536)))
+      val (_, opqBuild) = timed(Similarity.annIndexWrite(corpus, opq,
+        RotatedSpec(64, OpqP, quantizers = Trained(), trainSample = 65536)))
       // the iterative rung: Ge et al. non-parametric refinement at the
       // SAME byte budget, 2 alternating rounds from the OPQ_P start
-      val (_, opqiBuild) = timed(Similarity.opqIvfPqIndexWrite(corpus, opqi,
-        dim = 64, trainSample = 65536, refineIters = 2))
+      val (_, opqiBuild) = timed(Similarity.annIndexWrite(corpus, opqi,
+        RotatedSpec(64, OpqI(2), quantizers = Trained(), trainSample = 65536)))
       val pqSec = min2(
         Similarity.annRefineAt(spark, pq, corpus, queries, k = 5).count())
       val opqSec = min2(

@@ -2,6 +2,7 @@ package graft
 
 import graft.exvc.{Address, Command, CommandKind}
 import graft.operators._
+import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec, Pca, RotatedSpec}
 import graft.plans.GraphOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1014,14 +1015,14 @@ object SparkEntry {
       Similarity.annIvfSq(emb, emb.filter(col("vec_id") < 8), k = 5, dim = 64)
     }),
 
-    // the SQ8 artifact lifecycle inside the gate: ivfSqIndexWrite
+    // the SQ8 artifact lifecycle inside the gate: annIndexWrite
     // trains bounds on the indexed corpus and stamps the header;
     // annProbeAt decodes under the header's OWN bounds (the
     // incremental %3 split of q_ann_probe_incremental)
     "q_ann_sq_probe" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq", dir)
-      Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfSqSpec(64))
       Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
@@ -1035,7 +1036,7 @@ object SparkEntry {
     "q_ann_sq_append" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_append", dir)
-      Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfSqSpec(64))
       Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
       Similarity.annProbeAt(s, path, emb.filter(col("vec_id") < 8), k = 5)
     }),
@@ -1047,7 +1048,7 @@ object SparkEntry {
     "q_ann_sq_saturation" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_sat", dir)
-      Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfSqSpec(64))
       Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
       Similarity.ivfSqSaturation(s, path)
     }),
@@ -1060,7 +1061,7 @@ object SparkEntry {
     "q_ann_sq_sat_stats" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_sq_sat_inc", dir)
-      Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfSqSpec(64))
       Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 0), path)
       Similarity.ivfSqSaturationFromStats(s, path).get
     }),
@@ -1202,7 +1203,7 @@ object SparkEntry {
     // oracle too. The gate's rotation is the SQL-exact permutation
     // form (energy-balanced dimension interleave — exact BIGINT ranks,
     // bit-exact float reorder); the eigenbasis OPQ_P production form
-    // (opqIvfPqIndexWrite, method-aware rebuild) trains from the
+    // (annIndexWrite over an OpqP spec, method-aware rebuild) trains from the
     // q_embed_cov-gated sums and is spec-held, the pcaRotation
     // precedent
     "q_ann_opq" -> ((s, dir) => {
@@ -1227,13 +1228,13 @@ object SparkEntry {
     // crates/esvc-core/src/workcache.rs:60-108)
     "q_ann_probe_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // through the PERSISTED path: ivfPqIndexWrite stamps the
+      // through the PERSISTED path: annIndexWrite stamps the
       // self-describing header (params + quantizer arrays + content
       // hash) and annProbeAt loads every parameter FROM it — the
       // correctness gate covers the full write/validate/probe
       // round-trip, not just the in-memory composition
       val path = runTmp("ann_index", dir)
-      Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfPqSpec(64))
       Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
     }),
@@ -1247,7 +1248,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("ann_refine", dir)
-      Similarity.ivfPqIndexWrite(prior, path, dim = 64)
+      Similarity.annIndexWrite(prior, path, IvfPqSpec(64))
       Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 5, rerank = 32)
@@ -1262,7 +1263,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("ann_sq_refine", dir)
-      Similarity.ivfSqIndexWrite(prior, path, dim = 64)
+      Similarity.annIndexWrite(prior, path, IvfSqSpec(64))
       Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 5, rerank = 32)
@@ -1278,7 +1279,7 @@ object SparkEntry {
     "q_ann_probe_filtered" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_filtered", dir)
-      Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfPqSpec(64))
       Similarity.annProbeAt(s, path,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5,
         allowedIds = Some(emb.filter(col("vec_id") % 5 <= 1).select("vec_id")))
@@ -1299,7 +1300,7 @@ object SparkEntry {
       // each pass from a clean path
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfPqSpec(64))
       Similarity.annIndexDeleteAt(s, path,
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"))
@@ -1316,7 +1317,7 @@ object SparkEntry {
     "q_ann_delete_fold" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_delete_fold", dir)
-      Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfPqSpec(64))
       Similarity.annIndexDeleteAt(s, path,
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"))
@@ -1336,7 +1337,7 @@ object SparkEntry {
       // so a later pass's build-over-existing does not refuse
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfSqSpec(64))
       Similarity.annIndexDeleteAt(s, path,
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"))
@@ -1355,7 +1356,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("ann_mmr", dir)
-      Similarity.ivfPqIndexWrite(prior, path, dim = 64)
+      Similarity.annIndexWrite(prior, path, IvfPqSpec(64))
       val refined = Similarity.annRefineAt(s, path, prior,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24),
         k = 32, rerank = 32)
@@ -1374,7 +1375,7 @@ object SparkEntry {
     "q_ann_index_rebuilt" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("ann_rebuilt", dir)
-      Similarity.ivfPqIndexWrite(emb, path, dim = 64) // stale: salted defaults
+      Similarity.annIndexWrite(emb, path, IvfPqSpec(64)) // stale: salted defaults
       Similarity.annRebuildAt(emb, path) // kmIters = pqIters = 2
       s.read.parquet(path)
         .select(col("vec_id"), col("list_id").cast("long").as("list_id"),
@@ -2303,8 +2304,8 @@ object SparkEntry {
         () => prior.select("doc_id", "text").write.mode("overwrite").parquet(storePath),
         () => graft.streaming.StreamingSubstringDedup.appendToIndex(
           prior, "text", "doc_id", gramPath, k = 8),
-        () => Similarity.ivfPqIndexWrite(
-          emb.filter(col("vec_id") % 3 =!= 0), annPath, dim = 64))
+        () => Similarity.annIndexWrite(
+          emb.filter(col("vec_id") % 3 =!= 0), annPath, IvfPqSpec(64)))
       graft.operators.Forget.forgetDocuments(s,
         prior.filter(col("doc_id") % 7 === 1).select("doc_id"),
         graft.operators.Forget.Targets(
@@ -2543,7 +2544,7 @@ object SparkEntry {
     "q_forget_ann" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = runTmp("forget_ann1", dir)
-      Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, dim = 64)
+      Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), path, IvfPqSpec(64))
       graft.operators.Forget.forgetDocuments(s,
         emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
           .select("vec_id"),
@@ -2567,7 +2568,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val prior = emb.filter(col("vec_id") % 3 =!= 0)
       val path = runTmp("forget_annpca", dir)
-      Similarity.pcaIvfPqIndexWrite(prior, path, dim = 64, outDim = 32)
+      Similarity.annIndexWrite(prior, path, RotatedSpec(64, Pca(32)))
       graft.operators.Forget.forgetDocuments(s,
         prior.filter(col("vec_id") % 7 === 1).select("vec_id"),
         graft.operators.Forget.Targets(annIndexPaths = Seq(path)))
@@ -2614,8 +2615,8 @@ object SparkEntry {
             "band_key", "doc_id", 128),
           bandPath, bucketCap = 128, stampParams = Some((3, 6, 2))),
         () => prior.select("doc_id", "text").write.mode("overwrite").parquet(storePath),
-        () => Similarity.ivfPqIndexWrite(
-          emb.filter(col("vec_id") % 3 =!= 0), annPath, dim = 64))
+        () => Similarity.annIndexWrite(
+          emb.filter(col("vec_id") % 3 =!= 0), annPath, IvfPqSpec(64)))
       val idsDf = prior.filter(col("doc_id") % 7 === 1).select("doc_id")
       // collect the id set ONCE (bounded) — the two deletes and the
       // audit previously each re-collected the same frame
@@ -2651,8 +2652,8 @@ object SparkEntry {
             "band_key", "doc_id", 128),
           bandPath, bucketCap = 128, stampParams = Some((3, 6, 2))),
         () => prior.select("doc_id", "text").write.mode("overwrite").parquet(storePath),
-        () => Similarity.ivfPqIndexWrite(
-          emb.filter(col("vec_id") % 3 =!= 0), annPath, dim = 64))
+        () => Similarity.annIndexWrite(
+          emb.filter(col("vec_id") % 3 =!= 0), annPath, IvfPqSpec(64)))
       val idsDf = prior.filter(col("doc_id") % 7 === 1).select("doc_id")
       // one bounded collect feeds both deletes (they re-collected the
       // same frame before)

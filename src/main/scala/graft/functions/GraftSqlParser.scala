@@ -71,9 +71,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   *   BUILD ANN INDEX FROM '<dir>' AT '<path>'
   *       [USING SQ8 | RESIDUAL | PCA<d> | OPQ<m>]
-  *     -> ivfPqIndexWrite (plain / residual = true), ivfSqIndexWrite,
-  *        pcaIvfPqIndexWrite(outDim = d), or opqIvfPqIndexWrite(m)
-  *        over the indexed-history slice of
+  *     -> annIndexWrite over the encoding's spec (IvfPqSpec plain /
+  *        residual, IvfSqSpec, RotatedSpec(Pca(d)) or RotatedSpec(OpqP,
+  *        m) with trained quantizers) over the indexed-history slice of
   *        <dir>/embeddings.parquet; returns (path, n_vectors)
   *   PROBE ANN INDEX '<path>' FROM '<dir>'
   *     -> annProbeAt: new query vectors search the persisted
@@ -386,28 +386,23 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       // indexed history (dim 64, salted-default quantizers); write
       // stamps the self-describing header
       import session.implicits._
-      val n = Option(enc).map(_.toUpperCase) match {
-        case None =>
-          graft.operators.Similarity.ivfPqIndexWrite(annCorpus(dir), path, dim = 64)
-        case Some("SQ8") =>
-          graft.operators.Similarity.ivfSqIndexWrite(annCorpus(dir), path, dim = 64)
-        case Some("RESIDUAL") =>
-          graft.operators.Similarity.ivfPqIndexWrite(annCorpus(dir), path, dim = 64,
-            residual = true)
-        case Some(pca) if pca.matches("PCA\\d+") =>
-          graft.operators.Similarity.pcaIvfPqIndexWrite(annCorpus(dir), path,
-            dim = 64, outDim = pca.drop(3).toInt)
+      import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec, OpqP, Pca, RotatedSpec, Trained}
+      val spec = Option(enc).map(_.toUpperCase) match {
+        case None => IvfPqSpec(64)
+        case Some("SQ8") => IvfSqSpec(64)
+        case Some("RESIDUAL") => IvfPqSpec(64, residual = true)
+        case Some(pca) if pca.matches("PCA\\d+") => RotatedSpec(64, Pca(pca.drop(3).toInt))
+        // the Faiss "OPQ{m},IVF,PQ{m}" factory string: full-rank
+        // eigen-allocation rotation, quantizers trained in rotated
+        // space; PROBE/ALLOWING/REBUILD all dispatch on the pcarot
+        // sidecar this stamps (method=opq_p)
         case Some(opq) if opq.matches("OPQ\\d+") =>
-          // the Faiss "OPQ{m},IVF,PQ{m}" factory string: full-rank
-          // eigen-allocation rotation, quantizers trained in rotated
-          // space; PROBE/ALLOWING/REBUILD all dispatch on the pcarot
-          // sidecar this stamps (method=opq_p)
-          graft.operators.Similarity.opqIvfPqIndexWrite(annCorpus(dir), path,
-            dim = 64, m = opq.drop(3).toInt)
+          RotatedSpec(64, OpqP, m = opq.drop(3).toInt, quantizers = Trained())
         case Some(other) => throw new IllegalArgumentException(
           s"BUILD ANN INDEX USING $other: supported encodings are SQ8, " +
             "RESIDUAL, PCA<d> and OPQ<m> (omit USING for plain IVF-PQ)")
       }
+      val n = graft.operators.Similarity.annIndexWrite(annCorpus(dir), path, spec)
       Seq((path, n)).toDF("path", "n_vectors").queryExecution.logical
     }
     case ProbeAnnIndex(path, dir) => wrapGraft(sqlText) {

@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   *    (refusing on the missing header instead invites the caller to
   *    re-create the index from one batch).
   *  - [[appendAt]] is the header-driven append: admission anti-join,
-  *    write, post-write generation backstop.
+  *    write, post-write generation backstop. It is the only way an
+  *    artifact grows; [[build]] is the only way one is created.
   *  - Each [[Kind]] also owns the two decisions a maintainer makes:
   *    its staleness [[Kind.audit]] (the first tripped signal by name)
   *    and its [[Kind.retrain]] (the rewrite that signal calls for).
@@ -44,9 +45,14 @@ import org.apache.spark.sql.functions._
   *    around the kind's retrain; the [[Kind]] supplies the recall
   *    ground truth, and the gate probes through
   *    [[Similarity.annProbeAt]].
-  *
-  * Only the builders (`*IndexWrite`) stay per encoding in
-  * [[Similarity]]: their parameter sets really differ.
+  *  - [[build]] is the one builder ([[Similarity.annIndexWrite]]) over
+  *    a per-kind [[Spec]]: writer entry, tombstone refusal, the spec's
+  *    training, the kind's codec encode, overwrite, headers last. Each
+  *    kind builds its codec from header content in one place
+  *    (`codec`), which [[Kind.open]] uses after reading the headers and
+  *    the builder before stamping them; every [[Kind.retrain]] builds a
+  *    spec from the stored headers and the policy and calls the same
+  *    builder at `.rebuild.tmp`.
   */
 private[graft] object AnnLifecycle {
 
@@ -107,24 +113,22 @@ private[graft] object AnnLifecycle {
         .agg(max(col("rebuild"))).collect()(0).getLong(0) == 1L)(
       s"$Balance past ${p.rebuildPm}pm of uniform share")
 
-  /** Retrain both IVF-PQ quantizers on `corpus` (data-seeded: a
-    * rebuild runs because the data outgrew the old quantizers, and
-    * constant seeds cannot subdivide a drifted dense region Lloyd's
-    * never plants a second seed in — see [[Similarity.dataSeedVectors]])
-    * and write the re-encoded artifact at `tmp` under `h`'s shape.
+  /** The IVF-PQ spec a rebuild retrains under `h`'s shape: both
+    * quantizers data-seeded (a rebuild runs because the data outgrew
+    * the old quantizers, and constant seeds cannot subdivide a drifted
+    * dense region Lloyd's never plants a second seed in — see
+    * [[Similarity.dataSeedVectors]]) at the policy's iterations and
+    * sample.
     */
-  private def ivfPqRewrite(corpus: DataFrame, tmp: String, h: Similarity.IvfPqHeader,
-                           p: Similarity.RebuildPolicy): Long = {
-    val (cents, cbs) = Similarity.trainIvfPq(corpus, h.dim, h.lists, h.m, h.codes,
-      h.residual, p.kmIters, p.pqIters, p.idCol, p.vecCol, p.trainSample,
-      p.trainFraction, seedFromData = true)
-    Similarity.ivfPqIndexWrite(corpus, tmp, h.dim, h.lists, h.m, h.codes, p.idCol,
-      p.vecCol, Some(cents), Some(cbs), residual = h.residual)
-  }
+  private def retrainSpec(h: Similarity.IvfPqHeader, p: Similarity.RebuildPolicy) =
+    IvfPqSpec(h.dim, h.lists, h.m, h.codes, h.residual, Trained(p.kmIters, p.pqIters),
+      p.trainSample, p.trainFraction)
 
   case object IvfPq extends Kind("vec_id") {
-    def open(spark: SparkSession, path: String, what: String): Codec = {
-      val h = Similarity.ivfPqRequireHeader(spark, path, what)
+    def open(spark: SparkSession, path: String, what: String): Codec =
+      codec(Similarity.ivfPqRequireHeader(spark, path, what))
+    /** The one IVF-PQ encoder and scorer, from header content. */
+    def codec(h: Similarity.IvfPqHeader): Codec = {
       val (cents, cbs) = (Some(h.centroids), Some(h.codebooks))
       Codec(this, h.paramsHash, h.dim,
         encode = Similarity.ivfPqIndex(_, h.dim, h.lists, h.m, h.codes, _, _, cents, cbs,
@@ -133,6 +137,9 @@ private[graft] object AnnLifecycle {
           Similarity.annIvfPqProbe(scan, q, k, h.dim, h.lists, nprobe, h.m, h.codes,
             idCol, vecCol, cents, cbs, h.residual))
     }
+    def stamp(h: Similarity.IvfPqHeader)(spark: SparkSession, path: String): Unit =
+      Similarity.ivfPqWriteHeader(spark, path, h.dim, h.lists, h.m, h.codes, h.centroids,
+        h.codebooks, h.residual)
     def audit(spark: SparkSession, path: String, corpus: => DataFrame,
               p: Similarity.RebuildPolicy): Option[String] =
       balance(spark, path, Similarity.ivfPqRequireHeader(spark, path, "annNeedsRebuild").lists,
@@ -140,18 +147,22 @@ private[graft] object AnnLifecycle {
     def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
                 signal: Option[String]): Retrain = {
       val h = Similarity.ivfPqRequireHeader(corpus.sparkSession, path, RebuildVerb)
-      Retrain(h.dim, "quantizers", ivfPqRewrite(corpus, _, h, p))
+      Retrain(h.dim, "quantizers",
+        Similarity.annIndexWrite(corpus, _, retrainSpec(h, p), p.idCol, p.vecCol))
     }
   }
   case object IvfSq extends Kind("neighbor_id") {
+    /** Appends accumulate their rail counts into the stats sidecar. */
     def open(spark: SparkSession, path: String, what: String): Codec = {
       val h = Similarity.sqRequireHeader(spark, path, what)
+      codec(h).copy(afterAppend = Similarity.sqStatsAccumulate(spark, path, _, h.dim))
+    }
+    /** The one SQ8 encoder and scorer, from header content. */
+    def codec(h: Similarity.IvfSqHeader): Codec =
       Codec(this, h.paramsHash, h.dim,
         encode = Similarity.ivfSqIndex(_, h.dim, h.lists, _, _, Some(h.cents),
           Some((h.vmin, h.vmax))),
-        score = Similarity.annIvfSqProbeFrame(_, _, _, _, h.cents, h.vmin, h.vmax, _, _),
-        afterAppend = Similarity.sqStatsAccumulate(spark, path, _, h.dim))
-    }
+        score = Similarity.annIvfSqProbeFrame(_, _, _, _, h.cents, h.vmin, h.vmax, _, _))
     /** Bounds saturation (rail-clamped codes have lost the resolution
       * the encoding exists to provide), from the O(dim) stats sidecar
       * or, on a legacy artifact, the codes scan; then list balance.
@@ -166,9 +177,9 @@ private[graft] object AnnLifecycle {
       if (sat > p.satPm) Some(s"bounds saturation ${sat}pm past ${p.satPm}pm")
       else balance(spark, path, h.lists, p)
     }
-    /** Coarse centroids and bounds (exact min/max over the same
-      * training frame, so the stale rails unclamp), retrained on the
-      * corpus.
+    /** Coarse centroids (data-seeded) and bounds (exact min/max over
+      * the same training sample, so the stale rails unclamp),
+      * retrained on the corpus.
       */
     def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
                 signal: Option[String]): Retrain = {
@@ -177,10 +188,9 @@ private[graft] object AnnLifecycle {
         val cents = Similarity.kmeansCentroids(corpus, k = h.lists, iters = p.kmIters,
           dim = h.dim, idCol = p.idCol, vecCol = p.vecCol, trainSample = p.trainSample,
           trainFraction = p.trainFraction, seedFromData = true)
-        val bounds = Similarity.sqTrainBounds(corpus, h.dim, p.idCol, p.vecCol,
-          p.trainSample, p.trainFraction)
-        Similarity.ivfSqIndexWrite(corpus, tmp, h.dim, h.lists, p.idCol, p.vecCol,
-          Some(cents), Some(bounds))
+        Similarity.annIndexWrite(corpus, tmp,
+          IvfSqSpec(h.dim, h.lists, Some(cents), None, p.trainSample, p.trainFraction),
+          p.idCol, p.vecCol)
       })
     }
     override def legacy(spark: SparkSession, path: String): Option[String] =
@@ -204,6 +214,10 @@ private[graft] object AnnLifecycle {
       require(rot.length == pq.inputDim,
         s"$what: the pcarot rotation at $path projects to ${rot.length} dims but " +
           s"the ivfpq header encodes dim=${pq.inputDim}")
+      codec(pq, rot)
+    }
+    /** The one projected encoder: `pq` behind the rotation `rot`. */
+    def codec(pq: Codec, rot: Array[Array[Double]]): Codec = {
       val project = Similarity.pcaProject(_: DataFrame, rot, _: String, _: String)
       pq.copy(kind = this, inputDim = rot.head.length, project = project,
         encode = (v, i, c) => pq.encode(project(v, i, c), i, c))
@@ -232,10 +246,11 @@ private[graft] object AnnLifecycle {
       * byte for byte); anything else retrains a fresh basis by the
       * stored method (an OPQ_P artifact re-learns the eigenvalue
       * allocation, an OPQ_I one re-runs the alternating loop at its
-      * stamped iteration count) and the quantizers in it, stamping the
-      * new rotation with its capture baseline. Either way the rotation
-      * rides the rewrite from birth, so the recall gate probes each
-      * generation through its own basis.
+      * stamped iteration count and retrains the codebooks at the
+      * policy's) and the quantizers in it, stamping the new rotation
+      * with its capture baseline. Either way the rotation rides the
+      * rewrite from birth, so the recall gate probes each generation
+      * through its own basis.
       */
     def retrain(corpus: DataFrame, path: String, p: Similarity.RebuildPolicy,
                 signal: Option[String]): Retrain = {
@@ -244,18 +259,25 @@ private[graft] object AnnLifecycle {
       val (kv, rot) = Similarity.pcaRotHeader(spark, path, RebuildVerb)
       if (signal.exists(_.startsWith(Balance)))
         Retrain(rot.head.length, "quantizers", { tmp =>
-          val n = ivfPqRewrite(Similarity.pcaProject(corpus, rot, p.idCol, p.vecCol), tmp,
-            h, p)
+          val n = Similarity.annIndexWrite(Similarity.pcaProject(corpus, rot, p.idCol,
+            p.vecCol), tmp, retrainSpec(h, p), p.idCol, p.vecCol)
           val (fs, live) = Similarity.hadoopFs(spark, path)
           Similarity.carrySidecars(fs, live, new Path(tmp), spark.sessionState.newHadoopConf())
           n
         })
-      else
-        Retrain(rot.head.length, "rotation + quantizers", tmp =>
-          Similarity.rotatedIvfPqWrite(corpus, tmp, rot.head.length, rot.length,
-            kv.get("method"), kv.get("opq_iters").map(_.toInt).getOrElse(2), h.lists, h.m,
-            h.codes, h.residual, Some((p.kmIters, p.pqIters)), p.idCol, p.vecCol,
-            p.trainSample, p.trainFraction, finalCodebooks = false))
+      else {
+        val method = kv.get("method") match {
+          case Some("opq_p") => OpqP
+          case Some("opq_i") =>
+            OpqI(kv.get("opq_iters").map(_.toInt).getOrElse(2), keepCodebooks = false)
+          case _ => Pca(rot.length)
+        }
+        Retrain(rot.head.length, "rotation + quantizers", Similarity.annIndexWrite(corpus,
+          _,
+          RotatedSpec(rot.head.length, method, h.lists, h.m, h.codes, h.residual,
+            Trained(p.kmIters, p.pqIters), p.trainSample, p.trainFraction),
+          p.idCol, p.vecCol))
+      }
     }
     override def legacy(spark: SparkSession, path: String): Option[String] =
       Option.unless(Similarity.pcaHasCaptureBaseline(spark, path))(
@@ -267,6 +289,207 @@ private[graft] object AnnLifecycle {
         p.idCol, p.vecCol)
       s"capture baseline restamped at ${c}pm; "
     }
+  }
+
+  /** What one build of an artifact trains and stamps, per kind — the
+    * Faiss `index_factory` string as a value. The constructors hold the
+    * shape checks, so a bad spec refuses before any IO.
+    */
+  sealed trait Spec {
+    /** Train on `corpus` (the builder's step 3): the codec the rows
+      * encode under, and the stamp that writes this kind's headers and
+      * returns the row count.
+      */
+    private[operators] def train(corpus: DataFrame, idCol: String, vecCol: String): Built
+  }
+
+  /** Where an IVF-PQ build's coarse centroids and PQ codebooks come
+    * from.
+    */
+  sealed trait Quantizers
+  /** The SQL-derivable md5-salted arrays — the oracle-parity chain. */
+  case object Salted extends Quantizers
+  /** Caller-held arrays, shape-checked against the spec. */
+  final case class Given(centroids: Array[Array[Double]],
+                         codebooks: Array[Array[Array[Double]]]) extends Quantizers
+  /** Data-seeded training on the spec's sample: `kmIters` Lloyd's
+    * rounds for the centroids, `pqIters` for the codebooks (on the
+    * coarse residuals when the encoding is residual). The production
+    * posture, and what a rebuild installs.
+    */
+  final case class Trained(kmIters: Int = 2, pqIters: Int = 2) extends Quantizers
+
+  /** IVF-PQ over the raw vectors, plain or `residual` (the codes
+    * quantize each vector's residual to its coarse centroid).
+    * `trainSample`/`trainFraction` bound [[Trained]] quantizers.
+    */
+  final case class IvfPqSpec(dim: Int, lists: Int = 16, m: Int = 8, codes: Int = 16,
+                             residual: Boolean = false, quantizers: Quantizers = Salted,
+                             trainSample: Int = 0, trainFraction: Double = 0.0)
+      extends Spec {
+    require(dim % m == 0, s"dim=$dim must split into m=$m equal subspaces")
+
+    /** The quantizers over `train` (rows in the encoded space) as the
+      * header they stamp. [[Trained]] trains the coarse centroids, then
+      * the PQ codebooks — on the residuals the coarse quantizer leaves
+      * when `residual` (the Faiss IVFPQ training order; training sees
+      * float-cast residuals, it is statistical, while ENCODING always
+      * computes the exact double residual) — unless `loopCodebooks`
+      * were already trained in this space by an OPQ_I rotation.
+      */
+    private[operators] def quantize(train: DataFrame, idCol: String, vecCol: String,
+                                    loopCodebooks: Option[Array[Array[Array[Double]]]] = None)
+        : Similarity.IvfPqHeader = {
+      val (cents, cbs) = quantizers match {
+        case Salted => Similarity.ivfPqResolve(dim, lists, m, codes, None, None)
+        case Given(c, cb) => Similarity.ivfPqResolve(dim, lists, m, codes, Some(c), Some(cb))
+        case Trained(kmIters, pqIters) =>
+          val c = Similarity.kmeansCentroids(train, lists, kmIters, dim, idCol, vecCol,
+            trainSample, trainFraction, seedFromData = true)
+          (c, loopCodebooks.getOrElse(Similarity.pqLearnedCodebooks(
+            if (residual) Similarity.residualFloatFrame(train, c, idCol, vecCol) else train,
+            dim, m, codes, pqIters, vecCol, idCol, trainSample, trainFraction,
+            seedFromData = true)))
+      }
+      Similarity.IvfPqHeader(dim, lists, m, codes, cents, cbs,
+        Similarity.ivfPqParamsHash(dim, lists, m, codes, cents, cbs, residual), residual)
+    }
+
+    private[operators] def train(corpus: DataFrame, idCol: String, vecCol: String): Built = {
+      val h = quantize(corpus, idCol, vecCol)
+      Built(IvfPq.codec(h), { (spark, path) =>
+        IvfPq.stamp(h)(spark, path)
+        spark.read.parquet(path).count()
+      })
+    }
+  }
+
+  /** IVF-SQ8: one uint8 code per dimension between per-dimension
+    * bounds. `centroids` default to the salted ones; `bounds` default
+    * to exact min/max over the `trainSample`/`trainFraction` sample.
+    */
+  final case class IvfSqSpec(dim: Int, lists: Int = 16,
+                             centroids: Option[Array[Array[Double]]] = None,
+                             bounds: Option[(Array[Double], Array[Double])] = None,
+                             trainSample: Int = 0, trainFraction: Double = 0.0)
+      extends Spec {
+    private[operators] def train(corpus: DataFrame, idCol: String, vecCol: String): Built = {
+      val cents = centroids.getOrElse(Array.tabulate(lists)(Similarity.ivfCentroidSql(_, dim)))
+      val (vmin, vmax) = bounds.getOrElse(
+        Similarity.sqTrainBounds(corpus, dim, idCol, vecCol, trainSample, trainFraction))
+      val params = Similarity.sqHeaderParams(dim, lists, cents, vmin, vmax)
+      val h = Similarity.IvfSqHeader(dim, lists, cents, vmin, vmax,
+        graft.sources.ArtifactHeader.paramsHash("ivfsq", params))
+      Built(IvfSq.codec(h), { (spark, path) =>
+        graft.sources.ArtifactHeader.write(spark, path, "ivfsq", params)
+        // one read-back aggregate seeds the saturation-stats sidecar AND
+        // yields the row count (every row contributes one code per dim)
+        Similarity.sqStatsStamp(spark, path, dim)
+      })
+    }
+  }
+
+  /** How a rotated build trains its pcarot rotation. */
+  sealed trait Method
+  /** The top-`outDim` PCA eigenbasis (the Faiss `PCAR{outDim}`). */
+  final case class Pca(outDim: Int) extends Method
+  /** OPQ_P: the full-rank eigenbasis reordered by eigenvalue
+    * allocation (Faiss `OPQ{m}`, parametric).
+    */
+  case object OpqP extends Method
+  /** OPQ_I: the Ge et al. alternating loop, `iters` rounds warm-started
+    * from OPQ_P; `keepCodebooks` encodes with the loop's final-space
+    * codebooks instead of retraining them.
+    */
+  final case class OpqI(iters: Int, keepCodebooks: Boolean = true) extends Method
+
+  /** IVF-PQ behind a trained rotation from the raw `dim`: the rotation
+    * by `method`, then the [[IvfPqSpec]] of the other fields over the
+    * rotated vectors. The rotation is stamped as the pcarot sidecar
+    * with its training-time variance capture (the baseline
+    * [[Similarity.pcaCaptureAudit]] compares a fresh sample against);
+    * `trainSample`/`trainFraction` bound the rotation's covariance and
+    * any [[Trained]] quantizers alike.
+    */
+  final case class RotatedSpec(dim: Int, method: Method, lists: Int = 16, m: Int = 8,
+                               codes: Int = 16, residual: Boolean = false,
+                               quantizers: Quantizers = Salted, trainSample: Int = 0,
+                               trainFraction: Double = 0.0) extends Spec {
+    private val outDim = method match { case Pca(d) => d; case _ => dim }
+    require(outDim % m == 0, s"outDim=$outDim must split into m=$m equal PQ subspaces")
+    method match {
+      case OpqI(_, _) =>
+        require(quantizers.isInstanceOf[Trained],
+          "OPQ_I alternates rotation WITH codebook training — it needs Trained quantizers")
+        require(!residual,
+          "OPQ_I minimizes the PLAIN PQ reconstruction of the rotated vectors; residual " +
+            "encoding quantizes against coarse centroids the Procrustes step does not " +
+            "model — use OpqP with residual = true")
+      case _ =>
+    }
+
+    private[operators] def train(corpus: DataFrame, idCol: String, vecCol: String): Built = {
+      // ONE covariance aggregate feeds every trainer and the capture
+      // baseline (the alternating loop takes it rather than repeat the
+      // aggregate and the eigensolve)
+      val cov = Similarity.covarianceMatrix(corpus, dim, idCol, vecCol, trainSample,
+        trainFraction)
+      val (rot, loopCodebooks) = method match {
+        case Pca(d) => (Similarity.jacobiEigen(cov)._2.take(d), None)
+        case OpqP =>
+          val (eigs, eigRows) = Similarity.jacobiEigen(cov)
+          (Similarity.opqEigenAllocate(eigs, m).map(eigRows), None)
+        case OpqI(iters, keep) =>
+          Similarity.opqIterRotationFrom(corpus, cov, dim, m, codes, iters, idCol, vecCol,
+            trainSample, trainFraction, keep)
+      }
+      val h = IvfPqSpec(rot.length, lists, m, codes, residual, quantizers, trainSample,
+          trainFraction)
+        .quantize(Similarity.pcaProject(corpus, rot, idCol, vecCol), idCol, vecCol,
+          loopCodebooks)
+      val methodKeys = method match {
+        case Pca(_) => Nil
+        case OpqP => Seq("method" -> "opq_p")
+        case OpqI(iters, _) => Seq("method" -> "opq_i", "opq_iters" -> iters.toString)
+      }
+      Built(PcaIvfPq.codec(IvfPq.codec(h), rot), { (spark, path) =>
+        IvfPq.stamp(h)(spark, path)
+        graft.sources.ArtifactHeader.write(spark, path, "pcarot", Seq(
+          "dim" -> dim.toString, "out_dim" -> rot.length.toString,
+          "rotation" -> Similarity.encodeMatrix(rot),
+          "capture_pm" -> Similarity.capturePm(rot, cov).toString) ++ methodKeys)
+        spark.read.parquet(path).count()
+      })
+    }
+  }
+
+  /** A trained [[Spec]]: the codec its rows encode under, and the stamp
+    * that writes its headers and returns the row count.
+    */
+  private[operators] final case class Built(codec: Codec, stamp: (SparkSession, String) => Long)
+
+  /** The one builder ([[Similarity.annIndexWrite]]): writer entry (a
+    * crashed swap at `path` is repaired first, so its pending
+    * tombstones are back before they are counted), the tombstone
+    * refusal before any training, the spec's training, the codec's
+    * encode, the parquet overwrite, then the headers — last, after the
+    * overwrite has cleared the directory, so a header can never
+    * describe a half-written artifact — and the count.
+    */
+  def build(corpus: DataFrame, path: String, spec: Spec, idCol: String,
+            vecCol: String): Long = {
+    val spark = corpus.sparkSession
+    // a build over an EXISTING artifact is a rebuild in disguise: the
+    // overwrite clears every sidecar, so a LIVE tombstone set (a
+    // pending rights-removal) would vanish while the caller's corpus
+    // re-encodes the deleted rows — the resurrection the rebuild verbs
+    // refuse. Same contract here: fold first.
+    writerEntry(spark, path)(Similarity.requireNoTombstones(spark, path,
+      "annIndexWrite (build over an existing artifact)"))
+    val b = spec.train(corpus, idCol, vecCol)
+    b.codec.encode(corpus, idCol, vecCol)
+      .write.mode("overwrite").option("compression", "zstd").parquet(path)
+    b.stamp(spark, path)
   }
 
   /** Whether the artifact carries a pcarot rotation — its rows are
@@ -294,9 +517,8 @@ private[graft] object AnnLifecycle {
     kindOf(spark, path).getOrElse(throw new IllegalArgumentException(
       s"$what: no IVF-PQ header (ivfpq) or IVF-SQ8 header (ivfsq) at $path — not a " +
         "stamped ANN artifact, so " +
-        "nothing verifies which quantizers built it. Write it with ivfPqIndexWrite, " +
-        "ivfSqIndexWrite or pcaIvfPqIndexWrite (which stamp one), or stamp a " +
-        "legacy IVF-PQ artifact with ivfPqWriteHeader"))
+        "nothing verifies which quantizers built it. Write it with annIndexWrite " +
+        "(which stamps one), or stamp a legacy IVF-PQ artifact with ivfPqWriteHeader"))
 
   /** The codec of the stamped artifact at `path`: [[requireKind]],
     * then that kind's [[Kind.open]].
@@ -330,41 +552,17 @@ private[graft] object AnnLifecycle {
                          project: (DataFrame, String, String) => DataFrame = (q, _, _) => q,
                          afterAppend: DataFrame => Unit = _ => ())
 
-  /** Content-addressed admission: encode only the rows of `newVectors`
-    * whose id the artifact does not hold yet (re-sending a batch is
-    * idempotent), parquet-append them, then run `afterWrite` on the
-    * admitted rows before they are freed. `exists = false` is the
-    * bootstrap of a brand-new artifact (nothing to anti-join).
-    * Returns the number of admitted rows.
-    */
-  def admit(newVectors: DataFrame, indexPath: String, idCol: String,
-            storedIdCol: String, exists: Boolean = true)
-           (encode: DataFrame => DataFrame)
-           (afterWrite: (DataFrame, Long) => Unit): Long = {
-    val admitted =
-      if (!exists) newVectors
-      else newVectors.join(newVectors.sparkSession.read.parquet(indexPath)
-        .select(col(storedIdCol).as(idCol)), Seq(idCol), "left_anti")
-    // materialize before writing: the anti-join reads indexPath, and
-    // appending to a path mid-read is undefined
-    val fresh = encode(admitted).localCheckpoint()
-    try {
-      val n = fresh.count()
-      if (n > 0)
-        fresh.write.mode("append").option("compression", "zstd").parquet(indexPath)
-      afterWrite(fresh, n)
-      n
-    } finally graft.plans.CheckpointHygiene.free(fresh)
-  }
-
   /** The header-driven append shared by every kind: writer entry +
-    * [[open]], dim guard, tombstone admission check, [[admit]], then
-    * the post-write generation backstop — the codec is re-opened AFTER
-    * the write and a changed header hash refuses LOUDLY (a concurrent
-    * rebuild swapped generations underneath, so the artifact now holds
-    * mixed codes). The backstop runs BEFORE `afterAppend`, so a new
-    * generation's freshly rebuilt sidecars are never overwritten with
-    * counts from the doomed batch.
+    * [[open]], dim guard, tombstone admission check, then
+    * content-addressed admission — encode only the rows of
+    * `newVectors` whose id the artifact does not hold yet (re-sending a
+    * batch is idempotent) and parquet-append them — then the post-write
+    * generation backstop: the codec is re-opened AFTER the write and a
+    * changed header hash refuses LOUDLY (a concurrent rebuild swapped
+    * generations underneath, so the artifact now holds mixed codes).
+    * The backstop runs BEFORE `afterAppend`, so a new generation's
+    * freshly rebuilt sidecars are never overwritten with counts from
+    * the doomed batch. Returns the number of admitted rows.
     */
   def appendAt(newVectors: DataFrame, indexPath: String, idCol: String,
                vecCol: String, what: String): Long = {
@@ -372,18 +570,26 @@ private[graft] object AnnLifecycle {
     val c = writerEntry(spark, indexPath)(open(spark, indexPath, what))
     Similarity.requireCorpusDim(newVectors, c.inputDim, indexPath, vecCol, what)
     Similarity.requireNoTombstoneHit(newVectors, spark, indexPath, idCol, what)
-    admit(newVectors, indexPath, idCol, c.kind.idCol)(c.encode(_, idCol, vecCol)) {
-      (fresh, n) =>
-        val after = open(spark, indexPath, what).generation
-        if (after != c.generation)
-          sys.error(s"$what: the artifact at $indexPath was re-stamped " +
-            s"MID-APPEND (header ${c.generation} -> $after): a concurrent " +
-            "rebuild swapped generations underneath this append, so the " +
-            "artifact now holds mixed codes — serialize appends and rebuilds " +
-            s"in one maintenance loop, and re-run $RebuildVerb to " +
-            "re-encode and heal it")
-        if (n > 0) c.afterAppend(fresh)
-    }
+    val admitted = newVectors.join(spark.read.parquet(indexPath)
+      .select(col(c.kind.idCol).as(idCol)), Seq(idCol), "left_anti")
+    // materialize before writing: the anti-join reads indexPath, and
+    // appending to a path mid-read is undefined
+    val fresh = c.encode(admitted, idCol, vecCol).localCheckpoint()
+    try {
+      val n = fresh.count()
+      if (n > 0)
+        fresh.write.mode("append").option("compression", "zstd").parquet(indexPath)
+      val after = open(spark, indexPath, what).generation
+      if (after != c.generation)
+        sys.error(s"$what: the artifact at $indexPath was re-stamped " +
+          s"MID-APPEND (header ${c.generation} -> $after): a concurrent " +
+          "rebuild swapped generations underneath this append, so the " +
+          "artifact now holds mixed codes — serialize appends and rebuilds " +
+          s"in one maintenance loop, and re-run $RebuildVerb to " +
+          "re-encode and heal it")
+      if (n > 0) c.afterAppend(fresh)
+      n
+    } finally graft.plans.CheckpointHygiene.free(fresh)
   }
 
   /** The verb named in rebuild refusals. */

@@ -152,7 +152,10 @@ object Forget {
       return Report(0, Map.empty, None, None, None, Map.empty, None, Nil)
 
     // -- phase 1: validate everything before mutating anything
-    t.annIndexPaths.foreach(AnnLifecycle.requireKind(spark, _, "forgetDocuments"))
+    // a crashed ANN swap is repaired before its header is read: the
+    // missing path is not "not an artifact"
+    t.annIndexPaths.foreach(p => AnnLifecycle.writerEntry(spark, p)(
+      AnnLifecycle.requireKind(spark, p, "forgetDocuments")))
     t.bandIndexPath.foreach(p =>
       graft.sources.ArtifactHeader.required(spark, p, "bands"))
     // the gram artifact dispatches on its own header kind: "grams"

@@ -894,7 +894,7 @@ object Similarity {
         col("neighbor_id"), col("score_e6"))
   }
 
-  private def pqCodebooks(m: Int, codes: Int, subDim: Int): Array[Array[Array[Double]]] =
+  private[graft] def pqCodebooks(m: Int, codes: Int, subDim: Int): Array[Array[Array[Double]]] =
     Array.tabulate(m)(s => Array.tabulate(codes)(c => saltedCentroid(s"pq$s", c, subDim)))
 
   /** Learned PQ codebooks: per-subspace k-means over the sliced
@@ -1193,10 +1193,11 @@ object Similarity {
     * at 100 TB this table — NOT the raw vectors — is what an index
     * build persists and what every probe scans. Write it out once
     * (parquet), then answer new queries with [[annIvfPqProbe]] and
-    * never touch the training corpus again; append-only growth is one
-    * [[ivfPqIndex]] pass over the new vectors unioned onto the stored
-    * artifact (same posture as the dedup family's band index / gram
-    * set / bloom bitmap / KMV sketch artifacts).
+    * never touch the training corpus again; append-only growth
+    * ([[annAppendAt]]) is one [[ivfPqIndex]] pass over the new vectors
+    * unioned onto the stored artifact (same posture as the dedup
+    * family's band index / gram set / bloom bitmap / KMV sketch
+    * artifacts). [[annIndexWrite]] persists it with its header.
     *
     * Salted SQL-derivable defaults keep every artifact row
     * oracle-checkable end to end; production passes learned
@@ -1219,57 +1220,6 @@ object Similarity {
           pqEncodeResUdf(cents, cbs, subDim)(col("v"), col("list_id")))
       else assigned.withColumn("codes", pqEncodeUdf(cbs, subDim)(col("v")))
     coded.drop("v")
-  }
-
-  /** Append-only growth of a persisted [[ivfPqIndex]] artifact: encode
-    * ONLY the new vectors (ids not yet indexed — admission is
-    * content-addressed by vec_id, so re-sending a batch is idempotent)
-    * and parquet-append their rows. History is never rewritten and
-    * never re-encoded; with the same build parameters the grown
-    * artifact equals `ivfPqIndex(old corpus ∪ new vectors)` row for
-    * row — the [[graft.streaming.StreamingNearDup.appendToIndex]]
-    * convention for the ANN family. Returns the number of admitted
-    * vectors.
-    *
-    * Layout: each append writes with the batch's own partitioning
-    * (day-scale batches can be arbitrarily large, so no forced
-    * coalesce here); periodic
-    * [[graft.sources.ArtifactCompaction.compactFiles]] bounds the
-    * file count and carries the header sidecar — the documented
-    * grow/compact lifecycle, soaked in `AnnProbe lifecycle`.
-    */
-  def ivfPqIndexAppend(newVectors: DataFrame, indexPath: String,
-                       dim: Int, lists: Int = 16, m: Int = 8, codes: Int = 16,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       centroids: Option[Array[Array[Double]]] = None,
-                       codebooks: Option[Array[Array[Array[Double]]]] = None,
-                       residual: Boolean = false): Long = {
-    val spark = newVectors.sparkSession
-    val (cents, cbs) = ivfPqResolve(dim, lists, m, codes, centroids, codebooks)
-    // existence through the Hadoop FileSystem of the path's own scheme:
-    // a 100 TB artifact lives on an object store or HDFS, where a local
-    // java.io check is always false and a silent re-admission of
-    // re-sent batches would break the idempotency contract
-    val (fs, p) = hadoopFs(spark, indexPath)
-    // "missing" after a crashed rebuild/fold swap is NOT "brand new" —
-    // bootstrapping here would re-stamp a fresh header over the lost
-    // corpus; repair the swap first (no-op without crash evidence)
-    graft.sources.SwapRecovery.repair(fs, p)
-    val exists = fs.exists(p)
-    if (exists) ivfPqReadHeader(spark, indexPath) match {
-      case Some(hdr) => ivfPqRequireMatch(hdr, dim, lists, m, codes, cents, cbs,
-        indexPath, residual)
-      // pre-header (legacy) artifact: the caller's params were the only
-      // contract — stamp them so every LATER append/probe is validated
-      case None => ivfPqWriteHeader(spark, indexPath, dim, lists, m, codes, cents, cbs,
-        residual)
-    }
-    AnnLifecycle.admit(newVectors, indexPath, idCol, "vec_id", exists)(
-      ivfPqIndex(_, dim, lists, m, codes, idCol, vecCol, Some(cents), Some(cbs), residual)) {
-      (_, _) =>
-        if (!exists) ivfPqWriteHeader(spark, indexPath, dim, lists, m, codes, cents, cbs,
-          residual)
-    }
   }
 
   /** Residuals of every corpus vector w.r.t. its assigned coarse
@@ -1301,14 +1251,14 @@ object Similarity {
                                            indexPath: String, what: String): IvfPqHeader =
     ivfPqReadHeader(spark, indexPath).getOrElse(throw new IllegalArgumentException(
       s"$what: no IVF-PQ header at $indexPath: cannot verify which quantizers built " +
-        "this artifact. Write it with ivfPqIndexWrite / pcaIvfPqIndexWrite (which " +
-        "stamp one), or stamp it explicitly with ivfPqWriteHeader."))
+        "this artifact. Write it with annIndexWrite (which stamps one), or stamp it " +
+        "explicitly with ivfPqWriteHeader."))
 
   /** Shared default-resolution + shape validation of the IVF-PQ build
     * parameters — the single place the salted fallbacks are chosen, so
     * build, append, probe and header paths cannot disagree on them.
     */
-  private def ivfPqResolve(dim: Int, lists: Int, m: Int, codes: Int,
+  private[operators] def ivfPqResolve(dim: Int, lists: Int, m: Int, codes: Int,
                            centroids: Option[Array[Array[Double]]],
                            codebooks: Option[Array[Array[Array[Double]]]])
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
@@ -1372,7 +1322,7 @@ object Similarity {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  private def encodeMatrix(mx: Array[Array[Double]]): String =
+  private[operators] def encodeMatrix(mx: Array[Array[Double]]): String =
     mx.map(_.map(d => java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d)))
       .mkString(",")).mkString(";")
 
@@ -1460,48 +1410,20 @@ object Similarity {
     }
   }
 
-  private def ivfPqRequireMatch(hdr: IvfPqHeader, dim: Int, lists: Int, m: Int,
-                                codes: Int, cents: Array[Array[Double]],
-                                cbs: Array[Array[Array[Double]]], indexPath: String,
-                                residual: Boolean = false): Unit = {
-    val caller = ivfPqParamsHash(dim, lists, m, codes, cents, cbs, residual)
-    require(caller == hdr.paramsHash,
-      s"IVF-PQ artifact at $indexPath was built with different quantizers: " +
-        s"header (dim=${hdr.dim}, lists=${hdr.lists}, m=${hdr.m}, codes=${hdr.codes}, " +
-        s"residual=${hdr.residual}, hash=${hdr.paramsHash}) vs caller (dim=$dim, " +
-        s"lists=$lists, m=$m, codes=$codes, residual=$residual, hash=$caller) — " +
-        "probing or appending with mismatched centroids/codebooks/encoding " +
-        "silently returns wrong neighbors; rebuild with " +
-        "ivfPqIndexWrite or pass the original arrays")
-  }
-
-  /** Build AND persist the [[ivfPqIndex]] artifact with its
-    * self-describing header in one call — the production write path.
-    * Returns the number of vectors indexed.
+  /** Build AND persist an ANN artifact of any kind with its
+    * self-describing headers in one call — the one production write
+    * path. `spec` names the kind and what it trains
+    * ([[AnnLifecycle.IvfPqSpec]], [[AnnLifecycle.IvfSqSpec]],
+    * [[AnnLifecycle.RotatedSpec]]); the rows are encoded by the codec
+    * [[annAppendAt]] later re-opens from the stamped headers, so the
+    * encoder that grows an artifact is the one that built it. A build
+    * over an existing artifact repairs a crashed swap first and refuses
+    * its live tombstones (fold first). Returns the number of vectors
+    * indexed.
     */
-  def ivfPqIndexWrite(embeddings: DataFrame, indexPath: String,
-                      dim: Int, lists: Int = 16, m: Int = 8, codes: Int = 16,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      centroids: Option[Array[Array[Double]]] = None,
-                      codebooks: Option[Array[Array[Array[Double]]]] = None,
-                      residual: Boolean = false): Long = {
-    val spark = embeddings.sparkSession
-    // a build over an EXISTING artifact is a rebuild in disguise: the
-    // overwrite clears every sidecar, so a LIVE tombstone set (a
-    // pending rights-removal) would vanish while the caller's corpus
-    // re-encodes the deleted rows — the resurrection the rebuild verbs
-    // refuse. Same contract here: fold first.
-    requireNoTombstones(spark, indexPath,
-      "ivfPqIndexWrite (build over an existing artifact)")
-    val (cents, cbs) = ivfPqResolve(dim, lists, m, codes, centroids, codebooks)
-    ivfPqIndex(embeddings, dim, lists, m, codes, idCol, vecCol, Some(cents), Some(cbs),
-        residual)
-      .write.mode("overwrite").option("compression", "zstd").parquet(indexPath)
-    // after the parquet overwrite (which clears the directory), so the
-    // header can never describe a half-written artifact
-    ivfPqWriteHeader(spark, indexPath, dim, lists, m, codes, cents, cbs, residual)
-    spark.read.parquet(indexPath).count()
-  }
+  def annIndexWrite(corpus: DataFrame, indexPath: String, spec: AnnLifecycle.Spec,
+                    idCol: String = "vec_id", vecCol: String = "embedding"): Long =
+    AnnLifecycle.build(corpus, indexPath, spec, idCol, vecCol)
 
   /** Search a PERSISTED ANN artifact of any kind — IVF-PQ (plain or
     * residual), IVF-SQ8, or IVF-PQ under a stored pcarot rotation (PCA
@@ -1698,36 +1620,10 @@ object Similarity {
       AnnLifecycle.rebuild(corpus, indexPath, Some(signal), policy))
   }
 
-  /** Train both IVF-PQ quantizers on `train`: coarse centroids, then
-    * PQ codebooks — on the residuals the coarse quantizer leaves when
-    * `residual` (the Faiss IVFPQ training order; training sees
-    * float-cast residuals, it is statistical, while ENCODING always
-    * computes the exact double residual in pqEncodeResUdf).
-    * `codebooks` skips the codebook training for a caller that already
-    * holds codebooks trained in this space (iterative OPQ).
-    */
-  private[operators] def trainIvfPq(train: DataFrame, dim: Int, lists: Int, m: Int, codes: Int,
-                         residual: Boolean, kmIters: Int, pqIters: Int,
-                         idCol: String, vecCol: String, trainSample: Int,
-                         trainFraction: Double, seedFromData: Boolean,
-                         codebooks: Option[Array[Array[Array[Double]]]] = None)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cents = kmeansCentroids(train, k = lists, iters = kmIters, dim = dim,
-      idCol = idCol, vecCol = vecCol, trainSample = trainSample,
-      trainFraction = trainFraction, seedFromData = seedFromData)
-    val cbs = codebooks.getOrElse {
-      val cbFrame = if (residual) residualFloatFrame(train, cents, idCol, vecCol) else train
-      pqLearnedCodebooks(cbFrame, dim = dim, m = m, codes = codes, iters = pqIters,
-        vecCol = vecCol, idCol = idCol, trainSample = trainSample,
-        trainFraction = trainFraction, seedFromData = seedFromData)
-    }
-    (cents, cbs)
-  }
-
   /** Refuse a rebuild whose corpus vectors disagree with the
     * artifact's encoded dimensionality — the sliced-vector hazard: the
     * subspace trainers take `v.slice(...)`, so a 64-dim raw corpus
-    * against a 32-dim projected artifact (a [[pcaIvfPqIndexWrite]]
+    * against a 32-dim projected artifact (a PCA [[annIndexWrite]]
     * index rebuilt from unprojected vectors) would silently train on
     * the first half of every vector.
     *
@@ -1799,7 +1695,7 @@ object Similarity {
 
   /** List-balance audit of a (possibly append-grown) IVF-PQ artifact,
     * computed from the artifact ALONE — no corpus vectors touched.
-    * [[ivfPqIndexAppend]] grows forever against frozen centroids;
+    * [[annAppendAt]] grows forever against frozen centroids;
     * distribution drift re-creates exactly the winner-take-all
     * imbalance the learned coarse quantizer exists to prevent, and a
     * skewed list silently erodes the `nprobe/lists` scan bound (one
@@ -2249,46 +2145,12 @@ object Similarity {
     annIvfSqProbeFrame(index, queries, k, nprobe, cents, vmin, vmax, idCol, vecCol)
   }
 
-  private def sqHeaderParams(dim: Int, lists: Int, cents: Array[Array[Double]],
+  private[operators] def sqHeaderParams(dim: Int, lists: Int, cents: Array[Array[Double]],
                              vmin: Array[Double], vmax: Array[Double]): Seq[(String, String)] =
     Seq("dim" -> dim.toString, "lists" -> lists.toString,
       "centroids" -> encodeMatrix(cents),
       "vmin" -> encodeMatrix(Array(vmin)),
       "vmax" -> encodeMatrix(Array(vmax)))
-
-  /** Build AND persist the IVF-SQ8 artifact with a self-describing
-    * header (coarse centroids + trained bounds as raw-bit hex, content
-    * hashed — the [[graft.sources.ArtifactHeader]] trust convention):
-    * stored codes are meaningless without the exact bounds they were
-    * encoded under. Returns the number of vectors indexed.
-    */
-  def ivfSqIndexWrite(embeddings: DataFrame, indexPath: String, dim: Int,
-                      lists: Int = 16,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      centroids: Option[Array[Array[Double]]] = None,
-                      bounds: Option[(Array[Double], Array[Double])] = None,
-                      trainSample: Int = 0, trainFraction: Double = 0.0): Long = {
-    val spark = embeddings.sparkSession
-    // the ivfPqIndexWrite contract: building over an existing artifact
-    // with live tombstones would discard a pending rights-removal and
-    // re-encode the deleted rows — fold first
-    requireNoTombstones(spark, indexPath,
-      "ivfSqIndexWrite (build over an existing artifact)")
-    val cents = centroids.getOrElse(Array.tabulate(lists)(c => ivfCentroidSql(c, dim)))
-    val (vmin, vmax) = bounds.getOrElse(
-      sqTrainBounds(embeddings, dim, idCol, vecCol, trainSample, trainFraction))
-    ivfSqIndex(embeddings, dim, lists, idCol, vecCol, Some(cents), Some((vmin, vmax)))
-      .write.mode("overwrite").option("compression", "zstd").parquet(indexPath)
-    // header last, after the parquet overwrite, so it can never
-    // describe a half-written artifact (the ivfPqIndexWrite contract)
-    graft.sources.ArtifactHeader.write(spark, indexPath, "ivfsq",
-      sqHeaderParams(dim, lists, cents, vmin, vmax))
-    // one read-back aggregate seeds the saturation-stats sidecar AND
-    // yields the row count (every row contributes one code per dim)
-    val stats = sqStatsArray(spark.read.parquet(indexPath), dim)
-    sqStatsWrite(spark, indexPath, stats)
-    stats.headOption.map(_._1).getOrElse(0L)
-  }
 
   /** Parsed ivfsq header plus its content hash — the generation token
     * [[annAppendAt]] compares across its own write (a rebuild
@@ -2311,7 +2173,7 @@ object Similarity {
     val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "ivfsq").getOrElse(
       sys.error(s"$what: no ivfsq header at $indexPath — stored codes " +
         "cannot be decoded without the exact bounds they were encoded under; " +
-        "build with ivfSqIndexWrite (which stamps the header)"))
+        "build with annIndexWrite (which stamps the header)"))
     val dim = kv("dim").toInt
     val cents = decodeMatrix(kv("centroids"))
     val vmin = decodeMatrix(kv("vmin")).head
@@ -2449,10 +2311,17 @@ object Similarity {
     * the artifact directory bypass the accumulation).
     */
   def ivfSqStatsRestamp(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): Unit = {
-    val hdr = sqRequireHeader(spark, indexPath, "ivfSqStatsRestamp")
-    sqStatsWrite(spark, indexPath,
-      sqStatsArray(spark.read.parquet(indexPath), hdr.dim))
+                        indexPath: String): Unit =
+    sqStatsStamp(spark, indexPath, sqRequireHeader(spark, indexPath, "ivfSqStatsRestamp").dim)
+
+  /** Stamp the stats sidecar from the canonical scan; returns the row
+    * count (every row contributes one code per dim).
+    */
+  private[operators] def sqStatsStamp(spark: org.apache.spark.sql.SparkSession,
+                                      indexPath: String, dim: Int): Long = {
+    val stats = sqStatsArray(spark.read.parquet(indexPath), dim)
+    sqStatsWrite(spark, indexPath, stats)
+    stats.headOption.map(_._1).getOrElse(0L)
   }
 
   // ------------------------------------------------------------------
@@ -2937,89 +2806,6 @@ object Similarity {
     embeddings.select(col(idCol), proj(col(vecCol)).as(vecCol))
   }
 
-  /** Build AND persist the composed PCAR -> IVF-PQ artifact (the
-    * Faiss "PCAR{outDim},IVF{lists},PQ{m}" factory string as one
-    * call): train the rotation (sample-bounded), project the corpus,
-    * write the IVF-PQ index over the PROJECTED vectors, and stamp the
-    * rotation as its own content-hashed `pcarot` sidecar next to the
-    * ivfpq header — queries must be projected through the EXACT same
-    * matrix or the probe searches a different space, which is the
-    * same silent-wrong-neighbors failure every header here exists to
-    * prevent. Returns the number of vectors indexed.
-    */
-  def pcaIvfPqIndexWrite(embeddings: DataFrame, indexPath: String,
-                         dim: Int, outDim: Int,
-                         lists: Int = 16, m: Int = 8, codes: Int = 16,
-                         idCol: String = "vec_id", vecCol: String = "embedding",
-                         trainSample: Int = 0, trainFraction: Double = 0.0,
-                         residual: Boolean = false,
-                         trainQuantizers: Boolean = false): Long = {
-    require(outDim % m == 0,
-      s"outDim=$outDim must split into m=$m equal PQ subspaces")
-    val spark = embeddings.sparkSession
-    // refuse BEFORE the covariance/eigen training, not after —
-    // ivfPqIndexWrite would refuse anyway, but only once the
-    // expensive solve is already paid
-    requireNoTombstones(spark, indexPath,
-      "pcaIvfPqIndexWrite (build over an existing artifact)")
-    // trainQuantizers = the production posture (what annRebuildAt
-    // would install): data-seeded learned centroids + codebooks
-    // trained IN PROJECTION space on the same bounded sample; off by
-    // default to keep the salted oracle-shared quantizer chain
-    rotatedIvfPqWrite(embeddings, indexPath, dim, outDim, None, 0, lists, m, codes,
-      residual, Option.when(trainQuantizers)((2, 2)), idCol, vecCol, trainSample,
-      trainFraction, finalCodebooks = false)
-  }
-
-  /** Train a rotation on `embeddings`, write an IVF-PQ artifact over
-    * the rotated vectors, then stamp the rotation as the content-hashed
-    * pcarot sidecar — the shared body of the PCA/OPQ builders and the
-    * PCA rebuild. The rotation trainer follows the pcarot `method`:
-    * the truncated PCA eigenbasis (None), the OPQ_P eigenvalue
-    * allocation ("opq_p", full rank), or the OPQ_I alternating loop at
-    * `opqIters` ("opq_i"; with `finalCodebooks` it also returns
-    * codebooks trained in its final space, which the write then uses).
-    * Every trainer reads ONE covariance aggregate, which also yields
-    * the training-time variance capture stamped WITH the rotation —
-    * the baseline [[pcaCaptureAudit]] compares a fresh sample against.
-    * `iters` = (kmeans, codebook) iterations of data-seeded quantizer
-    * training in rotated space; None keeps the salted quantizers.
-    */
-  private[operators] def rotatedIvfPqWrite(embeddings: DataFrame, path: String, dim: Int,
-                                outDim: Int, method: Option[String], opqIters: Int,
-                                lists: Int, m: Int, codes: Int, residual: Boolean,
-                                iters: Option[(Int, Int)], idCol: String, vecCol: String,
-                                trainSample: Int, trainFraction: Double,
-                                finalCodebooks: Boolean): Long = {
-    val cov = covarianceMatrix(embeddings, dim, idCol, vecCol, trainSample, trainFraction)
-    val (rot, rotCbs) = method match {
-      case Some("opq_p") =>
-        val (eigs, eigRows) = jacobiEigen(cov)
-        (opqEigenAllocate(eigs, m).map(eigRows), None)
-      // the Ge et al. alternating loop, warm-started from the same
-      // eigen allocation and fed THIS covariance (recomputing it would
-      // repeat the aggregate and the eigensolve)
-      case Some("opq_i") =>
-        opqIterRotationFrom(embeddings, cov, dim, m, codes, opqIters, idCol, vecCol,
-          trainSample, trainFraction, finalCodebooks)
-      case _ => (jacobiEigen(cov)._2.take(outDim), None)
-    }
-    val proj = pcaProject(embeddings, rot, idCol, vecCol)
-    val trained = iters.map { case (kmIters, pqIters) =>
-      trainIvfPq(proj, rot.length, lists, m, codes, residual, kmIters, pqIters, idCol,
-        vecCol, trainSample, trainFraction, seedFromData = true, rotCbs)
-    }
-    val n = ivfPqIndexWrite(proj, path, rot.length, lists, m, codes, idCol, vecCol,
-      trained.map(_._1), trained.map(_._2), residual = residual)
-    graft.sources.ArtifactHeader.write(embeddings.sparkSession, path, "pcarot", Seq(
-      "dim" -> dim.toString, "out_dim" -> rot.length.toString,
-      "rotation" -> encodeMatrix(rot),
-      "capture_pm" -> capturePm(rot, cov).toString) ++
-      method.map("method" -> _) ++
-      (if (method.contains("opq_i")) Seq("opq_iters" -> opqIters.toString) else Nil))
-    n
-  }
-
   /** The stored rotation of a composed PCA artifact — the read-path
     * accessor every consumer (probe, refine, projected-corpus rebuild)
     * trusts instead of retraining.
@@ -3037,7 +2823,8 @@ object Similarity {
     val kv = graft.sources.ArtifactHeader.read(spark, indexPath, "pcarot").getOrElse(
       sys.error(s"$what: no pcarot header at $indexPath — the index holds PROJECTED " +
         "vectors, and probing it with unprojected queries scores a different space " +
-        "silently; build with pcaIvfPqIndexWrite (which stamps the rotation)"))
+        "silently; build with annIndexWrite over a RotatedSpec (which stamps the " +
+        "rotation)"))
     val rot = decodeMatrix(kv("rotation"))
     require(rot.length == kv("out_dim").toInt &&
       rot.forall(_.length == kv("dim").toInt),
@@ -3187,54 +2974,6 @@ object Similarity {
     opqEigenAllocate(eigs, m).map(rows)
   }
 
-  /** Build AND persist the OPQ{m} -> IVF-PQ artifact (the Faiss
-    * "OPQ{m},IVF{lists},PQ{m}" factory string as one call): train the
-    * allocation-permuted eigenrotation, rotate the corpus, train both
-    * quantizers IN ROTATED SPACE (ON by default — balancing subspace
-    * variance is the point, and untrained salted codebooks cannot see
-    * it; the oracle-parity untrained chain lives in the q_ann_opq
-    * permutation gate instead), write the IVF-PQ index over the
-    * rotated vectors, stamp the rotation as the pcarot sidecar with
-    * `method=opq_p`. Every pcarot consumer then just works: probe and
-    * refine project queries through the stored rotation
-    * ([[annProbeAt]]/[[annRefineAt]]), the appender rotates new
-    * batches ([[annAppendAt]]), and the
-    * full-stack rebuild re-learns rotation + allocation + quantizers
-    * ([[annRebuildAt]] is method-aware). The capture baseline is
-    * 1000 by construction (full rank discards nothing) — this
-    * artifact's staleness signals are quantizer balance and rebuild's
-    * own recall gate, not variance capture.
-    */
-  def opqIvfPqIndexWrite(embeddings: DataFrame, indexPath: String,
-                         dim: Int,
-                         lists: Int = 16, m: Int = 8, codes: Int = 16,
-                         idCol: String = "vec_id", vecCol: String = "embedding",
-                         trainSample: Int = 0, trainFraction: Double = 0.0,
-                         residual: Boolean = false,
-                         trainQuantizers: Boolean = true,
-                         refineIters: Int = 0): Long = {
-    val spark = embeddings.sparkSession
-    require(refineIters == 0 || trainQuantizers,
-      "opqIvfPqIndexWrite: refineIters alternates rotation WITH codebook " +
-        "training — it is meaningless with trainQuantizers = false")
-    require(refineIters == 0 || !residual,
-      "opqIvfPqIndexWrite: the iterative refinement minimizes the PLAIN PQ " +
-        "reconstruction of the rotated vectors; residual encoding quantizes " +
-        "against coarse centroids the Procrustes step does not model — use " +
-        "OPQ_P (refineIters = 0) with residual = true")
-    // refuse BEFORE the covariance/eigen/alternating training (the
-    // ivfPqIndexWrite guard would fire anyway, but only after the
-    // expensive solve is paid)
-    requireNoTombstones(spark, indexPath,
-      "opqIvfPqIndexWrite (build over an existing artifact)")
-    // refineIters > 0: the Ge et al. alternating loop, which also
-    // hands back codebooks already trained in the final space
-    rotatedIvfPqWrite(embeddings, indexPath, dim, dim,
-      Some(if (refineIters > 0) "opq_i" else "opq_p"), refineIters, lists, m, codes,
-      residual, Option.when(trainQuantizers)((2, 2)), idCol, vecCol, trainSample,
-      trainFraction, finalCodebooks = true)
-  }
-
   /** NON-PARAMETRIC OPQ (Ge et al. 2013 §4, the production Faiss
     * OPQMatrix training loop): alternate (a) train PQ codebooks in the
     * current rotation's space with (b) re-solve the rotation as the
@@ -3283,7 +3022,7 @@ object Similarity {
     * training for callers that retrain codebooks themselves (the
     * rebuild path, whose pqIters/residual parameters differ).
     */
-  private def opqIterRotationFrom(embeddings: DataFrame,
+  private[operators] def opqIterRotationFrom(embeddings: DataFrame,
                                   cov: Array[Array[Double]],
                                   dim: Int, m: Int, codes: Int, iters: Int,
                                   idCol: String, vecCol: String,

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.TimeUnit
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
+import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec}
 import graft.operators.Similarity
 import graft.sources.ArtifactMaintainer
 import graft.streaming.{StreamingCuration, StreamingCurationFull,
@@ -136,8 +137,8 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val day2 = (1000 until 1256).map { i =>
       (i.toLong, Seq.fill(8)((0.85 + rnd.nextDouble() * 0.1).toFloat))
     }
-    Similarity.ivfPqIndexWrite(
-      day1.toDF("vec_id", "embedding"), dir, dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(
+      day1.toDF("vec_id", "embedding"), dir, IvfPqSpec(8, lists = 4, m = 8))
 
     val maint = new ArtifactMaintainer() // no owning stream: batch appenders only
     val appended = new java.util.concurrent.CopyOnWriteArrayList[Seq[(Long, Seq[Float])]]()
@@ -253,8 +254,8 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val rnd = new scala.util.Random(1307)
     val base = (0 until 64).map(i =>
       (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
-    Similarity.ivfPqIndexWrite(
-      base.toDF("vec_id", "embedding"), dir, dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(
+      base.toDF("vec_id", "embedding"), dir, IvfPqSpec(8, lists = 4, m = 8))
     val maint = new ArtifactMaintainer()
     var corpusRows = base
     def check = ArtifactMaintainer.annRebuildDue(spark, dir,
@@ -283,8 +284,7 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val rnd = new scala.util.Random(1413)
     val base = (0 until 64).map(i =>
       (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
-    Similarity.ivfSqIndexWrite(base.toDF("vec_id", "embedding"), dir,
-      dim = 8, lists = 4)
+    Similarity.annIndexWrite(base.toDF("vec_id", "embedding"), dir, IvfSqSpec(8, lists = 4))
     val maint = new ArtifactMaintainer()
     var corpusRows = base
     def check = ArtifactMaintainer.annRebuildDue(spark, dir,
@@ -312,9 +312,9 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     val dir = new java.io.File(
       java.nio.file.Files.createTempDirectory("graft_due_sq_legacy").toFile, "idx").getPath
     val rnd = new scala.util.Random(1414)
-    Similarity.ivfSqIndexWrite((0 until 64).map(i =>
+    Similarity.annIndexWrite((0 until 64).map(i =>
         (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
-      .toDF("vec_id", "embedding"), dir, dim = 8, lists = 4)
+      .toDF("vec_id", "embedding"), dir, IvfSqSpec(8, lists = 4))
     // forge a pre-stats artifact: every saturation poll scans the codes
     assert(new java.io.File(dir,
       graft.sources.ArtifactHeader.sidecarName("ivfsq_stats")).delete())

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec, Pca, RotatedSpec}
 import graft.operators.{Curation, Dedup, Forget, Similarity}
 import graft.sources.{ArtifactMaintainer, Tombstones}
 import graft.streaming.{StreamingNearDup, StreamingSubstringDedup}
@@ -59,7 +60,7 @@ class ForgetSpec extends AnyFunSuite with SharedSpark {
     StreamingSubstringDedup.appendToIndex(prior, "text", "doc_id", gramPath, k = 8)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding")
-    Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), annPath, dim = 64)
+    Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), annPath, IvfPqSpec(64))
     val vecVictims = emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 === 1)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     Fx(prior, probe, victimId, probeId, bandPath, storePath, gramPath,
@@ -483,7 +484,7 @@ class ForgetSpec extends AnyFunSuite with SharedSpark {
         (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
       .toDF("vec_id", "embedding").coalesce(1).localCheckpoint()
     val dir = s"${tmpDir("forget_sq")}/idx"
-    Similarity.ivfSqIndexWrite(corpus, dir, dim = 8, lists = 2)
+    Similarity.annIndexWrite(corpus, dir, IvfSqSpec(8, lists = 2))
     val victims = Seq(3L, 17L, 31L)
     def audit() = Forget.auditDocuments(spark, victims,
         Forget.Targets(annIndexPaths = Seq(dir)))
@@ -665,29 +666,30 @@ class ForgetSpec extends AnyFunSuite with SharedSpark {
       .select(col("vec_id"), col("embedding"))
     val pqPath = s"$dir/ann_pq"
     val sqPath = s"$dir/ann_sq"
-    Similarity.ivfPqIndexWrite(emb, pqPath, dim = 64)
-    Similarity.ivfSqIndexWrite(emb, sqPath, dim = 64)
+    Similarity.annIndexWrite(emb, pqPath, IvfPqSpec(64))
+    Similarity.annIndexWrite(emb, sqPath, IvfSqSpec(64))
     Similarity.annIndexDeleteAt(spark, pqPath, Seq(3L, 6L))
     Similarity.annIndexDeleteAt(spark, sqPath, Seq(3L, 6L))
     // the in-place overwrite would clear the tombstone sidecar while
     // re-encoding the deleted rows from the caller's corpus — refuse
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexWrite(emb, pqPath, dim = 64)
+      Similarity.annIndexWrite(emb, pqPath, IvfPqSpec(64))
     }
     assert(e1.getMessage.contains("Fold first"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfSqIndexWrite(emb, sqPath, dim = 64)
+      Similarity.annIndexWrite(emb, sqPath, IvfSqSpec(64))
     }
     assert(e2.getMessage.contains("Fold first"), e2.getMessage)
-    // the composed builders refuse EARLY, before paying the
-    // covariance/eigen training
+    // the rotated spec refuses in the builder's skeleton too, before
+    // paying the covariance/eigen training
     val e3 = intercept[IllegalArgumentException] {
-      Similarity.pcaIvfPqIndexWrite(emb, pqPath, dim = 64, outDim = 32)
+      Similarity.annIndexWrite(emb, pqPath, RotatedSpec(64, Pca(32)))
     }
-    assert(e3.getMessage.contains("pcaIvfPqIndexWrite"), e3.getMessage)
+    assert(e3.getMessage.contains("annIndexWrite (build over an existing artifact)") &&
+      e3.getMessage.contains("Fold first"), e3.getMessage)
     // folding the removal physical makes a rebuild-in-place legal again
     Similarity.annTombstoneFold(spark, pqPath)
-    assert(Similarity.ivfPqIndexWrite(emb, pqPath, dim = 64) > 0L)
+    assert(Similarity.annIndexWrite(emb, pqPath, IvfPqSpec(64)) > 0L)
   }
 
   test("forget folds a PCA-rotated ANN artifact: rotation sidecars survive the " +
@@ -696,7 +698,7 @@ class ForgetSpec extends AnyFunSuite with SharedSpark {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val prior = emb.filter(col("vec_id") % 3 =!= 0)
     val path = s"$dir/pca_idx"
-    Similarity.pcaIvfPqIndexWrite(prior, path, dim = 64, outDim = 32)
+    Similarity.annIndexWrite(prior, path, RotatedSpec(64, Pca(32)))
     val victims = prior.filter(col("vec_id") % 7 === 1)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(victims.nonEmpty)

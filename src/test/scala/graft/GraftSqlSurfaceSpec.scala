@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.GraftFunctions
+import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec, Pca, RotatedSpec}
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -197,7 +198,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     def tmpIdx(p: String) = new java.io.File(
       java.nio.file.Files.createTempDirectory(p).toFile, "idx").getPath
-    // BUILD + PROBE == ivfPqIndexWrite + annProbeAt
+    // BUILD + PROBE == annIndexWrite + annProbeAt
     val p1 = tmpIdx("sql_ann")
     val built = spark.sql(s"BUILD ANN INDEX FROM '$sf' AT '$p1'").collect().head
     assert(built.getString(0) == p1 && built.getLong(1) > 0)
@@ -206,7 +207,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     val p2 = tmpIdx("sql_ann_twin")
     val emb = graft.sources.TableArmor.embeddings(
       spark.read.parquet(s"$sf/embeddings.parquet"))
-    Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), p2, dim = 64)
+    Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), p2, IvfPqSpec(64))
     val viaApi = Similarity.annProbeAt(spark, p2,
         emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 24), k = 5)
       .collect().map(_.toString).sorted
@@ -240,7 +241,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     // the swapped artifact equals the DataFrame twin's (the training
     // chains are deterministic)
     val p4 = tmpIdx("sql_ann_drift_twin")
-    Similarity.ivfPqIndexWrite(drift, p4, dim = 64)
+    Similarity.annIndexWrite(drift, p4, IvfPqSpec(64))
     assert(Similarity.annRebuildIfNeeded(drift, p4).isDefined)
     def rows(p: String) = spark.read.parquet(p)
       .select(col("vec_id"), col("list_id").cast("long"), col("codes").cast("string"))
@@ -276,8 +277,8 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     val p2 = tmpIdx("sql_ann_del_twin")
     val emb = graft.sources.TableArmor.embeddings(
       spark.read.parquet(s"$sf/embeddings.parquet"))
-    Similarity.ivfPqIndexWrite(
-      emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 =!= 1), p2, dim = 64)
+    Similarity.annIndexWrite(
+      emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 7 =!= 1), p2, IvfPqSpec(64))
     def rows(p: String) = spark.read.parquet(p)
       .select(col("vec_id"), col("list_id").cast("long"), col("codes").cast("string"))
       .collect().map(_.toString).toSet
@@ -307,7 +308,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     val sqSql = spark.sql(s"PROBE ANN INDEX '$p1' FROM '$sf'")
       .collect().map(_.toString).sorted
     val p2 = tmpIdx("sql_ann_sq_twin")
-    Similarity.ivfSqIndexWrite(prior, p2, dim = 64)
+    Similarity.annIndexWrite(prior, p2, IvfSqSpec(64))
     val sqApi = Similarity.annProbeAt(spark, p2, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(sqSql.nonEmpty && sqSql.sameElements(sqApi))
@@ -319,7 +320,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     val resSql = spark.sql(s"PROBE ANN INDEX '$p3' FROM '$sf'")
       .collect().map(_.toString).sorted
     val p4 = tmpIdx("sql_ann_res_twin")
-    Similarity.ivfPqIndexWrite(prior, p4, dim = 64, residual = true)
+    Similarity.annIndexWrite(prior, p4, IvfPqSpec(64, residual = true))
     val resApi = Similarity.annProbeAt(spark, p4, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(resSql.nonEmpty && resSql.sameElements(resApi))
@@ -372,7 +373,7 @@ class GraftSqlParserSpec extends AnyFunSuite with SharedSpark {
     val viaSql = spark.sql(s"PROBE ANN INDEX '$p1' FROM '$sf'")
       .collect().map(_.toString).sorted
     val p2 = tmpIdx("sql_ann_pca_twin")
-    Similarity.pcaIvfPqIndexWrite(prior, p2, dim = 64, outDim = 32)
+    Similarity.annIndexWrite(prior, p2, RotatedSpec(64, Pca(32)))
     val viaApi = Similarity.annProbeAt(spark, p2, qs, k = 5)
       .collect().map(_.toString).sorted
     assert(viaSql.nonEmpty && viaSql.sameElements(viaApi))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.IvfPqSpec
 import graft.operators.{Similarity, Sketches}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -174,13 +175,14 @@ class Round11OpsSpec extends AnyFunSuite with SharedSpark {
     // day 1: first slice; day 2: the rest (ids overlap-free)
     val day1 = emb.filter(col("vec_id") % 3 =!= 0)
     val day2 = emb.filter(col("vec_id") % 3 === 0)
-    assert(Similarity.ivfPqIndexAppend(day1, dir, dim = 64) == day1.count())
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 64) == day2.count())
+    // the first batch builds the artifact; later batches append to it
+    assert(Similarity.annIndexWrite(day1, dir, IvfPqSpec(64)) == day1.count())
+    assert(Similarity.annAppendAt(day2, dir) == day2.count())
     // history never re-encoded, yet the grown artifact equals a full
     // build over the union
     assert(rows(spark.read.parquet(dir)) == rows(Similarity.ivfPqIndex(emb, dim = 64)))
     // idempotent: re-sending day 2 admits nothing
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 64) == 0L)
+    assert(Similarity.annAppendAt(day2, dir) == 0L)
     // ...and the probe path consumes the grown artifact unchanged
     val q = emb.filter(col("vec_id") < 8)
     val probed = Similarity.annIvfPqProbe(spark.read.parquet(dir), q, k = 5, dim = 64)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.IvfPqSpec
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +25,7 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
   test("ivfPqIndexWrite stamps a header; annIvfPqProbeAt answers from it alone") {
     val dir = tmp("ann_hdr")
     val q = emb.filter(col("vec_id") < 8)
-    val n = Similarity.ivfPqIndexWrite(emb, dir, dim = 64)
+    val n = Similarity.annIndexWrite(emb, dir, IvfPqSpec(64))
     assert(n == emb.count())
     val hdr = Similarity.ivfPqReadHeader(spark, dir).get
     assert(hdr.dim == 64 && hdr.lists == 16 && hdr.m == 8 && hdr.codes == 16)
@@ -49,32 +50,26 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("a wrong-quantizer append refuses loudly; the probe takes every quantizer from the header") {
     val dir = tmp("ann_mismatch")
-    Similarity.ivfPqIndexWrite(emb, dir, dim = 64) // salted defaults
+    val old = emb.filter(col("vec_id") % 2 === 0)
+    val fresh = emb.filter(col("vec_id") % 2 =!= 0)
+    Similarity.annIndexWrite(old, dir, IvfPqSpec(64)) // salted defaults
+    // the append has no quantizer parameters at all: it encodes under
+    // the header's arrays, whatever other codebooks exist
+    assert(Similarity.annAppendAt(fresh, dir) == fresh.count())
+    val h = Similarity.ivfPqReadHeader(spark, dir).get
+    val appended = spark.read.parquet(dir).filter(col("vec_id") % 2 =!= 0)
+    assert(rows2(appended) == rows2(Similarity.ivfPqIndex(fresh, dim = 64,
+      centroids = Some(h.centroids), codebooks = Some(h.codebooks))))
+    // learned codebooks are NOT the ones the artifact stores codes for,
+    // and the appended codes are not theirs
+    val learned = Similarity.pqLearnedCodebooks(emb, dim = 64, iters = 1)
+    assert(rows2(appended) != rows2(Similarity.ivfPqIndex(fresh, dim = 64,
+      codebooks = Some(learned))))
     val q = emb.filter(col("vec_id") < 8)
     // the probe has no quantizer parameters at all — nothing a caller
     // passes can disagree with the stored codes
     assert(rows(Similarity.annProbeAt(spark, dir, q, k = 5)) ==
       rows(Similarity.annIvfPq(emb, q, k = 5, dim = 64)))
-    // learned codebooks are NOT the ones the artifact stored codes for:
-    // an append encoding under them refuses before touching the data
-    val learned = Similarity.pqLearnedCodebooks(emb, dim = 64, iters = 1)
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
-        codebooks = Some(learned))
-    }
-    assert(ex.getMessage.contains("different quantizers"), ex.getMessage)
-    // mismatched centroids refuse the same way
-    val wrongCents = Array.tabulate(16)(c => Similarity.ivfCentroidSql(c + 1, 64))
-    val ex2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
-        centroids = Some(wrongCents))
-    }
-    assert(ex2.getMessage.contains("different quantizers"), ex2.getMessage)
-    // the MATCHING arrays pass the same gate (explicitly re-supplied;
-    // every id is already indexed, so nothing is admitted)
-    val okCents = Array.tabulate(16)(c => Similarity.ivfCentroidSql(c, 64))
-    assert(Similarity.ivfPqIndexAppend(emb.limit(5), dir, dim = 64,
-      centroids = Some(okCents)) == 0L)
     assert(spark.read.parquet(dir).count() == emb.count())
   }
 
@@ -102,13 +97,13 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     */
   private def defaultCodebooks(): Array[Array[Array[Double]]] = {
     val scratch = tmp("ann_scratch")
-    Similarity.ivfPqIndexWrite(emb.limit(1), scratch, dim = 64)
+    Similarity.annIndexWrite(emb.limit(1), scratch, IvfPqSpec(64))
     Similarity.ivfPqReadHeader(spark, scratch).get.codebooks
   }
 
   test("a corrupted header refuses instead of probing wrong") {
     val dir = tmp("ann_corrupt")
-    Similarity.ivfPqIndexWrite(emb.limit(20), dir, dim = 64)
+    Similarity.annIndexWrite(emb.limit(20), dir, IvfPqSpec(64))
     // tamper THROUGH the Hadoop FS (regenerating its CRC sidecar):
     // the filesystem's own checksum must not be the only line of
     // defense — the header's content hash has to catch a bit flip
@@ -138,11 +133,11 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     val e = emb.localCheckpoint()
     val day1 = e.filter(col("vec_id") % 3 =!= 0)
     val day2 = e.filter(col("vec_id") % 3 === 0)
-    assert(Similarity.ivfPqIndexAppend(day1, dir, dim = 64) == day1.count())
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 64) == day2.count())
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 64) == 0L)
+    assert(Similarity.annIndexWrite(day1, dir, IvfPqSpec(64)) == day1.count())
+    assert(Similarity.annAppendAt(day2, dir) == day2.count())
+    assert(Similarity.annAppendAt(day2, dir) == 0L)
     assert(rows2(spark.read.parquet(dir)) == rows2(Similarity.ivfPqIndex(e, dim = 64)))
-    // the first append stamped a header, so the trusted probe works
+    // the build stamped a header, so the trusted probe works
     val q = e.filter(col("vec_id") < 8)
     assert(rows(Similarity.annProbeAt(spark, dir, q, k = 5)) ==
       rows(Similarity.annIvfPq(e, q, k = 5, dim = 64)))
@@ -157,10 +152,10 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     val day1 = batch((0 until 30).map(i => s"doc-$i"))
     val day2 = batch((30 until 50).map(i => s"doc-$i"))
     val dir = tmp("ann_strid")
-    assert(Similarity.ivfPqIndexAppend(day1, dir, dim = 8, lists = 4, m = 4) == 30L)
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 4) == 20L)
+    assert(Similarity.annIndexWrite(day1, dir, IvfPqSpec(8, lists = 4, m = 4)) == 30L)
+    assert(Similarity.annAppendAt(day2, dir) == 20L)
     // idempotent through the string-keyed anti-join
-    assert(Similarity.ivfPqIndexAppend(day1, dir, dim = 8, lists = 4, m = 4) == 0L)
+    assert(Similarity.annAppendAt(day1, dir) == 0L)
     val stored = spark.read.parquet(dir)
     assert(stored.count() == 50L)
     assert(stored.schema("vec_id").dataType ==
@@ -176,7 +171,7 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     val day1 = (0 until 64).map(i =>
       (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
       .toDF("vec_id", "embedding").localCheckpoint()
-    assert(Similarity.ivfPqIndexAppend(day1, dir, dim = 8, lists = 4, m = 4) == 64L)
+    assert(Similarity.annIndexWrite(day1, dir, IvfPqSpec(8, lists = 4, m = 4)) == 64L)
     val balancedish = Similarity.ivfPqListBalance(
       spark.read.parquet(dir), lists = 4)
     // 4 rows ALWAYS (empty lists are half the skew signal), load sums
@@ -187,7 +182,7 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     val v = Seq.fill(8)(0.9f)
     val day2 = (1000 until 1256).map(i => (i.toLong, v))
       .toDF("vec_id", "embedding").localCheckpoint()
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 4) == 256L)
+    assert(Similarity.annAppendAt(day2, dir) == 256L)
     val audit = Similarity.ivfPqListBalance(spark.read.parquet(dir), lists = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(audit.length == 4)
@@ -249,8 +244,8 @@ class Round12OpsSpec extends AnyFunSuite with SharedSpark {
     // identically
     val annPath = tmp("ann_compact")
     val e = emb.localCheckpoint()
-    Similarity.ivfPqIndexWrite(e.filter(col("vec_id") % 2 === 0), annPath, dim = 64)
-    Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 2 =!= 0), annPath, dim = 64)
+    Similarity.annIndexWrite(e.filter(col("vec_id") % 2 === 0), annPath, IvfPqSpec(64))
+    Similarity.annAppendAt(e.filter(col("vec_id") % 2 =!= 0), annPath)
     val q = e.filter(col("vec_id") < 8)
     val beforeProbe = rows(Similarity.annProbeAt(spark, annPath, q, k = 5))
     ArtifactCompaction.compactFiles(spark, annPath, targetFiles = 1)

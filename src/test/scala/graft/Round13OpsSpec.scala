@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.IvfPqSpec
 import graft.operators.Sketches
 import graft.streaming.StreamingLogHist
 import graft.streaming.StreamingLogHist.ValRecord
@@ -133,8 +134,8 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     import graft.operators.Similarity
     val dir = tmpIdx("ann_rebuild")
     val (day1, day2, probes) = driftCorpus()
-    assert(Similarity.ivfPqIndexWrite(day1, dir, dim = 8, lists = 4, m = 8) == 64L)
-    assert(Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 8) == 256L)
+    assert(Similarity.annIndexWrite(day1, dir, IvfPqSpec(8, lists = 4, m = 8)) == 64L)
+    assert(Similarity.annAppendAt(day2, dir) == 256L)
     // the decision fires (the r12 audit; 2500 pm is the maintainer's
     // tuned threshold — the hot list holds ~65% of the artifact)
     assert(Similarity.annNeedsRebuild(spark, dir, day1.unionByName(day2),
@@ -168,20 +169,13 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(rows2(spark.read.parquet(dir)) == rows2(expect))
 
-    // a stale appender still holding the OLD (salted-default) arrays
-    // refuses loudly against the re-stamped header...
+    // the HEADER-DRIVEN appender adopts whatever quantizer generation
+    // owns the artifact with zero re-configuration — the form a
+    // maintained ingest keeps using ACROSS rebuilds (an appender whose
+    // write straddles the swap refuses at the generation backstop)
     import spark.implicits._
     val day3 = Seq((2000L, Seq.fill(8)(0.1f))).toDF("vec_id", "embedding")
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(day3, dir, dim = 8, lists = 4, m = 8)
-    }
-    assert(ex.getMessage.contains("different quantizers"), ex.getMessage)
-    // ...an appender carrying the retrained arrays is validated in...
-    assert(Similarity.ivfPqIndexAppend(day3, dir, dim = 8, lists = 4, m = 8,
-      centroids = Some(cents), codebooks = Some(cbs)) == 1L)
-    // ...and the HEADER-DRIVEN appender adopts whatever quantizer
-    // generation owns the artifact with zero re-configuration — the
-    // form a maintained ingest keeps using ACROSS rebuilds
+    assert(Similarity.annAppendAt(day3, dir) == 1L)
     val day4 = Seq((2001L, Seq.fill(8)(-0.2f))).toDF("vec_id", "embedding")
     assert(Similarity.annAppendAt(day4, dir) == 1L)
     assert(Similarity.annAppendAt(day4, dir) == 0L) // idempotent
@@ -195,8 +189,8 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     import graft.operators.Similarity
     val dir = tmpIdx("ann_rebuild_abort")
     val (day1, day2, _) = driftCorpus()
-    Similarity.ivfPqIndexWrite(day1, dir, dim = 8, lists = 4, m = 8)
-    Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(day1, dir, IvfPqSpec(8, lists = 4, m = 8))
+    Similarity.annAppendAt(day2, dir)
     val corpus = day1.unionByName(day2).localCheckpoint()
     // probes from day 1's OWN region: the stale index handles them
     // well (recallBefore > 0), so the impossible ratio must abort
@@ -239,7 +233,7 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     val dir = tmpIdx("ann_refine_at")
     val (day1, day2, probes) = driftCorpus()
     val corpus = day1.unionByName(day2).localCheckpoint()
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(8, lists = 4, m = 8))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     // search-as-shipped off the stored index == the inline composition
@@ -267,7 +261,7 @@ class Round13OpsSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val vecs = (0 until 20).map(i =>
       (i.toLong, Seq.fill(8)((i / 20.0f) - 0.5f))).toDF("vec_id", "embedding")
-    Similarity.ivfPqIndexWrite(vecs, dir, dim = 8, lists = 4, m = 4)
+    Similarity.annIndexWrite(vecs, dir, IvfPqSpec(8, lists = 4, m = 4))
     val hdr = Similarity.ivfPqReadHeader(spark, dir).get
     // rewrite the sidecar in the PRE-convergence layout: same k=v
     // lines, integrity line = the binary quantizer hash

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec, Pca, RotatedSpec}
 import graft.operators.Similarity
 import graft.plans.CheckpointHygiene
 import org.apache.spark.sql.DataFrame
@@ -44,8 +45,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
   test("ivfPqRebuild: a corpus smaller than the live artifact refuses (mis-scoped snapshot), allowShrink overrides") {
     val dir = tmpIdx("ann_rebuild_shrink")
     val (day1, day2, _) = driftCorpus()
-    Similarity.ivfPqIndexWrite(day1, dir, dim = 8, lists = 4, m = 8)
-    Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(day1, dir, IvfPqSpec(8, lists = 4, m = 8))
+    Similarity.annAppendAt(day2, dir)
     // a stale snapshot that predates the day-2 appends: every other
     // check is green (rows == corpus), but swapping it in would DROP
     // 256 vectors — the artifact knows its own row count, so refuse
@@ -72,8 +73,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
   test("ivfPqRebuild: an oversized recallQueries frame refuses naming the bound; the absolute floor catches a 0.0 -> 0.0 'pass'") {
     val dir = tmpIdx("ann_rebuild_gatebounds")
     val (day1, day2, probes) = driftCorpus()
-    Similarity.ivfPqIndexWrite(day1, dir, dim = 8, lists = 4, m = 8)
-    Similarity.ivfPqIndexAppend(day2, dir, dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(day1, dir, IvfPqSpec(8, lists = 4, m = 8))
+    Similarity.annAppendAt(day2, dir)
     val corpus = day1.unionByName(day2).localCheckpoint()
     // the gate's ground truth is a broadcast nested-loop over
     // corpus x queries — the brute-guard convention refuses an
@@ -189,7 +190,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
       .localCheckpoint()
     val corpus = emb.filter(col("vec_id") % 3 =!= 0)
     val queries = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 16)
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = 64)
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(64))
     val allowedPred = col("vec_id") % 5 <= 1
     val allowed = emb.filter(allowedPred).select("vec_id")
     val filtered = Similarity.annProbeAt(
@@ -339,8 +340,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val emb = sqCorpus()
     val dir = tmpIdx("ann_sq")
     val qs = emb.filter(col("vec_id") >= 196)
-    val n = Similarity.ivfSqIndexWrite(emb.filter(col("vec_id") < 196), dir,
-      dim = 16, lists = 4)
+    val n = Similarity.annIndexWrite(emb.filter(col("vec_id") < 196), dir, IvfSqSpec(16,
+      lists = 4))
     assert(n == 196L)
     val at = Similarity.annProbeAt(spark, dir, qs, k = 5)
       .orderBy("query_id", "rank").collect()
@@ -406,8 +407,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val dir = tmpIdx("ann_res")
     val prior = emb.filter(col("vec_id") < 160)
     val qs = emb.filter(col("vec_id") >= 196)
-    Similarity.ivfPqIndexWrite(prior, dir, dim = 16, lists = 4, m = 8,
-      residual = true)
+    Similarity.annIndexWrite(prior, dir, IvfPqSpec(16, lists = 4, m = 8, residual = true))
     assert(Similarity.ivfPqReadHeader(spark, dir).exists(_.residual))
     val at = Similarity.annProbeAt(spark, dir, qs, k = 5)
       .orderBy("query_id", "rank").collect()
@@ -417,13 +417,13 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     assert(at.toSeq == inline.toSeq)
     assert(at.nonEmpty)
 
-    // a plain-encoding append onto a residual artifact would mix
-    // incompatible code spaces — the params hash refuses it
+    // a plain encoding under the same arrays is a different code
+    // space: the residual flag joins the header hash, so a plain
+    // header can never verify (or re-open) a residual artifact
+    val h = Similarity.ivfPqReadHeader(spark, dir).get
+    assert(Similarity.ivfPqParamsHash(h.dim, h.lists, h.m, h.codes, h.centroids,
+      h.codebooks) != h.paramsHash)
     val mid = emb.filter(col("vec_id") >= 160 && col("vec_id") < 196)
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(mid, dir, dim = 16, lists = 4, m = 8)
-    }
-    assert(ex.getMessage.contains("residual"), ex.getMessage)
 
     // the header-driven appender ADOPTS the artifact's encoding:
     // grown artifact == one-shot residual build, byte for byte
@@ -462,7 +462,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     val dir = tmpIdx("ann_sq_refine")
     val (day1, day2, probes) = driftCorpus()
     val corpus = day1.unionByName(day2).localCheckpoint()
-    Similarity.ivfSqIndexWrite(corpus, dir, dim = 8, lists = 4)
+    Similarity.annIndexWrite(corpus, dir, IvfSqSpec(8, lists = 4))
     // nprobe = lists and rerank >= |corpus| makes the SQ stage a pure
     // candidate generator over everything — the exact re-rank must
     // then reproduce brute-force cosine top-k bit for bit (probes are
@@ -500,7 +500,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
       .toDF("vec_id", "embedding").localCheckpoint()
     val corpus = day1.unionByName(day2).localCheckpoint()
 
-    assert(Similarity.ivfSqIndexWrite(day1, dir, dim = 8, lists = 4) == 64L)
+    assert(Similarity.annIndexWrite(day1, dir, IvfSqSpec(8, lists = 4)) == 64L)
     // headerless append refuses (trust seam shared with the probe)
     val bare = tmpIdx("ann_sq_bare")
     day1.write.parquet(bare)
@@ -565,7 +565,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSet
 
-    Similarity.ivfSqIndexWrite(day1, dir, dim = 8, lists = 4)
+    Similarity.annIndexWrite(day1, dir, IvfSqSpec(8, lists = 4))
     // seeded at write: stats == scan before any append
     assert(rows(Similarity.ivfSqSaturationFromStats(spark, dir).get) ==
       rows(Similarity.ivfSqSaturation(spark, dir)))
@@ -662,8 +662,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     // recovers exact cosine top-k on this corpus (all lists probed,
     // rerank wide) — the projection loss is inside the noise floor
     val dir = tmpIdx("ann_pca")
-    assert(Similarity.pcaIvfPqIndexWrite(corpus, dir, dim = 16, outDim = 8,
-      lists = 4, m = 8) == 256L)
+    assert(Similarity.annIndexWrite(corpus, dir, RotatedSpec(16, Pca(8), lists = 4,
+      m = 8)) == 256L)
     // score stringified: exact-cosine paths carry DOUBLE, the ADC
     // probe carries its fixed-point BIGINT — both compare exactly
     def rows(df: DataFrame) = df.collect()
@@ -682,8 +682,8 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
         Similarity.pcaRotationAt(spark, dir).flatMap(_.toSeq)),
       "stored rotation must equal the (deterministic) retrained one")
     val plain = tmpIdx("ann_pca_plain")
-    Similarity.ivfPqIndexWrite(Similarity.pcaProject(corpus, rot8), plain,
-      dim = 8, lists = 4, m = 8)
+    Similarity.annIndexWrite(Similarity.pcaProject(corpus, rot8), plain, IvfPqSpec(8,
+      lists = 4, m = 8))
     val inline = rows(Similarity.annProbeAt(spark, plain,
       Similarity.pcaProject(probes, rot8), k = 3))
     assert(atPath == inline && atPath.nonEmpty)
@@ -691,7 +691,7 @@ class Round14OpsSpec extends AnyFunSuite with SharedSpark {
     // a plain IVF-PQ artifact has no pcarot header: the rotation
     // accessor refuses, and the one probe entry scores it unprojected
     val bare = tmpIdx("ann_pca_bare")
-    Similarity.ivfPqIndexWrite(corpus, bare, dim = 16, m = 8)
+    Similarity.annIndexWrite(corpus, bare, IvfPqSpec(16, m = 8))
     val ex = intercept[RuntimeException] {
       Similarity.pcaRotationAt(spark, bare)
     }

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import graft.operators.AnnLifecycle.{Given, IvfPqSpec, IvfSqSpec, OpqP, Pca, RotatedSpec,
+  Trained}
 import graft.operators.Similarity
 import graft.plans.CheckpointHygiene
 import graft.sources.ArtifactMaintainer
@@ -166,7 +168,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
   test("sqRebuildDue self-heals a legacy stats-less artifact: one scan poll, restamp in the window, O(dim) after") {
     val dir = tmpIdx("sq_legacy_heal")
     val corpus = smallCorpus(seed = 1502)
-    Similarity.ivfSqIndexWrite(corpus, dir, dim = 8, lists = 2)
+    Similarity.annIndexWrite(corpus, dir, IvfSqSpec(8, lists = 2))
     assert(Similarity.ivfSqHasStats(spark, dir))
     // forge a pre-stats artifact: drop the sidecar the write stamped
     val side = new java.io.File(dir,
@@ -227,8 +229,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
   test("PCA basis drift trips the capture audit; rebuild retrains rotation + quantizers, restores refine-recall, appends resume") {
     val dir = tmpIdx("pca_staleness")
     val (genA, genB, probes) = basisDrift()
-    Similarity.pcaIvfPqIndexWrite(genA, dir, dim = 8, outDim = 2,
-      lists = 2, m = 2, codes = 8)
+    Similarity.annIndexWrite(genA, dir, RotatedSpec(8, Pca(2), lists = 2, m = 2, codes = 8))
     // freshly trained: capture at (or within noise of) its baseline
     val (stored0, fresh0) = Similarity.pcaCaptureAudit(genA, dir)
     assert(stored0 > 900L, s"fixture: baseline capture $stored0 should be high")
@@ -288,8 +289,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
   test("pcaRebuildDue self-heals a legacy pcarot without a capture baseline; bounded-audit refusal") {
     val dir = tmpIdx("pca_legacy_heal")
     val (genA, _, _) = basisDrift()
-    Similarity.pcaIvfPqIndexWrite(genA, dir, dim = 8, outDim = 2,
-      lists = 2, m = 2, codes = 8)
+    Similarity.annIndexWrite(genA, dir, RotatedSpec(8, Pca(2), lists = 2, m = 2, codes = 8))
     // forge a pre-baseline artifact: re-stamp pcarot without capture_pm
     val kv = graft.sources.ArtifactHeader.read(spark, dir, "pcarot").get
     graft.sources.ArtifactHeader.write(spark, dir, "pcarot",
@@ -327,8 +327,8 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     val corpus = smallCorpus(seed = 1506)
     // outDim == dim: the dim guard alone can NEVER tell raw queries
     // from projected ones — only the pcarot sidecar can
-    Similarity.pcaIvfPqIndexWrite(corpus, dir, dim = 8, outDim = 8,
-      lists = 2, m = 2, codes = 8)
+    Similarity.annIndexWrite(corpus, dir, RotatedSpec(8, Pca(8), lists = 2, m = 2,
+      codes = 8))
     val probes = corpus.filter(col("vec_id") < 4)
     val rot = Similarity.pcaRotationAt(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -337,8 +337,8 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     // the one entry must score the RAW queries exactly as this scores
     // the hand-projected ones, plain and filtered, probe and refine
     val plain = tmpIdx("pca_fullrank_plain")
-    Similarity.ivfPqIndexWrite(Similarity.pcaProject(corpus, rot), plain, dim = 8,
-      lists = 2, m = 2, codes = 8)
+    Similarity.annIndexWrite(Similarity.pcaProject(corpus, rot), plain, IvfPqSpec(8,
+      lists = 2, m = 2, codes = 8))
     val projected = Similarity.pcaProject(probes, rot)
     val some = corpus.filter(col("vec_id") % 2 === 0).select("vec_id")
     assert(rows(Similarity.annProbeAt(spark, dir, probes, k = 3)) ==
@@ -435,10 +435,10 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
       seedFromData = true)
     val cbs = Similarity.pqLearnedCodebooks(corpus, dim = 16, m = 4, codes = 16,
       iters = 2, seedFromData = true)
-    Similarity.ivfPqIndexWrite(corpus, pqDir, dim = 16, lists = 4, m = 4,
-      codes = 16, centroids = Some(cents), codebooks = Some(cbs))
-    assert(Similarity.opqIvfPqIndexWrite(corpus, opqDir, dim = 16, lists = 4,
-      m = 4, codes = 16) == 256L)
+    Similarity.annIndexWrite(corpus, pqDir, IvfPqSpec(16, lists = 4, m = 4, codes = 16,
+      quantizers = Given(cents, cbs)))
+    assert(Similarity.annIndexWrite(corpus, opqDir, RotatedSpec(16, OpqP, lists = 4, m = 4,
+      codes = 16, quantizers = Trained())) == 256L)
     val exact = Similarity.topKDot(corpus, probes, 5).localCheckpoint()
     def recall(approx: DataFrame): Double =
       Similarity.annRecall(exact, approx, 5)
@@ -477,7 +477,7 @@ class Round15OpsSpec extends AnyFunSuite with SharedSpark {
     val path = tmpIdx("pca_sql_allowing")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") % 3 =!= 0)
-    Similarity.pcaIvfPqIndexWrite(corpus, path, dim = 64, outDim = 32)
+    Similarity.annIndexWrite(corpus, path, RotatedSpec(64, Pca(32)))
     val viaSql = spark.sql(
         s"PROBE ANN INDEX '$path' FROM '$dir' ALLOWING vec_id % 5 <= 1")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.{OpqI, RotatedSpec, Trained}
 import graft.streaming.StreamingNearDup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -177,8 +178,8 @@ class Round16OpsSpec extends AnyFunSuite with SharedSpark {
 
     // end-to-end artifact: stamped opq_i, probes, appends, rebuilds
     val dir = tmpDir("opq_iter") + "/idx"
-    assert(Similarity.opqIvfPqIndexWrite(corpus, dir, dim = 16, lists = 4,
-      m = 4, codes = 16, refineIters = 2) == 256L)
+    assert(Similarity.annIndexWrite(corpus, dir, RotatedSpec(16, OpqI(2), lists = 4, m = 4,
+      codes = 16, quantizers = Trained())) == 256L)
     val kv = graft.sources.ArtifactHeader.read(spark, dir, "pcarot").get
     assert(kv("method") == "opq_i" && kv("opq_iters") == "2")
     val probed = Similarity.annProbeAt(spark, dir, probes, k = 5,
@@ -199,12 +200,11 @@ class Round16OpsSpec extends AnyFunSuite with SharedSpark {
     // refinement composes with neither untrained quantizers nor
     // residual encoding — both refuse by name
     intercept[IllegalArgumentException] {
-      Similarity.opqIvfPqIndexWrite(corpus, dir, dim = 16,
-        refineIters = 2, trainQuantizers = false)
+      Similarity.annIndexWrite(corpus, dir, RotatedSpec(16, OpqI(2)))
     }
     intercept[IllegalArgumentException] {
-      Similarity.opqIvfPqIndexWrite(corpus, dir, dim = 16,
-        refineIters = 2, residual = true)
+      Similarity.annIndexWrite(corpus, dir, RotatedSpec(16, OpqI(2), residual = true,
+        quantizers = Trained()))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.{IvfPqSpec, IvfSqSpec, Pca, RotatedSpec}
 import graft.sources.{DeltaLogCompaction => D, SwapRecovery}
 import graft.streaming.{StreamingSubstringDedup => S}
 import org.apache.hadoop.fs.{FileUtil, Path}
@@ -187,34 +188,34 @@ class Round18SwapSpec extends AnyFunSuite with SharedSpark {
       (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
       .toDF("vec_id", "embedding")
     val pq: String => Unit = dir =>
-      Similarity.ivfPqIndexWrite(vecs(0, 64), dir, dim = 8, lists = 4, m = 8)
+      Similarity.annIndexWrite(vecs(0, 64), dir, IvfPqSpec(8, lists = 4, m = 8))
     // every ANN writer entry, as (name, build, pre-crash step, verb,
     // distinct ids the artifact must hold afterwards): each must repair
     // the swap FIRST (install the rewrite) and then do its work. An
     // entry that checks the header before repairing refuses with
-    // "write it with ivfPqIndexWrite" — advice that recreates the index
+    // "write it with annIndexWrite" — advice that recreates the index
     // from one batch and lets the next repair delete the original at
     // .old
     val entries: Seq[(String, String => Unit, String => Unit, String => Unit, Long)] = Seq(
-      ("ivfPqIndexAppend", pq, _ => (), dir =>
-        assert(Similarity.ivfPqIndexAppend(vecs(1000, 32), dir, dim = 8, lists = 4,
-          m = 8) === 32L), 96L),
       ("annAppendAt (IVF-PQ)", pq, _ => (), dir =>
         assert(Similarity.annAppendAt(vecs(1000, 32), dir) === 32L), 96L),
       ("annAppendAt (SQ8)",
-        dir => Similarity.ivfSqIndexWrite(vecs(0, 64), dir, dim = 8, lists = 4),
+        dir => Similarity.annIndexWrite(vecs(0, 64), dir, IvfSqSpec(8, lists = 4)),
         _ => (), dir =>
         assert(Similarity.annAppendAt(vecs(1000, 32), dir) === 32L), 96L),
       ("annAppendAt (PCA)",
-        dir => Similarity.pcaIvfPqIndexWrite(vecs(0, 64), dir, dim = 8, outDim = 4,
-          lists = 4, m = 4),
+        dir => Similarity.annIndexWrite(vecs(0, 64), dir, RotatedSpec(8, Pca(4), lists = 4,
+          m = 4)),
         _ => (), dir =>
         assert(Similarity.annAppendAt(vecs(1000, 32), dir) === 32L), 96L),
       ("annIndexDeleteAt", pq, _ => (), dir =>
         assert(Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)) === 2L), 64L),
       ("annTombstoneFold", pq,
         dir => Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)), dir =>
-        assert(Similarity.annTombstoneFold(spark, dir) === ((64L, 62L))), 62L))
+        assert(Similarity.annTombstoneFold(spark, dir) === ((64L, 62L))), 62L),
+      ("forgetDocuments", pq, _ => (), dir =>
+        graft.operators.Forget.forgetDocuments(spark, Seq(1L, 2L),
+          graft.operators.Forget.Targets(annIndexPaths = Seq(dir))), 62L))
     // every entry runs; the failure lists each one that did not heal
     val failed = entries.flatMap { case (name, build, before, verb, held) =>
       scala.util.Try {
@@ -239,5 +240,40 @@ class Round18SwapSpec extends AnyFunSuite with SharedSpark {
       }.failed.toOption.map(e => s"$name: ${e.getMessage}")
     }
     assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("a build over a crashed compact swap refuses live tombstones exactly " +
+    "as it does without the crash: the pending rights-removal survives") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    val rnd = new scala.util.Random(1812)
+    val corpus = (0 until 64).map(i =>
+      (i.toLong, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
+      .toDF("vec_id", "embedding").localCheckpoint()
+    def build(dir: String): Long =
+      Similarity.annIndexWrite(corpus, dir, IvfPqSpec(8, lists = 4, m = 8))
+    def refusal(crash: Boolean): String = {
+      val dir = new java.io.File(
+        java.nio.file.Files.createTempDirectory("r18_buildswap").toFile, "idx").getPath
+      build(dir)
+      assert(Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)) === 2L)
+      val (fs, p) = hadoopFs(dir)
+      if (crash) {
+        // a compact swap crashed between its renames: the rewrite with
+        // the tombstone sidecar at .compact.tmp, the original at
+        // .compact.old, the live path missing
+        copyDir(p, new Path(p.getParent, p.getName + ".compact.old"))
+        assert(fs.rename(p, new Path(p.getParent, p.getName + ".compact.tmp")))
+        assert(!fs.exists(p))
+      }
+      val e = intercept[IllegalArgumentException](build(dir))
+      // the removal is still pending at the (repaired) live path
+      assert(graft.sources.Tombstones.count(spark, dir) === 2L)
+      assert(SwapRecovery.crashEvidence(fs, p).isEmpty)
+      e.getMessage.replace(dir, "<dir>")
+    }
+    val clean = refusal(crash = false)
+    assert(clean.contains("Fold first"), clean)
+    assert(refusal(crash = true) === clean)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.IvfPqSpec
 import graft.operators.Similarity
 import graft.streaming.StreamingAnnProbe
 import org.apache.spark.sql.functions._
@@ -18,9 +19,8 @@ class StreamingAnnProbeSpec extends AnyFunSuite with SharedSpark {
 
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     // persist the index once (the batch pipeline's job)
-    val dir = java.nio.file.Files.createTempDirectory("ann_stream_idx").toString
-    Similarity.ivfPqIndex(emb.filter(col("vec_id") % 3 =!= 0), dim = 64)
-      .write.mode("overwrite").parquet(dir)
+    val dir = java.nio.file.Files.createTempDirectory("ann_stream_idx").toString + "/idx"
+    Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 =!= 0), dir, IvfPqSpec(64))
 
     val queries = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 48)
       .select($"vec_id", $"embedding").as[StreamingAnnProbe.VecRecord]
@@ -29,10 +29,10 @@ class StreamingAnnProbeSpec extends AnyFunSuite with SharedSpark {
 
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     val stream = MemoryStream[StreamingAnnProbe.VecRecord]
-    val q = StreamingAnnProbe.probeStream(stream.toDS(), dir,
+    val q = StreamingAnnProbe.probeStreamAt(stream.toDS(), dir,
       df => got ++= df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))),
-      k = 5, dim = 64)
+      k = 5)
     try {
       stream.addData(b1.toIndexedSeq); q.processAllAvailable()
       stream.addData(b2.toIndexedSeq); q.processAllAvailable()
@@ -56,7 +56,7 @@ class StreamingAnnProbeSpec extends AnyFunSuite with SharedSpark {
       .localCheckpoint()
     val dir = java.nio.file.Files.createTempDirectory("ann_stream_at").toString + "/idx"
     // header-stamped build of part of the corpus
-    Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") % 3 === 1), dir, dim = 64)
+    Similarity.annIndexWrite(emb.filter(col("vec_id") % 3 === 1), dir, IvfPqSpec(64))
 
     val queries = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < 48)
       .select($"vec_id", $"embedding").as[StreamingAnnProbe.VecRecord]
@@ -73,7 +73,7 @@ class StreamingAnnProbeSpec extends AnyFunSuite with SharedSpark {
       // the artifact GROWS and gets COMPACTED between micro-batches —
       // the header survives both, so the stream keeps answering, now
       // over the grown index
-      Similarity.ivfPqIndexAppend(emb.filter(col("vec_id") % 3 === 2), dir, dim = 64)
+      Similarity.annAppendAt(emb.filter(col("vec_id") % 3 === 2), dir)
       graft.sources.ArtifactCompaction.compactFiles(spark, dir)
       stream.addData(b2.toIndexedSeq); q.processAllAvailable()
     } finally q.stop()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AnnLifecycle.{Given, IvfPqSpec, IvfSqSpec, Pca, RotatedSpec}
 import graft.operators.Similarity
 import graft.sources.{ArtifactMaintainer, Tombstones}
 import org.apache.spark.sql.DataFrame
@@ -42,7 +43,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
   test("deleted ids leave the PQ probe before the rank cut; tombstone-live == built-without-them (salted quantizers)") {
     val (corpus, probes) = corpusAndProbes()
     val dir = tmpIdx("tomb_pq")
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 2, m = 2, codes = 4)
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
     val full = Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
     val victims = full.select(col("neighbor_id").cast("long"))
       .limit(2).collect().map(_.getLong(0)).distinct
@@ -55,9 +56,9 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     // the quantizers are salted constants, so an artifact BUILT on the
     // filtered corpus is the same index — exclusion must be bit-equal
     val dir2 = tmpIdx("tomb_pq_ref")
-    Similarity.ivfPqIndexWrite(
+    Similarity.annIndexWrite(
       corpus.filter(!col("vec_id").isin(victims.map(java.lang.Long.valueOf): _*)),
-      dir2, dim = 8, lists = 2, m = 2, codes = 4)
+      dir2, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
     assert(got == resultSet(
       Similarity.annProbeAt(spark, dir2, probes, k = 5, nprobe = 2)))
   }
@@ -65,7 +66,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
   test("delete is idempotent, merges batches, admits unknown ids; non-artifact paths refuse; the sidecar bound refuses past MaxIds") {
     val (corpus, _) = corpusAndProbes(seed = 1511)
     val dir = tmpIdx("tomb_merge")
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 2, m = 2, codes = 4)
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
     assert(Similarity.annIndexDeleteAt(spark, dir, Seq(1L, 2L)) == 2L)
     // overlap + an id the artifact never held (admitted; folds as 0 rows)
     assert(Similarity.annIndexDeleteAt(spark, dir, Seq(2L, 3L, 999L)) == 4L)
@@ -90,8 +91,8 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val (corpus, _) = corpusAndProbes(seed = 1512)
     val pq = tmpIdx("tomb_app_pq"); val sq = tmpIdx("tomb_app_sq")
-    Similarity.ivfPqIndexWrite(corpus, pq, dim = 8, lists = 2, m = 2, codes = 4)
-    Similarity.ivfSqIndexWrite(corpus, sq, dim = 8, lists = 2)
+    Similarity.annIndexWrite(corpus, pq, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
+    Similarity.annIndexWrite(corpus, sq, IvfSqSpec(8, lists = 2))
     Similarity.annIndexDeleteAt(spark, pq, Seq(7L))
     Similarity.annIndexDeleteAt(spark, sq, Seq(7L))
     val batch = Seq((7L, Seq.fill(8)(0.5f)), (200L, Seq.fill(8)(0.25f)))
@@ -113,7 +114,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val (corpus, probes) = corpusAndProbes(seed = 1513)
     val dir = tmpIdx("tomb_fold_sq")
-    Similarity.ivfSqIndexWrite(corpus, dir, dim = 8, lists = 2)
+    Similarity.annIndexWrite(corpus, dir, IvfSqSpec(8, lists = 2))
     Similarity.annIndexDeleteAt(spark, dir, Seq(3L, 5L, 999L)) // 999 not present
     val before = resultSet(Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
       .withColumnRenamed("score", "score_e6")
@@ -144,10 +145,10 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val (corpus, _) = corpusAndProbes(seed = 1514)
     val pq = tmpIdx("tomb_reb_pq"); val sq = tmpIdx("tomb_reb_sq")
     val pca = tmpIdx("tomb_reb_pca")
-    Similarity.ivfPqIndexWrite(corpus, pq, dim = 8, lists = 2, m = 2, codes = 4)
-    Similarity.ivfSqIndexWrite(corpus, sq, dim = 8, lists = 2)
-    Similarity.pcaIvfPqIndexWrite(corpus, pca, dim = 8, outDim = 4,
-      lists = 2, m = 2, codes = 4)
+    Similarity.annIndexWrite(corpus, pq, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
+    Similarity.annIndexWrite(corpus, sq, IvfSqSpec(8, lists = 2))
+    Similarity.annIndexWrite(corpus, pca, RotatedSpec(8, Pca(4), lists = 2, m = 2,
+      codes = 4))
     Seq(pq, sq, pca).foreach(Similarity.annIndexDeleteAt(spark, _, Seq(11L)))
     // the projecting probe excludes too (the exclusion sits under the
     // shared trusted probe body)
@@ -171,7 +172,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
   test("a maintainer rebuild never resurrects deleted rows: the window folds AND excludes them from the retrain corpus") {
     val (corpus, _) = corpusAndProbes(seed = 1519)
     val pq = tmpIdx("tomb_resurrect")
-    Similarity.ivfPqIndexWrite(corpus, pq, dim = 8, lists = 2, m = 2, codes = 4)
+    Similarity.annIndexWrite(corpus, pq, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
     Similarity.annIndexDeleteAt(spark, pq, Seq(11L))
     // the corpus thunk STILL CONTAINS the deleted doc (it predates the
     // delete — the realistic hazard), and rebuildPm = 1 forces the
@@ -190,7 +191,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
   test("tombstoneFoldDue: O(1) sidecar poll trips past the budget, the window folds, the next poll is quiet") {
     val (corpus, _) = corpusAndProbes(seed = 1516)
     val dir = tmpIdx("tomb_due")
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 2, m = 2, codes = 4)
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
     val m = new ArtifactMaintainer()
     val due = ArtifactMaintainer.tombstoneFoldDue(spark, dir, maxIds = 2L)
     assert(m.maintainIfDue(Seq(due)).isEmpty) // nothing deleted yet
@@ -211,7 +212,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
     val (corpus, probes) = corpusAndProbes(seed = 1517)
     val dir = tmpIdx("tomb_live")
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = 8, lists = 2, m = 2, codes = 4)
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(8, lists = 2, m = 2, codes = 4))
     val victims = Similarity.annProbeAt(spark, dir, probes, k = 5, nprobe = 2)
       .select(col("neighbor_id").cast("long")).limit(2).collect()
       .map(_.getLong(0)).distinct
@@ -380,8 +381,8 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     val corpus = (hot ++ cold).toDF("vec_id", "embedding")
       .coalesce(1).localCheckpoint()
     val dir = tmpIdx("tomb_audit")
-    Similarity.ivfPqIndexWrite(corpus, dir, dim = dim, lists = 2, m = 2,
-      codes = 4, centroids = Some(cents))
+    Similarity.annIndexWrite(corpus, dir, IvfPqSpec(dim, lists = 2, m = 2, codes = 4,
+      quantizers = Given(cents, Similarity.pqCodebooks(2, 4, dim / 2))))
 
     // delete 30 of the 40 hot rows: list 0 is imbalanced ONLY through
     // rows that are already tombstoned
@@ -430,7 +431,7 @@ class TombstoneSpec extends AnyFunSuite with SharedSpark {
     // the stored codes' truth, deleted rows included (bit-identical
     // to pre-delete); the fold's stats re-seed is spec-held above
     val sqDir = tmpIdx("tomb_audit_sq")
-    Similarity.ivfSqIndexWrite(corpus, sqDir, dim = dim, lists = 2)
+    Similarity.annIndexWrite(corpus, sqDir, IvfSqSpec(dim, lists = 2))
     def satRows() = Similarity.ivfSqSaturation(spark, sqDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet

@@ -1,5 +1,6 @@
 package graft.operators
 
+import AnnLifecycle.{Given, IvfPqSpec, IvfSqSpec, OpqP, Pca, RotatedSpec, Trained}
 import graft.SharedSpark
 import graft.sources.ArtifactMaintainer
 import org.apache.spark.sql.DataFrame
@@ -16,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the kind's tripped signal, [[Similarity.annRebuildIfNeeded]] runs
   * the rebuild that signal calls for, and the maintainer's
   * [[ArtifactMaintainer.annRebuildDue]] takes the raw corpus for every
-  * kind.
+  * kind. Build: [[Similarity.annIndexWrite]] is the one builder, and an
+  * artifact it built then grew equals one it built over the union.
   */
 class AnnSurfaceSpec extends AnyFunSuite with SharedSpark {
   private val Dim = 16
@@ -74,17 +76,17 @@ class AnnSurfaceSpec extends AnyFunSuite with SharedSpark {
   }
 
   private val kinds: Seq[(String, String => Long)] = Seq(
-    "IVF-PQ" -> (Similarity.ivfPqIndexWrite(corpus, _, dim = Dim, lists = 4, m = 4,
-      codes = 8)),
-    "residual IVF-PQ" -> (Similarity.ivfPqIndexWrite(corpus, _, dim = Dim, lists = 4,
-      m = 4, codes = 8, residual = true)),
-    "SQ8" -> (Similarity.ivfSqIndexWrite(corpus, _, dim = Dim, lists = 4)),
-    "PCA" -> (Similarity.pcaIvfPqIndexWrite(corpus, _, dim = Dim, outDim = 8,
-      lists = 4, m = 4, codes = 8)),
-    "full-rank PCA" -> (Similarity.pcaIvfPqIndexWrite(corpus, _, dim = Dim,
-      outDim = Dim, lists = 4, m = 4, codes = 8)),
-    "OPQ" -> (Similarity.opqIvfPqIndexWrite(corpus, _, dim = Dim, lists = 4, m = 4,
-      codes = 8)))
+    "IVF-PQ" -> (Similarity.annIndexWrite(corpus, _, IvfPqSpec(Dim, lists = 4, m = 4,
+      codes = 8))),
+    "residual IVF-PQ" -> (Similarity.annIndexWrite(corpus, _, IvfPqSpec(Dim, lists = 4,
+      m = 4, codes = 8, residual = true))),
+    "SQ8" -> (Similarity.annIndexWrite(corpus, _, IvfSqSpec(Dim, lists = 4))),
+    "PCA" -> (Similarity.annIndexWrite(corpus, _, RotatedSpec(Dim, Pca(8), lists = 4,
+      m = 4, codes = 8))),
+    "full-rank PCA" -> (Similarity.annIndexWrite(corpus, _, RotatedSpec(Dim, Pca(Dim),
+      lists = 4, m = 4, codes = 8))),
+    "OPQ" -> (Similarity.annIndexWrite(corpus, _, RotatedSpec(Dim, OpqP, lists = 4, m = 4,
+      codes = 8, quantizers = Trained()))))
 
   kinds.foreach { case (name, build) =>
     test(s"$name: probe and refine equal the kind's scorer by hand, filtered or not; " +
@@ -122,6 +124,33 @@ class AnnSurfaceSpec extends AnyFunSuite with SharedSpark {
       assert(!after.collect().exists(_.getLong(2) == victim))
       assert(after.count() == before.length.toLong)
       assert(rows(after) == rows(byHand(dir, queries, K, None, drop = Set(victim))))
+    }
+  }
+
+  test("grown == rebuilt, re-send admits 0: IVF-PQ plain, residual and SQ8, each " +
+      "under given quantizers") {
+    val cents = Similarity.kmeansCentroids(corpus, k = 4, iters = 2, dim = Dim,
+      seedFromData = true)
+    val cbs = Similarity.pqLearnedCodebooks(corpus, dim = Dim, m = 4, codes = 8, iters = 2,
+      seedFromData = true)
+    val specs = Seq(
+      "ivfpq" -> IvfPqSpec(Dim, lists = 4, m = 4, codes = 8, quantizers = Given(cents, cbs)),
+      "ivfpq" -> IvfPqSpec(Dim, lists = 4, m = 4, codes = 8, residual = true,
+        quantizers = Given(cents, cbs)),
+      "ivfsq_stats" -> IvfSqSpec(Dim, lists = 4, centroids = Some(cents),
+        bounds = Some(Similarity.sqTrainBounds(corpus, Dim))))
+    specs.foreach { case (sidecar, spec) =>
+      val grown = tmpIdx("ann_grown")
+      val rebuilt = tmpIdx("ann_rebuilt")
+      assert(Similarity.annIndexWrite(corpus, grown, spec) == 96L)
+      assert(Similarity.annAppendAt(batch, grown) == 16L)
+      assert(Similarity.annAppendAt(batch, grown) == 0L)
+      assert(Similarity.annIndexWrite(corpus.unionByName(batch), rebuilt, spec) == 112L)
+      // history never re-encoded, yet the grown rows and their derived
+      // sidecar equal one build over the union
+      assert(stored(grown) == stored(rebuilt), spec)
+      assert(graft.sources.ArtifactHeader.read(spark, grown, sidecar) ==
+        graft.sources.ArtifactHeader.read(spark, rebuilt, sidecar), spec)
     }
   }
 
@@ -172,16 +201,16 @@ class AnnSurfaceSpec extends AnyFunSuite with SharedSpark {
     */
   private val rebuildKinds: Seq[(String, () => DataFrame, (DataFrame, String) => Long,
       () => DataFrame, String)] = Seq(
-    ("IVF-PQ", () => corpus, Similarity.ivfPqIndexWrite(_, _, dim = Dim, lists = 4, m = 4,
-      codes = 8), () => drift, "list balance"),
-    ("residual IVF-PQ", () => corpus, Similarity.ivfPqIndexWrite(_, _, dim = Dim,
-      lists = 4, m = 4, codes = 8, residual = true), () => drift, "list balance"),
-    ("SQ8", () => corpus, Similarity.ivfSqIndexWrite(_, _, dim = Dim, lists = 4),
+    ("IVF-PQ", () => corpus, Similarity.annIndexWrite(_, _, IvfPqSpec(Dim, lists = 4,
+      m = 4, codes = 8)), () => drift, "list balance"),
+    ("residual IVF-PQ", () => corpus, Similarity.annIndexWrite(_, _, IvfPqSpec(Dim,
+      lists = 4, m = 4, codes = 8, residual = true)), () => drift, "list balance"),
+    ("SQ8", () => corpus, Similarity.annIndexWrite(_, _, IvfSqSpec(Dim, lists = 4)),
       () => outOfSpan, "bounds saturation"),
-    ("PCA", () => genA, Similarity.pcaIvfPqIndexWrite(_, _, dim = Dim, outDim = 8,
-      lists = 4, m = 4, codes = 8), () => genB, "basis capture"),
-    ("OPQ_P", () => corpus, Similarity.opqIvfPqIndexWrite(_, _, dim = Dim, lists = 4,
-      m = 4, codes = 8), () => drift, "list balance"))
+    ("PCA", () => genA, Similarity.annIndexWrite(_, _, RotatedSpec(Dim, Pca(8), lists = 4,
+      m = 4, codes = 8)), () => genB, "basis capture"),
+    ("OPQ_P", () => corpus, Similarity.annIndexWrite(_, _, RotatedSpec(Dim, OpqP,
+      lists = 4, m = 4, codes = 8, quantizers = Trained())), () => drift, "list balance"))
 
   rebuildKinds.foreach { case (name, base, build, grow, signal) =>
     test(s"$name: annNeedsRebuild names the $signal signal; annRebuildIfNeeded runs " +
@@ -207,8 +236,8 @@ class AnnSurfaceSpec extends AnyFunSuite with SharedSpark {
           val projected = Similarity.pcaProject(grown,
             Similarity.pcaRotationAt(spark, viaIf)).localCheckpoint()
           val twin = tmpIdx("ann_rebuild_twin")
-          Similarity.ivfPqIndexWrite(projected, twin, dim = h.dim, lists = h.lists,
-            m = h.m, codes = h.codes, residual = h.residual)
+          Similarity.annIndexWrite(projected, twin, IvfPqSpec(h.dim, lists = h.lists,
+            m = h.m, codes = h.codes, residual = h.residual))
           Similarity.annRebuildAt(projected, twin, Policy)
           twin
         case Some(rot) =>
@@ -235,8 +264,8 @@ class AnnSurfaceSpec extends AnyFunSuite with SharedSpark {
     val dir = tmpIdx("ann_rebuild_due_pca")
     // full rank: the stored basis captures any corpus, so list balance
     // is the one signal the cluster can trip
-    Similarity.pcaIvfPqIndexWrite(corpus, dir, dim = Dim, outDim = Dim, lists = 4, m = 4,
-      codes = 8)
+    Similarity.annIndexWrite(corpus, dir, RotatedSpec(Dim, Pca(Dim), lists = 4, m = 4,
+      codes = 8))
     Similarity.annAppendAt(drift, dir)
     val grown = corpus.unionByName(drift)
     val policy = Policy.copy(trainSample = 512)
