@@ -262,7 +262,7 @@ private[graft] object AnnLifecycle {
           val n = Similarity.annIndexWrite(Similarity.pcaProject(corpus, rot, p.idCol,
             p.vecCol), tmp, retrainSpec(h, p), p.idCol, p.vecCol)
           val (fs, live) = Similarity.hadoopFs(spark, path)
-          Similarity.carrySidecars(fs, live, new Path(tmp), spark.sessionState.newHadoopConf())
+          graft.sources.ArtifactRewrite.carry(fs, live, new Path(tmp), spark.sessionState.newHadoopConf())
           n
         })
       else {
@@ -704,9 +704,9 @@ private[graft] object AnnLifecycle {
     }
     // foreign sidecars (a pcarot rotation, a stats file another layer
     // owns) survive the swap; the rebuild's own fresh headers win
-    // (carrySidecars copies only names tmp lacks)
-    Similarity.carrySidecars(fs, path, tmp, spark.sessionState.newHadoopConf())
-    Similarity.artifactSwap(fs, path, tmp, old, RebuildVerb)
+    // (the carry copies only names tmp lacks)
+    graft.sources.ArtifactRewrite.carry(fs, path, tmp, spark.sessionState.newHadoopConf())
+    graft.sources.ArtifactRewrite.swap(fs, path, tmp, old, RebuildVerb)
     Similarity.RebuildReport(rowsBefore, rowsAfter, recallBefore, recallAfter,
       plan.retrains)
   }

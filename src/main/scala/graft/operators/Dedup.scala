@@ -426,6 +426,11 @@ object Dedup {
     * re-run is idempotent), then the band index, each with the
     * verified row accounting + sidecar carry + atomic swap of the ANN
     * fold, clearing the consumed tombstone set with the index rewrite.
+    * The store is rewritten at its compaction layout (clustered on
+    * doc_id, the candidate-id fetch's key), so the window's store
+    * compaction that follows finds it within budget; a fold whose ids
+    * match no row of an artifact leaves that artifact's files as they
+    * are.
     * Returns ((storeBefore, storeAfter), (indexBefore, indexAfter));
     * `winnerStorePath = None` folds the index alone (callers whose
     * prior side is not a persisted store). ((0,0),(0,0)) on an empty
@@ -440,7 +445,7 @@ object Dedup {
     if (ids.isEmpty) return ((0L, 0L), (0L, 0L)) // sidecar-only no-op
     val store = winnerStorePath match {
       case Some(w) => Similarity.tombstoneFoldRows(spark, w, ids, "doc_id",
-        "neardupTombstoneFold", clearTombstones = false)
+        "neardupTombstoneFold", clearTombstones = false, clusterBy = Seq("doc_id"))
       case None => (0L, 0L)
     }
     (store, Similarity.tombstoneFoldRows(spark, indexPath, ids, "doc_id",

@@ -226,7 +226,7 @@ object Forget {
       if (!(gramCounted || t.retractions.nonEmpty)) None
       else {
         import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit}
-        val store = spark.read.parquet(t.winnerStorePath.get)
+        val store = graft.sources.ArtifactFiles.read(spark, t.winnerStorePath.get)
         val genCols =
           if (store.columns.contains("batch_id"))
             Seq(col(t.idCol), col(t.textCol), col("batch_id"))

@@ -1646,53 +1646,6 @@ object Similarity {
           "PROJECTED vectors refuse here too")
     }
 
-  /** Copy `_`-prefixed sidecars the rewrite did not itself produce
-    * (e.g. the pcarot rotation riding next to an ivfpq header) from
-    * the live artifact into a rebuild's tmp directory, so the
-    * two-rename swap cannot drop them — the
-    * [[graft.sources.ArtifactCompaction]] carry rule applied to the
-    * rebuild path. Existing files in `to` win (a rebuild's freshly
-    * retrained headers must never be clobbered by stale ones).
-    */
-  private[graft] def carrySidecars(fs: org.apache.hadoop.fs.FileSystem,
-                            from: org.apache.hadoop.fs.Path,
-                            to: org.apache.hadoop.fs.Path,
-                            conf: org.apache.hadoop.conf.Configuration): Unit =
-    fs.listStatus(from).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && n.startsWith("_") && n != "_SUCCESS" &&
-        !fs.exists(new org.apache.hadoop.fs.Path(to, n))
-    }.foreach { s =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-        new org.apache.hadoop.fs.Path(to, s.getPath.getName), false, conf)
-    }
-
-  /** The two-rename atomic swap with rollback shared by the rebuild
-    * path ([[AnnLifecycle.rebuild]]): move the live
-    * artifact aside, move the verified rewrite in, delete the old
-    * copy. On swap-in failure the original is restored and the tmp
-    * deleted (corpus-sized residue); after a DOUBLE failure everything
-    * is preserved for manual recovery.
-    */
-  private[graft] def artifactSwap(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path,
-                           tmp: org.apache.hadoop.fs.Path,
-                           old: org.apache.hadoop.fs.Path,
-                           tag: String): Unit = {
-    if (!fs.rename(p, old)) {
-      fs.delete(tmp, true)
-      sys.error(s"$tag: could not move $p aside; artifact untouched")
-    }
-    if (!fs.rename(tmp, p)) {
-      val rolledBack = fs.rename(old, p)
-      if (rolledBack) fs.delete(tmp, true)
-      sys.error(s"$tag: swap-in failed for $p; " +
-        (if (rolledBack) "original rolled back, artifact untouched"
-         else s"ROLLBACK ALSO FAILED — artifact preserved at $old"))
-    }
-    fs.delete(old, true)
-  }
-
   /** List-balance audit of a (possibly append-grown) IVF-PQ artifact,
     * computed from the artifact ALONE — no corpus vectors touched.
     * [[annAppendAt]] grows forever against frozen centroids;
@@ -2464,16 +2417,17 @@ object Similarity {
       graft.sources.Tombstones.collectBounded(ids,
         "annIndexDeleteAt", "annTombstoneFold"))
 
-  /** Make the tombstoned deletions PHYSICAL: rewrite the artifact
-    * minus the tombstoned rows, verify the row accounting BEFORE the
-    * swap (rowsAfter == rowsBefore - matched), carry every foreign
-    * sidecar, re-seed the SQ8 stats sidecar from the surviving rows
-    * (rail counts of deleted rows must leave the saturation audit),
-    * atomically swap, and clear the consumed tombstone set. Returns
-    * (rowsBefore, rowsAfter), or (0, 0) on an empty set — the no-op
-    * reads only the sidecar, never the artifact. Runs inside the same
-    * single-writer maintenance window as compaction — it IS a
-    * compaction with a filter.
+  /** Make the tombstoned deletions PHYSICAL through
+    * [[tombstoneFoldRows]]: rewrite the artifact minus the tombstoned
+    * rows, verify the row accounting BEFORE the swap (rowsAfter ==
+    * rowsBefore - matched), carry every foreign sidecar, re-seed the
+    * SQ8 stats sidecar from the surviving rows (rail counts of deleted
+    * rows must leave the saturation audit), atomically swap, and clear
+    * the consumed tombstone set. Returns (rowsBefore, rowsAfter), or
+    * (0, 0) on an empty set — the no-op reads only the sidecar, never
+    * the artifact; a set that matches no row clears the sidecar and
+    * rewrites nothing. Runs inside the same single-writer maintenance
+    * window as compaction — it IS a compaction with a filter.
     */
   def annTombstoneFold(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String): (Long, Long) = {
@@ -2495,55 +2449,47 @@ object Similarity {
       "annTombstoneFold", clearTombstones = true, onTmp)
   }
 
-  /** The fold core shared by the ANN and near-dup families: rewrite
-    * `path` minus `ids` (on `idColName`), verify the accounting with
-    * the INDEPENDENT semi-join count before the swap (anti + semi
-    * must tile the artifact), carry foreign sidecars, optionally drop
-    * the consumed tombstone sidecar from the rewrite (an append of a
-    * folded id is legitimate again), run `onTmp` (e.g. the SQ8 stats
-    * re-seed) so the swap installs one consistent generation, then
-    * the two-rename atomic swap.
+  /** The fold shared by the ANN and near-dup families, on the
+    * [[graft.sources.ArtifactRewrite]] core: rewrite `path` minus `ids`
+    * (on `idColName`) and verify it before the swap — the rows the
+    * rewrite's footers hold must equal the live footers' rows minus the
+    * matched count of an INDEPENDENT scan. A scan that matches nothing
+    * writes nothing: the consumed tombstone sidecar is cleared in place
+    * and the rows are returned unchanged. Otherwise `clearTombstones`
+    * drops the sidecar from the rewrite (an append of a folded id is
+    * legitimate again) and `onTmp` (e.g. the SQ8 stats re-seed) runs on
+    * it, so the swap installs one consistent generation. The rewrite
+    * keeps its input order, or with `clusterBy` takes the compaction
+    * layout ([[graft.sources.ArtifactCompaction.autoTargetFiles]] files
+    * range-clustered on those columns), which the next compaction check
+    * then finds within budget.
     */
   private[graft] def tombstoneFoldRows(spark: org.apache.spark.sql.SparkSession,
                                        path: String, ids: Array[Long],
                                        idColName: String, what: String,
                                        clearTombstones: Boolean,
-                                       onTmp: String => Unit = _ => ()): (Long, Long) = {
-    graft.sources.SwapRecovery.repair(spark, path) // crashed prior swap
-    val before = spark.read.parquet(path)
-    if (ids.isEmpty) { val rb = before.count(); return (rb, rb) }
-    // one scan for BOTH pre-fold counts (total + matched): the matched
-    // count stays independent of the REWRITE it verifies — only the
-    // two input-side jobs collapse into one. Above the pushdown bound
-    // keep the two-job semi-join form (an isin of 100k+ ids bloats the
-    // predicate tree).
-    val (rowsBefore, matched) =
-      if (ids.length <= AnnFilterPushdownMax) {
-        val r = before.agg(count(lit(1)),
-          count(when(col(idColName).isin(ids.map(java.lang.Long.valueOf): _*), lit(1))))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1))
-      } else {
-        (before.count(), tombstoneMatches(before, ids, idColName).count())
-      }
-    val (fs, p) = hadoopFs(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tombfold.tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tombfold.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    tombstoneExclude(spark.read.parquet(path), ids, idColName)
-      .write.mode("overwrite").option("compression", "zstd").parquet(tmp.toString)
-    val rowsAfter = spark.read.parquet(tmp.toString).count()
-    if (rowsAfter != rowsBefore - matched) {
-      fs.delete(tmp, true)
-      sys.error(s"$what: rewrite of $path has $rowsAfter rows, " +
-        s"expected ${rowsBefore - matched} ($rowsBefore - $matched tombstoned); " +
-        "artifact left untouched")
+                                       onTmp: String => Unit = _ => (),
+                                       clusterBy: Seq[String] = Nil): (Long, Long) = {
+    val live = graft.sources.ArtifactRewrite.open(spark, path) // crashed prior swap
+    val rowsBefore = live.rows
+    val matched =
+      if (ids.isEmpty || !live.hasData) 0L
+      else tombstoneMatches(live.read().select(idColName), ids, idColName).count()
+    if (matched == 0L) {
+      if (clearTombstones && ids.nonEmpty) graft.sources.Tombstones.clear(spark, path)
+      return (rowsBefore, rowsBefore)
     }
-    carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    if (clearTombstones) graft.sources.Tombstones.clear(spark, tmp.toString)
-    onTmp(tmp.toString)
-    artifactSwap(fs, p, tmp, old, what)
-    (rowsBefore, rowsAfter)
+    val kept = tombstoneExclude(live.read(), ids, idColName)
+    val laidOut =
+      if (clusterBy.isEmpty) kept
+      else graft.sources.ArtifactCompaction.layout(kept,
+        graft.sources.ArtifactCompaction.autoTargetFiles(spark, path), clusterBy)
+    graft.sources.ArtifactRewrite.rewrite(live, "tombfold", what, Seq(
+      graft.sources.ArtifactRewrite.Part("", laidOut, rowsBefore - matched))) { tmp =>
+      if (clearTombstones) graft.sources.Tombstones.clear(spark, tmp)
+      onTmp(tmp)
+    }
+    (rowsBefore, rowsBefore - matched)
   }
 
   // ------------------------------------------------------------------

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** FILE-level compaction for the append-only row artifacts the
   * streaming maintainers grow (LSH band index, gram index, winner
@@ -88,10 +89,12 @@ object ArtifactCompaction {
   }
 
   /** Rewrite the parquet directory at `path` to `targetFiles` data
-    * files. The rewrite is verified (row count of the rewritten copy
-    * must equal the source) BEFORE the swap — a failed verification
-    * leaves the artifact untouched. Returns (dataFilesBefore,
-    * dataFilesAfter).
+    * files on the [[ArtifactRewrite]] core: the rows before come from
+    * the live footers, the rewrite must hold as many in its own
+    * footers BEFORE the swap (a short rewrite leaves the artifact
+    * untouched), and `_` sidecars and subdirectories (the counted gram
+    * index's `_docs` registry) ride into the rewrite. Returns
+    * (dataFilesBefore, dataFilesAfter).
     *
     * `clusterBy`: optional layout key — the rewrite range-partitions
     * and sorts on it, so readers that push key predicates (the
@@ -105,71 +108,24 @@ object ArtifactCompaction {
   def compactFiles(spark: SparkSession, path: String, targetFiles: Int = 1,
                    clusterBy: Seq[String] = Nil): (Long, Long) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    SwapRecovery.repair(fs, p) // finish/undo a previously crashed swap first
-    require(fs.exists(p), s"no artifact at $path")
-    def dataFiles(dir: Path): Long = fs.listStatus(dir).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.toLong
-    val before = dataFiles(p)
-    val rows = spark.read.parquet(path).count()
+    val live = ArtifactRewrite.open(spark, path)
+    val before = live.data.count(_.isFile).toLong
+    ArtifactRewrite.rewrite(live, "compact", "ArtifactCompaction", Seq(ArtifactRewrite.Part(
+      "", layout(live.read(), targetFiles, clusterBy), live.rows)))()
+    (before, dataFileCount(spark, path))
+  }
 
-    val tmp = new Path(p.getParent, p.getName + ".compact.tmp")
-    val old = new Path(p.getParent, p.getName + ".compact.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    val base = spark.read.parquet(path)
-    val laidOut =
-      if (clusterBy.isEmpty) base.repartition(targetFiles)
-      else {
-        import org.apache.spark.sql.functions.col
-        val keys = clusterBy.map(col)
-        base.repartitionByRange(targetFiles, keys: _*).sortWithinPartitions(keys: _*)
-      }
-    laidOut
-      .write.mode("overwrite").option("compression", "zstd").parquet(tmp.toString)
-    // carry self-describing sidecars; never the writer's own _SUCCESS.
-    // Underscore-prefixed SUBDIRS ride too (FileUtil.copy recurses):
-    // the counted gram index keeps its doc-ownership registry at
-    // `_docs` — invisible to the parquet read above, so a pure layout
-    // rewrite is safe for it exactly as long as the swap does not
-    // drop it
-    fs.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      // never the writer's own _SUCCESS, and never a crashed write's
-      // _temporary staging dir — carrying that would embed dead bytes
-      // in every future generation
-      n.startsWith("_") && n != "_SUCCESS" && !n.startsWith("_temporary")
-    }.foreach { s =>
-      FileUtil.copy(fs, s.getPath, fs, new Path(tmp, s.getPath.getName), false, conf)
-    }
-    // verify BEFORE swapping: a bad rewrite must leave the artifact
-    // untouched (the GraphStore validate-on-load posture applied to
-    // maintenance)
-    val rewritten = spark.read.parquet(tmp.toString).count()
-    if (rewritten != rows) {
-      fs.delete(tmp, true)
-      sys.error(s"ArtifactCompaction: rewrite of $path lost rows " +
-        s"($rows -> $rewritten); artifact left untouched")
-    }
-    if (!fs.rename(p, old)) {
-      fs.delete(tmp, true)
-      sys.error(s"ArtifactCompaction: could not move $path aside; artifact untouched")
-    }
-    if (!fs.rename(tmp, p)) {
-      // roll the original back into place rather than stranding the
-      // artifact at the .compact.old path with the live path missing;
-      // on success the tmp copy is pure residue — delete it (after a
-      // DOUBLE failure keep everything for manual recovery)
-      val rolledBack = fs.rename(old, p)
-      if (rolledBack) fs.delete(tmp, true)
-      sys.error(s"ArtifactCompaction: swap-in failed for $path; " +
-        (if (rolledBack) "original rolled back, artifact untouched"
-         else s"ROLLBACK ALSO FAILED — artifact preserved at $old"))
-    }
-    fs.delete(old, true)
-    (before, dataFiles(p))
+  /** The compaction layout: `targetFiles` partitions, range-clustered
+    * and sorted on `clusterBy` when given. One target file is a
+    * coalesce (plus a sort when clustered): no shuffle and no
+    * range-sampling job.
+    */
+  private[graft] def layout(df: DataFrame, targetFiles: Int,
+                            clusterBy: Seq[String]): DataFrame = {
+    val keys = clusterBy.map(col)
+    if (targetFiles == 1)
+      if (keys.isEmpty) df.coalesce(1) else df.coalesce(1).sortWithinPartitions(keys: _*)
+    else if (keys.isEmpty) df.repartition(targetFiles)
+    else df.repartitionByRange(targetFiles, keys: _*).sortWithinPartitions(keys: _*)
   }
 }

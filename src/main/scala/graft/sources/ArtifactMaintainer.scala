@@ -190,10 +190,13 @@ final class ArtifactMaintainer(owner: Option[() => StreamingQuery] = None) {
     * points.
     *
     * State may advance between the trigger read and the window (an
-    * append lands, files grow) — benign: every shipped task is
-    * idempotent and re-verifies inside the window (the ANN task
-    * re-audits staleness via `annRebuildIfNeeded`; compaction
-    * re-lists and verifies before its swap).
+    * append lands, files grow; an earlier task of the window rewrites
+    * an artifact a later one was due for) — benign: every shipped task
+    * is idempotent and re-verifies inside the window (the ANN task
+    * re-audits staleness via `annRebuildIfNeeded`; compaction re-runs
+    * its small-file check and skips, naming the skip in its summary,
+    * when the artifact is back within budget, and otherwise verifies
+    * the rewrite before its swap).
     */
   def maintainIfDue(checks: Seq[DueCheck]): Option[Report] = {
     val tripped = withAccess(checks.flatMap(c => c.check().map(why => (c, why))))
@@ -236,7 +239,8 @@ object ArtifactMaintainer {
     * `targetFiles <= 0` auto-sizes the rewrite from the artifact's
     * bytes at run time ([[ArtifactCompaction.autoTargetFiles]],
     * ~64 MB/file) — a fixed 1 is only right while the artifact is
-    * small.
+    * small. Rewrites unconditionally; [[compactDue]]'s task re-checks
+    * its trigger first.
     */
   def compactTask(spark: SparkSession, path: String, targetFiles: Int = 1,
                   clusterBy: Seq[String] = Nil): Task =
@@ -250,7 +254,10 @@ object ArtifactMaintainer {
 
   /** Compaction trigger on SMALL-file debt: due when more than
     * `maxSmallFiles` data files under `smallBytes` have accumulated.
-    * Small-file count — not total files — is the budget because
+    * The window re-runs the check before it rewrites: an earlier
+    * task of the same window (a fold that rewrote the artifact) may
+    * already have brought it within budget, and then the task skips
+    * and says so. Small-file count — not total files — is the budget because
     * right-sized appends (~64 MB payload files) are healthy layout at
     * any history size, while per-batch index appends stay small
     * forever; a total-file trigger would fire on every sized append
@@ -264,14 +271,17 @@ object ArtifactMaintainer {
     */
   def compactDue(spark: SparkSession, path: String, maxSmallFiles: Int,
                  smallBytes: Long = 32L << 20, targetFiles: Int = 0,
-                 clusterBy: Seq[String] = Nil): DueCheck =
-    new DueCheck(s"compact:${new org.apache.hadoop.fs.Path(path).getName}",
-      () => {
-        val n = ArtifactCompaction.smallDataFileCount(spark, path, smallBytes)
-        if (n > maxSmallFiles) Some(s"small_files=$n > budget $maxSmallFiles")
-        else None
-      },
-      compactTask(spark, path, targetFiles, clusterBy))
+                 clusterBy: Seq[String] = Nil): DueCheck = {
+    def smallFiles = ArtifactCompaction.smallDataFileCount(spark, path, smallBytes)
+    val compact = compactTask(spark, path, targetFiles, clusterBy)
+    new DueCheck(compact.name,
+      () => Some(smallFiles).filter(_ > maxSmallFiles).map(n => s"small_files=$n > budget $maxSmallFiles"),
+      Task(compact.name) { () =>
+        val n = smallFiles
+        if (n > maxSmallFiles) compact.run()
+        else s"within budget: small_files=$n <= $maxSmallFiles, skipped"
+      })
+  }
 
   /** Merge-algebra folding of a stamped delta log. */
   def deltaCompactTask(spark: SparkSession, path: String, keys: Seq[String],
@@ -282,25 +292,24 @@ object ArtifactMaintainer {
       s"rows $rb -> $ra"
     }
 
-  /** Delta-log folding trigger on raw-row growth: due when the
-    * unfolded log exceeds `maxRows`. The count is parquet row-group
-    * metadata (no column data read) — cheap enough to poll per batch.
-    */
-  /** Raw row count of a delta-log artifact for a due check: 0 when
-    * the path is missing OR header-stamped but data-less (writers
-    * stamp via validateOrStamp BEFORE the first data write, so a
-    * zero-admission first batch legitimately leaves a header-only
+  /** Raw row count of a delta-log artifact for a due check, summed
+    * from its parquet footers ([[ArtifactFiles.footerRows]]: no job).
+    * 0 when the path is missing OR header-stamped but data-less
+    * (writers stamp via validateOrStamp BEFORE the first data write, so
+    * a zero-admission first batch legitimately leaves a header-only
     * directory — a maintenance poll must read that as "nothing to
-    * fold", not throw schema-inference errors out of the poll loop).
+    * fold"); a data-BEARING path whose footer read fails PROPAGATES out
+    * of the poll (the old blanket AnalysisException catch read a
+    * corrupt artifact as empty/quiet maintenance).
     */
   private def rawRowCount(spark: SparkSession, path: String): Long =
-    // "no data files" is the quiet state (missing or header-only
-    // artifact); a data-BEARING path whose read fails PROPAGATES out
-    // of the poll — the old blanket AnalysisException catch read a
-    // corrupt artifact as empty/quiet maintenance
-    if (!ArtifactFiles.hasDataFiles(spark, path)) 0L
-    else spark.read.parquet(path).count()
+    ArtifactFiles.footerRows(spark, path)
 
+  /** Delta-log folding trigger on raw-row growth: due when the
+    * unfolded log exceeds `maxRows`. The count is parquet footer
+    * metadata (no job, no column data read) — cheap enough to poll per
+    * batch.
+    */
   def deltaCompactDue(spark: SparkSession, path: String, keys: Seq[String],
                       merges: Map[String, org.apache.spark.sql.Column =>
                         org.apache.spark.sql.Column],
@@ -317,7 +326,7 @@ object ArtifactMaintainer {
     * ([[graft.streaming.StreamingSubstringDedup.countedLive]]'s
     * dedupe + net) grows with raw log length between folds, so the
     * budget bounds per-probe cost exactly like the CMS/HLL logs'.
-    * Same parquet-metadata count, no column data read.
+    * Same parquet-footer count, no job.
     *
     * UNLIKE the bounded-key CMS/HLL logs, this log's netted size has
     * a corpus-sized FLOOR (most grams are distinct, one row each), so

@@ -351,8 +351,7 @@ object DeltaLogCompaction {
     // rebuilds, compactCounted) — losing the header would make the
     // next estimateFrom fail loudly and let a drifted-config writer
     // silently re-stamp, defeating the drift refusal
-    graft.operators.Similarity.carrySidecars(fs, p, tmp,
-      spark.sessionState.newHadoopConf())
+    ArtifactRewrite.carry(fs, p, tmp, spark.sessionState.newHadoopConf())
     // stamp the fold watermark INTO the rewrite (overwriting any
     // carried older one) so the swap installs rows + watermark
     // atomically — a crash between swap and a post-swap stamp is
@@ -363,8 +362,7 @@ object DeltaLogCompaction {
     // rollback-capable swap (a failed swap-in restores the original);
     // a process CRASH inside it is repaired by SwapRecovery at the
     // next writer entry
-    graft.operators.Similarity.artifactSwap(fs, p, tmp, old,
-      "DeltaLogCompaction")
+    ArtifactRewrite.swap(fs, p, tmp, old, "DeltaLogCompaction")
     (before, after)
   }
 

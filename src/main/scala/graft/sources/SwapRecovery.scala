@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Crash recovery for the artifact rewrite swap every maintenance
-  * verb in this repo uses (`DeltaLogCompaction.compact`,
-  * `ArtifactCompaction.compactFiles`, the ANN rebuilds and tombstone
-  * folds, `StreamingSubstringDedup.compactCounted` /
-  * `rebuildIndex`): write a complete rewrite to `<path>.<tag>.tmp`,
+  * verb in this repo uses (`DeltaLogCompaction.compact`, the ANN
+  * rebuilds, and every rewrite on the [[ArtifactRewrite]] core —
+  * `ArtifactCompaction.compactFiles`, the tombstone folds,
+  * `StreamingSubstringDedup.compactCounted` / `rebuildIndex`): write a complete rewrite to `<path>.<tag>.tmp`,
   * then `rename(path -> <path>.<tag>.old)`, `rename(tmp -> path)`,
   * `delete(old)`.
   *
@@ -57,9 +57,10 @@ import org.apache.spark.sql.SparkSession
   */
 object SwapRecovery {
 
-  /** Every swap tag in the tree (grep `artifactSwap(` and the
-    * `.compact.tmp` sites). A new swap site must register its tag
-    * here or its crash window stays invisible to the writers' repair.
+  /** Every swap tag in the tree (grep `ArtifactRewrite.swap(`,
+    * `ArtifactRewrite.rewrite(` and the `.compact.tmp` sites). A new
+    * swap site must register its tag here or its crash window stays
+    * invisible to the writers' repair.
     */
   private[graft] val tags: Seq[String] =
     Seq("compact", "gramcfold", "gramrebuild", "rebuild", "tombfold")

@@ -142,34 +142,21 @@ object StreamingSubstringDedup {
     */
   def rebuildIndex(spark: SparkSession, indexPath: String,
                    surviving: DataFrame, textCol: String, idCol: String): (Long, Long) = {
-    graft.sources.SwapRecovery.repair(spark, indexPath) // crashed prior swap
+    val live = graft.sources.ArtifactRewrite.open(spark, indexPath) // crashed prior swap
     val hdr = graft.sources.ArtifactHeader.required(spark, indexPath, "grams")
     val k = hdr("k").toInt
-    val rowsBefore = readIndex(spark, indexPath).count()
+    val rowsBefore = live.rows
     val fresh = Curation.gramHashSet(surviving, textCol, idCol, k)
       .select("h").distinct().localCheckpoint()
     val expected = fresh.count()
-    val sim = graft.operators.Similarity
-    val (fs, p) = sim.hadoopFs(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".gramrebuild.tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".gramrebuild.old")
-    fs.delete(tmp, true); fs.delete(old, true)
     // no coalesce(1) here: unlike the per-batch append (tiny deltas
     // accumulating into a listing tax), a full rebuild writes the
     // whole index once — one file per shuffle partition is the right
     // layout at scale, and compactDue owns any later consolidation
-    fresh.write.mode("overwrite")
-      .option("compression", "zstd").parquet(tmp.toString)
-    graft.plans.CheckpointHygiene.free(fresh)
-    val rowsAfter = spark.read.parquet(tmp.toString).count()
-    if (rowsAfter != expected) {
-      fs.delete(tmp, true)
-      sys.error(s"rebuildIndex: rewrite of $indexPath has $rowsAfter gram hashes, " +
-        s"expected $expected; artifact left untouched")
-    }
-    sim.carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    sim.artifactSwap(fs, p, tmp, old, "gram rebuildIndex")
-    (rowsBefore, rowsAfter)
+    try graft.sources.ArtifactRewrite.rewrite(live, "gramrebuild", "gram rebuildIndex",
+      Seq(graft.sources.ArtifactRewrite.Part("", fresh, expected)))()
+    finally graft.plans.CheckpointHygiene.free(fresh)
+    (rowsBefore, expected)
   }
 
   // ------------------------------------------------------------------
@@ -231,12 +218,13 @@ object StreamingSubstringDedup {
   /** Raw rows of a delta-log path ((first, delta, batch_id) shape),
     * empty frame when the path is missing or data-less — the shared
     * bootstrap read under both the gram log and its `_docs` registry.
+    * The schema is fixed, so the read runs no inference job.
     */
   private def readDeltaRaw(spark: SparkSession, path: String,
                            firstCol: String): DataFrame = {
     import spark.implicits._
     if (graft.sources.ArtifactFiles.hasDataFiles(spark, path))
-      spark.read.parquet(path)
+      spark.read.schema(s"$firstCol long, delta long, batch_id long").parquet(path)
     else Seq.empty[(Long, Long, Long)].toDF(firstCol, "delta", "batch_id")
   }
 
@@ -533,14 +521,15 @@ object StreamingSubstringDedup {
     */
   private def removalsPath(indexPath: String): String = s"$indexPath/_removals"
 
-  private def manifestAt(spark: SparkSession, indexPath: String,
-                         stampId: Long): DataFrame = {
+  /** The (doc_id, batch_id) manifest rows; empty when none were ever
+    * declared. Fixed schema, no inference job.
+    */
+  private def readRemovals(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
     val path = removalsPath(indexPath)
     if (graft.sources.ArtifactFiles.hasDataFiles(spark, path))
-      spark.read.parquet(path).filter(col("batch_id") === stampId)
-        .select("doc_id")
-    else Seq.empty[Long].toDF("doc_id")
+      spark.read.schema("doc_id long, batch_id long").parquet(path)
+    else Seq.empty[(Long, Long)].toDF("doc_id", "batch_id")
   }
 
   /** Remove gram ownership (-): the O(deleted-docs) forget step.
@@ -563,10 +552,19 @@ object StreamingSubstringDedup {
     * stamp-sharing detectors (which compare the log's rows against
     * the caller's set) must not read every prior row as "different
     * documents". Returns distinct grams decremented.
+    *
+    * Priced by the deleted ids, not by the artifact: the caller's ids
+    * are collected once and pushed down into the `_docs` registry scan
+    * (their history plus this stamp's slice, one job), the stamp
+    * probes of the manifest and the gram log skip their scans when the
+    * footers' batch_id statistics rule the stamp out
+    * ([[graft.sources.ArtifactFiles.mayHold]]), and the count returned
+    * comes from the appended files' footers.
     */
   def decrementCounted(deletedDocs: DataFrame, textCol: String, idCol: String,
                        indexPath: String, stampId: Long): Long = {
     val spark = deletedDocs.sparkSession
+    import spark.implicits._
     require(stampId < 0L,
       "decrementCounted: removal stamps are negative (non-negative ids are " +
         "the ingest batch space)")
@@ -574,161 +572,117 @@ object StreamingSubstringDedup {
     // a crashed fold swap leaves behind (path missing, history at .old)
     graft.sources.SwapRecovery.repair(spark, indexPath)
     val hdr = graft.sources.ArtifactHeader.required(spark, indexPath, "gramsc")
-    val callerIds = deletedDocs.select(col(idCol).cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
-    if (callerIds.count() == 0L) {
-      // the completed-retry no-op (see scaladoc): one count on the
-      // checkpointed id frame, not a separate isEmpty scan
-      graft.plans.CheckpointHygiene.free(callerIds)
-      return 0L
-    }
+    // the request's ids are driver-held from here on (8 bytes each, the
+    // tombstone sidecar's posture): every read below is pushed down to
+    // them or to the stamp, and every detector is a set operation on
+    // the collected rows
+    val callerIds = deletedDocs.filter(col(idCol).isNotNull).select(col(idCol).cast("long"))
+      .collect().map(_.getLong(0)).distinct
+    // the completed-retry no-op (see scaladoc)
+    if (callerIds.isEmpty) return 0L
+    val callerSet = callerIds.toSet
     // -- removal manifest: declare this request's doc set under its
     // stamp BEFORE any delta lands. A logged manifest that disagrees
     // with this call's set is a second request sharing the stamp —
     // refuse at the start, whatever state the first request died in.
-    // The fresh path (no manifest data at all — every first removal)
-    // goes straight to the declare write: the empty-frame checkpoint
-    // and probe were two whole jobs spent learning "no manifest".
-    def declareManifest(): Unit =
-      callerIds.withColumn("batch_id", lit(stampId)).coalesce(1)
-        .write.mode("append").option("compression", "zstd")
-        .parquet(removalsPath(indexPath))
-    if (!graft.sources.ArtifactFiles.hasDataFiles(spark, removalsPath(indexPath)))
-      declareManifest()
-    else {
-      val declared = manifestAt(spark, indexPath, stampId).localCheckpoint()
-      try {
-        if (declared.limit(1).count() > 0L) {
-          val differs = declared.join(callerIds, Seq("doc_id"), "left_anti")
-            .unionByName(callerIds.join(declared, Seq("doc_id"), "left_anti"))
-            .limit(1).count() > 0L
-          require(!differs,
-            s"decrementCounted: removal stamp $stampId already declared intent " +
-              s"for DIFFERENT document(s) at $indexPath — two removal requests " +
-              "are sharing one stamp; their gram deltas would collapse at read, " +
-              "under-decrementing every shared gram. Pass a per-request-unique " +
-              "stamp (forgetDocuments: removalStamp).")
-          // identical set: the crash-retry of THIS request — intent is
-          // durable, proceed without re-declaring
-        } else declareManifest()
-      } finally graft.plans.CheckpointHygiene.free(declared)
-    }
-    val registered = deletedDocs.join(
-        registeredLive(spark, indexPath).withColumnRenamed("doc_id", idCol),
-        Seq(idCol), "left_semi")
-      .localCheckpoint()
-    // consulted exactly once (the fused detector aggregate below) —
-    // a batch_id-pushdown slice scan, no materialization needed
-    val regAtStamp = readDeltaRaw(spark, docsRegistryPath(indexPath), "doc_id")
-      .filter(col("batch_id") === stampId).select("doc_id")
-    val deltas = ownerDeltas(registered, textCol, idCol, hdr("k").toInt,
-      -1, stampId).localCheckpoint()
-    // like the append path: every read of this slice precedes any
-    // write to indexPath — no materialization job
+    // An identical set is the crash-retry of THIS request — intent is
+    // durable, proceed without re-declaring.
+    val declared =
+      if (!graft.sources.ArtifactFiles.mayHold(spark, removalsPath(indexPath), "batch_id", stampId))
+        Set.empty[Long]
+      else readRemovals(spark, indexPath).filter(col("batch_id") === stampId)
+        .select("doc_id").as[Long].collect().toSet
+    if (declared.isEmpty)
+      callerIds.toSeq.toDF("doc_id").withColumn("batch_id", lit(stampId)).coalesce(1)
+        .write.mode("append").option("compression", "zstd").parquet(removalsPath(indexPath))
+    else require(declared == callerSet,
+      s"decrementCounted: removal stamp $stampId already declared intent " +
+        s"for DIFFERENT document(s) at $indexPath — two removal requests " +
+        "are sharing one stamp; their gram deltas would collapse at read, " +
+        "under-decrementing every shared gram. Pass a per-request-unique " +
+        "stamp (forgetDocuments: removalStamp).")
+    // ONE registry scan, pushed down to the caller's ids (their whole
+    // history, netted below into registered-live) and to this stamp
+    // (the unregister rows a prior removal under it logged)
+    val reg = readDeltaRaw(spark, docsRegistryPath(indexPath), "doc_id")
+    val regRows = graft.operators.Similarity.tombstoneMatches(reg, callerIds, "doc_id")
+      .unionByName(reg.filter(col("batch_id") === stampId))
+      .as[(Long, Long, Option[Long])].collect()
+    val registered = netRows(regRows.toSeq).collect { case (id, n) if n > 0L && callerSet(id) => id }
+      .toArray.sorted
+    val atStamp = regRows.collect { case (id, _, Some(`stampId`)) => id }.toSet
+    // completed-removal detector: registry rows land LAST in this
+    // verb, so an unregister row already logged under THIS stamp means
+    // a prior removal at this stamp ran to completion — and the doc
+    // being registered-LIVE again means it was re-ingested since. This
+    // call is then a SECOND removal whose gram/registry rows would
+    // dedupe against the first's and silently no-op on the gram
+    // surface alone (the Forget residual: a stampless store
+    // re-ingesting byte-identical content re-derives the same content
+    // stamp). Refuse loudly instead of relying on the caller having
+    // read that comment. A crash-retry of an UNFINISHED removal never
+    // trips this — its registry rows were not yet written.
+    require(!registered.exists(atStamp),
+      s"decrementCounted: removal stamp $stampId already COMPLETED a removal " +
+        s"of document(s) that are registered-live again at $indexPath — the " +
+        "doc was re-ingested since, and this second removal's rows would " +
+        "dedupe against the first's into a silent no-op. Pass a FRESH stamp " +
+        "(forgetDocuments: set removalStamp to the removal request's own id).")
+    // stamp shared by a DIFFERENT removal: unregister rows logged
+    // under this stamp name docs OUTSIDE this call's set. For every
+    // gram the two removals share, their identical (h, -1, stamp)
+    // rows max-collapse at read into ONE decrement — the gram nets
+    // positive with zero live owners and keeps deduping future
+    // ingest forever (a rights-removal leak). Refuse. Compared
+    // against the caller's FULL deletedDocs set (not the
+    // live-filtered one): a direct-API retry of a COMPLETED removal
+    // hands the same docs — no longer live, still this request's
+    // own — and must stay the documented no-op. (A retry through
+    // forgetDocuments runs AFTER the winner-store fold and hands an
+    // EMPTY set instead; that is the early-return no-op above, which
+    // this check would otherwise misread as all-different docs.)
+    require(atStamp.subsetOf(callerSet),
+      s"decrementCounted: removal stamp $stampId already logged unregister " +
+        s"rows for DIFFERENT document(s) at $indexPath — two removal requests " +
+        "are sharing one stamp, and their gram deltas would collapse at read, " +
+        "under-decrementing every shared gram. Pass a per-request-unique " +
+        "stamp (forgetDocuments: removalStamp).")
+    if (registered.isEmpty) return 0L
+    val deltas = ownerDeltas(
+      graft.operators.Similarity.tombstoneMatches(deletedDocs, registered, idCol),
+      textCol, idCol, hdr("k").toInt, -1, stampId)
+    // gram rows already at this stamp: IDENTICAL re-derived rows are
+    // the crash-retry of THIS removal (registry rows land last) — the
+    // decrement is durable, skip the duplicate write and repair the
+    // registry half below. DIFFERENT rows are an UNFINISHED other
+    // removal sharing the stamp — the same collapse leak as above,
+    // caught on the gram surface because its registry rows never
+    // landed. (Residual: two byte-identical docs removed by two
+    // unfinished requests under one stamp produce identical gram rows
+    // and pass this check; the registry doc-set check above catches it
+    // as soon as either completes.)
     val existing = readDeltaRaw(spark, indexPath, "h")
       .filter(col("batch_id") === stampId).select("h", "delta")
-    try {
-      val thisDocs = registered.select(col(idCol).cast("long").as("doc_id"))
-      // completed-removal detector: registry rows land LAST in this
-      // verb, so an unregister row already logged under THIS stamp means
-      // a prior removal at this stamp ran to completion — and the doc
-      // being registered-LIVE again means it was re-ingested since. This
-      // call is then a SECOND removal whose gram/registry rows would
-      // dedupe against the first's and silently no-op on the gram
-      // surface alone (the Forget residual: a stampless store
-      // re-ingesting byte-identical content re-derives the same content
-      // stamp). Refuse loudly instead of relying on the caller having
-      // read that comment. A crash-retry of an UNFINISHED removal never
-      // trips this — its registry rows were not yet written.
-      // ONE job answers BOTH registry detectors AND the gram-slice
-      // retry probe (they were three sequential jobs over two
-      // pushed-down slices): a registry row matching thisDocs =>
-      // completed-removal reuse on a re-ingested live doc; a registry
-      // row outside callerIds => a different request sharing the
-      // stamp (thisDocs ⊆ callerIds, so the two left joins are
-      // disjoint evidence); any gram-log row at this stamp => the
-      // write below is a crash-retry, not a fresh decrement.
-      val detectorRow = regAtStamp
-        .join(thisDocs.withColumn("__live", lit(1)), Seq("doc_id"), "left")
-        .join(callerIds.withColumn("__mine", lit(1)), Seq("doc_id"), "left")
-        .select(col("__live"),
-          when(col("__mine").isNull, lit(1)).as("__other"),
-          lit(null).cast("int").as("__gram"))
-        .unionByName(existing.limit(1).select(
-          lit(null).cast("int").as("__live"),
-          lit(null).cast("int").as("__other"), lit(1).as("__gram")))
-        .agg(max(col("__live")).as("__reused"),
-          max(col("__other")).as("__other"),
-          max(col("__gram")).as("__gram"))
-        .collect()(0)
-      val reusedOnLive = !detectorRow.isNullAt(0)
-      require(!reusedOnLive,
-        s"decrementCounted: removal stamp $stampId already COMPLETED a removal " +
-          s"of document(s) that are registered-live again at $indexPath — the " +
-          "doc was re-ingested since, and this second removal's rows would " +
-          "dedupe against the first's into a silent no-op. Pass a FRESH stamp " +
-          "(forgetDocuments: set removalStamp to the removal request's own id).")
-      // stamp shared by a DIFFERENT removal: unregister rows logged
-      // under this stamp name docs OUTSIDE this call's set. For every
-      // gram the two removals share, their identical (h, -1, stamp)
-      // rows max-collapse at read into ONE decrement — the gram nets
-      // positive with zero live owners and keeps deduping future
-      // ingest forever (a rights-removal leak). Refuse. Compared
-      // against the caller's FULL deletedDocs set (not the
-      // live-filtered one): a direct-API retry of a COMPLETED removal
-      // hands the same docs — no longer live, still this request's
-      // own — and must stay the documented no-op. (A retry through
-      // forgetDocuments runs AFTER the winner-store fold and hands an
-      // EMPTY set instead; that is the early-return no-op above, which
-      // this check would otherwise misread as all-different docs.)
-      val otherDocs = !detectorRow.isNullAt(1)
-      require(!otherDocs,
-        s"decrementCounted: removal stamp $stampId already logged unregister " +
-          s"rows for DIFFERENT document(s) at $indexPath — two removal requests " +
-          "are sharing one stamp, and their gram deltas would collapse at read, " +
-          "under-decrementing every shared gram. Pass a per-request-unique " +
-          "stamp (forgetDocuments: removalStamp).")
-      val n = deltas.count()
-      if (n > 0) {
-        // gram rows already at this stamp: IDENTICAL re-derived rows are
-        // the crash-retry of THIS removal (registry rows land last) —
-        // the decrement is durable, skip the duplicate write and repair
-        // the registry half below. DIFFERENT rows are an UNFINISHED
-        // other removal sharing the stamp — the same collapse leak as
-        // above, caught on the gram surface because its registry rows
-        // never landed. (Residual: two byte-identical docs removed by
-        // two unfinished requests under one stamp produce identical gram
-        // rows and pass this check; the registry doc-set check above
-        // catches it as soon as either completes.)
-        val isRetry = !detectorRow.isNullAt(2)
-        if (isRetry) {
-          val fresh = deltas.select("h", "delta")
-          val collides = existing.join(fresh, Seq("h", "delta"), "left_anti")
-            .unionByName(fresh.join(existing, Seq("h", "delta"), "left_anti"))
-            .limit(1).count() > 0L
-          require(!collides,
-            s"decrementCounted: removal stamp $stampId already logged DIFFERENT " +
-              s"gram rows at $indexPath — two removal requests are sharing one " +
-              "stamp; their deltas would collapse at read, under-decrementing " +
-              "every shared gram. Pass a per-request-unique stamp " +
-              "(forgetDocuments: removalStamp).")
-        }
-        else deltas.coalesce(1).write.mode("append")
-          .option("compression", "zstd").parquet(indexPath)
+    val n =
+      if (!graft.sources.ArtifactFiles.mayHold(spark, indexPath, "batch_id", stampId) ||
+          existing.isEmpty)
+        graft.sources.ArtifactFiles.appendRows(deltas.coalesce(1), indexPath)
+      else {
+        val fresh = deltas.select("h", "delta")
+        val collides = !existing.join(fresh, Seq("h", "delta"), "left_anti")
+          .unionByName(fresh.join(existing, Seq("h", "delta"), "left_anti")).isEmpty
+        require(!collides,
+          s"decrementCounted: removal stamp $stampId already logged DIFFERENT " +
+            s"gram rows at $indexPath — two removal requests are sharing one " +
+            "stamp; their deltas would collapse at read, under-decrementing " +
+            "every shared gram. Pass a per-request-unique stamp " +
+            "(forgetDocuments: removalStamp).")
+        fresh.count()
       }
-      // same trim as the append path: gate on the checkpointed
-      // registered frame's count; the unregister write is the derived
-      // frame's only consumer, so no extra materialization job
-      if (registered.count() > 0)
-        registered.select(col(idCol).cast("long").as("doc_id")).distinct()
-          .withColumn("delta", lit(-1L)).withColumn("batch_id", lit(stampId))
-          .coalesce(1).write.mode("append")
-          .option("compression", "zstd").parquet(docsRegistryPath(indexPath))
-      n
-    } finally {
-      // refusal paths throw BEFORE the frees — release on every exit
-      graft.plans.CheckpointHygiene.free(registered, deltas, callerIds)
-    }
+    registered.toSeq.toDF("doc_id").withColumn("delta", lit(-1L))
+      .withColumn("batch_id", lit(stampId)).coalesce(1).write.mode("append")
+      .option("compression", "zstd").parquet(docsRegistryPath(indexPath))
+    n
   }
 
   /** The LIVE gram set of a counted index: retry-deduped, net count
@@ -736,14 +690,8 @@ object StreamingSubstringDedup {
     * [[graft.operators.Curation.substringDedupAgainstIndex]]. Empty
     * frame when nothing was ever ingested.
     */
-  def countedLive(spark: SparkSession, indexPath: String): DataFrame = {
-    import spark.implicits._
-    val raw =
-      if (graft.sources.ArtifactFiles.hasDataFiles(spark, indexPath))
-        spark.read.parquet(indexPath)
-      else Seq.empty[(Long, Long, Long)].toDF("h", "delta", "batch_id")
-    nettedPerKey(raw, "h").filter(col("__net") > 0L).select("h")
-  }
+  def countedLive(spark: SparkSession, indexPath: String): DataFrame =
+    nettedPerKey(readDeltaRaw(spark, indexPath, "h"), "h").filter(col("__net") > 0L).select("h")
 
   /** [[countedLive]] validated against the stamped k (the
     * [[indexFor]] twin).
@@ -791,127 +739,85 @@ object StreamingSubstringDedup {
     * grams that surviving docs still own. The cost is that a dead
     * gram keeps its one net row plus its removal rows (bounded by
     * removal volume, never by corpus size) instead of vanishing;
-    * liveness is unchanged (net over everything > 0). Returns
-    * (rowsBefore, rowsAfter).
+    * liveness is unchanged (net over everything > 0). The log, its
+    * `_docs` registry (netted under the same rule) and its `_removals`
+    * manifests (kept modulo retry dedupe) are one rewrite on the
+    * [[graft.sources.ArtifactRewrite]] core: each part's expected rows
+    * are counted from its computed frame, its written rows read from
+    * the rewrite's footers before the swap. Returns (rowsBefore,
+    * rowsAfter).
     */
   def compactCounted(spark: SparkSession, indexPath: String): (Long, Long) = {
-    graft.sources.SwapRecovery.repair(spark, indexPath) // crashed prior fold
+    import graft.sources.ArtifactRewrite.Part
+    val live = graft.sources.ArtifactRewrite.open(spark, indexPath) // crashed prior fold
     graft.sources.ArtifactHeader.required(spark, indexPath, "gramsc")
     // a header-stamped but data-less artifact is the legitimate state
     // after a zero-admission first batch (validateOrStamp runs before
     // the first data write) — nothing to fold; a data-BEARING artifact
     // whose read fails propagates instead of reading as "nothing to do"
-    if (!graft.sources.ArtifactFiles.hasDataFiles(spark, indexPath))
-      return (0L, 0L)
-    val raw = spark.read.parquet(indexPath)
-    val before = raw.count()
-    val deduped = graft.sources.DeltaLogCompaction.dedupeRetries(raw, Seq("h"))
-      .localCheckpoint()
-    def netKeepRemovals(df: DataFrame, keyCol: String): DataFrame = {
-      val removals = df
-        .filter(col("batch_id").isNotNull && col("batch_id") < 0L)
-        .select(keyCol, "delta", "batch_id")
-      df.filter(col("batch_id").isNull || col("batch_id") >= 0L)
-        .groupBy(keyCol).agg(sum(col("delta")).as("delta"))
-        .filter(col("delta") =!= 0L)
+    if (!live.hasData) return (0L, 0L)
+    val before = live.rows
+    // ingest rows net to one stampless row per key; `__mb`, the key's
+    // max ingest stamp, rides along only to feed the fold watermark.
+    // One exchange on the key serves the retry dedupe and the netting
+    // (the [[nettedPerKey]] fusion, sound for the same reason: this
+    // log's stampless rows are one per key)
+    def netKeepRemovals(log: DataFrame, keyCol: String): DataFrame = {
+      val deduped = log.repartition(col(keyCol))
+        .groupBy(col(keyCol), col("batch_id")).agg(max(col("delta")).as("delta"))
+      deduped.filter(col("batch_id").isNull || col("batch_id") >= 0L)
+        .groupBy(keyCol).agg(sum(col("delta")).as("delta"), max(col("batch_id")).as("__mb"))
         .withColumn("batch_id", lit(null).cast("long"))
-        .unionByName(removals)
+        .unionByName(deduped.filter(col("batch_id") < 0L)
+          .select(col(keyCol), col("delta"), lit(null).cast("long").as("__mb"), col("batch_id")))
     }
-    val netted = netKeepRemovals(deduped, "h").localCheckpoint()
-    val after = netted.count()
-    // the fold watermark: netting erases per-batch ingest stamps
-    // (batch_id NULL), so a crash-retry replayed AFTER this fold can
-    // no longer find its rows and would double-append — record the
-    // max ingest stamp folded (monotone across folds) so the append
-    // path recognizes the folded retry (see appendToIndexCounted)
-    val foldedThrough = {
-      val row = raw.filter(col("batch_id").isNotNull && col("batch_id") >= 0L)
-        .agg(max(col("batch_id"))).collect()(0)
-      val m = if (row.isNullAt(0)) -1L else row.getLong(0)
-      math.max(m, foldedThroughOf(spark, indexPath))
-    }
-    val sim = graft.operators.Similarity
-    val (fs, p) = sim.hadoopFs(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".gramcfold.tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".gramcfold.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    netted.write.mode("overwrite").option("compression", "zstd")
-      .parquet(tmp.toString)
-    // the doc registry is a SUBDIR ("_docs") the file-level sidecar
-    // carry cannot copy — net it under the same rule and write it
-    // into the rewrite before the swap installs one generation
-    val regP = new org.apache.hadoop.fs.Path(docsRegistryPath(indexPath))
-    val regExpected =
-      if (!fs.exists(regP)) -1L
-      else {
-        val regNetted = netKeepRemovals(
-          graft.sources.DeltaLogCompaction.dedupeRetries(
-            spark.read.parquet(regP.toString), Seq("doc_id")),
-          "doc_id").localCheckpoint()
-        val n = regNetted.count()
-        regNetted.write.mode("overwrite").option("compression", "zstd")
-          .parquet(new org.apache.hadoop.fs.Path(tmp, "_docs").toString)
-        graft.plans.CheckpointHygiene.free(regNetted)
-        n
-      }
-    // the removal-request manifests (`_removals`, another subdir the
-    // file-level carry cannot copy) survive the fold VERBATIM modulo
+    def folded(netted: DataFrame): DataFrame =
+      netted.filter(col("delta") =!= 0L || col("batch_id").isNotNull).drop("__mb")
+    val has = (path: String) => live.fs.exists(new org.apache.hadoop.fs.Path(path))
+    val grams = netKeepRemovals(readDeltaRaw(spark, indexPath, "h"), "h").localCheckpoint()
+    val reg = Option.when(has(docsRegistryPath(indexPath)))(netKeepRemovals(
+      readDeltaRaw(spark, docsRegistryPath(indexPath), "doc_id"), "doc_id").localCheckpoint())
+    // the removal-request manifests survive the fold VERBATIM modulo
     // retry dedupe — like the removal rows themselves, a crash-retry
     // of an unfinished forget relies on finding its declared intent
-    val remP = new org.apache.hadoop.fs.Path(removalsPath(indexPath))
-    val remExpected =
-      if (!fs.exists(remP)) -1L
-      else {
-        val rem = spark.read.parquet(remP.toString)
-          .select("doc_id", "batch_id").distinct().localCheckpoint()
-        val n = rem.count()
-        rem.coalesce(1).write.mode("overwrite").option("compression", "zstd")
-          .parquet(new org.apache.hadoop.fs.Path(tmp, "_removals").toString)
-        graft.plans.CheckpointHygiene.free(rem)
-        n
+    val rem = Option.when(has(removalsPath(indexPath)))(
+      readRemovals(spark, indexPath).distinct().localCheckpoint())
+    try {
+      // ONE job counts every part and reads the fold watermark: netting
+      // erases per-batch ingest stamps (batch_id NULL), so a crash-retry
+      // replayed AFTER this fold can no longer find its rows and would
+      // double-append — record the max ingest stamp folded (monotone
+      // across folds) so the append path recognizes the folded retry
+      // (see appendToIndexCounted)
+      def tagged(df: DataFrame, part: Int): DataFrame =
+        df.select(lit(part).as("__part"), col("delta"), col("batch_id"), col("__mb"))
+      val tally = (Seq(tagged(grams, 0)) ++ reg.map(tagged(_, 1)) ++ rem.map(r => tagged(
+          r.select(lit(1L).as("delta"), col("batch_id"), lit(null).cast("long").as("__mb")), 2)))
+        .reduce(_ unionByName _)
+        .agg(max(when(col("__part") === 0, col("__mb"))), (0 to 2).map(i => count(when(
+          col("__part") === i && (col("delta") =!= 0L || col("batch_id").isNotNull), lit(1)))): _*)
+        .first()
+      val foldedThrough = math.max(if (tally.isNullAt(0)) -1L else tally.getLong(0),
+        foldedThroughOf(spark, indexPath))
+      graft.sources.ArtifactRewrite.rewrite(live, "gramcfold", "compactCounted",
+        // the log at its compaction layout, so the window's compaction
+        // check that follows finds it within budget
+        Seq(Part("", graft.sources.ArtifactCompaction.layout(folded(grams),
+            graft.sources.ArtifactCompaction.autoTargetFiles(spark, indexPath), Nil),
+          tally.getLong(1))) ++
+          reg.map(r => Part("_docs", folded(r), tally.getLong(2))) ++
+          rem.map(r => Part("_removals", r.coalesce(1), tally.getLong(3)))) { tmp =>
+        // the watermark goes INTO the rewrite (overwriting the carried
+        // older one) so the swap installs rows + watermark atomically —
+        // a crash between swap and a post-swap stamp would leave a
+        // folded log with a stale-low watermark, exactly the
+        // double-append window the watermark closes
+        if (foldedThrough >= 0L)
+          graft.sources.ArtifactHeader.write(spark, tmp, "gramsc_fold",
+            Seq("folded_through" -> foldedThrough.toString))
       }
-    graft.plans.CheckpointHygiene.free(deduped, netted)
-    // verify-before-swap (the rebuildIndex/annTombstoneFold
-    // convention — this is a destructive rewrite too): independently
-    // re-read what was written and compare to the computed
-    // expectation; a mismatch deletes tmp and leaves the live
-    // artifact untouched. The gram read skips tmp's `_docs` subdir by
-    // the underscore-path rule, so both counts are clean.
-    val written = spark.read.parquet(tmp.toString).count()
-    if (written != after) {
-      fs.delete(tmp, true)
-      sys.error(s"compactCounted: rewrite of $indexPath has $written rows, " +
-        s"expected $after; artifact left untouched")
-    }
-    if (regExpected >= 0L) {
-      val regWritten = spark.read
-        .parquet(new org.apache.hadoop.fs.Path(tmp, "_docs").toString).count()
-      if (regWritten != regExpected) {
-        fs.delete(tmp, true)
-        sys.error(s"compactCounted: rewritten _docs registry of $indexPath has " +
-          s"$regWritten rows, expected $regExpected; artifact left untouched")
-      }
-    }
-    if (remExpected >= 0L) {
-      val remWritten = spark.read
-        .parquet(new org.apache.hadoop.fs.Path(tmp, "_removals").toString).count()
-      if (remWritten != remExpected) {
-        fs.delete(tmp, true)
-        sys.error(s"compactCounted: rewritten _removals manifest of $indexPath " +
-          s"has $remWritten rows, expected $remExpected; artifact left untouched")
-      }
-    }
-    sim.carrySidecars(fs, p, tmp, spark.sessionState.newHadoopConf())
-    // stamp the watermark INTO the rewrite (overwriting any carried
-    // older one) so the swap installs rows + watermark atomically — a
-    // crash between swap and a post-swap stamp would leave a folded
-    // log with a stale-low watermark, exactly the double-append window
-    // the watermark closes
-    if (foldedThrough >= 0L)
-      graft.sources.ArtifactHeader.write(spark, tmp.toString, "gramsc_fold",
-        Seq("folded_through" -> foldedThrough.toString))
-    sim.artifactSwap(fs, p, tmp, old, "compactCounted")
-    (before, after)
+      (before, tally.getLong(1))
+    } finally graft.plans.CheckpointHygiene.free(Seq(Some(grams), reg, rem).flatten: _*)
   }
 
   /** [[dedupStream]] over a COUNTED index: per micro-batch, dedup

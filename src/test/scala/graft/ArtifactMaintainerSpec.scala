@@ -391,4 +391,177 @@ class ArtifactMaintainerSpec extends AnyFunSuite with SharedSpark {
     assert(ran.get() == 1 && report.tasks.head.summary == "ok")
     assert(started.get() == 0, "maintain() invoked the owner thunk without start()")
   }
+
+  // ------------------------------------------------------------------
+  // the verified rewrite core, priced by what changed
+  // ------------------------------------------------------------------
+
+  /** The stream-curation workload's artifacts in miniature, at the
+    * point its last poll opens a window: two appends of 40 docs to a
+    * winner store (doc_id, text, batch_id), a stamped band index and a
+    * counted gram index, then a delete round of 8 ids the first append
+    * fed (band tombstones, a counted decrement under stamp -2), and the
+    * workload's due checks with its budgets.
+    */
+  private final class CurationFx(val dir: String, val deleted: Seq[Long],
+                                 val checks: Seq[ArtifactMaintainer.DueCheck]) {
+    def path(a: String): String = s"$dir/$a"
+  }
+
+  private def curationFx(tag: String): CurationFx = {
+    import spark.implicits._
+    import graft.operators.Dedup
+    import graft.streaming.{StreamingNearDup, StreamingSubstringDedup}
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id".cast("long"), $"text").as[(Long, String)].collect().sortBy(_._1)
+    val batches = Seq(docs.slice(0, 40), docs.slice(40, 80)).map(_.toSeq.toDF("doc_id", "text"))
+    var rows0 = 0L
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.withColumn("batch_id", lit(i.toLong)).coalesce(1).sortWithinPartitions("doc_id")
+        .write.mode("append").parquet(s"$dir/winners")
+      StreamingNearDup.appendToIndex(Dedup.capBucket(Dedup.bandKeys(
+          b.select(col("doc_id"), col("text").as("__text")), shingleN = 3, bands = 6, rows = 2),
+        "band_key", "doc_id", 128), s"$dir/bands", bucketCap = 128, stampParams = Some((3, 6, 2)))
+      StreamingSubstringDedup.appendToIndexCounted(b, "text", "doc_id", s"$dir/grams",
+        k = 8, stampId = i.toLong)
+      if (i == 0) rows0 = spark.read.parquet(s"$dir/grams").count()
+    }
+    val deleted = docs.take(8).map(_._1).toSeq
+    Dedup.neardupIndexDeleteAt(spark, s"$dir/bands", deleted)
+    StreamingSubstringDedup.decrementCounted(spark.read.parquet(s"$dir/winners")
+        .filter(col("doc_id").isin(deleted: _*)).select("doc_id", "text"),
+      "text", "doc_id", s"$dir/grams", stampId = -2L)
+    val checks =
+      Seq(ArtifactMaintainer.neardupTombstoneFoldDue(spark, s"$dir/bands", Some(s"$dir/winners"),
+          maxIds = 7L),
+        ArtifactMaintainer.countedGramCompactDue(spark, s"$dir/grams",
+          maxRows = math.max(256L, rows0 * 3L / 2))) ++
+        Seq("winners", "bands", "grams").map(a => ArtifactMaintainer.compactDue(spark, s"$dir/$a",
+          maxSmallFiles = 1, clusterBy = if (a == "winners") Seq("doc_id") else Nil))
+    new CurationFx(dir, deleted, checks)
+  }
+
+  /** Every file below `dir` (hidden checksum files included) by its
+    * relative path, with its bytes.
+    */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    finally walk.close()
+  }
+
+  /** Rows of a delta log (key, delta, batch_id) as a multiset. */
+  private def logRows(path: String): Map[(Long, Long, Option[Long]), Int] =
+    spark.read.parquet(path).select(col(spark.read.parquet(path).columns.head), col("delta"),
+        col("batch_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
+      .groupBy(identity).view.mapValues(_.length).toMap
+
+  /** The counted fold's algebra on driver-held rows: retry copies
+    * collapse (max delta per stamped (key, stamp)), ingest rows net to
+    * one stampless row per key (zero nets dropped), removal rows stay.
+    */
+  private def foldedRows(raw: Map[(Long, Long, Option[Long]), Int])
+      : Map[(Long, Long, Option[Long]), Int] = {
+    val rows = raw.keys.toSeq
+    val (stamped, loose) = rows.partition(_._3.isDefined)
+    val deduped = stamped.groupMapReduce(r => (r._1, r._3))(_._2)(math.max).toSeq
+      .map { case ((k, b), d) => (k, d, b) } ++
+      loose.flatMap(r => Seq.fill(raw(r))(r))
+    val (removals, ingest) = deduped.partition(_._3.exists(_ < 0L))
+    (ingest.groupMapReduce(_._1)(_._2)(_ + _).collect { case (k, d) if d != 0L => (k, d, None) } ++
+      removals).groupBy(identity).view.mapValues(_.size).toMap
+  }
+
+  private def idRows(path: String, drop: Set[Long]): Map[String, Int] =
+    spark.read.parquet(path).collect().filterNot(r => drop(r.getAs[Long]("doc_id")))
+      .map(_.toSeq.mkString("|")).groupBy(identity).view.mapValues(_.length).toMap
+
+  test("the stream-curation window and its close-out forget run in bounded jobs; a zero-match forget rewrites no data file") {
+    val fx = curationFx("graft_budget")
+    val del = fx.deleted.toSet
+    val expect = Map(
+      "winners" -> idRows(fx.path("winners"), del), "bands" -> idRows(fx.path("bands"), del))
+    val expectGrams = foldedRows(logRows(fx.path("grams")))
+    val expectDocs = foldedRows(logRows(fx.path("grams/_docs")))
+    val expectRemovals = spark.read.parquet(fx.path("grams/_removals")).distinct().count()
+
+    val maint = new ArtifactMaintainer()
+    val (rep, windowJobs) = jobs(maint.maintainIfDue(fx.checks))
+    info(s"window jobs: $windowJobs; " + rep.map(_.tasks.map(t => s"${t.name} ${t.summary}")
+      .mkString("; ")).getOrElse(""))
+    assert(rep.map(_.tasks.length).contains(5), rep)
+    assert(windowJobs <= WindowJobs, s"the window ran $windowJobs jobs")
+    // compaction re-checks its trigger: the store and gram folds wrote
+    // their artifacts at the compaction layout already
+    val summary = rep.get.tasks.map(t => t.name -> t.summary).toMap
+    Seq("compact:winners", "compact:grams").foreach(t => assert(
+      summary(t).endsWith("within budget: small_files=1 <= 1, skipped"), summary(t)))
+    assert(summary("compact:bands").endsWith("files 2 -> 1"), summary("compact:bands"))
+    assert(graft.sources.ArtifactCompaction.dataFileCount(spark, fx.path("winners")) == 1L)
+    // the rows are what the folds' algebra says, as multisets
+    Seq("winners", "bands").foreach(a => assert(idRows(fx.path(a), Set.empty) == expect(a), a))
+    assert(logRows(fx.path("grams")) == expectGrams)
+    assert(logRows(fx.path("grams/_docs")) == expectDocs)
+    assert(spark.read.parquet(fx.path("grams/_removals")).count() == expectRemovals)
+
+    // the close-out forget of ids the window already folded: every
+    // matched-count scan finds 0 rows, so no data file is rewritten
+    def dataFiles(a: String): Map[String, Long] =
+      new java.io.File(fx.path(a)).listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => f.getName -> f.length()).toMap
+    val filesBefore = Seq("winners", "bands").map(a => a -> dataFiles(a)).toMap
+    val (storeRows, bandRows) =
+      (spark.read.parquet(fx.path("winners")).count(), spark.read.parquet(fx.path("bands")).count())
+    val (report, forgetJobs) = jobs(graft.operators.Forget.forgetDocuments(spark, fx.deleted,
+      graft.operators.Forget.Targets(bandIndexPath = Some(fx.path("bands")),
+        winnerStorePath = Some(fx.path("winners")), gramIndexPath = Some(fx.path("grams")))))
+    info(s"forget jobs: $forgetJobs; ${report.summary}")
+    assert(forgetJobs <= ForgetJobs, s"the zero-match forget ran $forgetJobs jobs")
+    assert(report.storeFold.contains((storeRows, storeRows)), report)
+    assert(report.bandFold.contains((bandRows, bandRows)), report)
+    assert(report.gramDecrement.contains(0L), report)
+    assert(graft.sources.Tombstones.count(spark, fx.path("bands")) == 0L)
+    Seq("winners", "bands").foreach(a => assert(dataFiles(a) == filesBefore(a), a))
+  }
+
+  // measured on this fixture at local[4]: before the rewrite core the
+  // window ran 81 jobs and the zero-match forget 22
+  private val WindowJobs = 20
+  private val ForgetJobs = 8
+
+  test("a short rewrite refuses before its swap on every rewrite of the core: live directory byte-identical, no tmp residue") {
+    import graft.sources.{ArtifactCompaction, ArtifactRewrite}
+    import graft.streaming.StreamingSubstringDedup
+    val fx = curationFx("graft_short")
+    val write = ArtifactRewrite.writer.value
+    // writes nothing into the part whose directory ends with `suffix`
+    def shortAt(suffix: String): (org.apache.spark.sql.DataFrame, String) => Unit =
+      (df, dir) => write(if (dir.endsWith(suffix)) df.filter(lit(false)) else df, dir)
+    def refuses(artifact: String, tag: String, suffix: String)(rewrite: => Any): Unit = {
+      val live = fx.path(artifact)
+      val before = snapshot(live)
+      val e = intercept[RuntimeException](ArtifactRewrite.writer.withValue(shortAt(suffix))(rewrite))
+      assert(e.getMessage.contains("left untouched"), e.getMessage)
+      assert(snapshot(live) == before, s"$artifact changed under a refused $tag rewrite")
+      Seq("tmp", "old").foreach(s => assert(!new java.io.File(s"$live.$tag.$s").exists(),
+        s"$artifact.$tag.$s left behind"))
+    }
+    // tombstone fold (the store's, which the near-dup fold runs first)
+    refuses("winners", "tombfold", ".tombfold.tmp")(
+      graft.operators.Dedup.neardupTombstoneFold(spark, fx.path("bands"), Some(fx.path("winners"))))
+    // counted fold: the log, its registry and its removal manifests
+    Seq(".gramcfold.tmp", "_docs", "_removals").foreach(part =>
+      refuses("grams", "gramcfold", part)(StreamingSubstringDedup.compactCounted(spark, fx.path("grams"))))
+    // compaction
+    refuses("bands", "compact", ".compact.tmp")(ArtifactCompaction.compactFiles(spark, fx.path("bands")))
+    // and with the writer back, each rewrite goes through
+    assert(graft.operators.Dedup.neardupTombstoneFold(spark, fx.path("bands"),
+      Some(fx.path("winners")))._1._2 == spark.read.parquet(fx.path("winners")).count())
+    StreamingSubstringDedup.compactCounted(spark, fx.path("grams"))
+    assert(ArtifactCompaction.compactFiles(spark, fx.path("bands"))._2 == 1L)
+  }
 }
