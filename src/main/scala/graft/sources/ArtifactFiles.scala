@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
@@ -90,13 +92,8 @@ object ArtifactFiles {
     */
   private[sources] def footerSchema(conf: Configuration, data: Seq[FileStatus]): Option[StructType] =
     if (data.isEmpty || data.exists(_.isDirectory)) None
-    else {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(data.head, conf))
-      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SchemaKey))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-      finally r.close()
-    }
+    else footer(conf, data.head)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(SchemaKey)).map(DataType.fromJson(_).asInstanceOf[StructType]))
 
   /** `spark.read.parquet(path)` under the schema stamped in its footer,
     * so the read runs no schema-inference job; it falls back to
@@ -124,19 +121,15 @@ object ArtifactFiles {
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
       val data = fs.listStatus(p).toSeq.filter(s => visible(s.getPath.getName))
-      data.exists(_.isDirectory) || data.exists { s =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
-        try r.getRowGroups.asScala.exists { rg =>
-          rg.getRowCount > 0 && rg.getColumns.asScala.find(_.getPath.toDotString == column)
-            .map(_.getStatistics).forall { st =>
-              if (st == null || st.isEmpty) true
-              else st.hasNonNullValue &&
-                st.genericGetMin.asInstanceOf[java.lang.Long] <= value &&
-                st.genericGetMax.asInstanceOf[java.lang.Long] >= value
-            }
-        } finally r.close()
-      }
+      data.exists(_.isDirectory) || data.exists(footer(conf, _)(_.getRowGroups.asScala.exists { rg =>
+        rg.getRowCount > 0 && rg.getColumns.asScala.find(_.getPath.toDotString == column)
+          .map(_.getStatistics).forall { st =>
+            if (st == null || st.isEmpty) true
+            else st.hasNonNullValue &&
+              st.genericGetMin.asInstanceOf[java.lang.Long] <= value &&
+              st.genericGetMax.asInstanceOf[java.lang.Long] >= value
+          }
+      }))
     }
 
   /** Append `df` to the parquet table at `path` and return the rows
@@ -164,12 +157,14 @@ object ArtifactFiles {
     if (s.isDirectory)
       fs.listStatus(s.getPath).iterator.filter(c => visible(c.getPath.getName))
         .map(footerOf(fs, conf, _)).foldLeft(FooterSize(0L, 0L))(plus)
-    else {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
-      try FooterSize(r.getRecordCount, r.getRowGroups.iterator.asScala.map(_.getTotalByteSize).sum)
-      finally r.close()
-    }
+    else footer(conf, s)(r =>
+      FooterSize(r.getRecordCount, r.getRowGroups.iterator.asScala.map(_.getTotalByteSize).sum))
+
+  /** `f` over the open footer reader of the data file `s`. */
+  private def footer[T](conf: Configuration, s: FileStatus)(f: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+    try f(r) finally r.close()
+  }
 
   private def plus(a: FooterSize, b: FooterSize): FooterSize =
     FooterSize(a.rows + b.rows, a.bytes + b.bytes)

@@ -258,11 +258,11 @@ object ArtifactMaintainer {
     * task of the same window (a fold that rewrote the artifact) may
     * already have brought it within budget, and then the task skips
     * and says so. Small-file count — not total files — is the budget
-    * because right-sized appends (~64 MB payload files) are healthy layout at
-    * any history size, while per-batch index appends stay small
-    * forever; a total-file trigger would fire on every sized append
-    * at 100 TB and turn the O(artifact) rewrite into a per-batch
-    * cost. One LISTing, no data read.
+    * because right-sized appends (~64 MB payload files) are healthy
+    * layout at any history size, while per-batch index appends stay
+    * small forever; a total-file trigger would fire on every sized
+    * append at 100 TB and turn the O(artifact) rewrite into a
+    * per-batch cost. One LISTing, no data read.
     *
     * `targetFiles <= 0` (the default) auto-sizes the rewrite from the
     * artifact's own bytes at window time

@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * verb in this repo uses (`DeltaLogCompaction.compact`, the ANN
   * rebuilds, and every rewrite on the [[ArtifactRewrite]] core —
   * `ArtifactCompaction.compactFiles`, the tombstone folds,
-  * `StreamingSubstringDedup.compactCounted` / `rebuildIndex`): write a complete rewrite to `<path>.<tag>.tmp`,
-  * then `rename(path -> <path>.<tag>.old)`, `rename(tmp -> path)`,
+  * `StreamingSubstringDedup.compactCounted` / `rebuildIndex`): write
+  * a complete rewrite to `<path>.<tag>.tmp`, then `rename(path -> <path>.<tag>.old)`, `rename(tmp -> path)`,
   * `delete(old)`.
   *
   * Each RENAME is atomic, but the pair is not: a process crash
